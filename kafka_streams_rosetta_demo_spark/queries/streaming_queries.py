@@ -1,68 +1,51 @@
 """Streaming topologies run end to end under the batch correctness gate.
 
-Each query here executes a *real Structured Streaming query* — file source,
-watermark, update- or append-mode emission, checkpointed state — to
-completion with ``availableNow`` through the PRODUCTION sink shape:
-append-mode queries write through the native parquet streaming sink
-(executor-side, ``_spark_metadata``-committed), update-mode queries append
-their changed rows to an executor-side parquet changelog that is then
-compacted last-write-per-key (the compacted-output-topic read). Nothing
-moves through the driver — no ``collect``, no ``toPandas`` — so every
-registered streaming path here is the one that scales. The DuckDB oracle is
-the *same SQL* as the batch twin, so the gate proves the streaming execution
-path computes identical state — the strongest brokerless check available for
-SURVEY §2.1/§2.6 (S1 file form, S2, J1, T1–T4).
+Each query here is a topology plus its oracle. The topology runs as a *real
+Structured Streaming query* — file source, watermark, update- or append-mode
+emission, checkpointed state — to completion with ``availableNow``, through
+:func:`~..streaming.runner.run_topology`, which owns the rest: staging the
+source (or reading the landing ``events.parquet``), ``maxFilesPerTrigger=1``
+micro-batches, the state-partition rule, the checkpoint/sink temp tree and
+the restore of every conf it sets. Append-mode queries write through the
+native parquet streaming sink; update-mode queries (``keys=``) append their
+changed rows to an executor-side parquet changelog compacted
+last-write-per-key (the compacted-output-topic read). Nothing moves through
+the driver. The DuckDB oracle is the *same SQL* as the batch twin, so the
+gate proves the streaming execution path computes identical state — the
+strongest brokerless check available for SURVEY §2.1/§2.6 (S1 file form,
+S2, J1, T1–T4).
 
-Single-file sources mean one micro-batch here; multi-batch incremental
-updates, late-data watermark drops, and checkpoint restart-without-replay
-are pinned in tests/test_streaming.py where the input can be split and
+The events-table topologies read ``events.parquet`` as one micro-batch
+(``streaming_dedup_events`` lands the events and their redelivery as one
+file); the ingest screens and monitors stage their input as three files
+(``repartition(3)``), one per micro-batch. Late-data watermark drops,
+restarts without replay and incremental re-emission over split inputs are
+pinned in tests/test_streaming.py, where the input can be split and
 replayed deliberately.
 """
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..sources.parquet import (
-    events_schema,
-    events_to_calls,
-    normalize_event_ts,
-    rosetta_customers,
-)
-from ..streaming.runner import (
-    backlog_state_shuffle,
-    checkpoint_tmpdir,
-    file_stream,
-    run_append_query_to_df,
-    run_update_query_to_df,
-)
+from ..sources.parquet import events_to_calls, normalize_event_ts, rosetta_customers
+from ..streaming.runner import run_topology
 from ..streaming.transforms import (
     enrich_calls_with_customers,
     streaming_latest_per_key,
     streaming_windowed_call_agg,
 )
-from . import register
+# Streaming twins share their batch twin's oracle SQL verbatim — one source
+# of truth, so the gate proves the streaming path computes the identical
+# state. Importing the batch modules registers the twins read from REGISTRY.
+from . import REGISTRY, corpus_queries, preference_queries, register  # noqa: F401
+from .dedup_queries import _WINNOW_SCREEN_ORACLE
+from .relational_queries import _PSI_ORACLE
 from .rosetta_queries import CALL_AGG_CTE, CUSTOMERS_CTE
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # T7: streaming state partitioning follows shuffle.partitions at
-    # checkpoint creation and AQE never coalesces it, so a plain session's
-    # default 200 means 200 state-store instances per micro-batch. Pin the
-    # engine default (constant across calls — same idempotent contract as
-    # the registry's UTC pin; batch plans are AQE-coalesced either way).
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-    # Streaming sources need an explicit schema; take it from the parquet
-    # footer so the stream matches whatever ts encoding the data ships with
-    # (nanos-as-long or TIMESTAMP/NTZ) — normalize_event_ts converges both.
-    schema = events_schema(spark, f"{sf_dir}/events.parquet")
-    return normalize_event_ts(
-        file_stream(spark, sf_dir, schema, path_glob_filter="events.parquet")
-    )
+# The events-table topologies stream the landing directory's events file.
+_EVENTS = "events.parquet"
 
 
 @register(
@@ -78,15 +61,15 @@ def streaming_calls_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate → checkpointed foreachBatch changelog merge. Final state must
     hash-match the same oracle as the batch twin (rosetta_calls_window_agg)
     — one plan, two execution modes, one answer."""
-    agg = streaming_windowed_call_agg(events_to_calls(_events_stream(spark, sf_dir)))
-    # data-grain key space (phone × window) — state exchange sized from the
-    # bounded backlog's bytes, not the core count (see backlog_state_shuffle)
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_swa_"
-    ) as ckpt, checkpoint_tmpdir("sink_swa_") as out_dir:
-        return run_update_query_to_df(
-            agg, ["id_telef_origen", "window_start"], ckpt, out_dir
-        )
+    # data-grain key space (phone × window): backlog-sized state
+    return run_topology(
+        spark,
+        sf_dir,
+        lambda ev: streaming_windowed_call_agg(events_to_calls(normalize_event_ts(ev))),
+        glob=_EVENTS,
+        keys=["id_telef_origen", "window_start"],
+        state="backlog",
+    )
 
 
 @register(
@@ -109,17 +92,20 @@ def streaming_ktable_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     state maintained by the same max_by aggregate as the batch twin, in
     update mode with checkpointed state. Final state must equal the batch
     answer (same oracle as rosetta_ktable_latest)."""
-    latest = streaming_latest_per_key(
-        _events_stream(spark, sf_dir),
-        key="user_id",
-        ts_col="ts",
-        seq_col="event_id",
-        value_cols=["ts", "event_id", "event_type", "value"],
+    return run_topology(
+        spark,
+        sf_dir,
+        lambda ev: streaming_latest_per_key(
+            normalize_event_ts(ev),
+            key="user_id",
+            ts_col="ts",
+            seq_col="event_id",
+            value_cols=["ts", "event_id", "event_type", "value"],
+        ),
+        glob=_EVENTS,
+        keys=["user_id"],
+        state="backlog",
     )
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_skt_"
-    ) as ckpt, checkpoint_tmpdir("sink_skt_") as out_dir:
-        return run_update_query_to_df(latest, ["user_id"], ckpt, out_dir)
 
 
 @register(
@@ -149,22 +135,16 @@ def streaming_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the customer dimension (J1 in its temporal-lookup form) →
     changelog merge. Final state must hash-match the batch flagship
     (rosetta_enriched)."""
-    agg = streaming_windowed_call_agg(events_to_calls(_events_stream(spark, sf_dir)))
     customers = rosetta_customers(spark, sf_dir)
-
-    def enrich(batch_df: DataFrame) -> DataFrame:
-        return enrich_calls_with_customers(batch_df, customers)
-
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_enr_"
-    ) as ckpt, checkpoint_tmpdir("sink_enr_") as out_dir:
-        return run_update_query_to_df(
-            agg,
-            ["id_telef_origen", "window_start_ts"],
-            ckpt,
-            out_dir,
-            batch_fn=enrich,
-        )
+    return run_topology(
+        spark,
+        sf_dir,
+        lambda ev: streaming_windowed_call_agg(events_to_calls(normalize_event_ts(ev))),
+        glob=_EVENTS,
+        keys=["id_telef_origen", "window_start_ts"],
+        state="backlog",
+        batch_fn=lambda batch: enrich_calls_with_customers(batch, customers),
+    )
 
 
 @register(
@@ -197,20 +177,19 @@ def streaming_suppress_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppression store on the window store)."""
     from ..streaming.transforms import streaming_final_windowed_agg
 
-    final = streaming_final_windowed_agg(
-        events_to_calls(_events_stream(spark, sf_dir))
-    ).select(
-        "id_telef_origen",
-        "window_start",
-        "calls_count",
-        "max_duracion_origen",
-        "total_duracion_origen",
-        "avg_duracion_origen",
-    )
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_ssf_"
-    ) as ckpt, checkpoint_tmpdir("sink_ssf_") as out_dir:
-        return run_append_query_to_df(final, ckpt, out_dir)
+    def final(ev: DataFrame) -> DataFrame:
+        return streaming_final_windowed_agg(
+            events_to_calls(normalize_event_ts(ev))
+        ).select(
+            "id_telef_origen",
+            "window_start",
+            "calls_count",
+            "max_duracion_origen",
+            "total_duracion_origen",
+            "avg_duracion_origen",
+        )
+
+    return run_topology(spark, sf_dir, final, glob=_EVENTS, state="backlog")
 
 
 @register(
@@ -243,13 +222,12 @@ def streaming_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..streaming.transforms import streaming_interval_join
 
-    ev = _events_stream(spark, sf_dir).select("event_id", "user_id", "ts")
-    joined = streaming_interval_join(
-        ev, ev, key="user_id", left_ts="ts", right_ts="ts", tolerance_seconds=300
-    )
-    out = (
-        joined.where(F.col("l.event_id") < F.col("r.event_id"))
-        .select(
+    def pairs(raw: DataFrame) -> DataFrame:
+        ev = normalize_event_ts(raw).select("event_id", "user_id", "ts")
+        joined = streaming_interval_join(
+            ev, ev, key="user_id", left_ts="ts", right_ts="ts", tolerance_seconds=300
+        )
+        return joined.where(F.col("l.event_id") < F.col("r.event_id")).select(
             F.col("l.user_id").alias("user_id"),
             F.col("l.event_id").alias("event_a"),
             F.col("r.event_id").alias("event_b"),
@@ -257,11 +235,8 @@ def streaming_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.unix_micros(F.col("l.ts")) - F.unix_micros(F.col("r.ts"))
             ).alias("diff_us"),
         )
-    )
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_sij_"
-    ) as ckpt, checkpoint_tmpdir("sink_sij_") as out_dir:
-        return run_append_query_to_df(out, ckpt, out_dir)
+
+    return run_topology(spark, sf_dir, pairs, glob=_EVENTS, state="backlog")
 
 
 @register(
@@ -319,25 +294,24 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract KS session stores share."""
     from pyspark.sql import functions as F
 
-    ev = _events_stream(spark, sf_dir).withWatermark("ts", "24 hours")
-    agg = (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+    def sessions(raw: DataFrame) -> DataFrame:
+        ev = normalize_event_ts(raw).withWatermark("ts", "24 hours")
+        return (
+            ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
+                "total_value",
+            )
         )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_ssw_"
-    ) as ckpt, checkpoint_tmpdir("sink_ssw_") as out_dir:
-        return run_append_query_to_df(agg, ckpt, out_dir)
+
+    return run_topology(spark, sf_dir, sessions, glob=_EVENTS, state="backlog")
 
 
 @register(
@@ -383,32 +357,31 @@ def streaming_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         wire_format="confluent",
         schema_id=7,
     )
-    ev = _events_stream(spark, sf_dir)
     framed = spec.encode_value(F.struct("event_id", "value"))
     on_wire = F.when(
         F.col("event_id") % 41 == 0,
         F.concat(F.lit(b"\xff"), F.substring(framed, 2, 2147483647)),
     ).otherwise(framed)
     decoded = spec.decode_value(on_wire)
-    agg = (
-        ev.select("event_type", decoded.alias("v"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.count("v.event_id").alias("n_decoded"),
-            (F.count(F.lit(1)) - F.count("v.event_id")).alias("n_dropped"),
-            F.sum("v.event_id").alias("sum_event_id"),
-        )
-    )
-    # State keys on event_type — a small enumeration by construction
-    # (the docstring's "the only state is the event_type counter rows");
-    # size the state exchange from that bound, not the core count.
-    from ..streaming.runner import bounded_state_shuffle
 
-    with bounded_state_shuffle(spark, 4096), checkpoint_tmpdir(
-        "ckpt_swr_"
-    ) as ckpt, checkpoint_tmpdir("sink_swr_") as out_dir:
-        return run_update_query_to_df(agg, ["event_type"], ckpt, out_dir)
+    def counters(ev: DataFrame) -> DataFrame:
+        return (
+            normalize_event_ts(ev)
+            .select("event_type", decoded.alias("v"))
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_records"),
+                F.count("v.event_id").alias("n_decoded"),
+                (F.count(F.lit(1)) - F.count("v.event_id")).alias("n_dropped"),
+                F.sum("v.event_id").alias("sum_event_id"),
+            )
+        )
+
+    # State keys on event_type — a small enumeration by construction
+    # (the docstring's "the only state is the event_type counter rows").
+    return run_topology(
+        spark, sf_dir, counters, glob=_EVENTS, keys=["event_type"], state=4096
+    )
 
 
 @register(
@@ -458,33 +431,32 @@ def streaming_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         wire_format="confluent",
         schema_id=11,
     )
-    ev = _events_stream(spark, sf_dir)
     framed = spec.encode_value(F.struct("event_id", "value"))
     on_wire = F.when(
         F.col("event_id") % 43 == 0, F.substring(framed, 1, 8)
     ).otherwise(framed)
     decoded = spec.decode_value(on_wire)
-    agg = (
-        ev.select("event_type", decoded.alias("v"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_records"),
-            F.count("v.event_id").alias("n_decoded"),
-            (F.count(F.lit(1)) - F.count("v.event_id")).alias("n_dropped"),
-            F.sum("v.event_id").alias("sum_event_id"),
-            F.sum(F.floor(F.col("v.value") * 1000).cast("long")).alias(
-                "sum_value_milli"
-            ),
-        )
-    )
-    # Same bounded state as streaming_wire_roundtrip: event_type counter
-    # rows only — state exchange sized from the key bound.
-    from ..streaming.runner import bounded_state_shuffle
 
-    with bounded_state_shuffle(spark, 4096), checkpoint_tmpdir(
-        "ckpt_sar_"
-    ) as ckpt, checkpoint_tmpdir("sink_sar_") as out_dir:
-        return run_update_query_to_df(agg, ["event_type"], ckpt, out_dir)
+    def counters(ev: DataFrame) -> DataFrame:
+        return (
+            normalize_event_ts(ev)
+            .select("event_type", decoded.alias("v"))
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_records"),
+                F.count("v.event_id").alias("n_decoded"),
+                (F.count(F.lit(1)) - F.count("v.event_id")).alias("n_dropped"),
+                F.sum("v.event_id").alias("sum_event_id"),
+                F.sum(F.floor(F.col("v.value") * 1000).cast("long")).alias(
+                    "sum_value_milli"
+                ),
+            )
+        )
+
+    # Same bounded state as streaming_wire_roundtrip: event_type counter rows.
+    return run_topology(
+        spark, sf_dir, counters, glob=_EVENTS, keys=["event_type"], state=4096
+    )
 
 
 @register(
@@ -506,38 +478,20 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Redelivered rows behind the watermark drop at input — also correct:
     their first sighting already emitted.
     """
-    import os
-    import shutil
-    import tempfile
-
+    from ..sources.parquet import load_table
     from ..streaming.transforms import streaming_dedup_within_watermark
 
-    # same T7 state-partition pin as _events_stream — a plain (driver)
-    # session would otherwise create the checkpoint with 200 state stores
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-
-    staged = tempfile.mkdtemp(prefix="redeliver_events_")
-    try:
-        for i in range(2):
-            dst = os.path.join(staged, f"{i}.parquet")
-            shutil.copy(os.path.join(sf_dir, "events.parquet"), dst)
-            # spaced mtimes: the file source orders same-millisecond files
-            # arbitrarily, and delivery order matters under a watermark
-            os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-        stream = normalize_event_ts(
-            file_stream(spark, staged, events_schema(spark, staged))
-        )
-        deduped = streaming_dedup_within_watermark(
-            stream, keys=["event_id"], ts_col="ts"
-        ).select("event_id", "user_id", "event_type", "value")
-        with backlog_state_shuffle(spark, staged), checkpoint_tmpdir(
-            "ckpt_sde_"
-        ) as ckpt, checkpoint_tmpdir("sink_sde_") as out_dir:
-            return run_append_query_to_df(deduped, ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    ev = load_table(spark, sf_dir, "events")
+    # the whole topic and its redelivery, landed as one micro-batch
+    redelivered = ev.unionByName(ev).coalesce(1)
+    return run_topology(
+        spark,
+        redelivered,
+        lambda s: streaming_dedup_within_watermark(
+            s, keys=["event_id"], ts_col="ts"
+        ).select("event_id", "user_id", "event_type", "value"),
+        state="backlog",
+    )
 
 
 @register(
@@ -570,21 +524,23 @@ def streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_build
 
-    stream = _events_stream(spark, sf_dir)
-    cells = cms_build(
-        stream.select(F.col("user_id").cast("string").alias("item")),
-        "item",
-        CMS_DEPTH,
-        CMS_WIDTH,
-    )
-    # The 4×2048 cell grid IS the key space — state exchange sized from
-    # depth×width, not the core count.
-    from ..streaming.runner import bounded_state_shuffle
+    def cells(ev: DataFrame) -> DataFrame:
+        return cms_build(
+            normalize_event_ts(ev).select(F.col("user_id").cast("string").alias("item")),
+            "item",
+            CMS_DEPTH,
+            CMS_WIDTH,
+        )
 
-    with bounded_state_shuffle(spark, CMS_DEPTH * CMS_WIDTH), checkpoint_tmpdir(
-        "ckpt_cms_"
-    ) as ckpt, checkpoint_tmpdir("sink_cms_") as out_dir:
-        return run_update_query_to_df(cells, ["d", "bucket"], ckpt, out_dir)
+    # The 4×2048 cell grid IS the key space.
+    return run_topology(
+        spark,
+        sf_dir,
+        cells,
+        glob=_EVENTS,
+        keys=["d", "bucket"],
+        state=CMS_DEPTH * CMS_WIDTH,
+    )
 
 
 @register(
@@ -609,15 +565,16 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-keyed-state shape of every KTable-like operator here."""
     from ..streaming.stateful import running_totals_cents
 
-    totals = running_totals_cents(_events_stream(spark, sf_dir))
-    # NOT backlog-sized (r14 wave 5, measured 1.19x WORSE): the stateful
-    # stage here runs per-row PYTHON work (applyInPandasWithState), whose
-    # cost scales with arriving rows, not keys — one state partition would
-    # serialize it onto a single Python worker. Keeps scan/core parallelism.
-    with checkpoint_tmpdir("ckpt_sst_") as ckpt, (
-        checkpoint_tmpdir("sink_sst_")
-    ) as out_dir:
-        return run_update_query_to_df(totals, ["user_id"], ckpt, out_dir)
+    # Session-default state (r14 wave 5: backlog sizing measured 1.19x
+    # WORSE): per-row PYTHON state work scales with arriving rows, not
+    # keys — one state partition would serialize it onto one Python worker.
+    return run_topology(
+        spark,
+        sf_dir,
+        lambda ev: running_totals_cents(normalize_event_ts(ev)),
+        glob=_EVENTS,
+        keys=["user_id"],
+    )
 
 
 @register(
@@ -694,41 +651,36 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..streaming.transforms import streaming_interval_join
 
-    ev = _events_stream(spark, sf_dir)
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", F.col("user_id").alias("k"), "ts"
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_event_id"),
-        F.col("user_id").alias("k"),
-        F.col("ts").alias("p_ts"),
-    )
-    joined = streaming_interval_join(
-        clicks,
-        purchases,
-        key="k",
-        left_ts="ts",
-        right_ts="p_ts",
-        tolerance_seconds=300,
-        watermark="10 minutes",
-        how="left_outer",
-    ).select(
-        F.col("l.k").alias("user_id"),
-        F.col("l.event_id").alias("event_a"),
-        F.col("r.p_event_id").alias("event_b"),
-        (
-            F.abs(F.unix_micros(F.col("r.p_ts")) - F.unix_micros(F.col("l.ts")))
-        ).alias("diff_us"),
-        F.col("l.ts").alias("_cts"),
-    )
-    from ..streaming.runner import run_append_query_to_df
+    def left_join(raw: DataFrame) -> DataFrame:
+        ev = normalize_event_ts(raw)
+        clicks = ev.where(F.col("event_type") == "click").select(
+            "event_id", F.col("user_id").alias("k"), "ts"
+        )
+        purchases = ev.where(F.col("event_type") == "purchase").select(
+            F.col("event_id").alias("p_event_id"),
+            F.col("user_id").alias("k"),
+            F.col("ts").alias("p_ts"),
+        )
+        return streaming_interval_join(
+            clicks,
+            purchases,
+            key="k",
+            left_ts="ts",
+            right_ts="p_ts",
+            tolerance_seconds=300,
+            watermark="10 minutes",
+            how="left_outer",
+        ).select(
+            F.col("l.k").alias("user_id"),
+            F.col("l.event_id").alias("event_a"),
+            F.col("r.p_event_id").alias("event_b"),
+            (
+                F.abs(F.unix_micros(F.col("r.p_ts")) - F.unix_micros(F.col("l.ts")))
+            ).alias("diff_us"),
+            F.col("l.ts").alias("_cts"),
+        )
 
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_sijo_"
-    ) as ckpt, checkpoint_tmpdir("sink_sijo_") as sink_dir:
-        # Production sink shape: the parquet streaming sink receives the
-        # finalized rows executor-side; nothing moves through the driver.
-        out = run_append_query_to_df(joined, ckpt, sink_dir)
+    out = run_topology(spark, sf_dir, left_join, glob=_EVENTS, state="backlog")
     return out.where(F.col("_cts") <= F.lit(cutoff)).drop("_cts")
 
 
@@ -772,49 +724,49 @@ def streaming_range_join_keyless(spark: SparkSession, sf_dir: str) -> DataFrame:
     query — stream equals batch, again."""
     from pyspark.sql import functions as F
 
-    ev = _events_stream(spark, sf_dir).select(
-        "event_id", "user_id", "event_type", "ts"
-    )
     bin_us = 120_000_000
-    w = (
-        ev.where(F.col("event_type") == "error")
-        .select(F.col("event_id").alias("win_id"), F.col("ts").alias("w_ts"))
-        .withWatermark("w_ts", "24 hours")
-        .withColumn(
-            "wbin",
-            F.explode(
-                F.sequence(
-                    F.expr(f"unix_micros(w_ts) div {bin_us}"),
-                    F.expr(f"(unix_micros(w_ts) + {bin_us} - 1) div {bin_us}"),
-                )
+
+    def binned_join(raw: DataFrame) -> DataFrame:
+        ev = normalize_event_ts(raw).select("event_id", "user_id", "event_type", "ts")
+        w = (
+            ev.where(F.col("event_type") == "error")
+            .select(F.col("event_id").alias("win_id"), F.col("ts").alias("w_ts"))
+            .withWatermark("w_ts", "24 hours")
+            .withColumn(
+                "wbin",
+                F.explode(
+                    F.sequence(
+                        F.expr(f"unix_micros(w_ts) div {bin_us}"),
+                        F.expr(f"(unix_micros(w_ts) + {bin_us} - 1) div {bin_us}"),
+                    )
+                ),
+            )
+        )
+        e = (
+            ev.select(
+                F.col("event_id").alias("e_id"),
+                F.col("user_id").alias("e_user"),
+                F.col("ts").alias("e_ts"),
+            )
+            .withWatermark("e_ts", "24 hours")
+            .withColumn("ebin", F.expr(f"unix_micros(e_ts) div {bin_us}"))
+        )
+        return w.join(
+            e,
+            (F.col("wbin") == F.col("ebin"))
+            & (F.col("e_ts") >= F.col("w_ts"))
+            & (F.col("e_ts") < F.col("w_ts") + F.expr("INTERVAL 120 SECONDS"))
+            & (F.col("e_id") != F.col("win_id")),
+        ).select(
+            "win_id",
+            F.col("e_id").alias("matched_event"),
+            F.col("e_user").alias("user_id"),
+            (F.unix_micros(F.col("e_ts")) - F.unix_micros(F.col("w_ts"))).alias(
+                "lag_us"
             ),
         )
-    )
-    e = (
-        ev.select(
-            F.col("event_id").alias("e_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
-        )
-        .withWatermark("e_ts", "24 hours")
-        .withColumn("ebin", F.expr(f"unix_micros(e_ts) div {bin_us}"))
-    )
-    joined = w.join(
-        e,
-        (F.col("wbin") == F.col("ebin"))
-        & (F.col("e_ts") >= F.col("w_ts"))
-        & (F.col("e_ts") < F.col("w_ts") + F.expr("INTERVAL 120 SECONDS"))
-        & (F.col("e_id") != F.col("win_id")),
-    ).select(
-        "win_id",
-        F.col("e_id").alias("matched_event"),
-        F.col("e_user").alias("user_id"),
-        (F.unix_micros(F.col("e_ts")) - F.unix_micros(F.col("w_ts"))).alias("lag_us"),
-    )
-    with backlog_state_shuffle(spark, f"{sf_dir}/events.parquet"), checkpoint_tmpdir(
-        "ckpt_srk_"
-    ) as ckpt, checkpoint_tmpdir("sink_srk_") as sink_dir:
-        return run_append_query_to_df(joined, ckpt, sink_dir)
+
+    return run_topology(spark, sf_dir, binned_join, glob=_EVENTS, state="backlog")
 
 
 @register(
@@ -853,33 +805,33 @@ def streaming_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     production sink; nothing through the driver)."""
     from pyspark.sql import functions as F
 
-    ev = _events_stream(spark, sf_dir).withWatermark("ts", "24 hours")
     order_key = F.struct("ts", "event_id")
-    agg = ev.groupBy("event_type", F.window("ts", "6 hours").alias("w")).agg(
-        F.min_by("value", order_key).alias("open_v"),
-        F.max("value").alias("high_v"),
-        F.min("value").alias("low_v"),
-        F.max_by("value", order_key).alias("close_v"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    out = agg.select(
-        "event_type",
-        F.expr("unix_micros(w.start) div 21600000000").alias("bucket"),
-        "open_v",
-        "high_v",
-        "low_v",
-        "close_v",
-        "n",
-    )
+
+    def bars(raw: DataFrame) -> DataFrame:
+        ev = normalize_event_ts(raw).withWatermark("ts", "24 hours")
+        agg = ev.groupBy("event_type", F.window("ts", "6 hours").alias("w")).agg(
+            F.min_by("value", order_key).alias("open_v"),
+            F.max("value").alias("high_v"),
+            F.min("value").alias("low_v"),
+            F.max_by("value", order_key).alias("close_v"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        return agg.select(
+            "event_type",
+            F.expr("unix_micros(w.start) div 21600000000").alias("bucket"),
+            "open_v",
+            "high_v",
+            "low_v",
+            "close_v",
+            "n",
+        )
+
     # State is one OHLC row per (series, open window) with the watermark
     # evicting closed bars — |types| × in-play buckets, bounded by
-    # construction; the state exchange is sized from that bound.
-    from ..streaming.runner import bounded_state_shuffle
-
-    with bounded_state_shuffle(spark, 4096), checkpoint_tmpdir(
-        "ckpt_sohlc_"
-    ) as ckpt, checkpoint_tmpdir("sink_sohlc_") as out_dir:
-        return run_update_query_to_df(out, ["event_type", "bucket"], ckpt, out_dir)
+    # construction.
+    return run_topology(
+        spark, sf_dir, bars, glob=_EVENTS, keys=["event_type", "bucket"], state=4096
+    )
 
 
 @register(
@@ -908,29 +860,25 @@ def streaming_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-write-per-key compaction, like every update-mode gate query."""
     from pyspark.sql import functions as F
 
-    ev = _events_stream(spark, sf_dir).withWatermark("ts", "24 hours")
-    agg = ev.groupBy("event_type").agg(
-        F.theta_sketch_agg("user_id").alias("sk"),
+    def sketches(raw: DataFrame) -> DataFrame:
+        ev = normalize_event_ts(raw).withWatermark("ts", "24 hours")
+        return (
+            ev.groupBy("event_type")
+            .agg(F.theta_sketch_agg("user_id").alias("sk"))
+            .select("event_type", F.theta_sketch_estimate("sk").alias("est_users"))
+        )
+
+    # State is one fixed-size theta sketch per event type (the docstring's
+    # whole point). Sketch union is a set union of retained hashes, so
+    # partition count cannot change the estimate.
+    snap = run_topology(
+        spark, sf_dir, sketches, glob=_EVENTS, keys=["event_type"], state=4096
     )
     # exact side: latest-per-key state cannot carry countDistinct in
     # streaming; the exact count comes from the BATCH read of the same
     # source (the verification harness, exactly as X80's batch queries
     # keep exact separate from the operator path)
-    out = agg.select(
-        "event_type",
-        F.theta_sketch_estimate("sk").alias("est_users"),
-    )
-    # State is one fixed-size theta sketch per event type (the docstring's
-    # whole point) — the state exchange is sized from that key bound.
-    # Sketch union is a set union of retained hashes, so partition count
-    # cannot change the estimate.
-    from ..streaming.runner import bounded_state_shuffle
-
-    with bounded_state_shuffle(spark, 4096), checkpoint_tmpdir(
-        "ckpt_std_"
-    ) as ckpt, checkpoint_tmpdir("sink_std_") as out_dir:
-        snap = run_update_query_to_df(out, ["event_type"], ckpt, out_dir)
-    from ..sources.parquet import load_table, normalize_event_ts
+    from ..sources.parquet import load_table
 
     exact = (
         normalize_event_ts(load_table(spark, sf_dir, "events"))
@@ -949,7 +897,7 @@ def streaming_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_drift_psi",
-    oracle=None,  # assigned below — shares the batch monitor's SQL verbatim
+    oracle=_PSI_ORACLE,  # the batch monitor's SQL verbatim
 )
 def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PSI drift monitor run CONTINUOUSLY: the event stream maintains
@@ -966,25 +914,27 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .relational_queries import _PSI_BINS, _PSI_SPLIT, _PSI_WIDTH
 
-    stream = _events_stream(spark, sf_dir).select(
-        F.least(
-            F.floor(F.col("value") / _PSI_WIDTH).cast("long"),
-            F.lit(_PSI_BINS - 1).cast("long"),
-        ).alias("bin"),
-        (F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp")).alias("is_base"),
-    )
-    hist = stream.groupBy("bin").agg(
-        F.count(F.when(F.col("is_base"), 1)).alias("base_n"),
-        F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
-    )
-    # The 10-bin histogram IS the key space (bounded like the CMS cells) —
-    # state exchange sized from _PSI_BINS, not the core count.
-    from ..streaming.runner import bounded_state_shuffle
+    def hist(ev: DataFrame) -> DataFrame:
+        return (
+            normalize_event_ts(ev)
+            .select(
+                F.least(
+                    F.floor(F.col("value") / _PSI_WIDTH).cast("long"),
+                    F.lit(_PSI_BINS - 1).cast("long"),
+                ).alias("bin"),
+                (F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp")).alias("is_base"),
+            )
+            .groupBy("bin")
+            .agg(
+                F.count(F.when(F.col("is_base"), 1)).alias("base_n"),
+                F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
+            )
+        )
 
-    with bounded_state_shuffle(spark, _PSI_BINS), checkpoint_tmpdir(
-        "ckpt_psi_"
-    ) as ckpt, checkpoint_tmpdir("sink_psi_") as out_dir:
-        counts = run_update_query_to_df(hist, ["bin"], ckpt, out_dir)
+    # The 10-bin histogram IS the key space (bounded like the CMS cells).
+    counts = run_topology(
+        spark, sf_dir, hist, glob=_EVENTS, keys=["bin"], state=_PSI_BINS
+    )
     # post-math over the compacted 10-row histogram — identical to the
     # batch monitor from here down (bin fan-out, smoothing, ppm, PSI)
     from pyspark.sql import Window
@@ -1025,26 +975,11 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _psi_share_oracle() -> None:
-    """Bind the streaming monitor's oracle to the batch monitor's SQL —
-    one source of truth, the gate proves the streaming path computes the
-    identical state."""
-    import dataclasses
-
-    from . import REGISTRY
-    from .relational_queries import _PSI_ORACLE
-
-    REGISTRY["streaming_drift_psi"] = dataclasses.replace(
-        REGISTRY["streaming_drift_psi"], oracle=_PSI_ORACLE
-    )
-
-
-_psi_share_oracle()
 
 
 @register(
     "streaming_winnowing_screen",
-    oracle=None,  # assigned below — shares the batch screen's SQL verbatim
+    oracle=_WINNOW_SCREEN_ORACLE,  # the batch screen's SQL verbatim
 )
 def streaming_winnowing_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The X143 per-ingest dedup screen run AS the ingest: the new-doc
@@ -1069,18 +1004,11 @@ def streaming_winnowing_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (coverage guard: short docs carry through). Each doc appears in
     exactly one micro-batch, so per-batch aggregation is globally correct
     and the changelog holds one row per doc."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from ..operators.textsim import winnow_fingerprints
     from ..sources.parquet import load_table
     from .artifacts import winnowing_index
-
-    # same T7 state-partition pin as _events_stream
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
 
     corpus_fp = (
         winnowing_index(spark, sf_dir)
@@ -1101,51 +1029,20 @@ def streaming_winnowing_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.coalesce("n", F.lit(0)) == 0).alias("keep"),
         )
 
-    staged = tempfile.mkdtemp(prefix="winnow_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .where(F.col("doc_id") % 5 == 0)
-            .select("doc_id", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_wws_") as ckpt, (
-            checkpoint_tmpdir("sink_wws_")
-        ) as out_dir:
-            return run_update_query_to_df(
-                stream, ["doc_id"], ckpt, out_dir, batch_fn=screen_batch
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-
-
-def _winnow_screen_share_oracle() -> None:
-    """Bind the streaming screen's oracle to the batch screen's SQL — one
-    source of truth (the _psi_share_oracle pattern)."""
-    import dataclasses
-
-    from . import REGISTRY
-    from .dedup_queries import _WINNOW_SCREEN_ORACLE
-
-    REGISTRY["streaming_winnowing_screen"] = dataclasses.replace(
-        REGISTRY["streaming_winnowing_screen"], oracle=_WINNOW_SCREEN_ORACLE
+    arriving = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") % 5 == 0)
+        .select("doc_id", "text")
+        .repartition(3)  # three files -> three genuine micro-batches
     )
+    return run_topology(spark, arriving, keys=["doc_id"], batch_fn=screen_batch)
 
 
-_winnow_screen_share_oracle()
 
 
 @register(
     "streaming_bpe_token_rate",
-    oracle=None,  # assigned below — shares text_bpe_fertility's SQL verbatim
+    oracle=REGISTRY["text_bpe_fertility"].oracle,
 )
 def streaming_bpe_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer-throughput monitor run AS the ingest: documents
@@ -1167,36 +1064,18 @@ def streaming_bpe_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_ppm_ratio_sql``), and the result must hash-match
     ``text_bpe_fertility``'s oracle verbatim — the proof the continuous
     path computes the identical table."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from ..operators.bpe import explode_words
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
     from .artifacts import bpe_word_tokens
     from .corpus_queries import _ppm_ratio_sql
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
     wt = bpe_word_tokens(spark, sf_dir)
 
-    staged = tempfile.mkdtemp(prefix="bpe_rate_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("source", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
+    def rates(stream: DataFrame) -> DataFrame:
         words = explode_words(stream, "source")
-        agg = (
+        return (
             words.join(F.broadcast(wt), words.w == wt.word)
             .groupBy("source")
             .agg(
@@ -1205,16 +1084,12 @@ def streaming_bpe_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("w")).cast("long").alias("n_chars"),
             )
         )
-        # |sources|-row bounded state (the docstring's bound) — state
-        # exchange sized from the key bound, not the core count.
-        from ..streaming.runner import bounded_state_shuffle
 
-        with bounded_state_shuffle(spark, 4096), checkpoint_tmpdir(
-            "ckpt_bpe_rate_"
-        ) as ckpt, checkpoint_tmpdir("sink_bpe_rate_") as out_dir:
-            totals = run_update_query_to_df(agg, ["source"], ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select("source", "text")
+    # |sources|-row bounded state (the docstring's bound)
+    totals = run_topology(
+        spark, docs.repartition(3), rates, keys=["source"], state=4096
+    )
     return totals.select(
         "source",
         "n_words",
@@ -1228,26 +1103,11 @@ def streaming_bpe_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_rate_share_oracle() -> None:
-    """Bind the streaming monitor's oracle to the batch fertility query's
-    SQL — one source of truth (the _psi_share_oracle pattern)."""
-    import dataclasses
-
-    from . import REGISTRY
-    from . import corpus_queries  # noqa: F401  (registers text_bpe_fertility)
-
-    REGISTRY["streaming_bpe_token_rate"] = dataclasses.replace(
-        REGISTRY["streaming_bpe_token_rate"],
-        oracle=REGISTRY["text_bpe_fertility"].oracle,
-    )
-
-
-_bpe_rate_share_oracle()
 
 
 @register(
     "streaming_preference_winrate",
-    oracle=None,  # assigned below — shares preference_winrate_matrix's SQL
+    oracle=REGISTRY["preference_winrate_matrix"].oracle,
 )
 def streaming_preference_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The preference-comparison deriver run AS the ingest: events stream
@@ -1271,35 +1131,21 @@ def streaming_preference_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import preference_pair_emitter
     from .preference_queries import winrate_matrix
 
-    pairs = preference_pair_emitter(_events_stream(spark, sf_dir))
-    # NOT backlog-sized (r14 wave 5, measured 1.57x WORSE): same
-    # applyInPandasWithState rationale as streaming_stateful_totals — the
-    # per-row Python emitter needs the stateful stage's parallelism.
-    with checkpoint_tmpdir("ckpt_prefpairs_") as ckpt, (
-        checkpoint_tmpdir("sink_prefpairs_")
-    ) as out_dir:
-        emitted = run_append_query_to_df(pairs, ckpt, out_dir)
+    # Session-default state (r14 wave 5: backlog sizing measured 1.57x
+    # WORSE): the per-row Python emitter needs the stateful stage's
+    # parallelism, as in streaming_stateful_totals.
+    emitted = run_topology(
+        spark,
+        sf_dir,
+        lambda ev: preference_pair_emitter(normalize_event_ts(ev)),
+        glob=_EVENTS,
+    )
     wins = emitted.groupBy("winner", "loser").agg(
         F.count(F.lit(1)).alias("n")
     )
     return winrate_matrix(wins)
 
 
-def _pref_winrate_share_oracle() -> None:
-    """Bind the streaming twin's oracle to the batch matrix's SQL — one
-    source of truth (the _psi_share_oracle pattern)."""
-    import dataclasses
-
-    from . import REGISTRY
-    from . import preference_queries  # noqa: F401  (registers the batch twin)
-
-    REGISTRY["streaming_preference_winrate"] = dataclasses.replace(
-        REGISTRY["streaming_preference_winrate"],
-        oracle=REGISTRY["preference_winrate_matrix"].oracle,
-    )
-
-
-_pref_winrate_share_oracle()
 
 
 _ANN_SCREEN_ORACLE = """
@@ -1356,16 +1202,11 @@ def streaming_ann_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     |batch| x matched-bucket occupancy, never |batch| x |corpus|. At
     100 TB the corpus band table is the bucketed index a store co-partitions
     once and every ingest batch probes."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from ..operators.vectors import cosine, hyperplane_band_keys, hyperplanes, with_norm
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
     from .artifacts import ann_band_index, ann_corpus_vectors
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
 
     corpus = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     planes = hyperplanes(dim=64, n=64, seed=7)
@@ -1398,29 +1239,14 @@ def streaming_ann_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.vectors import scaled_float32_injection
 
-    staged = tempfile.mkdtemp(prefix="ann_ingest_")
-    try:
-        (
-            scaled_float32_injection(corpus, mod=20, shift=1000000, factor=1.5)
-            .withColumnRenamed("vec_id", "new_id")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_anns_") as ckpt, (
-            checkpoint_tmpdir("sink_anns_")
-        ) as out_dir:
-            return run_update_query_to_df(
-                stream, ["new_id", "match_id"], ckpt, out_dir, batch_fn=screen_batch
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    arriving = (
+        scaled_float32_injection(corpus, mod=20, shift=1000000, factor=1.5)
+        .withColumnRenamed("vec_id", "new_id")
+        .repartition(3)
+    )
+    return run_topology(
+        spark, arriving, keys=["new_id", "match_id"], batch_fn=screen_batch
+    )
 
 
 from .relational_queries import DOCS_AUD_CTE as _DOCS_AUD_CTE
@@ -1472,48 +1298,34 @@ def streaming_expectation_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
     at 100 TB this is the standard continuously-maintained quality
     dashboard, paying one aggregate per ingest batch instead of a full
     rescan per report."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "n_chars"
     )
-    docs_aud = _audited_documents(docs)
-    staged = tempfile.mkdtemp(prefix="expect_ingest_")
-    try:
-        docs_aud.repartition(3).write.mode("overwrite").parquet(staged)
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        per_id = stream.groupBy("doc_id").agg(
+
+    def per_id(stream: DataFrame) -> DataFrame:
+        return stream.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.count("lang").cast("long").alias("n_lang"),
             F.sum(F.when(F.col("n_chars") == F.length("text"), 1).otherwise(0))
             .cast("long")
             .alias("n_len_ok"),
         )
-        # round 15 (the r14 wave-5 lever this topology missed): the per-id
-        # aggregate is a DATA-GRAIN keyed state store — size its exchange
-        # from the staged backlog bytes instead of paying 32 empty state
-        # commits per micro-batch; the heavy per-row work (length check)
-        # happens map-side at scan parallelism before the exchange.
-        from ..streaming.runner import backlog_state_shuffle
 
-        with backlog_state_shuffle(spark, staged), checkpoint_tmpdir(
-            "ckpt_expmon_"
-        ) as ckpt, checkpoint_tmpdir("sink_expmon_") as out_dir:
-            compacted = run_update_query_to_df(per_id, ["doc_id"], ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    # round 15 (the r14 wave-5 lever this topology missed): the per-id
+    # aggregate is a DATA-GRAIN keyed state store, sized from the staged
+    # backlog bytes; the heavy per-row work (length check) happens map-side
+    # at scan parallelism before the exchange.
+    compacted = run_topology(
+        spark,
+        _audited_documents(docs).repartition(3),
+        per_id,
+        keys=["doc_id"],
+        state="backlog",
+    )
     d = compacted.agg(
         F.sum("n_rows").cast("long").alias("n"),
         F.sum("n_lang").cast("long").alias("n_lang"),
@@ -1630,16 +1442,11 @@ def streaming_boilerplate_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, 16-byte digest) against the built-once pinned index — per
     batch cost is |batch paragraphs| x matched buckets, never corpus-sized.
     Unknown paragraphs (LEFT join miss) are clean by definition."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
     from .artifacts import boilerplate_index
     from .corpus_queries import _ppm_ratio_sql
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
 
     idx = boilerplate_index(spark, sf_dir)
 
@@ -1680,38 +1487,17 @@ def streaming_boilerplate_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    staged = tempfile.mkdtemp(prefix="bp_ingest_")
-    try:
-        (
-            docs.where(
-                (F.col("doc_id") % 25 == 3) | (F.col("doc_id") % 10 == 7)
-            )
-            .select(
-                (F.col("doc_id") + 1000000).alias("new_id"), "source", "text"
-            )
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_bps_") as ckpt, (
-            checkpoint_tmpdir("sink_bps_")
-        ) as out_dir:
-            return run_update_query_to_df(
-                stream, ["new_id"], ckpt, out_dir, batch_fn=screen_batch
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    arriving = (
+        docs.where((F.col("doc_id") % 25 == 3) | (F.col("doc_id") % 10 == 7))
+        .select((F.col("doc_id") + 1000000).alias("new_id"), "source", "text")
+        .repartition(3)
+    )
+    return run_topology(spark, arriving, keys=["new_id"], batch_fn=screen_batch)
 
 
 @register(
     "streaming_unigram_token_rate",
-    oracle=None,  # assigned below — shares text_unigram_fertility's SQL
+    oracle=REGISTRY["text_unigram_fertility"].oracle,
 )
 def streaming_unigram_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``streaming_bpe_token_rate``'s unigram twin — restores the house
@@ -1730,36 +1516,18 @@ def streaming_unigram_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals feed the same overflow-safe ppm post-math as the batch query
     and must hash-match ``text_unigram_fertility``'s oracle verbatim —
     the proof the continuous path computes the identical table."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from ..operators.bpe import explode_words
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
     from .artifacts import unigram_word_tokens
     from .corpus_queries import _ppm_ratio_sql
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
     wt = unigram_word_tokens(spark, sf_dir)
 
-    staged = tempfile.mkdtemp(prefix="uni_rate_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("source", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
+    def rates(stream: DataFrame) -> DataFrame:
         words = explode_words(stream, "source")
-        agg = (
+        return (
             words.join(F.broadcast(wt), words.w == wt.word)
             .groupBy("source")
             .agg(
@@ -1768,16 +1536,12 @@ def streaming_unigram_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("w")).cast("long").alias("n_chars"),
             )
         )
-        # |sources|-row bounded state — state exchange sized from the key
-        # bound, not the core count.
-        from ..streaming.runner import bounded_state_shuffle
 
-        with bounded_state_shuffle(spark, 4096), checkpoint_tmpdir(
-            "ckpt_uni_rate_"
-        ) as ckpt, checkpoint_tmpdir("sink_uni_rate_") as out_dir:
-            totals = run_update_query_to_df(agg, ["source"], ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select("source", "text")
+    # |sources|-row bounded state
+    totals = run_topology(
+        spark, docs.repartition(3), rates, keys=["source"], state=4096
+    )
     return totals.select(
         "source",
         "n_words",
@@ -1791,26 +1555,11 @@ def streaming_unigram_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unigram_rate_share_oracle() -> None:
-    """Bind the streaming monitor's oracle to the batch fertility query's
-    SQL — one source of truth (the _bpe_rate_share_oracle pattern)."""
-    import dataclasses
-
-    from . import REGISTRY
-    from . import corpus_queries  # noqa: F401  (registers text_unigram_fertility)
-
-    REGISTRY["streaming_unigram_token_rate"] = dataclasses.replace(
-        REGISTRY["streaming_unigram_token_rate"],
-        oracle=REGISTRY["text_unigram_fertility"].oracle,
-    )
-
-
-_unigram_rate_share_oracle()
 
 
 @register(
     "streaming_blocklist_screen",
-    oracle=None,  # assigned below — shares text_blocklist_scrub's SQL
+    oracle=REGISTRY["text_blocklist_scrub"].oracle,
 )
 def streaming_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The C4 blocklist pass run AT INGEST — the text-cleaning family's
@@ -1829,54 +1578,18 @@ def streaming_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-grain HOF matching, entirely map-side. The result must
     hash-match the batch scrub's oracle verbatim — the proof the
     continuous path computes the identical table."""
-    import shutil
-
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
     from .corpus_queries import blocklist_scrub_frame
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-
-    staged = tempfile.mkdtemp(prefix="bl_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "source", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_bls_") as ckpt, (
-            checkpoint_tmpdir("sink_bls_")
-        ) as out_dir:
-            return run_update_query_to_df(
-                stream, ["doc_id"], ckpt, out_dir, batch_fn=blocklist_scrub_frame
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-
-
-def _blocklist_screen_share_oracle() -> None:
-    """Bind the ingest screen's oracle to the batch scrub's SQL — one
-    source of truth (the _bpe_rate_share_oracle pattern)."""
-    import dataclasses
-
-    from . import REGISTRY
-    from . import corpus_queries  # noqa: F401  (registers text_blocklist_scrub)
-
-    REGISTRY["streaming_blocklist_screen"] = dataclasses.replace(
-        REGISTRY["streaming_blocklist_screen"],
-        oracle=REGISTRY["text_blocklist_scrub"].oracle,
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    return run_topology(
+        spark,
+        docs.repartition(3),
+        keys=["doc_id"],
+        batch_fn=blocklist_scrub_frame,
     )
 
 
-_blocklist_screen_share_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1927,54 +1640,31 @@ def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline). The oracle replays the full learned-weight trajectory
     plus the share computation, so the monitor's thresholds are
     oracle-checked, not advisory."""
-    import shutil
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..operators.doremi import doremi_fit
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
+    from ..operators.doremi import MAX_DOREMI_DOMAINS, doremi_fit
     from ..sources.parquet import load_table
     from .pipeline_queries import _doremi_domain_rows
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
 
     weights = doremi_fit(_doremi_domain_rows(spark, sf_dir))
     targets = spark.createDataFrame(
         sorted(weights.items()), schema="source string, target_ppm long"
     )
 
-    from ..operators.doremi import MAX_DOREMI_DOMAINS
-    from ..streaming.runner import bounded_state_shuffle
-
-    staged = tempfile.mkdtemp(prefix="mix_mon_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("source", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        agg = stream.groupBy("source").agg(
+    docs = load_table(spark, sf_dir, "documents").select("source", "text")
+    # State keyed by source is |sources|-row bounded BY CONSTRUCTION
+    # (doremi_fit refuses past MAX_DOREMI_DOMAINS).
+    totals = run_topology(
+        spark,
+        docs.repartition(3),
+        lambda stream: stream.groupBy("source").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum(F.size(F.split("text", " "))).cast("long").alias("n_toks"),
-        )
-        # State keyed by source is |sources|-row bounded BY CONSTRUCTION
-        # (doremi_fit refuses past MAX_DOREMI_DOMAINS), so the state
-        # exchange is sized from that bound, not the core count.
-        with bounded_state_shuffle(spark, MAX_DOREMI_DOMAINS), checkpoint_tmpdir(
-            "ckpt_mixmon_"
-        ) as ckpt, checkpoint_tmpdir("sink_mixmon_") as out_dir:
-            totals = run_update_query_to_df(agg, ["source"], ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+        ),
+        keys=["source"],
+        state=MAX_DOREMI_DOMAINS,
+    )
 
     w_all = Window.partitionBy()  # |sources| rows — bounded
     t = totals.join(F.broadcast(targets), "source").withColumn(
@@ -2039,14 +1729,9 @@ def streaming_decontaminate_screen(spark: SparkSession, sf_dir: str) -> DataFram
     built once per corpus snapshot (localCheckpoint-pinned here), and
     broadcast into every micro-batch's probe; per-batch cost is
     |batch grams| map-side + one batch-local doc_id aggregate."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
@@ -2076,28 +1761,12 @@ def streaming_decontaminate_screen(spark: SparkSession, sf_dir: str) -> DataFram
             ).alias("drop_flag"),
         )
 
-    staged = tempfile.mkdtemp(prefix="decon_ingest_")
-    try:
-        (
-            docs.where(F.col("doc_id") % _DC_MOD != 0)
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_dcs_") as ckpt, (
-            checkpoint_tmpdir("sink_dcs_")
-        ) as out_dir:
-            return run_update_query_to_df(
-                stream, ["doc_id"], ckpt, out_dir, batch_fn=screen_batch
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    return run_topology(
+        spark,
+        docs.where(F.col("doc_id") % _DC_MOD != 0).repartition(3),
+        keys=["doc_id"],
+        batch_fn=screen_batch,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2131,42 +1800,16 @@ def streaming_mixture_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources|-row broadcast rate table); no watermark, no state growth,
     zero per-batch exchanges. The rate derivation's LM aggregate is
     charged once at rate-table build (the doremi/BT collect shape)."""
-    import shutil
-
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-
     rates_df = smd_rates_df(spark, sf_dir).localCheckpoint(eager=True)
-
-    staged = tempfile.mkdtemp(prefix="mix_sample_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "source")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_mixsmp_") as ckpt, (
-            checkpoint_tmpdir("sink_mixsmp_")
-        ) as out_dir:
-            return run_update_query_to_df(
-                stream,
-                ["doc_id"],
-                ckpt,
-                out_dir,
-                batch_fn=lambda b: smd_apply(b, rates_df),
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    return run_topology(
+        spark,
+        docs.repartition(3),
+        keys=["doc_id"],
+        batch_fn=lambda b: smd_apply(b, rates_df),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2213,16 +1856,10 @@ def streaming_url_dedup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the unbounded-dropDuplicates failure mode). Re-fetches inside the
     window drop against held state; re-fetches after eviction are a
     frontier re-crawl decision, not dedup's."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
     from ..streaming.transforms import streaming_dedup_within_watermark
-
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
 
     docs = load_table(spark, sf_dir, "documents")
     frame = url_crawl_frame(docs).select(
@@ -2237,45 +1874,21 @@ def streaming_url_dedup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("timestamp")
         .alias("fetch_ts"),
     )
-    staged = tempfile.mkdtemp(prefix="url_screen_ingest_")
-    work = tempfile.mkdtemp(prefix="url_screen_work_")
-    try:
-        frame.where(F.col("doc_id") < URL_RECRAWL_SHIFT).repartition(2).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(work, "orig"))
-        frame.where(F.col("doc_id") >= URL_RECRAWL_SHIFT).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(work, "re"))
-        # spaced mtimes: the file source orders same-millisecond files
-        # arbitrarily, and originals must arrive before the re-crawls
-        n = 0
-        for sub in ("orig", "re"):
-            for f in sorted(os.listdir(os.path.join(work, sub))):
-                if f.endswith(".parquet"):
-                    dst = os.path.join(staged, f"{n:02d}.parquet")
-                    shutil.copy(os.path.join(work, sub, f), dst)
-                    os.utime(dst, (1_700_000_000 + n * 10, 1_700_000_000 + n * 10))
-                    n += 1
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        deduped = streaming_dedup_within_watermark(
+    # originals (two files) land before the re-crawls (one file)
+    crawl = [
+        frame.where(F.col("doc_id") < URL_RECRAWL_SHIFT).repartition(2),
+        frame.where(F.col("doc_id") >= URL_RECRAWL_SHIFT).repartition(1),
+    ]
+    return run_topology(
+        spark,
+        crawl,
+        lambda stream: streaming_dedup_within_watermark(
             stream.withColumn("uh", F.md5(url_canonicalize(F.col("url")))),
             keys=["uh"],
             ts_col="fetch_ts",
-        ).select(
-            "doc_id", "domain", url_canonicalize(F.col("url")).alias("url")
-        )
-        with backlog_state_shuffle(spark, staged), checkpoint_tmpdir(
-            "ckpt_uds_"
-        ) as ckpt, checkpoint_tmpdir("sink_uds_") as out_dir:
-            return run_append_query_to_df(deduped, ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(work, ignore_errors=True)
+        ).select("doc_id", "domain", url_canonicalize(F.col("url")).alias("url")),
+        state="backlog",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2309,39 +1922,17 @@ def streaming_classifier_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     State bound: keyed by ``lang`` — |langs| rows of four longs BY
     CONSTRUCTION (the streaming_mixture_monitor shape); no watermark, no
     eviction, nothing grows with corpus size."""
-    import shutil
-
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-
-    staged = tempfile.mkdtemp(prefix="clf_mon_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("lang", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        agg = confusion_cells(confusion_flags(spark, stream))
-        # |langs|-row bounded state (the docstring's bound) — state
-        # exchange sized from the key bound, not the core count.
-        from ..streaming.runner import bounded_state_shuffle
-
-        with bounded_state_shuffle(spark, 4096), checkpoint_tmpdir(
-            "ckpt_clfmon_"
-        ) as ckpt, checkpoint_tmpdir("sink_clfmon_") as out_dir:
-            cells = run_update_query_to_df(agg, ["lang"], ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select("lang", "text")
+    # |langs|-row bounded state (the docstring's bound)
+    cells = run_topology(
+        spark,
+        docs.repartition(3),
+        lambda stream: confusion_cells(confusion_flags(spark, stream)),
+        keys=["lang"],
+        state=4096,
+    )
     return confusion_report(cells)
 
 
@@ -2370,36 +1961,17 @@ def streaming_gopher_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is per-row HOF work, entirely map-side. Shares the batch gate's
     oracle VERBATIM and a parity test pins the compacted verdicts equal
     to the batch table row-for-row."""
-    import shutil
-
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-
-    staged = tempfile.mkdtemp(prefix="gopher_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "source", "lang", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_gos_") as ckpt, (
-            checkpoint_tmpdir("sink_gos_")
-        ) as out_dir:
-            return run_update_query_to_df(
-                stream, ["doc_id"], ckpt, out_dir, batch_fn=gopher_rules_frame
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "lang", "text"
+    )
+    return run_topology(
+        spark,
+        docs.repartition(3),
+        keys=["doc_id"],
+        batch_fn=gopher_rules_frame,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2433,40 +2005,14 @@ def streaming_robots_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch; no watermark, no cross-batch state growth — the
     blocklist-screen shape); the changelog is the verdict log a
     compliance officer replays, the rollup |domains|-sized."""
-    import shutil
-
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
-    from .corpus_queries import url_crawl_frame
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-
-    staged = tempfile.mkdtemp(prefix="robots_ingest_")
-    try:
-        (
-            url_crawl_frame(load_table(spark, sf_dir, "documents"))
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        with checkpoint_tmpdir("ckpt_robots_") as ckpt, (
-            checkpoint_tmpdir("sink_robots_")
-        ) as out_dir:
-            winner = run_update_query_to_df(
-                stream,
-                ["doc_id"],
-                ckpt,
-                out_dir,
-                batch_fn=lambda b: robots_verdicts(spark, b),
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    winner = run_topology(
+        spark,
+        url_crawl_frame(load_table(spark, sf_dir, "documents")).repartition(3),
+        keys=["doc_id"],
+        batch_fn=lambda b: robots_verdicts(spark, b),
+    )
     return robots_rollup(winner)
 
 
@@ -2501,37 +2047,15 @@ def streaming_roc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     flow through (the streaming_cms_sketch discipline — the reason a
     quantized histogram, not a corpus-sized rank sort, is the streaming
     AUC primitive); no watermark, nothing evicted because nothing grows."""
-    import shutil
-
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
     from ..sources.parquet import load_table
 
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-
-    staged = tempfile.mkdtemp(prefix="roc_mon_ingest_")
-    try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "lang", "text")
-            .repartition(3)  # three files -> three genuine micro-batches
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        schema = spark.read.parquet(staged).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        agg = _clf_cells_frame(spark, stream)
-        # The <=1000-cell grid IS the key space (the docstring's bound) —
-        # state exchange sized from it, not the core count.
-        from ..streaming.runner import bounded_state_shuffle
-
-        with bounded_state_shuffle(spark, 1000), checkpoint_tmpdir(
-            "ckpt_rocmon_"
-        ) as ckpt, checkpoint_tmpdir("sink_rocmon_") as out_dir:
-            cells = run_update_query_to_df(agg, ["cell"], ckpt, out_dir)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    # The <=1000-cell grid IS the key space (the docstring's bound).
+    cells = run_topology(
+        spark,
+        docs.repartition(3),
+        lambda stream: _clf_cells_frame(spark, stream),
+        keys=["cell"],
+        state=1000,
+    )
     return _roc_report(cells)

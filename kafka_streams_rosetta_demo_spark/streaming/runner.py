@@ -1,29 +1,52 @@
-"""Streaming query execution: file sources, checkpoints, and the brokerless
-end-to-end pipelines the correctness gate runs.
+"""Streaming query execution: one topology runner over a parquet landing zone.
+
+:func:`run_topology` is the one entry point every registered ``streaming_*``
+query goes through — D-Streams' "a stream is a repeated deterministic batch
+job" made one explicit shape, the way each reference app builds its one
+topology through one ``StreamsBuilder``. It owns the whole protocol:
+
+- **source** — stage a frame (or a list of frames, landed in order with
+  spaced mtimes) into a landing directory, or take an existing landing path
+  plus a glob; read the schema; ``readStream`` with ``maxFilesPerTrigger=1``
+  and apply the caller's topology;
+- **state partitions** — one ``state`` argument picks the state-exchange
+  size (:func:`state_shuffle` documents the three rules);
+- **directories** — one temp tree holds staging, checkpoint and sink, and
+  is removed at the end;
+- **sink** — update mode through :func:`run_update_query_to_df` when
+  ``keys`` is given, append mode through :func:`run_append_query_to_df`
+  otherwise; either way the result comes back pinned.
+
+Conf contract: every conf the runner sets is restored to the caller's PRIOR
+value on exit, so a query leaves the session's ``shuffle.partitions`` as it
+found it. (The nanos-as-long read conf that :func:`file_stream` pins is the
+exception, like the registry's UTC pin: lazily returned batch frames still
+need it after the call.)
 
 T4/T6 mapping: the checkpoint directory is the engine's state store +
 offsets log — the equivalent of the reference's RocksDB + changelog topic
 and committed consumer offsets (``CallsAggregationApp.java:106``;
 ``auto.offset.reset=earliest`` ``:29``). Restarting a query on the same
 checkpoint resumes from committed progress and reprocesses nothing, which is
-exactly the at-least-once contract (T5) the reference runs under.
-
-The ``run_*_to_state`` helpers execute a full streaming topology with
-``trigger(availableNow=True)`` over a file source (no broker needed), merge
-every update-mode micro-batch into a keyed state dict — the in-memory stand-
-in for the compacted output topic — and return the final state as rows.
-Update-mode merge = last write per key wins, the compacted-topic read
-semantics a downstream ``builder.table`` would see.
+exactly the at-least-once contract (T5) the reference runs under. Every run
+here is ``trigger(availableNow=True)`` over a file source, so no broker is
+needed.
 """
 
 from __future__ import annotations
 
+import fnmatch
+import os
+import shutil
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
+from ..sources.parquet import events_schema as footer_schema
 
 # How many bounded-state keys one state-store partition is sized to hold.
 # State rows here are a key plus a handful of longs (tens of bytes), so a
@@ -42,42 +65,74 @@ _BACKLOG_BYTES_PER_STATE_PARTITION = 32 * 1024 * 1024
 
 
 @contextmanager
-def bounded_state_shuffle(spark: SparkSession, key_bound: int):
-    """Pin ``spark.sql.shuffle.partitions`` for a streaming topology whose
-    keyed state is bounded BY CONSTRUCTION to ``key_bound`` keys, restoring
-    the session default on exit (the invariant every query assumes at
-    entry).
+def state_shuffle(spark: SparkSession, parts: int):
+    """Pin ``spark.sql.shuffle.partitions`` to ``parts`` for one streaming
+    run and restore the caller's PRIOR value on exit.
 
-    Why (guide §2.2/§2.4 applied to streaming state): every micro-batch
-    pays a FIXED cost per state-store partition — a task, a state commit
-    (delta file + fsync), and maintenance — even when the partition holds
-    zero keys. With the session default of ``$SPARK_GRAFT_CPUS`` (32)
-    partitions and a state space of |sources| ≈ 8 keys, a 3-micro-batch
-    run spends most of its wall time committing empty state: measured
-    10.2 s at 32 partitions vs 4.9 s at 1-2 on the per-source totals
-    shape, identical results (OPTIMIZATION_r14.md §streaming).
+    Why the state exchange is sized at all (guide §2.2/§2.4 applied to the
+    one exchange AQE cannot touch): every micro-batch pays a FIXED cost per
+    state-store partition — a task, a state commit (delta file + fsync) and
+    maintenance — even when the partition holds zero keys, and AQE never
+    coalesces the state exchange because the count freezes into the
+    checkpoint at the first batch. With the session default of
+    ``$SPARK_GRAFT_CPUS`` (32) partitions and a state space of |sources| ≈ 8
+    keys, a 3-micro-batch run spent most of its wall time committing empty
+    state: 10.2 s at 32 partitions vs 4.9 s at 1–2 on the per-source totals
+    shape, identical results; backlog sizing took the data-grain topologies
+    to 0.20–0.68x (OPTIMIZATION_r14.md §streaming). A plain session's 200
+    would mean 200 state stores per micro-batch.
 
-    The partition count derives from the DOCUMENTED key-space bound, never
-    from the machine: ``ceil(key_bound / 4096)`` clamped to the session
-    default. This is scale-adaptive, not local tuning — a state space
-    bounded by construction (|sources|-row model state, a ≤1000-cell grid)
-    needs the same handful of partitions on a 100 TB ingest, because the
-    heavy per-row work happens in the map-side partial aggregate at scan
-    parallelism BEFORE this exchange; only |keys| pre-aggregated rows ever
-    cross it. Unbounded-key topologies (URL-grain dedup state, per-user
-    windows) must NOT use this — they keep the scale-parameterised session
-    default.
+    The count comes from one of three rules, all clamped to
+    ``[1, DEFAULT_SHUFFLE_PARTITIONS]`` and none derived from the machine:
+
+    - **key bound** (:func:`bounded_state_shuffle`) — keyed state bounded BY
+      CONSTRUCTION (|sources|-row model state, a ≤1000-cell grid):
+      ``ceil(key_bound / 4096)``. The same handful of partitions holds on a
+      100 TB ingest, because the heavy per-row work runs in the map-side
+      partial aggregate at scan parallelism BEFORE this exchange; only
+      |keys| pre-aggregated rows ever cross it.
+    - **backlog** (:func:`backlog_state_shuffle`) — DATA-GRAIN keys (per-user
+      windows, per-URL dedup sightings, stream-stream join rows):
+      ``ceil(backlog_bytes / 32 MiB)``. An ``availableNow`` run admits
+      exactly the staged backlog and keyed state never exceeds the rows
+      that arrived, so this is AQE's ``advisoryPartitionSizeInBytes`` sizing
+      done before the query starts. A backlog past ~1 GiB runs at the
+      default exactly as before. A ZERO-byte backlog (missing path, or no
+      ``.parquet`` files) keeps the default: there is nothing to size from,
+      and serializing every shuffle onto one task on a typo'd path would be
+      the opposite of the adaptive contract (ADVICE r14).
+    - **session default** — ``DEFAULT_SHUFFLE_PARTITIONS``: unbounded keys
+      with no staged backlog, stateless screens, and the topologies whose
+      stateful stage runs per-row PYTHON work (``applyInPandasWithState``).
+      Those must NOT be sized down: their cost scales with arriving rows,
+      not state commits, and fewer partitions serialize the Python workers
+      (measured 1.19x and 1.57x WORSE — OPTIMIZATION_r14.md).
     """
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
-
-    parts = max(1, min(DEFAULT_SHUFFLE_PARTITIONS, -(-key_bound // _KEYS_PER_STATE_PARTITION)))
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(parts))
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    ensure_conf(spark, key, str(parts))
     try:
         yield
     finally:
-        ensure_conf(
-            spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-        )
+        ensure_conf(spark, key, prior)
+
+
+def _clamp(parts: int) -> int:
+    return max(1, min(DEFAULT_SHUFFLE_PARTITIONS, parts))
+
+
+def bounded_state_shuffle(spark: SparkSession, key_bound: int):
+    """Key-bound rule of :func:`state_shuffle`: ``ceil(key_bound / 4096)``."""
+    return state_shuffle(spark, _clamp(-(-key_bound // _KEYS_PER_STATE_PARTITION)))
+
+
+def backlog_state_shuffle(spark: SparkSession, *paths: str):
+    """Backlog rule of :func:`state_shuffle`: ``ceil(bytes / 32 MiB)`` over
+    the parquet files under ``paths``; the default when that is zero."""
+    n = backlog_bytes(*paths)
+    if n == 0:
+        return state_shuffle(spark, DEFAULT_SHUFFLE_PARTITIONS)
+    return state_shuffle(spark, _clamp(-(-n // _BACKLOG_BYTES_PER_STATE_PARTITION)))
 
 
 def backlog_bytes(*paths: str) -> int:
@@ -85,8 +140,6 @@ def backlog_bytes(*paths: str) -> int:
     path (a file, or a directory walked recursively). This is the exact
     volume a bounded ``availableNow`` run will ever admit — known up front
     because the whole backlog is staged before the query starts."""
-    import os
-
     total = 0
     for p in paths:
         if os.path.isfile(p):
@@ -97,87 +150,6 @@ def backlog_bytes(*paths: str) -> int:
                     if name.endswith(".parquet"):
                         total += os.path.getsize(os.path.join(root, name))
     return total
-
-
-@contextmanager
-def backlog_state_shuffle(spark: SparkSession, *paths: str):
-    """Size the state exchange of a bounded ``availableNow`` topology whose
-    key space is DATA-GRAIN (per-user windows, per-URL dedup sightings,
-    stream-stream join rows — no construction bound) from the staged
-    backlog's on-disk bytes, restoring the session default on exit.
-
-    Why this is scale-adaptive, not local tuning (guide §2.2 applied to the
-    one exchange AQE cannot touch): every micro-batch pays a FIXED cost per
-    state-store partition — a task plus a state commit (delta file + fsync)
-    — even for partitions holding zero keys, and AQE never coalesces the
-    state exchange because the partition count is frozen into the
-    checkpoint at first batch. For a batch exchange AQE solves exactly this
-    by sizing partitions from the measured map output
-    (``advisoryPartitionSizeInBytes``); here the same number is available
-    BEFORE the query starts, because an ``availableNow`` run admits
-    precisely the staged backlog and keyed state never exceeds the rows
-    that arrived. ``ceil(backlog_bytes / 32 MiB)`` clamped to the session
-    default therefore tracks DATA volume: a backlog past ~1 GiB (32 MiB ×
-    the 32-partition session default) runs at the scale-parameterised
-    default exactly as before, and a genuinely unbounded production ingest
-    (no staged backlog to size from) keeps the default too — only runs
-    whose whole backlog is small stop paying 32 empty state commits per
-    micro-batch for kilobytes of state.
-
-    Topologies whose key space is bounded BY CONSTRUCTION should use the
-    tighter :func:`bounded_state_shuffle` instead. Topologies whose
-    stateful stage runs per-row PYTHON work (``applyInPandasWithState``)
-    must NOT use this: their cost scales with arriving rows, not state
-    commits, and fewer partitions serialize the Python workers (measured
-    1.2–1.6x WORSE on the two such topologies — OPTIMIZATION_r14.md).
-
-    ``SPARK_GRAFT_BACKLOG_STATE=0`` disables the sizing (A/B lever; the
-    session default then applies, the pre-round-14 behaviour). A backlog of
-    ZERO bytes (missing path, or a staged dir with no ``.parquet`` files)
-    also keeps the session default: there is nothing to size from, and
-    silently serializing every shuffle onto one task on a typo'd path would
-    be the opposite of the adaptive contract (ADVICE r14). Both the sized
-    and the kill-switch leg restore the session default on exit — the
-    invariant every query assumes at entry — so A/B legs leave identical
-    session state behind.
-    """
-    import os
-
-    from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
-
-    if os.environ.get("SPARK_GRAFT_BACKLOG_STATE", "1") == "0":
-        try:
-            yield
-        finally:
-            ensure_conf(
-                spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-            )
-        return
-    n = backlog_bytes(*paths)
-    if n == 0:
-        # nothing staged to size from: keep the scale-parameterised default
-        # (never clamp to 1 on a missing/typo'd path), same exit invariant
-        try:
-            yield
-        finally:
-            ensure_conf(
-                spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-            )
-        return
-    parts = max(
-        1,
-        min(
-            DEFAULT_SHUFFLE_PARTITIONS,
-            -(-n // _BACKLOG_BYTES_PER_STATE_PARTITION),
-        ),
-    )
-    ensure_conf(spark, "spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        ensure_conf(
-            spark, "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-        )
 
 
 # Result frames whose pin degraded to DISK_ONLY. Unlike the artifact memos
@@ -247,8 +219,6 @@ def file_stream(
     the same long-read contract as the batch loader. ``path`` must be a
     directory (file-source contract); use ``path_glob_filter`` to select one
     table's files out of a shared directory."""
-    from ..session import ensure_conf
-
     ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -258,42 +228,89 @@ def file_stream(
     return reader.parquet(path)
 
 
-def run_update_query_to_state(
-    result: DataFrame,
-    state_key: Callable[[Row], tuple],
-    checkpoint_dir: str,
-    state: dict | None = None,
-) -> dict:
-    """Run an update-mode streaming aggregate to completion (availableNow),
-    merging each micro-batch into ``state`` keyed by ``state_key`` —
-    last-update-wins, the changelog/compacted-topic contract (T2).
-
-    The collect inside foreachBatch materializes only the *changed aggregate
-    rows* per micro-batch (bounded by key cardinality, not input size); the
-    production sink is :func:`run_update_query_to_parquet_changelog`
-    (executor-side parquet appends — pytest-pinned equal to this merge),
-    or a Kafka/Delta writer in the same ``foreachBatch`` position.
-    """
-    merged: dict = state if state is not None else {}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        for row in batch_df.collect():
-            merged[state_key(row)] = row
-
-    (
-        result.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return merged
+def _land(frames: Sequence[DataFrame], landing: str, scratch: str) -> None:
+    """Write each frame in order and move its part files into the flat
+    ``landing`` directory with spaced mtimes: the file source orders
+    same-millisecond files arbitrarily, and delivery order matters under a
+    watermark."""
+    os.makedirs(landing)
+    n = 0
+    for i, frame in enumerate(frames):
+        part = os.path.join(scratch, f"stage{i}")
+        frame.write.parquet(part)
+        for name in sorted(os.listdir(part)):
+            if name.endswith(".parquet"):
+                dst = os.path.join(landing, f"{n:03d}.parquet")
+                shutil.move(os.path.join(part, name), dst)
+                os.utime(dst, (1_700_000_000 + n * 10, 1_700_000_000 + n * 10))
+                n += 1
 
 
-def state_to_df(spark: SparkSession, state: dict, schema: T.StructType) -> DataFrame:
-    """Final keyed state → DataFrame (the compacted-topic snapshot)."""
-    return spark.createDataFrame(list(state.values()), schema)
+def run_topology(
+    spark: SparkSession,
+    source: str | DataFrame | Sequence[DataFrame],
+    build: Callable[[DataFrame], DataFrame] | None = None,
+    *,
+    glob: str | None = None,
+    keys: list[str] | None = None,
+    state: int | str | None = None,
+    batch_fn: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Run one streaming topology to completion and return its pinned result.
+
+    ``source`` is a frame or a list of frames to stage (each lands as its
+    own part files, one file per micro-batch), or an existing landing
+    directory whose files matching ``glob`` are the stream. ``build`` maps
+    the raw stream to the topology's output (the stream itself when None,
+    as for the stateless screens whose work is all in ``batch_fn``).
+    ``state`` picks the state-partition rule (:func:`state_shuffle`): an
+    int key bound, ``"backlog"`` (the bytes the stream will read — only the
+    matched files of a landing path), or None for the session default.
+    With ``keys`` the run is update mode, compacted last-write-per-key on
+    ``keys`` after the optional per-batch ``batch_fn``; without, append
+    mode."""
+    if batch_fn is not None and keys is None:
+        raise ValueError("batch_fn needs keys: it runs in the update-mode sink")
+    with checkpoint_tmpdir("topology_") as tree:
+        if isinstance(source, str):
+            files = [
+                os.path.join(source, n)
+                for n in sorted(os.listdir(source))
+                if fnmatch.fnmatch(n, glob or "*")
+            ]
+            if not files:
+                raise FileNotFoundError(f"no files match {glob!r} under {source}")
+            # the footer schema matches whatever ts encoding the data ships
+            # with (nanos-as-long or TIMESTAMP/NTZ); cached per file, so a
+            # stream start pays no schema-read job
+            stream = file_stream(
+                spark,
+                source,
+                footer_schema(spark, files[0]),
+                max_files_per_trigger=1,
+                path_glob_filter=glob,
+            )
+        else:
+            landing = os.path.join(tree, "landing")
+            _land([source] if isinstance(source, DataFrame) else source, landing, tree)
+            stream = (
+                spark.readStream.schema(spark.read.parquet(landing).schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(landing)
+            )
+            files = [landing]
+        result = build(stream) if build is not None else stream
+        if state == "backlog":
+            scope = backlog_state_shuffle(spark, *files)
+        elif state is None:
+            scope = state_shuffle(spark, DEFAULT_SHUFFLE_PARTITIONS)
+        else:
+            scope = bounded_state_shuffle(spark, state)
+        ckpt, sink = os.path.join(tree, "checkpoint"), os.path.join(tree, "sink")
+        with scope:
+            if keys is None:
+                return run_append_query_to_df(result, ckpt, sink)
+            return run_update_query_to_df(result, keys, ckpt, sink, batch_fn=batch_fn)
 
 
 def run_update_query_to_parquet_changelog(
@@ -302,16 +319,14 @@ def run_update_query_to_parquet_changelog(
     out_dir: str,
     batch_fn: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
-    """The PRODUCTION-shaped sink the ``run_update_query_to_*state``
-    helpers stand in for: each update-mode micro-batch appends its changed
-    aggregate rows to a parquet changelog (stamped with the batch id) —
-    entirely executor-side, nothing moves driver-ward, so it scales to
-    billions of keys where the in-memory adapters cannot. The changelog is
-    the lakehouse analogue of the compacted output topic; read it back
-    with :func:`parquet_changelog_snapshot` for last-write-wins state.
-    ``tests/test_streaming.py`` pins this sink equal to the driver-merged
-    state, proving the in-memory merge is an optional adapter, not
-    load-bearing.
+    """The production-shaped update-mode sink: each micro-batch appends its
+    changed aggregate rows to a parquet changelog (stamped with the batch
+    id) — entirely executor-side, nothing moves driver-ward, so it scales to
+    billions of keys. The changelog is the lakehouse analogue of the
+    compacted output topic; read it back with
+    :func:`parquet_changelog_snapshot` for last-write-wins state (update
+    mode re-emits a key whenever it changes, so last write per key is the
+    compacted-topic read a downstream ``builder.table`` would see).
 
     ``batch_fn`` lets a per-batch transform (e.g. the broadcast enrichment
     join — the reference's stream–table leftJoin run inside
@@ -368,14 +383,13 @@ def run_update_query_to_df(
     executor-side parquet changelog (:func:`run_update_query_to_parquet_changelog`)
     followed by the last-write-per-key compaction
     (:func:`parquet_changelog_snapshot`). Nothing moves through the driver —
-    no ``collect``, no ``toPandas`` — so the path holds at key cardinalities
-    the in-memory adapters cannot; this is what the registered
-    ``streaming_*`` gate queries call.
+    no ``collect``, no ``toPandas`` — so the path holds at any key
+    cardinality.
 
     LOCAL-MODE ADAPTER NOTE (same contract as :func:`run_append_query_to_df`):
     the returned snapshot pins to executor memory with an eager
-    ``localCheckpoint`` so the caller may delete ``out_dir`` (the gate
-    queries sink into a TemporaryDirectory). ``localCheckpoint`` blocks are
+    ``localCheckpoint`` so the caller may delete ``out_dir`` (the runner
+    sinks into a temporary directory). ``localCheckpoint`` blocks are
     not fault-tolerant — on a multi-executor cluster an executor loss after
     the source files are gone truncates lineage unrecoverably. In production
     the read-back never happens (downstream consumers read the changelog /
@@ -404,8 +418,6 @@ def _changelog_has_files(out_dir: str) -> bool:
     """Emptiness probe for the plain-append changelog sink (which has no
     ``_spark_metadata`` commit log — writes happen through the batch writer
     inside ``foreachBatch``, committed by the streaming checkpoint)."""
-    import os
-
     return os.path.isdir(out_dir) and any(
         n.endswith(".parquet") for n in os.listdir(out_dir)
     )
@@ -419,7 +431,6 @@ def _file_sink_has_commits(out_dir: str) -> bool:
     file is a ``v1`` header followed by one JSON ``SinkFileStatus`` per
     written file; any ``add`` action means the sink holds data."""
     import json
-    import os
 
     meta = os.path.join(out_dir, "_spark_metadata")
     if not os.path.isdir(meta):
@@ -464,7 +475,6 @@ def idempotent_parquet_sink(out_dir: str) -> Callable[[DataFrame, int], None]:
     tests/test_streaming.py::test_idempotent_sink_survives_batch_redelivery
     (the naive append sink provably duplicates under the same forced
     replay)."""
-    import os
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
@@ -472,50 +482,6 @@ def idempotent_parquet_sink(out_dir: str) -> Callable[[DataFrame, int], None]:
         )
 
     return sink
-
-
-def run_append_query_to_idempotent_parquet(
-    result: DataFrame, checkpoint_dir: str, out_dir: str
-) -> None:
-    """Run an append-mode stream to completion (availableNow) through the
-    batchId-keyed idempotent parquet sink — see
-    :func:`idempotent_parquet_sink` for the exactly-once argument."""
-    (
-        result.writeStream.outputMode("append")
-        .foreachBatch(idempotent_parquet_sink(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_append_query_to_rows(
-    result: DataFrame,
-    checkpoint_dir: str,
-    rows: list | None = None,
-) -> list:
-    """Run an append-mode streaming aggregate to completion (availableNow),
-    accumulating each micro-batch's *finalized* rows. Under append mode a
-    (key, window) row is emitted at most once across the checkpoint's
-    lifetime — the suppress/final-emission contract — so unlike the
-    update-mode helpers there is no changelog compaction to do: the sink
-    is a plain append, exactly what a Kafka/Delta writer would receive.
-    """
-    out: list = rows if rows is not None else []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out.extend(batch_df.collect())
-
-    (
-        result.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return out
 
 
 def run_append_query_to_df(
@@ -526,13 +492,14 @@ def run_append_query_to_df(
     """Append-mode run through the PRODUCTION sink shape: the native
     parquet streaming sink writes each micro-batch's finalized rows
     entirely executor-side (no foreachBatch, no driver collect, no Python
-    row round-trip — the lakehouse analogue of a Kafka producer), then the
-    result reads back and pins to executor memory with an eager
-    ``localCheckpoint`` so the caller may delete ``out_dir`` immediately.
-    At scale the read-back never happens — downstream consumers read the
-    sink directly; here it turns the finished stream into the gate query's
-    return value. Scales to outputs the driver could never hold, where
-    :func:`run_append_query_to_rows` (the in-memory adapter) cannot.
+    row round-trip — the lakehouse analogue of a Kafka producer). Under
+    append mode a (key, window) row is emitted at most once across the
+    checkpoint's lifetime — the suppress/final-emission contract — so there
+    is no compaction to do. The result reads back and pins to executor
+    memory with an eager ``localCheckpoint`` so the caller may delete
+    ``out_dir`` immediately. At scale the read-back never happens —
+    downstream consumers read the sink directly; here it turns the finished
+    stream into the query's return value.
 
     LOCAL-MODE ADAPTER NOTE: ``localCheckpoint`` blocks live in executor
     memory and are NOT fault-tolerant — on a multi-executor cluster, losing

@@ -31,8 +31,9 @@ from kafka_streams_rosetta_demo_spark.streaming.kafka_io import (
 )
 from kafka_streams_rosetta_demo_spark.streaming.runner import (
     file_stream,
-    run_update_query_to_state,
-    state_to_df,
+    parquet_changelog_snapshot,
+    run_append_query_to_df,
+    run_update_query_to_parquet_changelog,
 )
 from kafka_streams_rosetta_demo_spark.streaming.transforms import (
     streaming_latest_per_key,
@@ -88,50 +89,30 @@ def _stream(spark, path, **kw):
     return normalize_event_ts(file_stream(spark, path, events_schema(spark, path), **kw))
 
 
+def _changelog_state(result, keys, tmp_path, ckpt=None):
+    """Run an update-mode topology through the parquet changelog sink and
+    return its last-write-per-key snapshot (the compacted-topic read)."""
+    out_dir = str(tmp_path / "changelog")
+    run_update_query_to_parquet_changelog(
+        result, ckpt or str(tmp_path / "ckpt"), out_dir
+    )
+    return parquet_changelog_snapshot(result.sparkSession, out_dir, keys)
+
+
+def _changelog_rows(spark, out_dir):
+    import os
+
+    return spark.read.parquet(out_dir).count() if os.path.isdir(out_dir) else 0
+
+
 def test_multibatch_windowed_agg_converges_to_batch(spark, split_events_dir, tmp_path):
     calls = events_to_calls(_stream(spark, split_events_dir, max_files_per_trigger=1))
     agg = streaming_windowed_call_agg(calls)
-    state = run_update_query_to_state(
-        agg, lambda r: (r.id_telef_origen, r.window_start), str(tmp_path / "ckpt")
-    )
-    got = state_to_df(spark, state, agg.schema)
+    got = _changelog_state(agg, ["id_telef_origen", "window_start"], tmp_path)
 
     batch_calls = events_to_calls(spark.read.parquet(split_events_dir))
     expected = unwrap_window(windowed_call_agg(batch_calls))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
-
-
-def test_parquet_changelog_sink_equals_driver_merged_state(
-    spark, split_events_dir, tmp_path
-):
-    """The driver-side state merge is an optional ADAPTER, not load-bearing:
-    the same update-mode topology written through the production-shaped
-    parquet-changelog sink (executor-side appends, nothing collected) must
-    compact to exactly the state the in-memory merge produced."""
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        parquet_changelog_snapshot,
-        run_update_query_to_parquet_changelog,
-    )
-
-    def topology():
-        calls = events_to_calls(_stream(spark, split_events_dir, max_files_per_trigger=1))
-        return streaming_windowed_call_agg(calls)
-
-    agg = topology()
-    state = run_update_query_to_state(
-        agg, lambda r: (r.id_telef_origen, r.window_start), str(tmp_path / "ckpt_mem")
-    )
-    merged = state_to_df(spark, state, agg.schema)
-
-    out_dir = str(tmp_path / "changelog")
-    run_update_query_to_parquet_changelog(
-        topology(), str(tmp_path / "ckpt_lake"), out_dir
-    )
-    lake = parquet_changelog_snapshot(
-        spark, out_dir, ["id_telef_origen", "window_start"]
-    ).select(*merged.columns)
-
-    assert sorted(map(tuple, lake.collect())) == sorted(map(tuple, merged.collect()))
 
 
 def test_parquet_changelog_sink_restart_replays_nothing(spark, split_events_dir, tmp_path):
@@ -221,8 +202,7 @@ def test_multibatch_latest_per_key_converges_to_batch(spark, split_events_dir, t
     cols = ["ts", "event_id", "event_type", "value"]
     stream = _stream(spark, split_events_dir, max_files_per_trigger=1)
     latest = streaming_latest_per_key(stream, "user_id", "ts", "event_id", cols)
-    state = run_update_query_to_state(latest, lambda r: r.user_id, str(tmp_path / "ck"))
-    got = state_to_df(spark, state, latest.schema)
+    got = _changelog_state(latest, ["user_id"], tmp_path)
 
     expected = latest_per_key(
         spark.read.parquet(split_events_dir), "user_id", "ts", "event_id", cols
@@ -250,10 +230,6 @@ def test_streaming_sessions_merge_across_micro_batches(spark, split_events_dir, 
     same rows under the final-watermark cutoff — the multi-batch half of
     what the registered streaming_session_windows query (single batch)
     proves against the SQL oracle."""
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        run_append_query_to_rows,
-    )
-
     def session_agg(df):
         return (
             df.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -272,7 +248,9 @@ def test_streaming_sessions_merge_across_micro_batches(spark, split_events_dir, 
 
     stream = _stream(spark, split_events_dir, max_files_per_trigger=1)
     agg = session_agg(stream.withWatermark("ts", "24 hours"))
-    rows = run_append_query_to_rows(agg, str(tmp_path / "ckpt"))
+    rows = run_append_query_to_df(
+        agg, str(tmp_path / "ckpt"), str(tmp_path / "sink")
+    ).collect()
     got = {
         (r.user_id, r.session_start, r.session_end): (r.n_events, r.total_value)
         for r in rows
@@ -312,6 +290,7 @@ def test_watermark_drops_rows_later_than_grace(spark, tmp_path):
 
     src = tmp_path / "src"
     ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "changelog")
     schema = T.StructType(
         [
             T.StructField("id_telef_origen", T.StringType(), True),
@@ -320,43 +299,26 @@ def test_watermark_drops_rows_later_than_grace(spark, tmp_path):
         ]
     )
 
-    def run(state):
+    def run():
         agg = streaming_windowed_call_agg(
             file_stream(spark, str(src), schema), watermark="1 hour"
         )
-        return run_update_query_to_state(
-            agg, lambda r: (r.id_telef_origen, r.window_start), ckpt, state=state
-        )
+        run_update_query_to_parquet_changelog(agg, ckpt, out_dir)
+        return _changelog_rows(spark, out_dir)
 
     # run 1: key A fills hours 0..10 → committed watermark 09:30
     _write_flat(rows([("A", h, 1) for h in range(11)]), tmp_path, src, "0")
-    state = run({})
-    assert len(state) == 11
+    first = run()
+    state = parquet_changelog_snapshot(
+        spark, out_dir, ["id_telef_origen", "window_start"]
+    )
+    assert state.count() == 11
 
     # run 2: a row back at hour 2 — older than the committed watermark minus
-    # the 1h grace → dropped; no update is emitted for its window
+    # the 1h grace → dropped; no update is emitted for its window, so the
+    # changelog gains no rows
     _write_flat(rows([("A", 2, 99)]), tmp_path, src, "1")
-    updates: dict = run({})
-    assert updates == {}
-
-
-def test_checkpoint_restart_replays_nothing(spark, split_events_dir, tmp_path):
-    """T4/T6: the checkpoint commits source offsets; restarting the same
-    query over the same source emits zero new updates."""
-    ckpt = str(tmp_path / "ckpt")
-    calls = events_to_calls(_stream(spark, split_events_dir))
-    agg = streaming_windowed_call_agg(calls)
-
-    first = run_update_query_to_state(
-        agg, lambda r: (r.id_telef_origen, r.window_start), ckpt
-    )
-    assert first
-
-    second: dict = {}
-    run_update_query_to_state(
-        agg, lambda r: (r.id_telef_origen, r.window_start), ckpt, state=second
-    )
-    assert second == {}
+    assert run() == first
 
 
 # ---------------------------------------------------------------------------
@@ -502,9 +464,9 @@ def test_stateful_running_totals_converges_to_batch(spark, split_events_dir, tmp
 
     stream = _stream(spark, split_events_dir, max_files_per_trigger=1)
     totals = running_totals(stream, key_col="user_id", value_col="value")
-    state = run_update_query_to_state(
-        totals, lambda r: r.user_id, str(tmp_path / "ckpt")
-    )
+    state = {
+        r.user_id: r for r in _changelog_state(totals, ["user_id"], tmp_path).collect()
+    }
 
     expected = {
         r.user_id: (r.n, float(r.total))
@@ -804,9 +766,6 @@ def test_append_mode_emits_each_window_once_final(spark, split_events_dir, tmp_p
     from datetime import timedelta
     from pathlib import Path
 
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        run_append_query_to_rows,
-    )
     from kafka_streams_rosetta_demo_spark.streaming.transforms import (
         streaming_final_windowed_agg,
     )
@@ -826,9 +785,11 @@ def test_append_mode_emits_each_window_once_final(spark, split_events_dir, tmp_p
         os.utime(src / f.name, (now - 300 + 10 * i, now - 300 + 10 * i))
 
     def run(ck):
+        # every restart appends to the same sink and reads ALL of it back:
+        # the sink is the output topic, so a re-emission would show twice
         calls = events_to_calls(_stream(spark, str(src), max_files_per_trigger=1))
         agg = streaming_final_windowed_agg(calls, watermark="1 second")
-        return run_append_query_to_rows(agg, ck)
+        return run_append_query_to_df(agg, ck, str(tmp_path / "sink")).collect()
 
     ck = str(tmp_path / "ck")
     emitted = run(ck)
@@ -852,7 +813,6 @@ def test_append_mode_emits_each_window_once_final(spark, split_events_dir, tmp_p
     # only keys allowed beyond the original expectation.
     last = raw.orderBy(F.desc("ts")).limit(1).collect()[0].asDict()
     flush_keys = set()
-    all_rows = list(emitted)
     for i in range(1, 4):
         flush = dict(last)
         flush["ts"] = flush["ts"] + timedelta(hours=6 * i)
@@ -860,7 +820,7 @@ def test_append_mode_emits_each_window_once_final(spark, split_events_dir, tmp_p
         _write_flat(
             spark.createDataFrame([flush], raw.schema), tmp_path, src, f"flush{i}"
         )
-        all_rows += run(ck)
+        all_rows = run(ck)
         keys = [(r.id_telef_origen, r.window_start) for r in all_rows]
         assert len(keys) == len(set(keys)), "a restart re-emitted a closed window"
         got = {
@@ -894,7 +854,11 @@ def test_multibatch_cms_sketch_converges_to_batch(spark, split_events_dir, tmp_p
         )
 
     ckpt = str(tmp_path / "ckpt")
-    state = run_update_query_to_state(topology(), lambda r: (r.d, r.bucket), ckpt)
+    out_dir = str(tmp_path / "changelog")
+    state = {
+        (r.d, r.bucket): r
+        for r in _changelog_state(topology(), ["d", "bucket"], tmp_path, ckpt).collect()
+    }
     expected = {
         (r.d, r.bucket): r.c
         for r in cms_build(
@@ -907,10 +871,12 @@ def test_multibatch_cms_sketch_converges_to_batch(spark, split_events_dir, tmp_p
     assert got == expected
 
     # Restart on the same checkpoint: offsets are committed, so NO updates
-    # re-emit (at-least-once with no duplicate processing — the same pin as
-    # test_checkpoint_restart_replays_nothing).
-    state2 = run_update_query_to_state(topology(), lambda r: (r.d, r.bucket), ckpt)
-    assert state2 == {}
+    # re-emit and the changelog gains no rows (at-least-once with no
+    # duplicate processing — the same pin as
+    # test_parquet_changelog_sink_restart_replays_nothing).
+    first = _changelog_rows(spark, out_dir)
+    run_update_query_to_parquet_changelog(topology(), ckpt, out_dir)
+    assert _changelog_rows(spark, out_dir) == first
 
 
 def test_multibatch_integer_stateful_totals_exact(spark, split_events_dir, tmp_path):
@@ -920,9 +886,9 @@ def test_multibatch_integer_stateful_totals_exact(spark, split_events_dir, tmp_p
 
     stream = _stream(spark, split_events_dir, max_files_per_trigger=1)
     totals = running_totals_cents(stream)
-    state = run_update_query_to_state(
-        totals, lambda r: r.user_id, str(tmp_path / "ckpt")
-    )
+    state = {
+        r.user_id: r for r in _changelog_state(totals, ["user_id"], tmp_path).collect()
+    }
     expected = {
         r.user_id: (r.n, r.total)
         for r in spark.read.parquet(split_events_dir)
@@ -1114,26 +1080,23 @@ def test_backlog_bytes_sums_parquet_files(tmp_path):
     assert backlog_bytes(str(tmp_path / "missing")) == 0
 
 
-def test_backlog_state_shuffle_sizes_from_bytes_and_restores(
-    spark, tmp_path, monkeypatch
-):
+def test_backlog_state_shuffle_sizes_from_bytes_and_restores(spark, tmp_path):
     from kafka_streams_rosetta_demo_spark.session import DEFAULT_SHUFFLE_PARTITIONS
     from kafka_streams_rosetta_demo_spark.streaming.runner import (
         _BACKLOG_BYTES_PER_STATE_PARTITION,
         backlog_state_shuffle,
     )
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
     try:
-        monkeypatch.delenv("SPARK_GRAFT_BACKLOG_STATE", raising=False)
+        # a non-default caller value: every exit must hand it back unchanged
+        spark.conf.set(key, "7")
         small = tmp_path / "small.parquet"
         small.write_bytes(b"x" * 1024)  # << one partition's worth
         with backlog_state_shuffle(spark, str(small)):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        # exit restores the session-default invariant every query assumes
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-            DEFAULT_SHUFFLE_PARTITIONS
-        )
+            assert spark.conf.get(key) == "1"
+        assert spark.conf.get(key) == "7"
 
         # a backlog past the clamp point keeps the scale-parameterised
         # default: the sizing can only LOWER the count for small backlogs,
@@ -1146,28 +1109,16 @@ def test_backlog_state_shuffle_sizes_from_bytes_and_restores(
             big, _BACKLOG_BYTES_PER_STATE_PARTITION * (DEFAULT_SHUFFLE_PARTITIONS + 5)
         )
         with backlog_state_shuffle(spark, str(big)):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-                DEFAULT_SHUFFLE_PARTITIONS
-            )
+            assert spark.conf.get(key) == str(DEFAULT_SHUFFLE_PARTITIONS)
+        assert spark.conf.get(key) == "7"
 
         # ZERO backlog (missing path / no .parquet files) never clamps to 1:
-        # the in-scope conf stays whatever the session had (ADVICE r14)
+        # the in-scope conf is the session default (ADVICE r14)
         with backlog_state_shuffle(spark, str(tmp_path / "missing")):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-                DEFAULT_SHUFFLE_PARTITIONS
-            )
-
-        # the A/B kill-switch leaves the in-scope conf untouched, and BOTH
-        # legs restore the session default on exit (symmetric A/B state)
-        monkeypatch.setenv("SPARK_GRAFT_BACKLOG_STATE", "0")
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        with backlog_state_shuffle(spark, str(small)):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-            DEFAULT_SHUFFLE_PARTITIONS
-        )
+            assert spark.conf.get(key) == str(DEFAULT_SHUFFLE_PARTITIONS)
+        assert spark.conf.get(key) == "7"
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+        spark.conf.set(key, prior)
 
 
 def test_backlog_sized_state_results_identical(spark, sf_smoke, monkeypatch):
@@ -1175,11 +1126,66 @@ def test_backlog_sized_state_results_identical(spark, sf_smoke, monkeypatch):
     the within-watermark dedup run with the backlog-derived count and with
     the session default must return identical rows."""
     from kafka_streams_rosetta_demo_spark.queries import load_all
+    from kafka_streams_rosetta_demo_spark.streaming import runner
 
     fn = load_all()["streaming_dedup_events"].fn
-    monkeypatch.setenv("SPARK_GRAFT_BACKLOG_STATE", "0")
-    before = sorted(map(tuple, fn(spark, sf_smoke).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_BACKLOG_STATE", "1")
+    with monkeypatch.context() as m:
+        # one byte per partition: the backlog rule clamps to the default
+        m.setattr(runner, "_BACKLOG_BYTES_PER_STATE_PARTITION", 1)
+        before = sorted(map(tuple, fn(spark, sf_smoke).collect()))
     after = sorted(map(tuple, fn(spark, sf_smoke).collect()))
     assert before == after
     assert len(after) > 0
+
+
+# ---------------------------------------------------------------------------
+# One topology runner: session hygiene and the no-boilerplate guard
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_calls_window_agg",  # backlog rule
+        "streaming_cms_sketch",  # key-bound rule
+        "streaming_stateful_totals",  # session-default rule
+    ],
+)
+def test_streaming_query_restores_callers_shuffle_partitions(spark, sf_smoke, name):
+    """A query leaves the caller's session as it found it: a sentinel
+    ``shuffle.partitions`` survives the run, whichever state rule the
+    topology used, and the sentinel does not change the rows."""
+    from kafka_streams_rosetta_demo_spark.queries import load_all
+
+    fn = load_all()[name].fn
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        got = sorted(map(tuple, fn(spark, sf_smoke).collect()))
+        assert spark.conf.get(key) == "7"
+        spark.conf.set(key, prior)
+        want = sorted(map(tuple, fn(spark, sf_smoke).collect()))
+        assert spark.conf.get(key) == prior
+    finally:
+        spark.conf.set(key, prior)
+    assert got == want
+    assert len(got) > 0
+
+
+def test_streaming_queries_go_through_run_topology():
+    """Static guard: the stage → stream → checkpoint → conf → cleanup
+    protocol lives in the runner only, so it cannot grow back one query at
+    a time."""
+    import inspect
+
+    from kafka_streams_rosetta_demo_spark.queries import load_all, streaming_queries
+
+    src = inspect.getsource(streaming_queries)
+    for word in ("tempfile", "checkpoint_tmpdir", "readStream", "rmtree", "ensure_conf"):
+        assert word not in src, f"streaming_queries.py uses {word}"
+    names = [n for n in load_all() if n.startswith("streaming_")]
+    assert len(names) == 32
+    for name in names:
+        fn = getattr(streaming_queries, load_all()[name].fn.__name__)
+        assert "run_topology(" in inspect.getsource(fn), name

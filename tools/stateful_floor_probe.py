@@ -33,14 +33,9 @@ def main() -> None:
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from kafka_streams_rosetta_demo_spark.queries.streaming_queries import (
-        _events_stream,
-    )
     from kafka_streams_rosetta_demo_spark.session import get_spark
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        checkpoint_tmpdir,
-        run_update_query_to_df,
-    )
+    from kafka_streams_rosetta_demo_spark.sources.parquet import normalize_event_ts
+    from kafka_streams_rosetta_demo_spark.streaming.runner import run_topology
     from kafka_streams_rosetta_demo_spark.streaming.stateful import (
         running_totals_cents,
     )
@@ -82,15 +77,16 @@ def main() -> None:
     results = {k: [] for k in variants}
     for r in range(reps):
         for name, build in variants.items():
-            stream = _events_stream(spark, sf_dir)
-            totals = build(stream)
             spark.sparkContext.setJobDescription(f"floor:{name}:{r}")
             t0 = time.time()
-            with checkpoint_tmpdir("ckpt_flr_") as ckpt, checkpoint_tmpdir(
-                "sink_flr_"
-            ) as out:
-                df = run_update_query_to_df(totals, ["user_id"], ckpt, out)
-                df.write.format("noop").mode("overwrite").save()
+            df = run_topology(
+                spark,
+                sf_dir,
+                lambda ev, build=build: build(normalize_event_ts(ev)),
+                glob="events.parquet",
+                keys=["user_id"],
+            )
+            df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             results[name].append(round(dt, 3))
             print(f"rep {r} {name:7s} {dt:7.3f}s", flush=True)
