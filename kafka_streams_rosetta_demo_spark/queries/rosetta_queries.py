@@ -392,17 +392,18 @@ def kafka_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3+S5 with genuine **Avro** wire bytes: every event round-trips
     through the Confluent-framed AVRO value serde — the reference's actual
     on-wire encoding (``SpecificAvroSerde``, ``CallsAggregationApp.java:
-    33,40-41``) — via the pure-Python Avro 1.12 codec (``streaming/
-    avro_codec.py``, byte-level cross-validated against the JVM's own Avro
-    in ``tests/test_avro_codec.py``). Every 43rd record's *body* is
+    33,40-41``) — via the columnar Python Avro 1.12 codec (``streaming/
+    avro_codec.compile_flat``, byte-level cross-validated against the JVM's
+    own Avro in ``tests/test_avro_codec.py``). Every 43rd record's *body* is
     truncated in flight (header left intact), so the Avro decoder itself —
     not the wire-header check — must detect the corruption (truncated
     varint/double → null row → S5 drop counter).
 
-    Scale: the codec runs as Arrow-batched pandas UDFs — the documented
-    jar-less fallback; with spark-avro on the classpath the spec's ``auto``
-    serde selects the JVM ``from_avro``/``to_avro`` expressions instead and
-    the topology is unchanged. One partial-agg shuffle on event_type.
+    Scale: the codec runs as Arrow UDFs, NumPy kernels over each Arrow
+    batch — the documented jar-less fallback; with spark-avro on the
+    classpath the spec's ``auto`` serde selects the JVM ``from_avro``/
+    ``to_avro`` expressions instead and the topology is unchanged. One
+    partial-agg shuffle on event_type.
     """
     from ..streaming.kafka_io import KafkaTopicSpec
 

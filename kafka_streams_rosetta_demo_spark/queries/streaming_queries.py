@@ -403,8 +403,9 @@ GROUP BY event_type
 def streaming_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``kafka_avro_roundtrip``'s topology inside a running checkpointed
     stream: every record serializes to genuine Confluent-framed AVRO bytes
-    (pure-Python Avro 1.12 codec as Arrow-batched pandas UDFs —
-    ``streaming/avro_codec.py``, cross-validated against the JVM's Avro)
+    (the columnar Python Avro 1.12 codec as Arrow UDFs —
+    ``streaming/avro_codec.compile_flat``, cross-validated against the
+    JVM's Avro)
     and deserializes back per micro-batch; every 43rd record's body is
     truncated in flight so the Avro decoder itself must reject it, and the
     per-event-type counters accumulate in checkpointed update-mode state
@@ -413,7 +414,7 @@ def streaming_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``SpecificAvroSerde``, ``CallsAggregationApp.java:33,40-41``).
 
     State story: identical to ``streaming_wire_roundtrip`` — serde is
-    per-row (JVM framing + Arrow-batched codec), the only state is the
+    per-row (JVM framing + columnar codec), the only state is the
     event_type counter rows."""
     from pyspark.sql import functions as F
 

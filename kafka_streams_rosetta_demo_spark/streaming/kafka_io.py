@@ -20,9 +20,10 @@ jar, so the spec object separates three concerns so each is testable alone:
 
 Serde selection: ``avro`` (the JVM ``from_avro``/``to_avro`` expressions)
 when the spark-avro module is loadable — probed once, lazily — else
-``avro_py``: genuine Avro binary through the pure-Python codec
-(``avro_codec.py``, cross-validated byte-level against the JVM's own Avro
-via the in-core ``AvroFileFormat``) running as Arrow-batched pandas UDFs.
+``avro_py``: genuine Avro binary through the columnar Python codec
+(``avro_codec.compile_flat``: the topic schema compiled once, then NumPy
+kernels over each Arrow batch, run as Arrow UDFs; cross-validated
+byte-level against the JVM's own Avro via the in-core ``AvroFileFormat``).
 Either way the bytes on the wire are Avro, like the reference's topics;
 ``json`` remains selectable explicitly for JVM-only-expression paths.
 
@@ -41,13 +42,14 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import lru_cache
 
-# Module-level so the pandas-UDF type hints (evaluated lazily under
+# Module-level so the Arrow-UDF type hints (evaluated lazily under
 # ``from __future__ import annotations``) resolve against module globals.
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .avro_codec import compile_flat
 
 
 @lru_cache(maxsize=1)
@@ -138,15 +140,14 @@ class KafkaTopicSpec:
         return F.from_json(value.cast("string"), self.value_schema)
 
     def _avro_py_decode_udf(self):
-        """Arrow-batched decoder over the pure-Python Avro codec. Permissive:
-        a corrupt/truncated body yields an all-null row, which ``parse()``
-        counts as a deser drop (S5) — same observable as the JVM path's null
-        struct. Per-record Python is the jar-less fallback; with spark-avro
-        on the classpath ``resolved_serde()`` picks the JVM expression."""
-        from .avro_codec import decode_record, parse_schema
-
-        schema_json = self._schema_json()
-        field_names = [f.name for f in self.value_schema.fields]
+        """Arrow UDF over the columnar Avro codec (``avro_codec.
+        compile_flat``): each Arrow batch of bodies is decoded with NumPy
+        kernels, no per-record Python. Permissive: a null, corrupt or
+        truncated body yields an all-null row, which ``parse()`` counts as a
+        deser drop (S5) — the same observable as the JVM path's null struct.
+        A schema the codec cannot compile raises ValueError here, when the
+        UDF is built, not inside a task."""
+        codec = compile_flat(self._schema_json())
         # Permissive decode emits all-null rows for corrupt input, so the
         # UDF's declared return type must be nullable regardless of the
         # topic schema's nullability (same relaxation from_avro PERMISSIVE
@@ -155,40 +156,21 @@ class KafkaTopicSpec:
             [T.StructField(f.name, f.dataType, True) for f in self.value_schema.fields]
         )
 
-        @F.pandas_udf(nullable_schema)
-        def dec(vals: pd.Series) -> pd.DataFrame:
-            schema = parse_schema(schema_json)
-            null_row = dict.fromkeys(field_names)
-            rows = []
-            for v in vals:
-                if v is None:
-                    rows.append(null_row)
-                    continue
-                try:
-                    rec = decode_record(schema, bytes(v))
-                    rows.append({k: rec.get(k) for k in field_names})
-                except (ValueError, UnicodeDecodeError, OverflowError):
-                    rows.append(null_row)
-            return pd.DataFrame(rows, columns=field_names)
+        @F.arrow_udf(nullable_schema)
+        def dec(bodies: pa.Array) -> pa.Array:
+            # a dropped row is a struct of nulls, not a null struct
+            return pa.StructArray.from_arrays(
+                codec.decode(bodies).flatten(), fields=list(codec.arrow_type)
+            )
 
         return dec
 
     def _avro_py_encode_udf(self):
-        from .avro_codec import encode_record, parse_schema
+        codec = compile_flat(self._schema_json())
 
-        schema_json = self._schema_json()
-        field_names = [f.name for f in self.value_schema.fields]
-
-        @F.pandas_udf(T.BinaryType())
-        def enc(vals: pd.DataFrame) -> pd.Series:
-            schema = parse_schema(schema_json)
-            out = []
-            for row in vals.itertuples(index=False):
-                rec = {}
-                for name, v in zip(field_names, row):
-                    rec[name] = None if (v is None or v is pd.NaT or pd.isna(v)) else v
-                out.append(encode_record(schema, rec))
-            return pd.Series(out)
+        @F.arrow_udf(T.BinaryType())
+        def enc(records: pa.Array) -> pa.Array:
+            return codec.encode(records)
 
         return enc
 

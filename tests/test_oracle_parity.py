@@ -120,6 +120,8 @@ FAST_PARITY = {
     "streaming_blocklist_screen",
     "streaming_gopher_screen",
     "streaming_robots_screen",
+    # the Kafka edge's Avro serde is the columnar codec (streaming twin above)
+    "kafka_avro_roundtrip",
 }
 
 

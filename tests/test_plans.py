@@ -126,8 +126,8 @@ def test_arrow_python_only_in_multimodal(plans):
         "multimodal_frame_sample",
         "multimodal_resample",
         "multimodal_resize",
-        # declared jar-less Avro serde fallback: Arrow-batched codec UDFs
-        # (streaming/avro_codec.py); the JVM from_avro/to_avro expressions
+        # declared jar-less Avro serde fallback: Arrow UDFs over the columnar
+        # codec (streaming/avro_codec.py); the JVM from_avro/to_avro expressions
         # replace them wherever spark-avro ships (kafka_io.resolved_serde)
         "kafka_avro_roundtrip",
         # the three §2.7 Pandas surfaces, deliberately driver-green:

@@ -205,12 +205,15 @@ def test_registry_only_smoke_leg_against_stub(spark):
     server = ThreadingHTTPServer(("127.0.0.1", 0), _make_handler(reg))
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         url = f"http://127.0.0.1:{server.server_address[1]}"
         assert registry_smoke(url) == 0
         # the smoke registered the customer value schema and fetched it back
         assert any(m == "POST" for m, _ in reg.requests)
         assert any(p.startswith("/schemas/ids/") for _, p in reg.requests)
+        # it ran on the caller's session without re-applying engine defaults
+        assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
     finally:
         server.shutdown()
         server.server_close()

@@ -66,6 +66,8 @@ def registry_smoke(registry_url: str) -> int:
     """Registry-only leg: the full producer-register → wire-frame →
     consumer-resolve loop against a real Confluent Schema Registry, no broker
     needed. Exercises the same client calls the broker path uses."""
+    from pyspark.sql import SparkSession
+
     from kafka_streams_rosetta_demo_spark.queries import load_all
     from kafka_streams_rosetta_demo_spark.session import get_spark
     from kafka_streams_rosetta_demo_spark.sources.parquet import rosetta_customers
@@ -78,7 +80,9 @@ def registry_smoke(registry_url: str) -> int:
         topic_value_subject,
     )
 
-    spark = get_spark(app_name="registry-smoke")
+    # Reuse a running session as is: get_spark() would re-apply the engine
+    # defaults (shuffle.partitions among them) to a caller's session.
+    spark = SparkSession.getActiveSession() or get_spark(app_name="registry-smoke")
     load_all()
     client = SchemaRegistryClient(registry_url)
     run = uuid.uuid4().hex[:8]
