@@ -17,20 +17,39 @@ topology through one ``StreamsBuilder``. It owns the whole protocol:
   ``keys`` is given, append mode through :func:`run_append_query_to_df`
   otherwise; either way the result comes back pinned.
 
-Conf contract: every conf the runner sets is restored to the caller's PRIOR
-value on exit, so a query leaves the session's ``shuffle.partitions`` as it
-found it. (The nanos-as-long read conf that :func:`file_stream` pins is the
-exception, like the registry's UTC pin: lazily returned batch frames still
-need it after the call.)
+Conf contract: every conf the runner sets goes through :func:`scoped_conf`,
+which restores the caller's PRIOR value on exit (or unsets the key if it was
+unset), so a query leaves the session's ``shuffle.partitions`` and
+``streaming.checkpointFileManagerClass`` as it found them. (The nanos-as-long
+read conf that :func:`file_stream` pins is the exception, like the
+registry's UTC pin: lazily returned batch frames still need it after the
+call.) Every stream starts in :func:`_drain`, which picks the checkpoint
+manager from the checkpoint path alone (:func:`checkpoint_file_manager`): a
+bare path or a ``file:`` URI runs on Spark's FileSystem-API manager for the
+whole run, from ``start()`` until ``awaitTermination()`` returns, because
+the file source opens its metadata log on the stream thread after
+``start()``. Spark's default FileContext manager resolves links on the
+local file system through Hadoop's ``FileUtil.readLink``, which forks a
+``readlink`` process: 296 of them per 7-trigger drain, which cost each
+trigger's ``latestOffset``, ``walCommit``, ``commitOffsets`` and state
+commit ~30 ms apiece on a 4-vCPU host. On a POSIX local file system both
+managers check that the target is absent and then rename, the rename is
+atomic, and neither fsyncs. Through Hadoop's local checksummed file
+system both write and check the same ``.crc`` files, so the two leave the
+same checkpoint tree and either restarts on the other's checkpoints. Any
+other scheme (``hdfs://``, ``s3a://``, ``abfss://``) keeps Spark's default.
 
 T4/T6 mapping: the checkpoint directory is the engine's state store +
 offsets log — the equivalent of the reference's RocksDB + changelog topic
 and committed consumer offsets (``CallsAggregationApp.java:106``;
-``auto.offset.reset=earliest`` ``:29``). Restarting a query on the same
-checkpoint resumes from committed progress and reprocesses nothing, which is
-exactly the at-least-once contract (T5) the reference runs under. Every run
-here is ``trigger(availableNow=True)`` over a file source, so no broker is
-needed.
+``auto.offset.reset=earliest`` ``:29``). Each micro-batch writes its
+``sources/0/N``, ``offsets/N`` and ``commits/N`` entries and a state
+``N.delta`` file through the checkpoint manager, each a write-then-rename
+of a temp file — on a local path a plain POSIX rename, with no ``readlink``
+fork. Restarting a query on the same checkpoint resumes from committed
+progress and reprocesses nothing, which is exactly the at-least-once
+contract (T5) the reference runs under. Every run here is
+``trigger(availableNow=True)`` over a file source, so no broker is needed.
 """
 
 from __future__ import annotations
@@ -41,9 +60,11 @@ import shutil
 import tempfile
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..session import DEFAULT_SHUFFLE_PARTITIONS, ensure_conf
 from ..sources.parquet import events_schema as footer_schema
@@ -63,11 +84,61 @@ _KEYS_PER_STATE_PARTITION = 4096
 # join rows), so backlog bytes bound state volume from above.
 _BACKLOG_BYTES_PER_STATE_PARTITION = 32 * 1024 * 1024
 
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 @contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str | None):
+    """Set ``key`` to ``value`` for the ``with`` block, then restore the
+    caller's PRIOR value, or unset the key if it was unset. ``None`` leaves
+    the conf untouched."""
+    if value is None:
+        yield
+        return
+    prior = spark.conf.get(key, None)
+    ensure_conf(spark, key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            ensure_conf(spark, key, prior)
+
+
+def checkpoint_file_manager(checkpoint_dir: str) -> str | None:
+    """The checkpoint manager class a run on ``checkpoint_dir`` pins: Spark's
+    FileSystem-API manager for a bare path or a ``file:`` URI, None (Spark's
+    default) for any other scheme. A bare path resolves against
+    ``fs.defaultFS``, which is ``file:`` in every session this package
+    builds. The module docstring gives the reason."""
+    if urlsplit(checkpoint_dir).scheme in ("", "file"):
+        return _FILESYSTEM_CHECKPOINT_MANAGER
+    return None
+
+
+def _drain(spark: SparkSession, writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """The runner's one streaming start: run ``writer`` on ``checkpoint_dir``
+    with ``availableNow`` until it has drained, under the checkpoint manager
+    :func:`checkpoint_file_manager` picks."""
+    manager = checkpoint_file_manager(checkpoint_dir)
+    with scoped_conf(spark, _CHECKPOINT_MANAGER_KEY, manager):
+        (
+            writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+
 def state_shuffle(spark: SparkSession, parts: int):
     """Pin ``spark.sql.shuffle.partitions`` to ``parts`` for one streaming
-    run and restore the caller's PRIOR value on exit.
+    run through :func:`scoped_conf`, which restores the caller's PRIOR value
+    on exit.
 
     Why the state exchange is sized at all (guide §2.2/§2.4 applied to the
     one exchange AQE cannot touch): every micro-batch pays a FIXED cost per
@@ -108,13 +179,7 @@ def state_shuffle(spark: SparkSession, parts: int):
       not state commits, and fewer partitions serialize the Python workers
       (measured 1.19x and 1.57x WORSE — OPTIMIZATION_r14.md).
     """
-    key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(key)
-    ensure_conf(spark, key, str(parts))
-    try:
-        yield
-    finally:
-        ensure_conf(spark, key, prior)
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(parts))
 
 
 def _clamp(parts: int) -> int:
@@ -342,14 +407,8 @@ def run_update_query_to_parquet_changelog(
             .parquet(out_dir)
         )
 
-    (
-        result.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    writer = result.writeStream.outputMode("update").foreachBatch(sink)
+    _drain(result.sparkSession, writer, checkpoint_dir)
 
 
 def parquet_changelog_snapshot(
@@ -509,16 +568,11 @@ def run_append_query_to_df(
     or ``persist``+materialize to a durable store before deleting. The
     emptiness probe consults the sink's ``_spark_metadata`` commit log —
     the sink's source of truth — not a directory listing."""
-    (
-        result.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
     spark = result.sparkSession
+    writer = (
+        result.writeStream.outputMode("append").format("parquet").option("path", out_dir)
+    )
+    _drain(spark, writer, checkpoint_dir)
     if not _file_sink_has_commits(out_dir):
         return spark.createDataFrame([], result.schema)
     return _pin_result(

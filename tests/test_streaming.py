@@ -41,6 +41,16 @@ from kafka_streams_rosetta_demo_spark.streaming.transforms import (
 )
 
 
+# The checkpoint-manager conf the runner scopes, and the FileSystem-API
+# manager it picks for local checkpoints (spelled out, not imported, so the
+# tests pin the class name Spark ships).
+MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 def test_events_schema_cache_invalidates_on_rewrite(spark, tmp_path):
     """The footer-schema cache keys on (path, mtime, size): rewriting the
     same path with a different schema must serve the NEW schema, not the
@@ -115,26 +125,73 @@ def test_multibatch_windowed_agg_converges_to_batch(spark, split_events_dir, tmp
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
 
 
-def test_parquet_changelog_sink_restart_replays_nothing(spark, split_events_dir, tmp_path):
+def _raw_changelog_run(result, ckpt, out_dir, batch_fn):
+    """The runner's changelog sink started by a bare ``writeStream…start()``,
+    so the session's checkpoint manager (Spark's default here) writes the
+    checkpoint."""
+
+    def sink(batch_df, batch_id):
+        batch_fn(batch_df).withColumn("_batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(out_dir)
+
+    (
+        result.writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+@pytest.mark.parametrize(
+    "first_leg, restart_leg",
+    [("runner", "runner"), ("raw", "runner"), ("runner", "raw")],
+    ids=["runner-runner", "raw-runner", "runner-raw"],
+)
+def test_parquet_changelog_sink_restart_replays_nothing(
+    spark, split_events_dir, tmp_path, first_leg, restart_leg
+):
     """T5/T6 for the lakehouse sink: restarting the finished query on the
     same checkpoint must append NOTHING to the changelog (offsets are
     committed; availableNow finds no new files) — the exactly-once-per-batch
-    contract that makes the parquet changelog safe to re-run."""
+    contract that makes the parquet changelog safe to re-run. The mixed legs
+    pin checkpoint compatibility across managers: the runner (FileSystem
+    manager) restarts on a checkpoint Spark's default FileContext manager
+    wrote, and the default manager restarts on the runner's. Each batch
+    records the manager conf its stream ran under."""
     from kafka_streams_rosetta_demo_spark.streaming.runner import (
         run_update_query_to_parquet_changelog,
     )
+
+    assert spark.conf.get(MANAGER_KEY, None) is None  # raw legs run on Spark's default
+    legs = {"runner": run_update_query_to_parquet_changelog, "raw": _raw_changelog_run}
+    expected = {"runner": FS_MANAGER, "raw": None}
 
     def topology():
         calls = events_to_calls(_stream(spark, split_events_dir, max_files_per_trigger=1))
         return streaming_windowed_call_agg(calls)
 
+    def run(leg):
+        seen = []
+
+        def note_manager(batch):
+            seen.append(spark.conf.get(MANAGER_KEY, None))
+            return batch
+
+        legs[leg](topology(), ckpt, out_dir, batch_fn=note_manager)
+        assert set(seen) <= {expected[leg]}
+        return seen
+
     out_dir = str(tmp_path / "changelog")
     ckpt = str(tmp_path / "ckpt")
-    run_update_query_to_parquet_changelog(topology(), ckpt, out_dir)
+    assert run(first_leg)
     first = spark.read.parquet(out_dir).count()
     assert first > 0
-    run_update_query_to_parquet_changelog(topology(), ckpt, out_dir)  # restart
+    run(restart_leg)  # restart
     assert spark.read.parquet(out_dir).count() == first
+    assert spark.conf.get(MANAGER_KEY, None) is None
 
 
 def test_idempotent_sink_survives_batch_redelivery(spark, split_events_dir, tmp_path):
@@ -1154,23 +1211,92 @@ def test_backlog_sized_state_results_identical(spark, sf_smoke, monkeypatch):
 def test_streaming_query_restores_callers_shuffle_partitions(spark, sf_smoke, name):
     """A query leaves the caller's session as it found it: a sentinel
     ``shuffle.partitions`` survives the run, whichever state rule the
-    topology used, and the sentinel does not change the rows."""
+    topology used, and the sentinel does not change the rows. The
+    checkpoint manager the runner pins is scoped the same way: a caller's
+    value survives the run, and an unset key is still unset after it."""
     from kafka_streams_rosetta_demo_spark.queries import load_all
 
     fn = load_all()[name].fn
     key = "spark.sql.shuffle.partitions"
+    callers_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
     prior = spark.conf.get(key)
+    assert spark.conf.get(MANAGER_KEY, None) is None
     try:
         spark.conf.set(key, "7")
+        spark.conf.set(MANAGER_KEY, callers_manager)
         got = sorted(map(tuple, fn(spark, sf_smoke).collect()))
         assert spark.conf.get(key) == "7"
+        assert spark.conf.get(MANAGER_KEY, None) == callers_manager
         spark.conf.set(key, prior)
+        spark.conf.unset(MANAGER_KEY)
         want = sorted(map(tuple, fn(spark, sf_smoke).collect()))
         assert spark.conf.get(key) == prior
+        assert spark.conf.get(MANAGER_KEY, None) is None
     finally:
         spark.conf.set(key, prior)
+        spark.conf.unset(MANAGER_KEY)
     assert got == want
     assert len(got) > 0
+
+
+class _Conf(dict):
+    """A session conf without a session: ``get`` raises on an unset key
+    unless given a default, like ``spark.conf.get``; every write is
+    counted."""
+
+    writes = 0
+
+    def get(self, key, *default):
+        if key in self:
+            return self[key]
+        if default:
+            return default[0]
+        raise KeyError(key)
+
+    def set(self, key, value):
+        self.writes += 1
+        self[key] = value
+
+    def unset(self, key):
+        self.writes += 1
+        self.pop(key, None)
+
+
+@pytest.mark.parametrize(
+    "path, local",
+    [
+        ("/tmp/ckpt", True),
+        ("ckpt", True),
+        ("file:/x", True),
+        ("file:///x", True),
+        ("hdfs://nn/x", False),
+        ("s3a://b/x", False),
+        ("abfss://c@a/x", False),
+    ],
+)
+def test_checkpoint_manager_follows_the_checkpoint_scheme(path, local):
+    """The runner's checkpoint-manager rule reads only the checkpoint path:
+    a bare path or a ``file:`` URI runs on the FileSystem-API manager and
+    the key is restored after; any other scheme leaves the conf untouched,
+    keeping Spark's default (or the caller's choice)."""
+    from types import SimpleNamespace
+
+    from kafka_streams_rosetta_demo_spark.streaming.runner import (
+        checkpoint_file_manager,
+        scoped_conf,
+    )
+
+    assert checkpoint_file_manager(path) == (FS_MANAGER if local else None)
+    for prior in (None, "callers.Manager"):
+        spark = SimpleNamespace(conf=_Conf({} if prior is None else {MANAGER_KEY: prior}))
+        with scoped_conf(spark, MANAGER_KEY, checkpoint_file_manager(path)):
+            assert spark.conf.get(MANAGER_KEY, None) == (FS_MANAGER if local else prior)
+        assert spark.conf.get(MANAGER_KEY, None) == prior
+        if not local:
+            assert spark.conf.writes == 0
 
 
 def test_streaming_queries_go_through_run_topology():
@@ -1189,3 +1315,28 @@ def test_streaming_queries_go_through_run_topology():
     for name in names:
         fn = getattr(streaming_queries, load_all()[name].fn.__name__)
         assert "run_topology(" in inspect.getsource(fn), name
+
+
+def test_streaming_writers_start_only_in_the_runner():
+    """Static guard: the package starts a streaming query in exactly one
+    place, the runner's start helper, so every stream gets the checkpoint
+    manager rule and no new start site can bypass it. ``kafka_io``'s
+    ``write_stream`` returns a writer that has not been started."""
+    import inspect
+    import pathlib
+    import re
+
+    import kafka_streams_rosetta_demo_spark as pkg
+    from kafka_streams_rosetta_demo_spark.streaming import runner
+
+    starts = re.compile(r"\.start\(|\.toTable\(")
+    sites = [
+        (path.name, line)
+        for path in pathlib.Path(pkg.__file__).parent.rglob("*.py")
+        for line in path.read_text().splitlines()
+        if starts.search(line)
+    ]
+    assert len(sites) == 1, sites
+    name, line = sites[0]
+    assert name == "runner.py"
+    assert line in inspect.getsource(runner._drain).splitlines()
