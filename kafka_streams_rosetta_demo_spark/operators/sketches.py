@@ -142,20 +142,6 @@ def bloom_size_bits(n_keys: int, bits_per_key: int = BLOOM_BITS_PER_KEY) -> int:
     return 1 << math.ceil(math.log2(target))
 
 
-def bloom_positions(
-    item: Column, n_hashes: int = BLOOM_HASHES, n_bits: int = BLOOM_BITS
-) -> Column:
-    """``n_hashes`` bit positions for ``item`` (``array<long>``), via
-    Kirsch-Mitzenmacher double hashing: two base hashes per item TOTAL,
-    then pure integer arithmetic per probe (the same KM construction as
-    the CMS above, on the cheaper hash family)."""
-    h1, h2 = _bloom_h1(item), _bloom_h2(item)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda d: (h1 + d.cast("long") * h2) % F.lit(n_bits),
-    )
-
-
 def bloom_build_words(
     keys: DataFrame,
     col: str,

@@ -79,39 +79,14 @@ def minhash_signature(
     xxhash64(j, shingle)``, as one ``array<long>`` column. Per-row map, no
     shuffle.
 
-    Round 15 ran the VERDICT-r14-item-5 experiment: a bit-exact NumPy XXH64
-    Arrow kernel (:func:`operators.txtkernels.minhash_signature_arrow`,
-    equality pinned in tests/test_txtkernels.py) that additionally hashes
-    each DISTINCT shingle once per batch (measured 9.6× instance/unique at
-    sf0.1 — work sharing a per-row expression cannot express). Measured
-    outcome: the kernel wins 1.5–2× only when the build runs on ONE
-    partition (the isolated-stage shape); at the query's real scan
-    parallelism the fold is not the bottleneck and the end-to-end A/B is
-    neutral-to-slightly-worse (0.93–1.19 across 8 paired reps,
-    OPTIMIZATION_r15.md), so the JVM fold REMAINS THE DEFAULT and
-    ``SPARK_GRAFT_MINHASH_KERNEL=1`` opts in to the kernel.
-    """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_MINHASH_KERNEL", "0") == "1":
-        from .txtkernels import minhash_signature_arrow
-
-        return minhash_signature_arrow(shingled, id_col=id_col, n_hashes=n_hashes)
-    return minhash_signature_hof(shingled, id_col=id_col, n_hashes=n_hashes)
-
-
-def minhash_signature_hof(
-    shingled: DataFrame, id_col: str = "doc_id", n_hashes: int = 64
-) -> DataFrame:
-    """The pre-round-15 JVM expression twin of :func:`minhash_signature` —
-    kept as the bit-equality reference for the Arrow kernel.
-
     The minima range over a single document's own shingles, so the whole
     signature is a per-row expression — one ``aggregate`` pass over the
     shingle array carrying an array-of-64-running-minima accumulator. Zero
     shuffle, embarrassingly parallel at 100 TB. (An explode + 64-min groupBy
     computes the same thing with a pointless shuffle of every (doc, shingle)
-    pair, and measures slower locally too.)
+    pair, and measures slower locally too.) A bit-exact NumPy XXH64 Arrow
+    kernel measured 0.93–1.19x against this fold at scan parallelism
+    (OPTIMIZATION_r15.md), so it was removed.
     """
     init = F.array_repeat(F.lit(1 << 62).cast("long"), n_hashes)
 

@@ -198,13 +198,6 @@ def hyperplane_band_keys(
     constant), so exact-duplicate-up-to-scale pairs collide in every band —
     recall 1 by construction, not by probability.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_HYPERPLANE_KERNEL", "1") == "0":
-        # A/B lever: the pre-round-15 HOF expression path
-        return hyperplane_band_keys_hof(
-            df, planes, bands, id_col=id_col, vec_col=vec_col
-        )
     from .veckernels import hyperplane_bands_arrow
 
     return hyperplane_bands_arrow(df, planes, bands, id_col=id_col, vec_col=vec_col)

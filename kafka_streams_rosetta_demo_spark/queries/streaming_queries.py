@@ -29,13 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..operators.joins import enrich_calls_with_customers
 from ..sources.parquet import events_to_calls, normalize_event_ts, rosetta_customers
 from ..streaming.runner import run_topology
-from ..streaming.transforms import (
-    enrich_calls_with_customers,
-    streaming_latest_per_key,
-    streaming_windowed_call_agg,
-)
+from ..streaming.transforms import streaming_latest_per_key, streaming_windowed_call_agg
 # Streaming twins share their batch twin's oracle SQL verbatim — one source
 # of truth, so the gate proves the streaming path computes the identical
 # state. Importing the batch modules registers the twins read from REGISTRY.
@@ -175,10 +172,8 @@ def streaming_suppress_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     State story: append mode evicts a window's state at emission, so
     suppression costs no second buffer (unlike KS, which stacks a
     suppression store on the window store)."""
-    from ..streaming.transforms import streaming_final_windowed_agg
-
     def final(ev: DataFrame) -> DataFrame:
-        return streaming_final_windowed_agg(
+        return streaming_windowed_call_agg(
             events_to_calls(normalize_event_ts(ev))
         ).select(
             "id_telef_origen",

@@ -87,11 +87,6 @@ def _path_fingerprint(path: str) -> tuple:
     return (path, st.st_mtime_ns, st.st_size)
 
 
-def clear_events_schema_cache() -> None:
-    """Test / long-session hook: drop every cached footer schema."""
-    _EVENTS_SCHEMA_CACHE.clear()
-
-
 def events_schema(spark: SparkSession, events_path: str):
     """Footer-only schema read of an events parquet — the explicit schema a
     streaming file source needs, robust to either physical ts encoding

@@ -58,10 +58,6 @@ def topic_value_subject(topic: str) -> str:
     return f"{topic}-value"
 
 
-def topic_key_subject(topic: str) -> str:
-    return f"{topic}-key"
-
-
 @dataclass
 class SchemaRegistryClient:
     """Minimal Confluent-REST client with an id→schema cache.

@@ -12,17 +12,17 @@ Reference semantics being reproduced:
   the watermark are dropped — the same contract KS applies after grace.
 - S2: KTable latest-per-key state is the *identical* ``max_by`` aggregate
   the batch path uses (operators/state.py), run in update mode.
-- J1: the stream–table join is a per-micro-batch broadcast lookup
-  (``foreachBatch``) — KS's stream-table join is a temporal lookup against
-  current state, which micro-batch join-at-batch-time matches; a
-  stream-stream interval join would *change* semantics (SURVEY §2.3).
+- J1: the stream–table join is a per-micro-batch broadcast lookup (the
+  runner's ``batch_fn``, a ``foreachBatch`` body) — KS's stream-table join
+  is a temporal lookup against current state, which micro-batch
+  join-at-batch-time matches; a stream-stream interval join would *change*
+  semantics (SURVEY §2.3).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..operators.joins import enrich_calls_with_customers
 from ..operators.state import latest_per_key
 from ..operators.windowed_agg import unwrap_window, windowed_call_agg
 
@@ -57,21 +57,6 @@ def streaming_latest_per_key(
     return latest_per_key(
         stream.withWatermark(ts_col, watermark), key, ts_col, seq_col, value_cols
     )
-
-
-def enrich_batch_fn(customers: DataFrame, sink):
-    """J1 as a ``foreachBatch`` body: broadcast-lookup left join of each
-    micro-batch of call aggregates against the current customer dimension,
-    then hand the enriched batch to ``sink(batch_df, batch_id)``.
-
-    ``customers`` may be re-read per batch for a refreshing dimension; the
-    size-aware broadcast in the join keeps this safe if it grows.
-    """
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        sink(enrich_calls_with_customers(batch_df, customers), batch_id)
-
-    return fn
 
 
 def streaming_dedup_within_watermark(
@@ -133,25 +118,3 @@ def streaming_interval_join(
         & (rt <= lt + F.expr(f"INTERVAL {tolerance_seconds} SECONDS"))
     )
     return lw.join(rw, on=cond, how=how)
-
-
-def streaming_final_windowed_agg(
-    calls: DataFrame,
-    watermark: str = KS_DEFAULT_GRACE,
-    ts: str = "event_ts",
-) -> DataFrame:
-    """KS ``suppress(Suppressed.untilWindowCloses())`` equivalence: emit
-    each window **exactly once, with its final aggregate**, when the
-    watermark passes the window end.
-
-    The plan is identical to :func:`streaming_windowed_call_agg` — the
-    suppression is entirely the sink's **append** output mode, under which
-    Spark withholds a windowed aggregate row until the watermark closes its
-    window (state for closed windows is evicted at the same moment, so
-    suppression costs no extra state — unlike KS suppress, which buffers a
-    second store). The reference topology runs unsuppressed (update mode,
-    ``CallsAggregationApp.java:80-85``); this is the other emission
-    contract KS offers, first-class here. Pinned by
-    tests/test_streaming.py::test_append_mode_emits_each_window_once_final.
-    """
-    return unwrap_window(windowed_call_agg(calls.withWatermark(ts, watermark), ts=ts))

@@ -44,13 +44,24 @@ def brute_force_pairs(sf_dir: str, k: int, threshold: float) -> set[tuple[int, i
 
 
 def test_minhash_lsh_candidate_recall(spark, sf_correctness):
-    """Every true pair at J >= 0.8 must be an LSH candidate (16x4 bands)."""
+    """Every true pair at J >= 0.8 must be an LSH candidate (16x4 bands).
+
+    Two planted rows pin the signature fold's edge cases: an empty shingle
+    array yields the fold's initializer, and a null array yields ``[]``
+    through the coalesce guard."""
     truth = brute_force_pairs(sf_correctness, k=3, threshold=0.8)
     assert truth, "testdata lost its planted near-duplicates"
     docs = load_table(spark, sf_correctness, "documents").select("doc_id", "text")
-    sh = with_shingles(docs, k=3)
+    sh = with_shingles(docs, k=3).select("doc_id", "shingles")
+    edge = spark.createDataFrame(
+        [(10_000_001, []), (10_000_002, None)], "doc_id bigint, shingles array<string>"
+    )
+    sig = minhash_signature(sh.unionByName(edge), n_hashes=64)
+    by_id = {r.doc_id: r.minhash for r in sig.where("doc_id >= 10000001").collect()}
+    assert by_id == {10_000_001: [1 << 62] * 64, 10_000_002: []}
+
     cand = band_candidate_pairs(
-        lsh_band_keys(minhash_signature(sh, n_hashes=64), bands=16, rows=4)
+        lsh_band_keys(sig.where("doc_id < 10000001"), bands=16, rows=4)
     )
     got = {(r.id_a, r.id_b) for r in cand.collect()}
     missed = truth - got

@@ -303,8 +303,8 @@ from tests.test_round9_ops import (  # noqa: E402
 @pytest.mark.slow  # full-suite lane: r15 fast lane must fit the driver's verify window
 def test_suppress_final_window_state_evicts_measured(spark, tmp_path):
     """streaming_suppress_final's exact transform
-    (`streaming_final_windowed_agg` — the SAME plan as the update-mode
-    aggregate, suppression being purely the sink's append mode): state
+    (`streaming_windowed_call_agg` — the update-mode aggregate's plan,
+    suppression being purely the sink's append mode): state
     rows = live (key, window) pairs held back until the watermark closes
     their window; the 4 h leap must both EMIT and EVICT every pre-jump
     window in one stroke. This pins the round-9 claim that append-mode
@@ -312,12 +312,12 @@ def test_suppress_final_window_state_evicts_measured(spark, tmp_path):
     update-mode topology's shape (rise while the watermark is pinned,
     collapse at the leap), not stack suppressed rows on top of it."""
     from kafka_streams_rosetta_demo_spark.streaming.transforms import (
-        streaming_final_windowed_agg,
+        streaming_windowed_call_agg,
     )
 
     root = str(tmp_path / "src")
     _time_advancing_source(spark, root)
-    final = streaming_final_windowed_agg(_stream(spark, root), watermark=_WM)
+    final = streaming_windowed_call_agg(_stream(spark, root), watermark=_WM)
     rows = _state_curve(spark, final, "append")
     _assert_rises_then_falls(rows)
 

@@ -823,10 +823,6 @@ def test_append_mode_emits_each_window_once_final(spark, split_events_dir, tmp_p
     from datetime import timedelta
     from pathlib import Path
 
-    from kafka_streams_rosetta_demo_spark.streaming.transforms import (
-        streaming_final_windowed_agg,
-    )
-
     src = tmp_path / "src"
     src.mkdir()
     # The file source orders new files by modification time; instantaneous
@@ -845,7 +841,7 @@ def test_append_mode_emits_each_window_once_final(spark, split_events_dir, tmp_p
         # every restart appends to the same sink and reads ALL of it back:
         # the sink is the output topic, so a re-emission would show twice
         calls = events_to_calls(_stream(spark, str(src), max_files_per_trigger=1))
-        agg = streaming_final_windowed_agg(calls, watermark="1 second")
+        agg = streaming_windowed_call_agg(calls, watermark="1 second")
         return run_append_query_to_df(agg, ck, str(tmp_path / "sink")).collect()
 
     ck = str(tmp_path / "ck")
@@ -1340,3 +1336,24 @@ def test_streaming_writers_start_only_in_the_runner():
     name, line = sites[0]
     assert name == "runner.py"
     assert line in inspect.getsource(runner._drain).splitlines()
+
+
+def test_only_the_session_reads_the_environment():
+    """Static guard: each operator has one code path. Environment switches
+    belong to the session (cores, memory); no module below it may read
+    ``os.environ`` or ``os.getenv`` to pick an implementation."""
+    import pathlib
+    import re
+
+    import kafka_streams_rosetta_demo_spark as pkg
+
+    reads = re.compile(r"\benviron\b|\bgetenv\b")
+    root = pathlib.Path(pkg.__file__).parent
+    sites = [
+        (str(path.relative_to(root)), n)
+        for path in root.rglob("*.py")
+        if path != root / "session.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if reads.search(line)
+    ]
+    assert not sites, sites

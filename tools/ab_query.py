@@ -1,15 +1,35 @@
-"""Interleaved same-host A/B harness for one registered query.
+"""Interleaved same-host A/B harness: registered queries under two values of
+one environment variable.
 
 Usage:
-    python tools/ab_query.py <query> <ENV_VAR> <rounds> [sf_dir]
+    python tools/ab_query.py <ENV_VAR> <a> <b> <rounds> <sf_dir> <query> [query ...]
 
-Runs 2*rounds fresh subprocesses alternating ENV_VAR=0 (leg A, "off") and
-ENV_VAR=1 (leg B, "on"); each subprocess builds its own session (bench
+Per query, runs 2*rounds fresh subprocesses alternating ENV_VAR=a (leg A)
+and ENV_VAR=b (leg B); each subprocess builds its own session (bench
 construction: local[$SPARK_GRAFT_CPUS]), warms the scan path, then times the
-query through the noop sink (guide §1.4). Interleaving A/B/A/B on the same
-host is the only trustworthy comparison on this sandbox's storm-prone shared
-disk (OPTIMIZATION_r14.md method note); medians of each leg plus the paired
-per-round ratios print at the end.
+query through the noop sink. Interleaving A/B/A/B on the same host is the
+only trustworthy comparison on a host whose shared disk has I/O storms
+(OPTIMIZATION_r14.md method note). Each round prints one leg pair; each
+query prints its leg medians; one JSON line with every leg time, both
+medians, ``ratio`` = median B / median A and the paired per-round B/A
+ratios closes the run.
+
+Core scaling, 8 vs 32 cores on the ten heavy queries (master local[N] AND
+shuffle partitions follow SPARK_GRAFT_CPUS, as in bench.py's scaling
+runs; ratio ≈ 0.25 = perfect scaling, ≈ 1 = overhead-bound). Run it at a
+scale factor where compute dominates the fixed overheads (sf0.5, generated
+by tools/gen_scaled_sf.py):
+
+    python tools/ab_query.py SPARK_GRAFT_CPUS 8 32 2 <sf0.5_dir> \\
+        streaming_ann_screen streaming_decontaminate_screen \\
+        streaming_expectation_monitor streaming_mixture_sampler \\
+        streaming_boilerplate_screen streaming_winnowing_screen \\
+        corpus_source_similarity dedup_embedding_cosine \\
+        dedup_containment graph_pagerank
+
+Production code reads no switches besides the session's, so a code A/B
+compares two commits: use perfbench's paired runs, or run this tool from
+two checkouts.
 """
 
 from __future__ import annotations
@@ -21,7 +41,7 @@ import subprocess
 import sys
 
 CHILD = r"""
-import json, os, sys, time
+import json, sys, time
 query, sf_dir = sys.argv[1], sys.argv[2]
 from kafka_streams_rosetta_demo_spark.session import get_spark
 from kafka_streams_rosetta_demo_spark.queries import load_all
@@ -39,8 +59,7 @@ spark.sparkContext.setJobDescription(f"ab:{query}")
 t0 = time.time()
 df = q.fn(spark, sf_dir)
 df.write.format("noop").mode("overwrite").save()
-dt = time.time() - t0
-print(json.dumps({"query": query, "sec": round(dt, 3)}))
+print(json.dumps({"query": query, "sec": round(time.time() - t0, 3)}))
 """
 
 
@@ -63,35 +82,37 @@ def run_leg(query: str, env_var: str, val: str, sf_dir: str) -> float:
 
 
 def main() -> None:
-    query = sys.argv[1]
-    env_var = sys.argv[2]
-    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
-    offs, ons = [], []
-    for r in range(rounds):
-        offs.append(run_leg(query, env_var, "0", sf_dir))
-        ons.append(run_leg(query, env_var, "1", sf_dir))
-        print(
-            f"round {r}: off={offs[-1]:.3f}s on={ons[-1]:.3f}s "
-            f"ratio={ons[-1] / offs[-1]:.3f}",
-            flush=True,
-        )
-    print(
-        json.dumps(
+    if len(sys.argv) < 7:
+        sys.exit(__doc__)
+    env_var, a, b, rounds, sf_dir = sys.argv[1:6]
+    summary = []
+    for query in sys.argv[6:]:
+        legs_a, legs_b = [], []
+        for r in range(int(rounds)):
+            legs_a.append(run_leg(query, env_var, a, sf_dir))
+            legs_b.append(run_leg(query, env_var, b, sf_dir))
+            print(
+                f"{query} round {r}: {env_var}={a} {legs_a[-1]:.3f}s "
+                f"{env_var}={b} {legs_b[-1]:.3f}s ratio={legs_b[-1] / legs_a[-1]:.3f}",
+                flush=True,
+            )
+        med_a, med_b = statistics.median(legs_a), statistics.median(legs_b)
+        print(f"== {query}: median A={med_a:.3f}s B={med_b:.3f}s", flush=True)
+        summary.append(
             {
                 "query": query,
                 "env": env_var,
-                "off": offs,
-                "on": ons,
-                "median_off": statistics.median(offs),
-                "median_on": statistics.median(ons),
-                "ratio_of_medians": round(
-                    statistics.median(ons) / statistics.median(offs), 3
-                ),
-                "paired_ratios": [round(o / f, 3) for f, o in zip(offs, ons)],
+                "a": a,
+                "b": b,
+                "sec_a": legs_a,
+                "sec_b": legs_b,
+                "median_a": med_a,
+                "median_b": med_b,
+                "ratio": round(med_b / med_a, 3),
+                "paired_ratios": [round(y / x, 3) for x, y in zip(legs_a, legs_b)],
             }
         )
-    )
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":
