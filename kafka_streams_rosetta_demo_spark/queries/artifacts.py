@@ -11,29 +11,32 @@ job. Each of those rebuilds two identical intermediates when written naively:
   which is THRESHOLD-INDEPENDENT, so every prefix-filter query at any
   threshold can slice the same arrays.
 
-Both are memoized here per (Spark application, sf_dir, corpus fingerprint) —
-the same policy and cache shape as the CC label cache
-(``corpus_queries._cc_labels``): the frames
-pin to executor memory via eager ``localCheckpoint`` (at cluster scale the
-equivalent is a persisted table the pipeline materializes once per corpus
-snapshot and reuses across batches/queries; it only changes when the corpus
-does). Pinning goes through ``_pin``, which enforces a graceful memory
-boundary: artifacts whose plan-size estimate exceeds the session's storage
-budget degrade to an eager ``persist(DISK_ONLY)`` instead of OOMing the JVM
-(the sf2.0 boundary finding, SCALING.md).
+Both are memoized here, as is every other corpus-derived artifact, in ONE
+memo (``_memo``) keyed per (kind, Spark application, sf_dir, table, corpus
+fingerprint) — the CC label frame of ``corpus_queries._cc_labels`` included:
+the frames pin to executor memory via eager ``localCheckpoint`` (at cluster
+scale the equivalent is a persisted table the pipeline materializes once per
+corpus snapshot and reuses across batches/queries; it only changes when the
+corpus does). Pinning goes through ``pin_with_budget``, which enforces a
+graceful memory boundary: artifacts whose plan-size estimate exceeds the
+session's storage budget degrade to an eager ``persist(DISK_ONLY)`` instead
+of OOMing the JVM (the sf2.0 boundary finding, SCALING.md).
 
-bench.py declares the cost policy: the cache is CLEARED before each timed
-rep of the family's first member (``dedup_minhash_lsh`` builds the shingle
-frame; ``dedup_ngram_jaccard`` builds the ordered artifact), so those two
-numbers stay the honest artifact-build cost, while later family members
-(``dedup_incremental_screen``, ``dedup_cluster_cc``) time against the warm
-artifacts — the incremental cost a real pipeline pays.
+bench.py declares the cost policy in one table, ``bench.ARTIFACT_CHARGES``:
+each artifact kind's BUILD is charged to exactly one query per family by
+``clear_artifacts(*kinds)`` before each of that query's timed reps
+(``dedup_minhash_lsh`` builds the shingle frame; ``dedup_ngram_jaccard``
+the ordered artifact), so those numbers stay the honest artifact-build cost,
+while later family members (``dedup_incremental_screen``,
+``dedup_cluster_cc``) time against the warm artifacts — the incremental cost
+a real pipeline pays.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,18 +44,23 @@ from ..operators import rebalance
 from ..operators.textsim import df_ordered_shingles, with_shingles
 from ..sources.parquet import load_table
 
-# Keyed by (application, sf_dir, corpus fingerprint): the localCheckpoint
-# blocks live in that application's executors, so a new session must rebuild;
-# the fingerprint (file names + sizes + mtimes of the documents parquet
-# leaves, a handful of os.stat calls) makes a snapshot REWRITTEN in place
-# under the same path miss the cache instead of serving artifacts for the
-# old corpus — the staleness hazard a long-lived session could otherwise
-# fall into.
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-_ORDERED_CACHE: dict[tuple, DataFrame] = {}
-_PAIRS075_CACHE: dict[tuple, DataFrame] = {}
-_SIG_CACHE: dict[tuple, DataFrame] = {}
-_WINNOW_CACHE: dict[tuple, DataFrame] = {}
+# Keyed by (kind, application, sf_dir, table, corpus fingerprint): the
+# localCheckpoint blocks live in that application's executors, so a new
+# session must rebuild; the fingerprint (file names + sizes + mtimes of the
+# table's parquet leaves, a handful of os.stat calls) makes a snapshot
+# REWRITTEN in place under the same path miss the memo instead of serving
+# artifacts for the old corpus — the staleness hazard a long-lived session
+# could otherwise fall into.
+_MEMO: dict[tuple, object] = {}
+
+# Frames pin_with_budget had to persist(DISK_ONLY) (the degraded over-budget
+# path), under the SAME key as the memo entry they back. localCheckpoint
+# frames need no tracking — dropping the memo reference lets the
+# ContextCleaner reclaim their blocks — but persisted frames hold disk blocks
+# until an explicit unpersist, so clear_artifacts releases them eagerly
+# (bench cost policy) and an insert releases a stale key's pins at eviction
+# time (corpus rewritten in place mid-session).
+_MEMO_PINS: dict[tuple, list[DataFrame]] = {}
 
 
 # Non-local sf_dirs whose empty fingerprint has already been warned about —
@@ -98,57 +106,73 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
                 f"artifacts: corpus fingerprint unavailable for non-local "
                 f"{sf_dir!r} ({scheme}://) — artifact memos for this path "
                 "cannot detect in-place corpus rewrites; rebuild the "
-                "session (or clear_* the caches) after rewriting it",
+                "session (or clear_artifacts()) after rewriting it",
                 file=sys.stderr,
             )
         return ()
     return tuple(sorted(entries))
 
 
-def artifact_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """The shared cache key for corpus-derived artifacts: application id
-    (blocks live in that app's executors), sf_dir, and the documents-table
-    content fingerprint (so a rewritten snapshot can never serve stale
-    artifacts)."""
+def _memo_key(
+    kind: str, spark: SparkSession, sf_dir: str, table: str = "documents"
+) -> tuple:
     return (
+        kind,
         spark.sparkContext.applicationId,
         sf_dir,
-        corpus_fingerprint(sf_dir),
+        table,
+        corpus_fingerprint(sf_dir, table),
     )
 
 
-def cache_insert(cache: dict, key: tuple, value, pins: dict | None = None) -> None:
-    """Insert into a fingerprint-keyed artifact memo, EVICTING any entry
-    for the same (application, sf_dir) under a different fingerprint:
-    the old (app, sf_dir) keys overwrote in place, so a long-lived session
-    rewriting its corpus N times must not accumulate N dead artifact
-    copies (each pinning its checkpoint blocks until the reference drops).
-    Eviction deletes the stale reference — the ContextCleaner reclaims
-    localCheckpoint blocks once unreferenced — AND, when the builder's
-    key-tracked ``pins`` dict is passed, eagerly unpersists the evicted
-    entry's DISK_ONLY-degraded pins (round-10 ADVICE: a long-lived
-    library session rewriting its corpus N times otherwise holds N disk
-    copies until a clear_* helper runs, which only bench/sweep harnesses
-    call). Stale-key pins are unreachable by construction — every lookup
-    re-derives the fingerprinted key — so releasing them here is safe."""
-    stale = [k for k in cache if k[:2] == key[:2] and k != key]
-    for k in stale:
-        del cache[k]
-        if pins is not None:
-            _release_pin_list(pins.pop(k, []))
-    cache[key] = value
+def _memo(
+    kind: str,
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[Callable[[DataFrame], DataFrame]], object],
+    table: str = "documents",
+):
+    """The memoized artifact ``kind`` of ``sf_dir``'s ``table``: a warm
+    lookup returns the identical object; a miss calls ``build(pin)``, where
+    ``pin(df)`` is :func:`pin_with_budget` labelled ``kind`` with any
+    DISK_ONLY pin tracked under this entry, and inserts the result."""
+    key = _memo_key(kind, spark, sf_dir, table)
+    if key in _MEMO:
+        return _MEMO[key]
+    pins: list[DataFrame] = []
+    value = build(lambda df: pin_with_budget(df, spark, kind, pins))
+    _memo_insert(key, value, pins)
+    return value
 
 
-# Frames _pin had to persist(DISK_ONLY) (the degraded over-budget path),
-# keyed by the SAME fingerprinted cache key as the memo entry they back and
-# grouped by which clear_* helper owns them. localCheckpoint frames need no
-# tracking — dropping the cache reference lets the ContextCleaner reclaim
-# their blocks — but persisted frames hold disk blocks until an explicit
-# unpersist, so the clear helpers release them eagerly (bench cost policy)
-# and cache_insert releases a stale key's pins at eviction time (corpus
-# rewritten in place mid-session).
-_SHINGLE_DISK_PINS: dict[tuple, list[DataFrame]] = {}
-_WINNOW_DISK_PINS: dict[tuple, list[DataFrame]] = {}
+def _memo_insert(key: tuple, value, pins: list[DataFrame]) -> None:
+    """Insert into the memo, EVICTING every entry for the same
+    (application, sf_dir, table) under a different fingerprint: a
+    long-lived session rewriting its corpus N times must not accumulate N
+    dead artifact copies. Eviction deletes the stale reference — the
+    ContextCleaner reclaims localCheckpoint blocks once unreferenced — AND
+    eagerly unpersists the evicted entry's DISK_ONLY-degraded pins, which
+    would otherwise hold N disk copies until a clear_artifacts call, which
+    only bench/sweep harnesses make. Stale-key entries are unreachable by
+    construction — every lookup re-derives the fingerprinted key — so
+    releasing them here is safe."""
+    for k in [k for k in _MEMO if k[1:4] == key[1:4] and k[4] != key[4]]:
+        del _MEMO[k]
+        _release_pin_list(_MEMO_PINS.pop(k, []))
+    _MEMO[key] = value
+    _MEMO_PINS.setdefault(key, []).extend(pins)
+
+
+def clear_artifacts(*kinds: str) -> None:
+    """Drop the memo entries of the named ``kinds`` — of every kind when
+    called with none — eagerly unpersisting any that took the degraded
+    DISK_ONLY path so their disk blocks free now rather than at GC time.
+    bench.py calls it before each timed rep with the kinds
+    ``bench.ARTIFACT_CHARGES`` charges to that query."""
+    for key in [k for k in _MEMO if not kinds or k[0] in kinds]:
+        del _MEMO[key]
+        _release_pin_list(_MEMO_PINS.pop(key, []))
+
 
 # Opt-in override for the in-memory pin budget ("256m", "2g", or bytes).
 # Unset = 30% of the JVM max heap — the unified-memory storage share
@@ -205,7 +229,8 @@ def _estimated_build_bytes(df: DataFrame) -> int:
     if not any_known and leaves.size() > 0:
         # Every leaf is unknown-size: the estimate is 0 and the OOM guard
         # is effectively bypassed for this artifact. Say so once, loudly —
-        # a silent bypass is the exact failure class _pin exists to catch.
+        # a silent bypass is the exact failure class pin_with_budget
+        # exists to catch.
         print(
             "artifacts: build-size estimate unavailable (all "
             f"{leaves.size()} plan leaves report unknown stats); the "
@@ -234,7 +259,7 @@ def _storage_budget(spark: SparkSession) -> int:
     return int(max_heap * 0.3)
 
 
-def _pin(
+def pin_with_budget(
     df: DataFrame,
     spark: SparkSession,
     what: str,
@@ -257,7 +282,11 @@ def _pin(
     materialize-once table (at cluster scale the equivalent is persisting
     the artifact as a real table, which is already this module's stated
     scale posture). The downgrade is loud (one stderr line) but not fatal
-    — a pipeline should degrade to disk, never die."""
+    — a pipeline should degrade to disk, never die.
+
+    Public for the streaming runner's result-snapshot adapters: the
+    bare-1g sf2.0 record showed their unguarded ``localCheckpoint`` was the
+    next OOM site after the round-9 artifact fix."""
     est = _estimated_build_bytes(df)
     budget = _storage_budget(spark)
     if est >= budget:
@@ -288,19 +317,6 @@ def _pin(
     return df.localCheckpoint(eager=True)
 
 
-def pin_with_budget(
-    df: DataFrame,
-    spark: SparkSession,
-    what: str,
-    pins: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Public entry to the budget-guarded pin, for callers outside this
-    module (the streaming runner's result-snapshot adapters — the bare-1g
-    sf2.0 record showed their unguarded ``localCheckpoint`` was the next
-    OOM site after the round-9 artifact fix)."""
-    return _pin(df, spark, what, pins)
-
-
 def _release_pin_list(pins: list[DataFrame]) -> None:
     for df in pins:
         try:
@@ -310,50 +326,24 @@ def _release_pin_list(pins: list[DataFrame]) -> None:
     pins.clear()
 
 
-def _release_disk_pins(pins: dict[tuple, list[DataFrame]]) -> None:
-    for lst in pins.values():
-        _release_pin_list(lst)
-    pins.clear()
-
-
-def clear_shingle_artifacts() -> None:
-    """Drop the memoized shingle/prefix/pair/signature artifacts (bench cost
-    policy), eagerly unpersisting any that took the degraded DISK_ONLY path
-    so their disk blocks free now rather than at GC time."""
-    _release_disk_pins(_SHINGLE_DISK_PINS)
-    _SHINGLE_CACHE.clear()
-    _ORDERED_CACHE.clear()
-    _PAIRS075_CACHE.clear()
-    _SIG_CACHE.clear()
-
-
-def clear_winnowing_artifacts() -> None:
-    """Drop the memoized winnowing fingerprint index (bench cost policy:
-    its build is charged to ``dedup_winnowing``, the family's first
-    member; ``dedup_winnowing_screen`` rides it warm), unpersisting any
-    DISK_ONLY-degraded copy eagerly."""
-    _release_disk_pins(_WINNOW_DISK_PINS)
-    _WINNOW_CACHE.clear()
-
-
 def shingled_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus shingle table: (doc_id, text, shingles) over the documents
     table, word-3-gram, rebalanced, pinned with an eager localCheckpoint.
     Feeds MinHash signatures, every exact-Jaccard verify side, and the
     ordered-prefix build."""
-    key = artifact_cache_key(spark, sf_dir)
-    got = _SHINGLE_CACHE.get(key)
-    if got is not None:
-        return got
-    docs = rebalance(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    sh = _pin(
-        with_shingles(docs, k=3),
-        spark,
+    return _memo(
         "shingled_documents",
-        _SHINGLE_DISK_PINS.setdefault(key, []),
+        spark,
+        sf_dir,
+        lambda pin: pin(
+            with_shingles(
+                rebalance(
+                    load_table(spark, sf_dir, "documents").select("doc_id", "text")
+                ),
+                k=3,
+            )
+        ),
     )
-    cache_insert(_SHINGLE_CACHE, key, sh, pins=_SHINGLE_DISK_PINS)
-    return sh
 
 
 def ordered_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,18 +351,14 @@ def ordered_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shingle table. Because it covers ALL documents, any subset split
     (e.g. the incremental screen's batch/corpus halves) shares its total
     order by construction — the cross-set prefix guarantee holds."""
-    key = artifact_cache_key(spark, sf_dir)
-    got = _ORDERED_CACHE.get(key)
-    if got is not None:
-        return got
-    ordered = _pin(
-        df_ordered_shingles(shingled_documents(spark, sf_dir), "doc_id"),
-        spark,
+    return _memo(
         "ordered_shingles",
-        _SHINGLE_DISK_PINS.setdefault(key, []),
+        spark,
+        sf_dir,
+        lambda pin: pin(
+            df_ordered_shingles(shingled_documents(spark, sf_dir), "doc_id")
+        ),
     )
-    cache_insert(_ORDERED_CACHE, key, ordered, pins=_SHINGLE_DISK_PINS)
-    return ordered
 
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,18 +373,14 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     first member (``dedup_minhash_lsh``) and reruns ride it warm."""
     from ..operators.textsim import minhash_signature
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _SIG_CACHE.get(key)
-    if got is not None:
-        return got
-    sig = _pin(
-        minhash_signature(shingled_documents(spark, sf_dir), n_hashes=64),
-        spark,
+    return _memo(
         "minhash_signatures",
-        _SHINGLE_DISK_PINS.setdefault(key, []),
+        spark,
+        sf_dir,
+        lambda pin: pin(
+            minhash_signature(shingled_documents(spark, sf_dir), n_hashes=64)
+        ),
     )
-    cache_insert(_SIG_CACHE, key, sig, pins=_SHINGLE_DISK_PINS)
-    return sig
 
 
 def jaccard_pairs_075(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,47 +399,24 @@ def jaccard_pairs_075(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.textsim import jaccard_verify, prefix_filter_pairs
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _PAIRS075_CACHE.get(key)
-    if got is not None:
-        return got
-    sh = shingled_documents(spark, sf_dir)
-    pairs = _pin(
-        jaccard_verify(
-            prefix_filter_pairs(
-                sh, threshold=0.75, ordered=ordered_shingles(spark, sf_dir)
-            ),
-            sh,
-            threshold=0.75,
-        ),
-        spark,
-        "jaccard_pairs_075",
-        _SHINGLE_DISK_PINS.setdefault(key, []),
-    )
-    cache_insert(_PAIRS075_CACHE, key, pairs, pins=_SHINGLE_DISK_PINS)
-    return pairs
+    def build(pin):
+        sh = shingled_documents(spark, sf_dir)
+        return pin(
+            jaccard_verify(
+                prefix_filter_pairs(
+                    sh, threshold=0.75, ordered=ordered_shingles(spark, sf_dir)
+                ),
+                sh,
+                threshold=0.75,
+            )
+        )
+
+    return _memo("jaccard_pairs_075", spark, sf_dir, build)
 
 
 # BPE tokenizer artifacts: the merge table (bounded Python model state,
 # <= N_MERGES pairs) and the vocabulary token-count map (word -> n_toks,
-# pinned like the other corpus artifacts). Same cost policy: the family's
-# first member (text_bpe_train) is charged the training pass; every other
-# BPE-backed query rides the warm merge table and word map.
-_BPE_MERGES_CACHE: dict[tuple, tuple] = {}
-_BPE_WORD_TOKENS_CACHE: dict[tuple, DataFrame] = {}
-_BPE_WORD_LISTS_CACHE: dict[tuple, DataFrame] = {}
-_BPE_DISK_PINS: dict[tuple, list[DataFrame]] = {}
-
-
-def clear_bpe_artifacts() -> None:
-    """Drop the memoized BPE merge table, word token map, and word
-    token-list map (bench cost policy: the merge/count builds are charged
-    to ``text_bpe_train``; the list map to ``text_bpe_vocab_ids``, its
-    first consumer)."""
-    _release_disk_pins(_BPE_DISK_PINS)
-    _BPE_MERGES_CACHE.clear()
-    _BPE_WORD_TOKENS_CACHE.clear()
-    _BPE_WORD_LISTS_CACHE.clear()
+# pinned like the other corpus artifacts).
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> tuple:
@@ -467,13 +426,12 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> tuple:
     has the 100 TB argument); memoized per corpus snapshot."""
     from ..operators.bpe import corpus_word_counts, train_bpe
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _BPE_MERGES_CACHE.get(key)
-    if got is not None:
-        return got
-    merges = tuple(train_bpe(corpus_word_counts(spark, sf_dir)))
-    cache_insert(_BPE_MERGES_CACHE, key, merges)
-    return merges
+    return _memo(
+        "bpe_merges",
+        spark,
+        sf_dir,
+        lambda _pin: tuple(train_bpe(corpus_word_counts(spark, sf_dir))),
+    )
 
 
 def bpe_word_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,27 +440,14 @@ def bpe_word_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registry is a broadcast join against this one table."""
     from ..operators.bpe import word_token_counts
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _BPE_WORD_TOKENS_CACHE.get(key)
-    if got is not None:
-        return got
-    wt = _pin(
-        word_token_counts(spark, sf_dir, list(bpe_merges(spark, sf_dir))),
-        spark,
+    return _memo(
         "bpe_word_tokens",
-        _BPE_DISK_PINS.setdefault(key, []),
+        spark,
+        sf_dir,
+        lambda pin: pin(
+            word_token_counts(spark, sf_dir, list(bpe_merges(spark, sf_dir)))
+        ),
     )
-    cache_insert(_BPE_WORD_TOKENS_CACHE, key, wt, pins=_BPE_DISK_PINS)
-    return wt
-
-
-def clear_bpe_list_artifact() -> None:
-    """Drop ONLY the word token-list memo (bench cost policy: its build is
-    charged to ``text_bpe_vocab_ids`` while the merge table and count map
-    stay warm from ``text_bpe_train``). Disk pins stay owned by
-    ``clear_bpe_artifacts`` — the list table is vocabulary-sized and does
-    not hit the degraded path at bench scale."""
-    _BPE_WORD_LISTS_CACHE.clear()
 
 
 def bpe_word_token_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,18 +459,14 @@ def bpe_word_token_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer)."""
     from ..operators.bpe import word_token_lists
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _BPE_WORD_LISTS_CACHE.get(key)
-    if got is not None:
-        return got
-    wl = _pin(
-        word_token_lists(spark, sf_dir, list(bpe_merges(spark, sf_dir))),
-        spark,
+    return _memo(
         "bpe_word_token_lists",
-        _BPE_DISK_PINS.setdefault(key, []),
+        spark,
+        sf_dir,
+        lambda pin: pin(
+            word_token_lists(spark, sf_dir, list(bpe_merges(spark, sf_dir)))
+        ),
     )
-    cache_insert(_BPE_WORD_LISTS_CACHE, key, wl, pins=_BPE_DISK_PINS)
-    return wl
 
 
 def winnowing_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,22 +481,20 @@ def winnowing_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes next to the corpus snapshot and probes per ingest."""
     from ..operators.textsim import winnow_fingerprints
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _WINNOW_CACHE.get(key)
-    if got is not None:
-        return got
-    fps = _pin(
-        winnow_fingerprints(
-            rebalance(load_table(spark, sf_dir, "documents").select("doc_id", "text")),
-            k=3,
-            w=4,
-        ),
-        spark,
+    return _memo(
         "winnowing_index",
-        _WINNOW_DISK_PINS.setdefault(key, []),
+        spark,
+        sf_dir,
+        lambda pin: pin(
+            winnow_fingerprints(
+                rebalance(
+                    load_table(spark, sf_dir, "documents").select("doc_id", "text")
+                ),
+                k=3,
+                w=4,
+            )
+        ),
     )
-    cache_insert(_WINNOW_CACHE, key, fps, pins=_WINNOW_DISK_PINS)
-    return fps
 
 
 # ---------------------------------------------------------------------------
@@ -563,36 +502,19 @@ def winnowing_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # them across sessions/jobs (VERDICT r10 task 2)
 # ---------------------------------------------------------------------------
 
-# kind -> (builder, memo cache, pins dict, shard key, column order). The
-# shard key is the column downstream consumers join/probe on, so the written
-# layout colocates a key's rows in one shard file (the X97 posture: the
-# winnowing index is "term-hash-sharded" — probes prune by `_shard`).
 ARTIFACT_SHARDS = 8
 
-
-def _artifact_specs() -> dict[str, tuple]:
-    return {
-        "winnowing_index": (
-            winnowing_index, _WINNOW_CACHE, _WINNOW_DISK_PINS, "f",
-            ("doc_id", "f"),
-        ),
-        "jaccard_pairs_075": (
-            jaccard_pairs_075, _PAIRS075_CACHE, _SHINGLE_DISK_PINS, "doc_a",
-            ("doc_a", "doc_b", "jaccard"),
-        ),
-        "minhash_signatures": (
-            minhash_signatures, _SIG_CACHE, _SHINGLE_DISK_PINS, "doc_id",
-            ("doc_id", "minhash"),
-        ),
-        "bpe_word_tokens": (
-            bpe_word_tokens, _BPE_WORD_TOKENS_CACHE, _BPE_DISK_PINS, "word",
-            ("word", "n_toks"),
-        ),
-        "bpe_word_token_lists": (
-            bpe_word_token_lists, _BPE_WORD_LISTS_CACHE, _BPE_DISK_PINS, "word",
-            ("word", "cnt", "toks"),
-        ),
-    }
+# kind -> (builder, shard key, column order). The shard key is the column
+# downstream consumers join/probe on, so the written layout colocates a key's
+# rows in one shard file (the X97 posture: the winnowing index is
+# "term-hash-sharded" — probes prune by `_shard`).
+_ARTIFACT_SPECS: dict[str, tuple] = {
+    "winnowing_index": (winnowing_index, "f", ("doc_id", "f")),
+    "jaccard_pairs_075": (jaccard_pairs_075, "doc_a", ("doc_a", "doc_b", "jaccard")),
+    "minhash_signatures": (minhash_signatures, "doc_id", ("doc_id", "minhash")),
+    "bpe_word_tokens": (bpe_word_tokens, "word", ("word", "n_toks")),
+    "bpe_word_token_lists": (bpe_word_token_lists, "word", ("word", "cnt", "toks")),
+}
 
 
 def _write_fingerprint_meta(spark: SparkSession, path: str, sf_dir: str) -> None:
@@ -642,7 +564,7 @@ def save_artifact(spark: SparkSession, sf_dir: str, kind: str, path: str) -> Non
         ).coalesce(1).write.mode("overwrite").parquet(path)
         _write_fingerprint_meta(spark, path, sf_dir)
         return
-    builder, _cache, _pins, shard_key, cols = _artifact_specs()[kind]
+    builder, shard_key, cols = _ARTIFACT_SPECS[kind]
     write_sharded_parquet(
         builder(spark, sf_dir).select(*cols), path, shard_key, ARTIFACT_SHARDS
     )
@@ -658,25 +580,24 @@ def load_artifact(spark: SparkSession, sf_dir: str, kind: str, path: str):
     consumes the artifact then rides the loaded table instead of
     rebuilding — reload parity (loaded index -> query answers
     hash-identical to the memo-built ones, with the builders blocked) is
-    pinned in ``tests/test_round11_ops.py``. Returns the loaded artifact
+    pinned in ``tests/test_artifacts.py``. Returns the loaded artifact
     (DataFrame, or the merge tuple for ``bpe_merges``)."""
     if corpus_fingerprint(sf_dir):
         _check_fingerprint_meta(spark, path, sf_dir)
-    key = artifact_cache_key(spark, sf_dir)
+    pins: list[DataFrame] = []
     if kind == "bpe_merges":
         rows = spark.read.parquet(path).orderBy("rank").collect()
-        merges = tuple((r.lhs, r.rhs) for r in rows)
-        cache_insert(_BPE_MERGES_CACHE, key, merges)
-        return merges
-    _builder, cache, pins, _shard_key, cols = _artifact_specs()[kind]
-    df = _pin(
-        spark.read.parquet(path).select(*cols),
-        spark,
-        f"{kind} (reloaded from {path})",
-        pins.setdefault(key, []),
-    )
-    cache_insert(cache, key, df, pins=pins)
-    return df
+        value = tuple((r.lhs, r.rhs) for r in rows)
+    else:
+        _builder, _shard_key, cols = _ARTIFACT_SPECS[kind]
+        value = pin_with_budget(
+            spark.read.parquet(path).select(*cols),
+            spark,
+            f"{kind} (reloaded from {path})",
+            pins,
+        )
+    _memo_insert(_memo_key(kind, spark, sf_dir), value, pins)
+    return value
 
 
 # Per-DOCUMENT artifacts are append-exact: each row depends only on its own
@@ -698,7 +619,7 @@ def append_artifact(
     re-stamp the sidecar with ``sf_dir``'s CURRENT corpus fingerprint so a
     reload against the post-ingest snapshot passes the staleness gate.
     Call AFTER the batch lands in the corpus table; extended-index ==
-    full-rebuild parity is pinned in ``tests/test_round11_ops.py``."""
+    full-rebuild parity is pinned in ``tests/test_artifacts.py``."""
     from pyspark.sql import functions as F
 
     from ..operators.textsim import minhash_signature, winnow_fingerprints, with_shingles
@@ -715,7 +636,7 @@ def append_artifact(
     else:
         rows = minhash_signature(with_shingles(docs, k=3), n_hashes=64)
         shard_key = "doc_id"
-    _builder, _cache, _pins, _sk, cols = _artifact_specs()[kind]
+    cols = _ARTIFACT_SPECS[kind][2]
     out = rows.select(*cols).withColumn(
         "_shard", shard_column(F.col(shard_key), ARTIFACT_SHARDS)
     )
@@ -733,26 +654,6 @@ def append_artifact(
 # ANN index an embedding store maintains and every ingest batch probes
 # (streaming_ann_screen). Keyed by the EMBEDDINGS table fingerprint (this
 # family derives from embeddings, not documents).
-_ANN_INDEX_CACHE: dict[tuple, DataFrame] = {}
-_ANN_VECTORS_CACHE: dict[tuple, DataFrame] = {}
-_ANN_DISK_PINS: dict[tuple, list[DataFrame]] = {}
-
-
-def clear_ann_artifacts() -> None:
-    """Drop the memoized ANN band index + normed corpus vectors (bench cost
-    policy: their build is charged to ``streaming_ann_screen``, the family's
-    only registered consumer), releasing DISK_ONLY-degraded pins eagerly."""
-    _release_disk_pins(_ANN_DISK_PINS)
-    _ANN_INDEX_CACHE.clear()
-    _ANN_VECTORS_CACHE.clear()
-
-
-def _ann_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        corpus_fingerprint(sf_dir, "embeddings"),
-    )
 
 
 def ann_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -764,22 +665,16 @@ def ann_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.vectors import hyperplane_band_keys, hyperplanes
 
-    key = _ann_cache_key(spark, sf_dir)
-    got = _ANN_INDEX_CACHE.get(key)
-    if got is not None:
-        return got
-    corpus = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    planes = hyperplanes(dim=64, n=64, seed=7)
-    bands = _pin(
-        hyperplane_band_keys(corpus, planes, bands=4).select(
-            F.col("vec_id").alias("match_id"), "band_id", "band_key"
-        ),
-        spark,
-        "ann_band_index",
-        _ANN_DISK_PINS.setdefault(key, []),
-    )
-    cache_insert(_ANN_INDEX_CACHE, key, bands, pins=_ANN_DISK_PINS)
-    return bands
+    def build(pin):
+        corpus = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        planes = hyperplanes(dim=64, n=64, seed=7)
+        return pin(
+            hyperplane_band_keys(corpus, planes, bands=4).select(
+                F.col("vec_id").alias("match_id"), "band_id", "band_key"
+            )
+        )
+
+    return _memo("ann_band_index", spark, sf_dir, build, table="embeddings")
 
 
 def ann_corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,41 +685,22 @@ def ann_corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.vectors import with_norm
 
-    key = _ann_cache_key(spark, sf_dir)
-    got = _ANN_VECTORS_CACHE.get(key)
-    if got is not None:
-        return got
-    corpus = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    vecs = _pin(
-        with_norm(corpus).select(
-            F.col("vec_id").alias("match_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        ),
-        spark,
-        "ann_corpus_vectors",
-        _ANN_DISK_PINS.setdefault(key, []),
-    )
-    cache_insert(_ANN_VECTORS_CACHE, key, vecs, pins=_ANN_DISK_PINS)
-    return vecs
+    def build(pin):
+        corpus = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        return pin(
+            with_norm(corpus).select(
+                F.col("vec_id").alias("match_id"),
+                F.col("embedding").alias("c_emb"),
+                F.col("nrm").alias("c_nrm"),
+            )
+        )
+
+    return _memo("ann_corpus_vectors", spark, sf_dir, build, table="embeddings")
 
 
 # ---------------------------------------------------------------------------
 # Unigram-LM tokenizer artifacts
 # ---------------------------------------------------------------------------
-
-_UNIGRAM_WT_CACHE: dict[tuple, DataFrame] = {}
-_UNIGRAM_DISK_PINS: dict[tuple, list[DataFrame]] = {}
-
-
-def clear_unigram_artifacts() -> None:
-    """Drop the memoized unigram word->token-count map (bench cost policy:
-    its build — training included — is charged to ``text_unigram_fertility``,
-    its first and only registered consumer; ``text_unigram_train`` itself
-    deliberately trains per call so its bench row is the honest training
-    cost)."""
-    _release_disk_pins(_UNIGRAM_DISK_PINS)
-    _UNIGRAM_WT_CACHE.clear()
 
 
 def unigram_word_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -837,40 +713,20 @@ def unigram_word_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.unigram import train_unigram, unigram_token_count_udf
     from pyspark.sql import functions as F
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _UNIGRAM_WT_CACHE.get(key)
-    if got is not None:
-        return got
-    vocab = train_unigram(corpus_word_counts(spark, sf_dir))
-    words = (
-        corpus_words(spark, sf_dir).select(F.col("w").alias("word")).distinct()
-    )
-    udf = unigram_token_count_udf(spark, vocab)
-    wt = _pin(
-        words.select("word", udf(F.col("word")).alias("n_toks")),
-        spark,
-        "unigram_word_tokens",
-        _UNIGRAM_DISK_PINS.setdefault(key, []),
-    )
-    cache_insert(_UNIGRAM_WT_CACHE, key, wt, pins=_UNIGRAM_DISK_PINS)
-    return wt
+    def build(pin):
+        vocab = train_unigram(corpus_word_counts(spark, sf_dir))
+        words = (
+            corpus_words(spark, sf_dir).select(F.col("w").alias("word")).distinct()
+        )
+        udf = unigram_token_count_udf(spark, vocab)
+        return pin(words.select("word", udf(F.col("word")).alias("n_toks")))
+
+    return _memo("unigram_word_tokens", spark, sf_dir, build)
 
 
 # ---------------------------------------------------------------------------
 # Boilerplate-scrub index artifact
 # ---------------------------------------------------------------------------
-
-_BOILER_INDEX_CACHE: dict[tuple, DataFrame] = {}
-_BOILER_DISK_PINS: dict[tuple, list[DataFrame]] = {}
-
-
-def clear_boilerplate_artifacts() -> None:
-    """Drop the memoized paragraph-frequency index (bench cost policy: the
-    build is charged to ``streaming_boilerplate_screen``, its consumer; the
-    batch scrub computes inline — its bench row is the full two-pass
-    cost)."""
-    _release_disk_pins(_BOILER_DISK_PINS)
-    _BOILER_INDEX_CACHE.clear()
 
 
 def boilerplate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,33 +737,24 @@ def boilerplate_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``boilerplate_paras`` paragraphizer), pinned and memoized."""
     from pyspark.sql import functions as F
 
-    from ..sources.parquet import load_table
     from .corpus_queries import boilerplate_paras
 
-    key = artifact_cache_key(spark, sf_dir)
-    got = _BOILER_INDEX_CACHE.get(key)
-    if got is not None:
-        return got
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    )
-    src_docs = docs.groupBy("source").agg(
-        F.countDistinct("doc_id").cast("long").alias("n_docs")
-    )
-    freq = (
-        # (round 15 examined and reverted: rebalancing the raw doc rows
-        # before the paragraph explode measured 1.07-1.31x WORSE across 4
-        # in-session reps — the md5/explode is cheaper than shuffling the
-        # text payload, and the (source, ph) aggregate redistributes anyway)
-        boilerplate_paras(docs)
-        .groupBy("source", "ph")
-        .agg(F.countDistinct("doc_id").cast("long").alias("df"))
-    )
-    idx = _pin(
-        freq.join(F.broadcast(src_docs), "source"),
-        spark,
-        "boilerplate_index",
-        _BOILER_DISK_PINS.setdefault(key, []),
-    )
-    cache_insert(_BOILER_INDEX_CACHE, key, idx, pins=_BOILER_DISK_PINS)
-    return idx
+    def build(pin):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "text"
+        )
+        src_docs = docs.groupBy("source").agg(
+            F.countDistinct("doc_id").cast("long").alias("n_docs")
+        )
+        freq = (
+            # (round 15 examined and reverted: rebalancing the raw doc rows
+            # before the paragraph explode measured 1.07-1.31x WORSE across 4
+            # in-session reps — the md5/explode is cheaper than shuffling the
+            # text payload, and the (source, ph) aggregate redistributes anyway)
+            boilerplate_paras(docs)
+            .groupBy("source", "ph")
+            .agg(F.countDistinct("doc_id").cast("long").alias("df"))
+        )
+        return pin(freq.join(F.broadcast(src_docs), "source"))
+
+    return _memo("boilerplate_index", spark, sf_dir, build)

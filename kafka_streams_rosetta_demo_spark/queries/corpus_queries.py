@@ -95,38 +95,23 @@ SELECT doc_id, cluster_id FROM cc
 # that execution shape without coupling the gate queries semantically:
 # each call still returns the same deterministic frame, it just doesn't
 # recompute the expensive pair graph when the process already holds it.
-# Keyed by (Spark application, sf_dir) because the cached frame's
-# localCheckpoint blocks live in that application's executors.
-_CC_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_cc_labels_cache() -> None:
-    """Drop the memoized label frames. bench.py clears before each timed
-    rep of ``dedup_cluster_cc`` so that query's number stays the honest
-    artifact-BUILD cost, while ``dedup_cluster_keep_best`` times against
-    the warm artifact — the incremental cost a real pipeline pays."""
-    _CC_LABELS_CACHE.clear()
-
-
+# connected_components already localCheckpoints its labels, so the build
+# does not pin them again.
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .artifacts import artifact_cache_key
-
-    key = artifact_cache_key(spark, sf_dir)
-    got = _CC_LABELS_CACHE.get(key)
-    if got is not None:
-        return got
     # the edge list IS the family's shared verified-pair artifact
     # (queries/artifacts.py) — the same frame dedup_ngram_jaccard returns
     # and dedup_incremental_screen slices, so on a warm session the CC pass
     # starts straight at label propagation
-    from .artifacts import jaccard_pairs_075
+    from .artifacts import _memo, jaccard_pairs_075
 
-    pairs = jaccard_pairs_075(spark, sf_dir)
-    comp = connected_components(pairs, src="doc_a", dst="doc_b")
-    from .artifacts import cache_insert
-
-    cache_insert(_CC_LABELS_CACHE, key, comp)
-    return comp
+    return _memo(
+        "cc_labels",
+        spark,
+        sf_dir,
+        lambda _pin: connected_components(
+            jaccard_pairs_075(spark, sf_dir), src="doc_a", dst="doc_b"
+        ),
+    )
 
 
 @register("dedup_cluster_cc", oracle=_CC_ORACLE)

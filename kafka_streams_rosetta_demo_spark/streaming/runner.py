@@ -231,12 +231,9 @@ def release_streaming_result_pins() -> None:
     """Unpersist every DISK_ONLY-degraded streaming result pinned so far.
     Call between queries (after the previous result is fully consumed);
     a no-op when nothing degraded — the common in-budget case."""
-    for df in _STREAM_RESULT_PINS:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped — blocks are gone anyway
-    _STREAM_RESULT_PINS.clear()
+    from ..queries.artifacts import _release_pin_list
+
+    _release_pin_list(_STREAM_RESULT_PINS)
 
 
 def _pin_result(df: DataFrame, spark: SparkSession, what: str) -> DataFrame:

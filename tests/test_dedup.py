@@ -24,6 +24,14 @@ from kafka_streams_rosetta_demo_spark.operators.textsim import (
 )
 from kafka_streams_rosetta_demo_spark.sources.parquet import load_table
 
+# the memoized shingle-family artifacts (queries/artifacts.py)
+_SHINGLE_KINDS = (
+    "shingled_documents",
+    "ordered_shingles",
+    "minhash_signatures",
+    "jaccard_pairs_075",
+)
+
 
 def brute_force_pairs(sf_dir: str, k: int, threshold: float) -> set[tuple[int, int]]:
     con = duckdb.connect()
@@ -249,12 +257,12 @@ def test_shared_pair_artifact_forms_agree(spark, sf_correctness):
     )
     from kafka_streams_rosetta_demo_spark.queries import load_all
     from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-        clear_shingle_artifacts,
+        clear_artifacts,
         ordered_shingles,
         shingled_documents,
     )
 
-    clear_shingle_artifacts()
+    clear_artifacts(*_SHINGLE_KINDS)
     sh = shingled_documents(spark, sf_correctness)
     ordered = ordered_shingles(spark, sf_correctness)
 
@@ -331,13 +339,13 @@ def test_minhash_signature_artifact_form_equality(spark, sf_correctness):
     )
     from kafka_streams_rosetta_demo_spark.queries import load_all
     from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-        clear_shingle_artifacts,
+        clear_artifacts,
         minhash_signatures,
         shingled_documents,
     )
 
     registry = load_all()
-    clear_shingle_artifacts()
+    clear_artifacts(*_SHINGLE_KINDS)
     art = minhash_signatures(spark, sf_correctness)
     standalone = minhash_signature(
         shingled_documents(spark, sf_correctness), n_hashes=64
@@ -349,7 +357,7 @@ def test_minhash_signature_artifact_form_equality(spark, sf_correctness):
     # warm call is the same pinned frame — the rebuild genuinely skipped
     assert minhash_signatures(spark, sf_correctness) is art
 
-    cold = clear_shingle_artifacts() or sorted(
+    cold = clear_artifacts(*_SHINGLE_KINDS) or sorted(
         map(tuple, registry["dedup_minhash_lsh"].fn(spark, sf_correctness).collect())
     )
     warm = sorted(

@@ -1,6 +1,6 @@
-"""Round-10 additions: artifact-cache content fingerprinting (a rewritten
-corpus snapshot must rebuild, never serve stale artifacts), the
-overflow-safe token-budget plan math, and the BPE tokenizer gates."""
+"""Round-10 additions: the overflow-safe token-budget plan math and the BPE
+tokenizer gates. (Artifact-memo content fingerprinting lives in
+``tests/test_artifacts.py``.)"""
 
 from __future__ import annotations
 
@@ -14,91 +14,6 @@ def _write_docs(spark, path: str, rows: list[tuple[int, str]]) -> None:
         [(i, t, "src") for i, t in rows], "doc_id long, text string, source string"
     )
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "documents.parquet"))
-
-
-class TestArtifactFingerprint:
-    def test_fingerprint_changes_on_rewrite(self, spark, tmp_path):
-        from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-            corpus_fingerprint,
-        )
-
-        sf = str(tmp_path)
-        _write_docs(spark, sf, [(0, "a b c d e f"), (1, "a b c d e g")])
-        fp1 = corpus_fingerprint(sf)
-        assert fp1, "fingerprint should see the written files"
-        _write_docs(spark, sf, [(0, "x y z w v u"), (1, "x y z w v t")])
-        fp2 = corpus_fingerprint(sf)
-        assert fp1 != fp2
-
-    def test_missing_table_fingerprints_empty(self, tmp_path):
-        from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-            corpus_fingerprint,
-        )
-
-        assert corpus_fingerprint(str(tmp_path)) == ()
-
-    def test_rewritten_corpus_rebuilds_artifact(self, spark, tmp_path):
-        """The round-9 verdict's staleness hazard, closed: a snapshot
-        rewritten IN PLACE under the same sf_dir must miss the
-        (application, sf_dir, fingerprint) cache and rebuild — observable
-        as the artifact's content tracking the new corpus."""
-        from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-            clear_shingle_artifacts,
-            shingled_documents,
-        )
-
-        sf = str(tmp_path)
-        try:
-            _write_docs(
-                spark,
-                sf,
-                [(0, "alpha beta gamma delta epsilon zeta"), (1, "one two three four five six")],
-            )
-            first = shingled_documents(spark, sf)
-            n1 = first.count()
-            assert n1 == 2
-            # memo hit while the files are untouched: identical object back
-            assert shingled_documents(spark, sf) is first
-
-            # rewrite in place (new sizes/mtimes under the SAME path)
-            _write_docs(
-                spark,
-                sf,
-                [
-                    (10, "red orange yellow green blue indigo"),
-                    (11, "red orange yellow green blue violet"),
-                    (12, "cat dog bird fish mouse horse"),
-                ],
-            )
-            second = shingled_documents(spark, sf)
-            assert second is not first, "rewritten corpus must miss the memo"
-            ids = sorted(r.doc_id for r in second.select("doc_id").collect())
-            assert ids == [10, 11, 12], "artifact must reflect the NEW corpus"
-        finally:
-            clear_shingle_artifacts()
-
-    def test_cc_label_cache_uses_fingerprinted_key(self, spark, tmp_path):
-        from kafka_streams_rosetta_demo_spark.queries.corpus_queries import (
-            _cc_labels,
-            clear_cc_labels_cache,
-        )
-        from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-            clear_shingle_artifacts,
-        )
-
-        sf = str(tmp_path)
-        try:
-            dup = "the quick brown fox jumps over the lazy dog again and again"
-            _write_docs(spark, sf, [(0, dup), (1, dup), (2, "totally different words here now ok")])
-            first = _cc_labels(spark, sf)
-            assert first is _cc_labels(spark, sf)
-            _write_docs(spark, sf, [(5, dup), (6, dup)])
-            clear_shingle_artifacts()  # upstream artifacts re-key themselves too
-            second = _cc_labels(spark, sf)
-            assert second is not first
-        finally:
-            clear_cc_labels_cache()
-            clear_shingle_artifacts()
 
 
 class TestBpe:
@@ -176,7 +91,7 @@ class TestBpe:
         )
         from kafka_streams_rosetta_demo_spark.queries.artifacts import (
             bpe_merges,
-            clear_bpe_artifacts,
+            clear_artifacts,
         )
         from kafka_streams_rosetta_demo_spark.queries.pipeline_queries import (
             text_bpe_tokenize,
@@ -195,14 +110,14 @@ class TestBpe:
         )
         assert "BroadcastHashJoin" in tok_plan, tok_plan
         assert "CartesianProduct" not in tok_plan
-        clear_bpe_artifacts()
+        clear_artifacts("bpe_merges", "bpe_word_tokens", "bpe_word_token_lists")
 
     def test_bpe_artifact_tracks_corpus_rewrite(self, spark, tmp_path):
         """The merge table is corpus model state — a rewritten snapshot
         must retrain, not serve the old tokenizer."""
         from kafka_streams_rosetta_demo_spark.queries.artifacts import (
             bpe_merges,
-            clear_bpe_artifacts,
+            clear_artifacts,
         )
 
         sf = str(tmp_path)
@@ -214,7 +129,7 @@ class TestBpe:
             m2 = bpe_merges(spark, sf)
             assert m2 and m2[0] == ("z", "z")
         finally:
-            clear_bpe_artifacts()
+            clear_artifacts("bpe_merges", "bpe_word_tokens", "bpe_word_token_lists")
 
 
 class TestTokenBudgetOverflowSafety:
@@ -461,27 +376,3 @@ def test_disk_pinned_result_survives_source_deletion(spark, tmp_path, capfd):
     rows = pinned.collect()
     assert len(rows) == 500 and sum(r.v for r in rows) == 3 * sum(range(500))
     pinned.unpersist()
-
-
-def test_clear_helpers_release_disk_pins(spark, sf_smoke, capfd):
-    """bench clears artifact caches before each timed rep; when a rep ran
-    degraded (DISK_ONLY), the clear must unpersist the old blocks eagerly
-    rather than stacking a fresh copy per rep behind the GC."""
-    from pyspark import StorageLevel
-
-    from kafka_streams_rosetta_demo_spark.queries import artifacts
-
-    artifacts.clear_winnowing_artifacts()
-    spark.conf.set(artifacts._BUDGET_CONF, "1")
-    try:
-        artifacts.winnowing_index(spark, sf_smoke)
-        (pin_list,) = artifacts._WINNOW_DISK_PINS.values()
-        assert len(pin_list) == 1
-        pinned = pin_list[0]
-        assert pinned.storageLevel == StorageLevel.DISK_ONLY
-        artifacts.clear_winnowing_artifacts()
-        assert artifacts._WINNOW_DISK_PINS == {}
-        assert pinned.storageLevel == StorageLevel.NONE, "blocks not released"
-    finally:
-        spark.conf.unset(artifacts._BUDGET_CONF)
-        artifacts.clear_winnowing_artifacts()

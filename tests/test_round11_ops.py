@@ -1,12 +1,11 @@
 """Round-11 pins: the large-vocabulary mapInPandas BPE encode path, the
-overflow-safe fertility ppm math, artifact persist/reload parity, and the
-artifact-cache pin-eviction fix.
+overflow-safe fertility ppm math, and the streaming tokenizer twins.
 
 Each test pins a behavior a 100 TB deployment depends on: the two BPE
 encode forms (vocabulary-join fast path vs per-document map fallback) must
 be interchangeable; ppm ratios must stay exact past int64's naive-product
-ceiling; written artifact indexes must reload byte-identical across
-sessions; and corpus rewrites must not leak evicted artifacts' disk pins.
+ceiling. Artifact persist/reload parity and the memo's pin eviction live in
+``tests/test_artifacts.py``.
 """
 
 from __future__ import annotations
@@ -151,228 +150,8 @@ class TestPpmRatioDecomposition:
                 assert -I64 <= term < I64
 
 
-# ---------------------------------------------------------------------------
-# 3. Artifact-cache hygiene (round-10 ADVICE, low x2): eviction releases the
-# evicted entry's DISK_ONLY pins; non-local fingerprints warn once.
-# ---------------------------------------------------------------------------
-
-
-class TestArtifactCacheHygiene:
-    def test_eviction_unpersists_stale_disk_pins(self, spark, tmp_path, capfd):
-        """A corpus rewritten in place mid-session must release the OLD
-        fingerprint's DISK_ONLY artifact blocks at cache_insert time — not
-        hold them until a bench-only clear_* helper runs."""
-        import shutil
-        import time
-
-        from pyspark import StorageLevel
-
-        from kafka_streams_rosetta_demo_spark.queries import artifacts
-
-        sf = str(tmp_path)
-        docs = spark.createDataFrame(
-            [(i, f"alpha beta gamma delta {i}", "s") for i in range(60)],
-            "doc_id long, text string, source string",
-        )
-        docs.write.parquet(f"{sf}/documents.parquet")
-
-        artifacts.clear_winnowing_artifacts()
-        spark.conf.set(artifacts._BUDGET_CONF, "1")  # force DISK_ONLY
-        try:
-            artifacts.winnowing_index(spark, sf)
-            (old_pins,) = artifacts._WINNOW_DISK_PINS.values()
-            old_pinned = old_pins[0]
-            assert old_pinned.storageLevel == StorageLevel.DISK_ONLY
-
-            # rewrite the corpus in place (new mtime/fileset -> new key)
-            time.sleep(0.05)
-            shutil.rmtree(f"{sf}/documents.parquet")
-            docs.limit(30).write.parquet(f"{sf}/documents.parquet")
-
-            artifacts.winnowing_index(spark, sf)
-            assert len(artifacts._WINNOW_DISK_PINS) == 1  # only the new key
-            assert (
-                old_pinned.storageLevel == StorageLevel.NONE
-            ), "evicted entry's disk pin not released at insert time"
-        finally:
-            spark.conf.unset(artifacts._BUDGET_CONF)
-            artifacts.clear_winnowing_artifacts()
-            capfd.readouterr()
-
-    def test_nonlocal_fingerprint_warns_once(self, capfd):
-        """An os.stat-invisible (remote-scheme) sf_dir fingerprints empty —
-        the staleness guard is off there — and says so exactly once."""
-        from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-            corpus_fingerprint,
-        )
-
-        path = "s3://bucket-that-does-not-exist/sfX"
-        assert corpus_fingerprint(path) == ()
-        assert corpus_fingerprint(path) == ()
-        err = capfd.readouterr().err
-        assert err.count("corpus fingerprint unavailable") == 1
-
-    def test_local_missing_path_stays_silent(self, tmp_path, capfd):
-        """A missing LOCAL path is the normal does-not-exist case — no
-        warning, just the empty fingerprint."""
-        from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-            corpus_fingerprint,
-        )
-
-        assert corpus_fingerprint(str(tmp_path / "nope")) == ()
-        assert "fingerprint unavailable" not in capfd.readouterr().err
-
-
-# ---------------------------------------------------------------------------
-# 4. Artifact persist/reload parity (VERDICT r10 task 2): written index ->
-# cleared memos -> reload -> consumer queries hash-identical, with the
-# builders BLOCKED so a silent rebuild cannot fake the parity.
-# ---------------------------------------------------------------------------
-
-
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-class TestArtifactPersistReload:
-    def test_winnowing_index_reload_parity(self, spark, sf_smoke, tmp_path, monkeypatch):
-        """dedup_winnowing_screen must answer identically whether the
-        fingerprint index came from this session's build or from a written
-        parquet index reloaded cold — with the builder raising, so the
-        reload path is provably the one that served."""
-        from kafka_streams_rosetta_demo_spark.operators import textsim
-        from kafka_streams_rosetta_demo_spark.queries import artifacts
-        from kafka_streams_rosetta_demo_spark.queries.dedup_queries import (
-            dedup_winnowing_screen,
-        )
-
-        artifacts.clear_winnowing_artifacts()
-        baseline = _rows(dedup_winnowing_screen(spark, sf_smoke))
-
-        path = str(tmp_path / "winnow_idx")
-        artifacts.save_artifact(spark, sf_smoke, "winnowing_index", path)
-        artifacts.clear_winnowing_artifacts()  # simulate a fresh session
-
-        def boom(*a, **k):
-            raise AssertionError("builder ran — reload did not serve")
-
-        monkeypatch.setattr(textsim, "winnow_fingerprints", boom)
-        loaded = artifacts.load_artifact(spark, sf_smoke, "winnowing_index", path)
-        assert loaded.columns == ["doc_id", "f"]
-        assert _rows(dedup_winnowing_screen(spark, sf_smoke)) == baseline
-        monkeypatch.undo()
-        artifacts.clear_winnowing_artifacts()
-
-    def test_bpe_reload_parity(self, spark, sf_smoke, tmp_path, monkeypatch):
-        """The tokenizer's two artifacts (merge table + vocabulary map)
-        round-trip through disk and serve text_bpe_fertility identically,
-        with training and the vocabulary encode both blocked."""
-        from kafka_streams_rosetta_demo_spark.operators import bpe as bpe_mod
-        from kafka_streams_rosetta_demo_spark.queries import artifacts
-        from kafka_streams_rosetta_demo_spark.queries.corpus_queries import (
-            text_bpe_fertility,
-        )
-
-        artifacts.clear_bpe_artifacts()
-        baseline = _rows(text_bpe_fertility(spark, sf_smoke))
-        saved_merges = artifacts.bpe_merges(spark, sf_smoke)
-
-        mpath = str(tmp_path / "bpe_merges")
-        wpath = str(tmp_path / "bpe_word_tokens")
-        artifacts.save_artifact(spark, sf_smoke, "bpe_merges", mpath)
-        artifacts.save_artifact(spark, sf_smoke, "bpe_word_tokens", wpath)
-        artifacts.clear_bpe_artifacts()
-
-        def boom(*a, **k):
-            raise AssertionError("builder ran — reload did not serve")
-
-        monkeypatch.setattr(bpe_mod, "train_bpe", boom)
-        monkeypatch.setattr(bpe_mod, "word_token_counts", boom)
-        monkeypatch.setattr(bpe_mod, "corpus_word_counts", boom)
-        merges = artifacts.load_artifact(spark, sf_smoke, "bpe_merges", mpath)
-        assert merges == saved_merges  # rank order survives the round trip
-        artifacts.load_artifact(spark, sf_smoke, "bpe_word_tokens", wpath)
-        assert _rows(text_bpe_fertility(spark, sf_smoke)) == baseline
-        monkeypatch.undo()
-        artifacts.clear_bpe_artifacts()
-
-    def test_stale_fingerprint_rejected_on_load(self, spark, tmp_path):
-        """An index saved from one corpus snapshot must refuse to load
-        against a rewritten snapshot of the same path — the silent-stale
-        failure the sidecar gate exists to stop."""
-        import shutil
-        import time
-
-        import pytest as _pytest
-
-        from kafka_streams_rosetta_demo_spark.queries import artifacts
-
-        sf = str(tmp_path / "corpus")
-        docs = spark.createDataFrame(
-            [(i, f"alpha beta gamma {i}", "s") for i in range(40)],
-            "doc_id long, text string, source string",
-        )
-        docs.write.parquet(f"{sf}/documents.parquet")
-        path = str(tmp_path / "idx")
-        artifacts.save_artifact(spark, sf, "winnowing_index", path)
-
-        time.sleep(0.05)
-        shutil.rmtree(f"{sf}/documents.parquet")
-        docs.limit(10).write.parquet(f"{sf}/documents.parquet")
-
-        with _pytest.raises(ValueError, match="different snapshot"):
-            artifacts.load_artifact(spark, sf, "winnowing_index", path)
-        artifacts.clear_winnowing_artifacts()
-
-    def test_append_extends_index_to_full_rebuild_parity(self, spark, tmp_path):
-        """The incremental-maintenance path: index saved over 80% of a
-        corpus, the remaining 20% ingested and APPENDED (only the batch is
-        fingerprinted — no corpus rescan), reload against the post-ingest
-        snapshot == the full-rebuild index row-for-row, for both
-        per-document kinds."""
-        import pytest as _pytest
-
-        from pyspark.sql import functions as F
-
-        from kafka_streams_rosetta_demo_spark.queries import artifacts
-
-        sf = str(tmp_path / "corpus")
-        all_docs = spark.createDataFrame(
-            [(i, f"gamma delta epsilon zeta {i % 7} {i}", "s") for i in range(50)],
-            "doc_id long, text string, source string",
-        )
-        base = all_docs.where(F.col("doc_id") % 5 != 0)
-        batch = all_docs.where(F.col("doc_id") % 5 == 0)
-
-        for kind in ("winnowing_index", "minhash_signatures"):
-            path = str(tmp_path / f"idx_{kind}")
-            base.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-            artifacts.clear_winnowing_artifacts()
-            artifacts.clear_shingle_artifacts()
-            artifacts.save_artifact(spark, sf, kind, path)
-
-            # the ingest lands in the corpus table, then extends the index
-            batch.write.mode("append").parquet(f"{sf}/documents.parquet")
-            artifacts.append_artifact(spark, sf, kind, path, batch)
-
-            artifacts.clear_winnowing_artifacts()
-            artifacts.clear_shingle_artifacts()
-            loaded = _rows(artifacts.load_artifact(spark, sf, kind, path))
-
-            artifacts.clear_winnowing_artifacts()
-            artifacts.clear_shingle_artifacts()
-            builder = artifacts._artifact_specs()[kind][0]
-            assert loaded == _rows(builder(spark, sf).select(
-                *artifacts._artifact_specs()[kind][4]
-            )), kind
-        artifacts.clear_winnowing_artifacts()
-        artifacts.clear_shingle_artifacts()
-
-        # corpus-global kinds refuse the append path
-        with _pytest.raises(ValueError, match="not per-document"):
-            artifacts.append_artifact(
-                spark, sf, "jaccard_pairs_075", str(tmp_path / "nope"), batch
-            )
 
 
 # ---------------------------------------------------------------------------
@@ -395,42 +174,6 @@ class TestStreamingBpeTokenRate:
         batch = _rows(text_bpe_fertility(spark, sf_smoke))
         stream = _rows(streaming_bpe_token_rate(spark, sf_smoke))
         assert stream == batch
-
-    def test_pairs_and_signatures_reload_parity(self, spark, sf_smoke, tmp_path, monkeypatch):
-        """The remaining two registered artifact kinds — the PPJoin pair
-        set and the MinHash signature table — also round-trip: their
-        consumer queries answer identically off the reloaded indexes with
-        the pair/signature builders blocked (shingling stays allowed —
-        it is a separate artifact these two consume)."""
-        from kafka_streams_rosetta_demo_spark.operators import textsim
-        from kafka_streams_rosetta_demo_spark.queries import artifacts
-        from kafka_streams_rosetta_demo_spark.queries.dedup_queries import (
-            dedup_minhash_lsh,
-            dedup_ngram_jaccard,
-        )
-
-        artifacts.clear_shingle_artifacts()
-        pairs_baseline = _rows(dedup_ngram_jaccard(spark, sf_smoke))
-        lsh_baseline = _rows(dedup_minhash_lsh(spark, sf_smoke))
-
-        ppath = str(tmp_path / "pairs075")
-        spath = str(tmp_path / "minhash_sigs")
-        artifacts.save_artifact(spark, sf_smoke, "jaccard_pairs_075", ppath)
-        artifacts.save_artifact(spark, sf_smoke, "minhash_signatures", spath)
-        artifacts.clear_shingle_artifacts()
-
-        def boom(*a, **k):
-            raise AssertionError("builder ran — reload did not serve")
-
-        monkeypatch.setattr(textsim, "prefix_filter_pairs", boom)
-        monkeypatch.setattr(textsim, "minhash_signature", boom)
-        artifacts.load_artifact(spark, sf_smoke, "jaccard_pairs_075", ppath)
-        artifacts.load_artifact(spark, sf_smoke, "minhash_signatures", spath)
-        assert _rows(dedup_ngram_jaccard(spark, sf_smoke)) == pairs_baseline
-        assert _rows(dedup_minhash_lsh(spark, sf_smoke)) == lsh_baseline
-        monkeypatch.undo()
-        artifacts.clear_shingle_artifacts()
-
 
 # ---------------------------------------------------------------------------
 # 6. Tokenizer deliverables: vocabulary ids + the flat corpus encoding

@@ -220,25 +220,6 @@ def test_winnowing_screen_catches_planted_cross_set_overlap(spark):
     assert a.intersect(c).count() == 0
 
 
-def test_winnowing_query_rides_the_shared_index(spark, sf_smoke):
-    """dedup_winnowing and dedup_winnowing_screen must read the SAME
-    memoized fingerprint index (the warm-artifact contract bench.py's cost
-    policy charges to dedup_winnowing)."""
-    from kafka_streams_rosetta_demo_spark.queries import artifacts
-    from kafka_streams_rosetta_demo_spark.queries.dedup_queries import (
-        dedup_winnowing,
-        dedup_winnowing_screen,
-    )
-
-    artifacts.clear_winnowing_artifacts()
-    dedup_winnowing(spark, sf_smoke).count()
-    key = artifacts.artifact_cache_key(spark, sf_smoke)  # fingerprinted (r10)
-    built = artifacts._WINNOW_CACHE.get(key)
-    assert built is not None, "dedup_winnowing did not build the index"
-    dedup_winnowing_screen(spark, sf_smoke).count()
-    assert artifacts._WINNOW_CACHE.get(key) is built, "screen rebuilt the index"
-
-
 # ---------------------------------------------------------------------------
 # sectioned bench harness invariants (VERDICT r7 task 1)
 # ---------------------------------------------------------------------------
@@ -272,6 +253,58 @@ def test_bench_basket_resolves_and_sections_cover_it():
     bounds = bench.section_bounds(len(names), bench.BENCH_SECTIONS)
     reassembled = [n for lo, hi in bounds for n in names[lo:hi]]
     assert reassembled == names
+
+
+def test_bench_artifact_charges_cover_every_memo_kind():
+    """The bench cost policy is one table, ``bench.ARTIFACT_CHARGES``: each
+    charged query is in the basket, each charged kind is a memo kind, and
+    each memo kind is charged to at least one query — so a new artifact
+    cannot silently ride warm into its first consumer's number. The table
+    reproduces the per-query clears it replaced exactly."""
+    import ast
+    import pathlib
+
+    import bench
+    import kafka_streams_rosetta_demo_spark as pkg
+
+    # memo kinds = the literal first argument of every _memo(...) call
+    kinds = set()
+    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "_memo"
+            ):
+                kind = node.args[0]
+                assert isinstance(kind, ast.Constant), (path, node.lineno)
+                kinds.add(kind.value)
+    assert len(kinds) == 13, sorted(kinds)
+
+    names, _fns = bench.resolve_basket()
+    charges = bench.ARTIFACT_CHARGES
+    assert set(charges) <= set(names), set(charges) - set(names)
+    charged = {k for ks in charges.values() for k in ks}
+    assert charged <= kinds, charged - kinds
+    assert kinds <= charged, kinds - charged
+
+    shingles = {
+        "shingled_documents",
+        "ordered_shingles",
+        "minhash_signatures",
+        "jaccard_pairs_075",
+    }
+    assert {q: set(ks) for q, ks in charges.items()} == {
+        "dedup_minhash_lsh": shingles,
+        "dedup_ngram_jaccard": shingles,
+        "dedup_winnowing": {"winnowing_index"},
+        "text_bpe_train": {"bpe_merges", "bpe_word_tokens", "bpe_word_token_lists"},
+        "text_bpe_vocab_ids": {"bpe_word_token_lists"},
+        "text_unigram_fertility": {"unigram_word_tokens"},
+        "streaming_boilerplate_screen": {"boilerplate_index"},
+        "streaming_ann_screen": {"ann_band_index", "ann_corpus_vectors"},
+        "dedup_cluster_cc": {"cc_labels"},
+    }
 
 
 def test_streaming_winnowing_screen_equals_batch_twin(spark, sf_smoke):

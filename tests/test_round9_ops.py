@@ -111,36 +111,6 @@ def _assert_rises_then_falls(rows: list[int]) -> None:
     )
 
 
-def test_artifact_pin_degrades_to_disk_under_tiny_memory_budget(spark, sf_smoke, capfd):
-    """VERDICT r8 task 6: the sf2.0 sweep OOMed a bare 1g-heap session
-    building the winnowing index's localCheckpoint and killed the JVM.
-    The artifact layer now compares Catalyst's plan-size estimate against
-    the session's storage budget BEFORE pinning; over budget it must
-    degrade to an eager DISK_ONLY persist — a loud, clean, disk-backed
-    success, never a dead session — and the artifact must stay
-    semantically identical to the in-memory build."""
-    from pyspark import StorageLevel
-
-    from kafka_streams_rosetta_demo_spark.queries import artifacts
-
-    artifacts.clear_winnowing_artifacts()
-    spark.conf.set(artifacts._BUDGET_CONF, "1")  # 1 byte: everything is over
-    try:
-        disk = artifacts.winnowing_index(spark, sf_smoke)
-        assert disk.storageLevel == StorageLevel.DISK_ONLY
-        assert "pinning DISK_ONLY" in capfd.readouterr().err
-        disk_count = disk.count()
-    finally:
-        spark.conf.unset(artifacts._BUDGET_CONF)
-        artifacts.clear_winnowing_artifacts()
-    mem = artifacts.winnowing_index(spark, sf_smoke)
-    assert mem.storageLevel != StorageLevel.DISK_ONLY  # normal path restored
-    assert mem.count() == disk_count
-    assert mem.exceptAll(disk).count() == 0 and disk.exceptAll(mem).count() == 0
-    disk.unpersist()
-    artifacts.clear_winnowing_artifacts()
-
-
 def test_scalar_quant_eval_shape_and_bounds(spark, sf_smoke):
     """X145 invariants that the oracle's hash parity can't see on its own:
     one row per query vector, k pinned, overlap within [0, k], recall_ppm

@@ -99,29 +99,12 @@ def sf_value(d: str) -> float:
 
 
 def clear_caches() -> None:
-    from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-        clear_ann_artifacts,
-        clear_bpe_artifacts,
-        clear_boilerplate_artifacts,
-        clear_unigram_artifacts,
-        clear_shingle_artifacts,
-        clear_winnowing_artifacts,
-    )
-    from kafka_streams_rosetta_demo_spark.queries.corpus_queries import (
-        clear_cc_labels_cache,
-    )
-
+    from kafka_streams_rosetta_demo_spark.queries.artifacts import clear_artifacts
     from kafka_streams_rosetta_demo_spark.streaming.runner import (
         release_streaming_result_pins,
     )
 
-    clear_ann_artifacts()
-    clear_shingle_artifacts()
-    clear_winnowing_artifacts()
-    clear_bpe_artifacts()
-    clear_unigram_artifacts()
-    clear_boilerplate_artifacts()
-    clear_cc_labels_cache()
+    clear_artifacts()
     release_streaming_result_pins()
 
 
