@@ -20,6 +20,7 @@ semantics, Pandas UDFs only where built-ins cannot express the op.
 Layout:
 
 - :mod:`.session`    — SparkSession factory (UTC, AQE, Arrow).
+- :mod:`.worker_daemon` — the session's Python worker daemon (cheap zip-import invalidation).
 - :mod:`.schemas`    — StructType equivalents of the reference .avsc schemas.
 - :mod:`.sources`    — parquet/Kafka source + sink adapters.
 - :mod:`.functions`  — scalar helpers (date formatting, null defaults).

@@ -10,6 +10,10 @@ Scale posture: these defaults are tuned for the local[N] test harness but are
 chosen so the same plans survive a real cluster — AQE for runtime re-planning
 and skew-join splitting, partition coalescing so small stages don't fan out,
 UTC session time so event-time semantics are stable across machines.
+
+Python workers start through :mod:`.worker_daemon`, so an Arrow/pandas-UDF
+task no longer re-reads ``pyspark.zip`` on every task set-up (100-200 ms
+each on CPython < 3.13); a plain ``SparkSession.builder`` session still does.
 """
 
 from __future__ import annotations
@@ -61,6 +65,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "kafka_streams_rosetta_demo_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for k, v in (extra_conf or {}).items():
