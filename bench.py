@@ -18,19 +18,16 @@ JVM ages — broadcast and localCheckpoint blocks are only dropped when the
 driver GCs (ContextCleaner is reference-queue driven and a 16g heap rarely
 collects), streaming queries leave state-store and checkpoint temp trees,
 and after ~100 executions late queries were timing 2-4x their fresh-session
-cost under driver load (BENCH_r07: streaming_range_join_keyless 30.5 s vs
-8.4 s committed, the late TPC-H block 2-3.5x up). Explicit System.gc()
-between queries was NOT sufficient. The structural fix: the bench splits
-the basket into ``BENCH_SECTIONS`` contiguous sections and runs each in its
-OWN subprocess (fresh JVM, fresh temp dirs, own warmup — warmup is outside
-every timed region), merging per-section timings into the one-line contract.
-Query order is unchanged round-over-round; section boundaries are safe
-ANYWHERE because the dedup-family artifact memoization is per-process and
-median-of-3 absorbs one cold first rep — while the build-charged queries
-(``ARTIFACT_CHARGES``) still clear their artifacts before every rep, so
-cost attribution is unchanged. (With
-SPARK_GRAFT_BENCH_REPS=1 a section's first warm-family member would charge
-one artifact build; the driver runs the default 3.)
+cost (BENCH_r07: streaming_range_join_keyless 30.5 s vs 8.4 s committed).
+Explicit System.gc() between queries was NOT sufficient. So the parent
+splits the basket into ``BENCH_SECTIONS`` contiguous name lists and times
+each in its OWN ``bench.py --queries a,b,...`` child (``run_child``: fresh
+JVM, fresh temp dirs, own untimed warm-up), merging the children's records
+into the one-line contract. Section boundaries are safe ANYWHERE: the
+artifact memo is per-process, median-of-3 absorbs one cold first rep, and
+the build-charged queries (``ARTIFACT_CHARGES``) clear their artifacts
+before every rep. (With SPARK_GRAFT_BENCH_REPS=1 a section's first
+warm-family member would charge one artifact build; the default is 3.)
 
 Per-query isolation for the heavy streaming topologies (round 13, VERDICT
 r12 task 1): the stream-stream joins and stateful monitors proved the most
@@ -41,15 +38,15 @@ factor was 1.35x. Section-level isolation is not enough for them: they
 accumulate state-store/checkpoint temp trees and shuffle files WITHIN a
 section and also suffer from whatever ran before them in it. So the names
 in ``ISOLATED_STREAMING`` are pulled OUT of the contiguous sections and
-each runs in its OWN subprocess (fresh JVM, own warmup, same rep/median
-policy, same artifact cost charging) — the round-8 isolation discipline
-applied one level deeper. None of them builds an artifact any other basket
-member consumes, so extracting them changes no other query's cost
-attribution.
+each gets a child of its own (same rep/median policy and cost charging).
+None of them builds an artifact any other basket member consumes, so
+extracting them changes no other query's cost attribution.
 """
 
 from __future__ import annotations
 
+import gc
+import importlib
 import json
 import os
 import re
@@ -536,25 +533,24 @@ def sf_from_dir(d: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def resolve_basket() -> tuple[list[str], dict[str, object]]:
-    """Full bench order + name -> (spark, sf_dir) -> DataFrame resolution.
-    Deterministic, so parent and child processes agree on section bounds."""
-    import importlib
-
+def resolve_basket() -> list[str]:
+    """Full bench order: the registered HEADLINE and OPTIONAL names, then the
+    bench-only rows."""
     from kafka_streams_rosetta_demo_spark.queries import load_all
 
     registry = load_all()
-    fns: dict[str, object] = {}
-    names: list[str] = []
-    for n in [h for h in HEADLINE if h in registry] + [
-        o for o in OPTIONAL if o in registry
-    ]:
-        names.append(n)
-        fns[n] = registry[n].fn
+    return [n for n in HEADLINE + OPTIONAL if n in registry] + list(BENCH_ONLY)
+
+
+def query_fns(names: list[str]) -> dict[str, object]:
+    """name -> (spark, sf_dir) -> DataFrame, for any registered or bench-only
+    name."""
+    from kafka_streams_rosetta_demo_spark.queries import load_all
+
+    fns = {n: q.fn for n, q in load_all().items()}
     for n, (mod, attr) in BENCH_ONLY.items():
-        names.append(n)
         fns[n] = getattr(importlib.import_module(mod), attr)
-    return names, fns
+    return {n: fns[n] for n in names}
 
 
 def section_bounds(n: int, sections: int) -> list[tuple[int, int]]:
@@ -564,8 +560,19 @@ def section_bounds(n: int, sections: int) -> list[tuple[int, int]]:
     ]
 
 
-def section_timeout() -> int:
-    """Per-section wall ceiling, scale-factor aware: 3600 s covers sf0.1
+def child_name_lists(basket: list[str]) -> list[list[str]]:
+    """One name list per child process: the ``BENCH_SECTIONS`` contiguous
+    sections of the non-isolated basket, then one list per isolated
+    topology (empty sections dropped)."""
+    contiguous = [n for n in basket if n not in ISOLATED_STREAMING]
+    sections = [
+        contiguous[lo:hi] for lo, hi in section_bounds(len(contiguous), BENCH_SECTIONS)
+    ]
+    return [s for s in sections if s] + [[n] for n in basket if n in ISOLATED_STREAMING]
+
+
+def section_timeout(sf_dir: str = SF_DIR) -> int:
+    """Per-child wall ceiling, scale-factor aware: 3600 s covers sf0.1
     with ~10x headroom; larger SFs scale it linearly so a legitimately
     long sf1/sf2 run is not killed as a hang. Overridable for CI."""
     try:
@@ -580,44 +587,20 @@ def section_timeout() -> int:
         override = 0
     if override > 0:
         return override
-    return max(3600, int(3600 * sf_from_dir(SF_DIR) / 0.1))
+    return max(3600, int(3600 * sf_from_dir(sf_dir) / 0.1))
 
 
-def run_section(section: int) -> dict[str, dict[str, object]]:
-    """Execute one contiguous slice of the basket in THIS process: build a
-    fresh session, warm it up, time each query median-of-REPS. Returns
-    ``{"timings": {name: median_sec}, "rep_times": {name: [per-rep sec]}}``
-    — the raw reps travel into the artifact so noise (one outlier rep) is
-    distinguishable from regression (all reps shifted) without re-running."""
-    from kafka_streams_rosetta_demo_spark.session import get_spark
-    from kafka_streams_rosetta_demo_spark.sources.parquet import (
-        load_table as load_parquet_table,
-    )
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-up so the first timed query doesn't pay startup: codegen
+    + shuffle machinery, then each table's file index / footer / scan path
+    (the reference comparison point — a running Kafka Streams app — is
+    always warm; first-query JVM startup is not query cost)."""
+    from kafka_streams_rosetta_demo_spark.sources.parquet import load_table
 
-    names, fns = resolve_basket()
-    iso = [n for n in names if n in ISOLATED_STREAMING]
-    contiguous = [n for n in names if n not in ISOLATED_STREAMING]
-    if section < BENCH_SECTIONS:
-        lo, hi = section_bounds(len(contiguous), BENCH_SECTIONS)[section]
-        names = contiguous[lo:hi]
-    else:
-        # Sections past the contiguous ones are the per-query isolated
-        # runs: one heavy streaming topology alone in this fresh process.
-        k = section - BENCH_SECTIONS
-        names = [iso[k]] if k < len(iso) else []
-    if not names:
-        return {"timings": {}, "rep_times": {}}
-
-    spark = get_spark(app_name=f"rosetta-bench-s{section}")
-
-    # Warm up the JVM/session so the first timed query doesn't pay startup:
-    # codegen + shuffle machinery, then each table's file index / footer /
-    # scan path (the reference comparison point — a running Kafka Streams
-    # app — is always warm; first-query JVM startup is not query cost).
     spark.range(1000).selectExpr("sum(id)").collect()
     for t in ("events", "customer", "orders", "lineitem", "documents", "embeddings"):
         try:
-            load_parquet_table(spark, SF_DIR, t).count()
+            load_table(spark, sf_dir, t).count()
         except Exception:
             pass
     # Warm the JOIN/WINDOW/AGGREGATE machinery too, not just the scan path:
@@ -625,14 +608,13 @@ def run_section(section: int) -> dict[str, dict[str, object]]:
     # rows are multi-join plans (the TPC-H block in the r14 layout) showed a
     # 2-3x cold-JIT gradient over its first ~12 queries with scan-only
     # warmup — the Janino codegen compiler, shuffle writers, and broadcast
-    # machinery all JIT inside the first timed reps otherwise. Untimed, so
-    # cost attribution is unchanged.
+    # machinery all JIT inside the first timed reps otherwise.
     try:
         from pyspark.sql import Window
         from pyspark.sql import functions as _F
 
-        o = load_parquet_table(spark, SF_DIR, "orders")
-        c = load_parquet_table(spark, SF_DIR, "customer")
+        o = load_table(spark, sf_dir, "orders")
+        c = load_table(spark, sf_dir, "customer")
         (
             o.join(c, o.o_custkey == c.c_custkey)
             .groupBy("c_nationkey")
@@ -653,6 +635,40 @@ def run_section(section: int) -> dict[str, dict[str, object]]:
     except Exception:
         pass
 
+
+def timed_noop_run(spark, qfn, sf_dir: str, charge: tuple[str, ...] = ()) -> float:
+    """One timed rep: wall seconds of ``qfn(spark, sf_dir)`` run to
+    completion through the noop sink."""
+    from kafka_streams_rosetta_demo_spark.queries.artifacts import clear_artifacts
+    from kafka_streams_rosetta_demo_spark.streaming.runner import (
+        release_streaming_result_pins,
+    )
+
+    # Release any DISK_ONLY-degraded streaming result pins from the
+    # previous rep/query (a no-op on the in-budget fast path) — a degraded
+    # session must not stack result blocks per rep.
+    release_streaming_result_pins()
+    # Charge the artifact builds (ARTIFACT_CHARGES); guarded because
+    # clear_artifacts() with no kinds clears every kind.
+    if charge:
+        clear_artifacts(*charge)
+    t0 = time.perf_counter()
+    qfn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def time_queries(names: list[str]) -> dict[str, dict[str, object]]:
+    """Time ``names`` in THIS process: build a fresh session, warm it up,
+    time each query median-of-REPS. Returns
+    ``{"timings": {name: median_sec}, "rep_times": {name: [per-rep sec]}}``
+    — the raw reps travel into the artifact so noise (one outlier rep) is
+    distinguishable from regression (all reps shifted) without re-running."""
+    from kafka_streams_rosetta_demo_spark.session import get_spark
+
+    fns = query_fns(names)
+    spark = get_spark(app_name="rosetta-bench")
+    warm_up(spark, SF_DIR)
+
     timings: dict[str, float] = {}
     rep_times: dict[str, list[float]] = {}
     for qi, name in enumerate(names):
@@ -661,31 +677,12 @@ def run_section(section: int) -> dict[str, dict[str, object]]:
         # each measurement at steady state. Across sections the process
         # boundary resets everything.
         if qi % 8 == 0:
-            import gc
-
             gc.collect()
             spark.sparkContext._jvm.System.gc()
-        qfn = fns[name]
-        reps = []
-        for _ in range(REPS + EXTRA_REPS.get(name, 0)):
-            from kafka_streams_rosetta_demo_spark.queries.artifacts import (
-                clear_artifacts,
-            )
-            from kafka_streams_rosetta_demo_spark.streaming.runner import (
-                release_streaming_result_pins,
-            )
-
-            # Release any DISK_ONLY-degraded streaming result pins from the
-            # previous rep/query (a no-op on the in-budget fast path) — a
-            # degraded session must not stack result blocks per rep.
-            release_streaming_result_pins()
-            # Charge the artifact builds (ARTIFACT_CHARGES); guarded because
-            # clear_artifacts() with no kinds clears every kind.
-            if name in ARTIFACT_CHARGES:
-                clear_artifacts(*ARTIFACT_CHARGES[name])
-            t0 = time.perf_counter()
-            qfn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            reps.append(time.perf_counter() - t0)
+        reps = [
+            timed_noop_run(spark, fns[name], SF_DIR, ARTIFACT_CHARGES.get(name, ()))
+            for _ in range(REPS + EXTRA_REPS.get(name, 0))
+        ]
         timings[name] = round(statistics.median(reps), 3)
         rep_times[name] = [round(r, 3) for r in reps]
         print(
@@ -696,61 +693,63 @@ def run_section(section: int) -> dict[str, dict[str, object]]:
     return {"timings": timings, "rep_times": rep_times}
 
 
-def run_child_section(section: int) -> tuple[int | None, str]:
-    """Spawn a section child in its OWN process group and reap the whole
-    group on timeout. ``subprocess.run(timeout=...)`` kills only the direct
-    Python child; the Spark JVM it spawned would survive as an orphan,
-    keep consuming CPU/memory, and contend with the inline fallback —
-    corrupting exactly the timings process isolation exists to protect.
-    ``start_new_session=True`` puts python + JVM in one group; on timeout
-    the whole group gets SIGKILL and is waited on before the caller
-    falls back."""
-    proc = subprocess.Popen(
-        [sys.executable, os.path.abspath(__file__), "--section", str(section)],
-        stdout=subprocess.PIPE,
-        text=True,
-        start_new_session=True,
-    )
+def run_child(names: list[str], env: dict[str, str] | None = None) -> dict | None:
+    """Time ``names`` in a fresh ``bench.py --queries`` child under ``env``
+    and return its record; None if it failed to spawn, crashed, timed out
+    or printed no record. The child runs in its OWN process group, reaped
+    whole on timeout: killing only the Python child would orphan its Spark
+    JVM, which would then contend with whatever runs next — corrupting
+    exactly the timings isolation exists to protect."""
+    env = dict(os.environ) if env is None else env
+    here = os.path.abspath(__file__)
     try:
-        out, _ = proc.communicate(timeout=section_timeout())
-        return proc.returncode, out
+        proc = subprocess.Popen(
+            [sys.executable, here, "--queries", ",".join(names)],
+            stdout=subprocess.PIPE,
+            text=True,
+            env=env,
+            cwd=os.path.dirname(here),
+            start_new_session=True,
+        )
+        out, _ = proc.communicate(
+            timeout=section_timeout(env.get("SPARK_GRAFT_SF_DIR", SF_DIR))
+        )
+    except OSError as exc:
+        print(f"bench child {names[0]}: spawn failed ({exc})", file=sys.stderr)
+        return None
     except subprocess.TimeoutExpired:
+        print(f"bench child {names[0]}: timed out", file=sys.stderr)
         try:
             os.killpg(proc.pid, signal.SIGKILL)
-        except (OSError, ProcessLookupError):
+        except OSError:
             proc.kill()
-        proc.wait()  # no orphaned JVM before the inline fallback runs
-        raise
+        proc.wait()  # no orphaned JVM before the caller moves on
+        return None
+    if proc.returncode != 0:
+        return None
+    for line in reversed(out.strip().splitlines()):
+        try:
+            record = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(record, dict) and "timings" in record:
+            return record
+    return None
 
 
 def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--section":
-        # Child mode: one section in this process, timings + per-rep times
-        # as the last stdout line; per-query progress stays on stderr
-        # (inherited).
-        print(json.dumps(run_section(int(sys.argv[2]))))
+    if len(sys.argv) >= 3 and sys.argv[1] == "--queries":
+        # Child mode: the named queries in this process, timings + per-rep
+        # times as the last stdout line.
+        print(json.dumps(time_queries(sys.argv[2].split(","))))
         return
 
     timings: dict[str, float] = {}
     rep_times: dict[str, list[float]] = {}
-    basket, _fns = resolve_basket()
+    basket = resolve_basket()
     isolated = [n for n in basket if n in ISOLATED_STREAMING]
-    for section in range(BENCH_SECTIONS + len(isolated)):
-        returncode, child_out = None, ""
-        try:
-            returncode, child_out = run_child_section(section)
-        except (OSError, subprocess.TimeoutExpired) as exc:
-            print(f"bench section {section}: spawn failed ({exc})", file=sys.stderr)
-        payload = None
-        if returncode == 0:
-            for line in reversed(child_out.strip().splitlines()):
-                try:
-                    candidate = json.loads(line)
-                    if isinstance(candidate, dict) and "timings" in candidate:
-                        payload = candidate
-                        break
-                except ValueError:
-                    continue
+    for section, names in enumerate(child_name_lists(basket)):
+        payload = run_child(names)
         if payload is None:
             # Environments where spawning fails (or the child crashed) must
             # not break the driver contract: run the section inline. The
@@ -760,7 +759,7 @@ def main() -> None:
                 "(isolation lost for this section)",
                 file=sys.stderr,
             )
-            payload = run_section(section)
+            payload = time_queries(names)
         timings.update(payload["timings"])
         rep_times.update(payload.get("rep_times", {}))
 

@@ -9,11 +9,11 @@ unnecessary here — the shuffle exchange (or a broadcast) co-partitions the
 sides automatically (SURVEY.md J2).
 
 Scale: a customer dimension is small relative to a 100 TB fact stream, so
-the lookup wants a *broadcast* hash join — zero shuffle of the big side. The
-default is size-aware rather than hardcoded: the hint is applied only when
+the lookup wants a *broadcast* hash join — zero shuffle of the big side.
+Spark's planner makes that call itself: it broadcasts the dimension when
 Catalyst's size estimate fits ``autoBroadcastJoinThreshold``, so a dimension
 that outgrows executor memory falls back to AQE's shuffle-hash / sort-merge
-with skew splitting instead of OOMing.
+with skew splitting instead of OOMing on a hardcoded hint.
 """
 
 from __future__ import annotations
@@ -34,71 +34,20 @@ def estimated_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-# Spark's JavaUtils.byteStringAsBytes suffixes (case-insensitive); a bare
-# number is bytes, and a non-positive value means "broadcast disabled".
-_BYTE_SUFFIX = {
-    "": 1,
-    "b": 1,
-    "k": 1024,
-    "kb": 1024,
-    "m": 1024**2,
-    "mb": 1024**2,
-    "g": 1024**3,
-    "gb": 1024**3,
-    "t": 1024**4,
-    "tb": 1024**4,
-    "p": 1024**5,
-    "pb": 1024**5,
-}
-
-
-def _broadcast_threshold_bytes(df: DataFrame) -> int:
-    """The session's ``autoBroadcastJoinThreshold`` in bytes, parsed with
-    Spark's own byte-string rules (sign kept, ``10m`` = 10 MiB). Returns a
-    NON-POSITIVE value when the user disabled broadcasting (``-1``/``0``) —
-    callers must treat ``<= 0`` as "never broadcast", which the plain
-    ``est <= threshold`` comparison does for any real size estimate ≥ 1."""
-    import re
-
-    raw = str(
-        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    m = re.fullmatch(r"([+-]?\d+)\s*([a-z]*)", raw)
-    if not m or m.group(2) not in _BYTE_SUFFIX:
-        return 10 * 1024 * 1024
-    return int(m.group(1)) * _BYTE_SUFFIX[m.group(2)]
-
-
 def stream_table_left_join(
     stream: DataFrame,
     table: DataFrame,
     stream_key: str,
     table_key: str,
-    broadcast_dim: bool | None = None,
 ) -> DataFrame:
     """J1: for each stream event, look up the current table row by key; emit
     the event even when no row exists (null side handled by the caller's
-    projection, as ``CallCustomerJoiner.java:24-28`` does).
-
-    ``broadcast_dim=None`` (default) is *size-aware*: the dimension gets a
-    broadcast hint only when Catalyst's own size estimate fits the session's
-    ``autoBroadcastJoinThreshold`` — a dimension that outgrows executor
-    memory at 100x falls back to AQE's shuffle/sort-merge choice instead of
-    OOMing on a hardcoded hint. Pass True/False to override.
-    """
-    if broadcast_dim is None:
-        est = estimated_size_bytes(table)
-        thr = _broadcast_threshold_bytes(table)
-        broadcast_dim = thr > 0 and est is not None and est <= thr
-    dim = F.broadcast(table) if broadcast_dim else table
-    return stream.join(dim, on=stream[stream_key] == table[table_key], how="left")
+    projection, as ``CallCustomerJoiner.java:24-28`` does). The broadcast
+    decision is the planner's (module docstring)."""
+    return stream.join(table, on=stream[stream_key] == table[table_key], how="left")
 
 
-def enrich_calls_with_customers(
-    call_agg: DataFrame,
-    customers: DataFrame,
-    broadcast_dim: bool | None = None,
-) -> DataFrame:
+def enrich_calls_with_customers(call_agg: DataFrame, customers: DataFrame) -> DataFrame:
     """J1 + P4 + F1-F3: the full ``CallsEnrichedApp`` topology body.
 
     Input ``call_agg`` is the unwrapped windowed aggregate (window_start /
@@ -110,9 +59,7 @@ def enrich_calls_with_customers(
     """
     from ..functions.datetime_fmt import ROSETTA_TS_FORMAT
 
-    joined = stream_table_left_join(
-        call_agg, customers, "id_telef_origen", "TELEFONO", broadcast_dim
-    )
+    joined = stream_table_left_join(call_agg, customers, "id_telef_origen", "TELEFONO")
     # The reference defaults fields only when the whole customer row is
     # absent (customer == null, CallCustomerJoiner.java:24-28); a matched row
     # passes its fields through even if they are null (all CustomerAggregate
@@ -284,7 +231,9 @@ def choose_join_strategy(
     Returns ``(strategy, profile_used)`` so callers can log the decision.
     """
     est = estimated_size_bytes(right)
-    thr = _broadcast_threshold_bytes(right)
+    # Spark's own parse of the conf (sign kept, ``10m`` = 10 MiB); <= 0
+    # means broadcasting is disabled.
+    thr = right.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     if thr > 0 and est is not None and est <= thr:
         return "broadcast", None
     if profile is None:

@@ -180,16 +180,6 @@ def clear_artifacts(*kinds: str) -> None:
 # without starving execution memory.
 _BUDGET_CONF = "spark.graft.artifact.storageBudget"
 
-_SIZE_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _parse_size(s: str) -> int:
-    s = s.strip().lower().removesuffix("b")
-    if s and s[-1] in _SIZE_UNITS:
-        return int(float(s[:-1]) * _SIZE_UNITS[s[-1]])
-    return int(s)
-
-
 # In-memory expansion factor over the summed leaf-scan bytes, calibrated to
 # the observed boundary (SCALING.md): an 11.8 MB documents.parquet (sf2.0)
 # killed a bare 1g-heap JVM building the winnowing index — dictionary-
@@ -246,16 +236,20 @@ def _storage_budget(spark: SparkSession) -> int:
     a real cluster the relevant heap is ``spark.executor.memory``; in local
     mode driver and executor share one JVM and ``Runtime.maxMemory()`` is
     both. Explicit override (``spark.graft.artifact.storageBudget``) always
-    wins — that is the cluster operator's direct knob."""
+    wins — that is the cluster operator's direct knob. Both sizes are parsed
+    by Spark's own rules: the override is a byte string (bare number =
+    bytes), ``spark.executor.memory`` a MiB string (bare number = MiB)."""
+    jvm = spark.sparkContext._jvm
+    units = jvm.org.apache.spark.network.util.JavaUtils
     override = spark.conf.get(_BUDGET_CONF, None)
     if override:
-        return _parse_size(override)
+        return int(units.byteStringAsBytes(override))
     master = spark.conf.get("spark.master", "")
     if not master.startswith("local"):
         exec_mem = spark.conf.get("spark.executor.memory", None)
         if exec_mem:
-            return int(_parse_size(exec_mem) * 0.3)
-    max_heap = int(spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory())
+            return int(units.byteStringAsMb(exec_mem) * (1 << 20) * 0.3)
+    max_heap = int(jvm.java.lang.Runtime.getRuntime().maxMemory())
     return int(max_heap * 0.3)
 
 

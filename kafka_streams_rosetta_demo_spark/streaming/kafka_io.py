@@ -174,7 +174,9 @@ class KafkaTopicSpec:
 
         return enc
 
-    def _decode(self, value: Column) -> Column:
+    def decode_value(self, value: Column) -> Column:
+        """Public serde surface: on-wire binary value → struct column; null
+        on a bad wire header or undecodable body (the S5 drop condition)."""
         if self.wire_format == "confluent":
             # Header check is part of deserialization: a missing/mangled
             # magic byte or a foreign schema id nulls the record so the S5
@@ -197,21 +199,13 @@ class KafkaTopicSpec:
             return self._avro_py_encode_udf()(value)
         return F.to_json(value).cast("binary")
 
-    def _encode(self, value: Column) -> Column:
+    def encode_value(self, value: Column) -> Column:
+        """Public serde surface: struct column → on-wire binary value
+        (framed when ``wire_format="confluent"``)."""
         body = self._encode_body(value)
         if self.wire_format == "confluent":
             return F.concat(F.lit(self._wire_header()), body)
         return body
-
-    def encode_value(self, value: Column) -> Column:
-        """Public serde surface: struct column → on-wire binary value
-        (framed when ``wire_format="confluent"``)."""
-        return self._encode(value)
-
-    def decode_value(self, value: Column) -> Column:
-        """Public serde surface: on-wire binary value → struct column; null
-        on a bad wire header or undecodable body (the S5 drop condition)."""
-        return self._decode(value)
 
     def parse(self, raw: DataFrame, drop_corrupt: bool = True) -> DataFrame:
         """Binary Kafka records → typed columns.
@@ -224,7 +218,7 @@ class KafkaTopicSpec:
         """
         parsed = raw.select(
             F.col("key").cast("string").alias("key"),
-            self._decode(F.col("value")).alias("v"),
+            self.decode_value(F.col("value")).alias("v"),
             F.col("timestamp").alias("kafka_ts"),
         )
         # Corrupt detection: permissive Avro yields a null struct; Spark's
@@ -254,7 +248,7 @@ class KafkaTopicSpec:
         value_struct = F.struct(*[F.col(f.name) for f in self.value_schema.fields])
         return df.select(
             F.col(key_col).cast("string").alias("key"),
-            self._encode(value_struct).alias("value"),
+            self.encode_value(value_struct).alias("value"),
         )
 
     def write_stream(self, df: DataFrame, key_col: str, checkpoint_dir: str):

@@ -49,6 +49,40 @@ _BPE_KINDS = ("bpe_merges", "bpe_word_tokens", "bpe_word_token_lists")
 # ---------------------------------------------------------------------------
 
 
+def test_artifact_budget_size_parser(spark):
+    """The budget override is a byte string read by Spark's own rules
+    (``JavaUtils.byteStringAsBytes``): binary units, a bare number is
+    bytes."""
+    for raw, want in [
+        ("256m", 256 << 20),
+        ("2g", 2 << 30),
+        ("1536K", 1536 << 10),
+        ("12345", 12345),
+        ("1gb", 1 << 30),
+    ]:
+        spark.conf.set(artifacts._BUDGET_CONF, raw)
+        try:
+            assert artifacts._storage_budget(spark) == want, raw
+        finally:
+            spark.conf.unset(artifacts._BUDGET_CONF)
+
+
+def test_cluster_budget_reads_bare_executor_memory_as_mib(spark):
+    """On a cluster the budget is 30% of ``spark.executor.memory``, which
+    Spark reads as MiB when the value is a bare number
+    (``JavaUtils.byteStringAsMb``): ``4096`` is 4 GiB. Read as bytes, it
+    made a 1,228-byte budget that sent every artifact to DISK_ONLY."""
+    from types import SimpleNamespace
+
+    for exec_mem in ("4096", "4g", "4096m"):
+        confs = {"spark.master": "spark://head:7077", "spark.executor.memory": exec_mem}
+        cluster = SimpleNamespace(
+            conf=SimpleNamespace(get=lambda k, d=None: confs.get(k, d)),
+            sparkContext=spark.sparkContext,
+        )
+        assert artifacts._storage_budget(cluster) == int((4 << 30) * 0.3), exec_mem
+
+
 def test_winnowing_query_rides_the_shared_index(spark, sf_smoke):
     """dedup_winnowing and dedup_winnowing_screen must read the SAME
     memoized fingerprint index (the warm-artifact contract bench.py's cost

@@ -5,77 +5,8 @@ knn_recall_eval broadcast-cap and stored-profile skew-route guarantees
 
 from __future__ import annotations
 
-import contextlib
-
 import pytest
 from pyspark.sql import functions as F
-
-
-@contextlib.contextmanager
-def _conf(spark, key, value):
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-# ---------------------------------------------------------------------------
-# broadcast-threshold parsing (ADVICE r6 #1)
-# ---------------------------------------------------------------------------
-
-
-def test_broadcast_threshold_parses_sign_and_units(spark):
-    from kafka_streams_rosetta_demo_spark.operators.joins import (
-        _broadcast_threshold_bytes,
-    )
-
-    df = spark.range(1)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    for raw, want in [
-        ("10485760", 10 * 1024 * 1024),
-        ("-1", -1),  # the old digit-strip parsed this as 1 byte
-        ("0", 0),
-        ("10m", 10 * 1024 * 1024),  # the old digit-strip parsed this as 10 B
-        ("10MB", 10 * 1024 * 1024),
-        ("1g", 1024**3),
-        ("512k", 512 * 1024),
-        ("64b", 64),
-    ]:
-        with _conf(spark, key, raw):
-            assert _broadcast_threshold_bytes(df) == want, raw
-    # (an unparseable value never reaches the parser: Spark validates the
-    # conf at set-time; the in-function 10 MiB default is pure defense)
-
-
-def test_disabled_broadcast_is_honored_even_for_empty_dim(spark):
-    """`-1` means the user disabled broadcasting; a stat-less/empty dimension
-    (sizeInBytes ~ 1) must NOT get a forced broadcast hint."""
-    from kafka_streams_rosetta_demo_spark.operators.joins import (
-        choose_join_strategy,
-        stream_table_left_join,
-    )
-
-    left = spark.range(100).select(
-        F.col("id").cast("string").alias("k"), F.col("id").alias("v")
-    )
-    empty_dim = spark.range(0).select(
-        F.col("id").cast("string").alias("dk"), F.col("id").alias("dv")
-    )
-    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
-        plan = stream_table_left_join(
-            left, empty_dim, "k", "dk"
-        )._jdf.queryExecution().optimizedPlan().toString()
-        assert "broadcast" not in plan.lower()
-        strat, _ = choose_join_strategy(left, empty_dim, "k")
-        assert strat != "broadcast"
 
 
 # ---------------------------------------------------------------------------

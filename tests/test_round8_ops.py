@@ -1,6 +1,6 @@
 """Round-8 pins: measured (not structural) bounded-state ceilings for the
-sketch/histogram streaming monitors, the winnowing screen's coverage
-guarantees, and the sectioned bench harness's slicing invariants."""
+sketch/histogram streaming monitors and the winnowing screen's coverage
+guarantees."""
 
 from __future__ import annotations
 
@@ -220,93 +220,6 @@ def test_winnowing_screen_catches_planted_cross_set_overlap(spark):
     assert a.intersect(c).count() == 0
 
 
-# ---------------------------------------------------------------------------
-# sectioned bench harness invariants (VERDICT r7 task 1)
-# ---------------------------------------------------------------------------
-
-
-def test_bench_section_bounds_partition_exactly():
-    """Section bounds must tile [0, n) exactly — contiguous, disjoint,
-    exhaustive — for every plausible (n, sections); a dropped or repeated
-    query in the merged timings would silently corrupt the bench artifact."""
-    import bench
-
-    for n in (0, 1, 7, 129, 131, 200):
-        for k in (1, 2, 4, 8):
-            bounds = bench.section_bounds(n, k)
-            assert bounds[0][0] == 0 and bounds[-1][1] == n
-            for (_, hi), (lo2, _) in zip(bounds, bounds[1:]):
-                assert hi == lo2
-
-
-def test_bench_basket_resolves_and_sections_cover_it():
-    """Every basket name resolves to a callable, the bench-only rows are
-    present, and the per-section slices reassemble the full ordered basket
-    (parent/child agreement relies on resolve_basket determinism)."""
-    import bench
-
-    names, fns = bench.resolve_basket()
-    assert len(names) == len(set(names))
-    assert all(callable(fns[n]) for n in names)
-    assert "profile_column_stats_approx_production" in names
-    assert "dedup_winnowing_screen" in names
-    bounds = bench.section_bounds(len(names), bench.BENCH_SECTIONS)
-    reassembled = [n for lo, hi in bounds for n in names[lo:hi]]
-    assert reassembled == names
-
-
-def test_bench_artifact_charges_cover_every_memo_kind():
-    """The bench cost policy is one table, ``bench.ARTIFACT_CHARGES``: each
-    charged query is in the basket, each charged kind is a memo kind, and
-    each memo kind is charged to at least one query — so a new artifact
-    cannot silently ride warm into its first consumer's number. The table
-    reproduces the per-query clears it replaced exactly."""
-    import ast
-    import pathlib
-
-    import bench
-    import kafka_streams_rosetta_demo_spark as pkg
-
-    # memo kinds = the literal first argument of every _memo(...) call
-    kinds = set()
-    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Name)
-                and node.func.id == "_memo"
-            ):
-                kind = node.args[0]
-                assert isinstance(kind, ast.Constant), (path, node.lineno)
-                kinds.add(kind.value)
-    assert len(kinds) == 13, sorted(kinds)
-
-    names, _fns = bench.resolve_basket()
-    charges = bench.ARTIFACT_CHARGES
-    assert set(charges) <= set(names), set(charges) - set(names)
-    charged = {k for ks in charges.values() for k in ks}
-    assert charged <= kinds, charged - kinds
-    assert kinds <= charged, kinds - charged
-
-    shingles = {
-        "shingled_documents",
-        "ordered_shingles",
-        "minhash_signatures",
-        "jaccard_pairs_075",
-    }
-    assert {q: set(ks) for q, ks in charges.items()} == {
-        "dedup_minhash_lsh": shingles,
-        "dedup_ngram_jaccard": shingles,
-        "dedup_winnowing": {"winnowing_index"},
-        "text_bpe_train": {"bpe_merges", "bpe_word_tokens", "bpe_word_token_lists"},
-        "text_bpe_vocab_ids": {"bpe_word_token_lists"},
-        "text_unigram_fertility": {"unigram_word_tokens"},
-        "streaming_boilerplate_screen": {"boilerplate_index"},
-        "streaming_ann_screen": {"ann_band_index", "ann_corpus_vectors"},
-        "dedup_cluster_cc": {"cc_labels"},
-    }
-
-
 def test_streaming_winnowing_screen_equals_batch_twin(spark, sf_smoke):
     """The continuous ingest screen must compute the identical gate as the
     batch screen — same verdict per doc, full batch coverage (the oracle
@@ -327,52 +240,3 @@ def test_streaming_winnowing_screen_equals_batch_twin(spark, sf_smoke):
         stream.exceptAll(batch).count() == 0
         and batch.exceptAll(stream).count() == 0
     )
-
-
-def test_bench_parent_falls_back_inline_when_spawn_fails(monkeypatch, tmp_path, capsys):
-    """If section subprocesses cannot spawn (restricted environments), the
-    parent must run each section inline and still honor the one-JSON-line
-    driver contract — isolation degrades, the bench never breaks. Simulated
-    by pointing bench.__file__ at a nonexistent path (spawn raises) and
-    stubbing the section runner; BENCH_LOCAL lands in tmp, not the repo."""
-    import json as _json
-
-    import bench
-
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    monkeypatch.setattr(bench, "BENCH_SECTIONS", 2)
-    monkeypatch.setattr(
-        bench,
-        "run_section",
-        lambda s: (
-            {"timings": {"rosetta_enriched": 1.5}, "rep_times": {"rosetta_enriched": [1.6, 1.5, 1.4]}}
-            if s == 0
-            else {"timings": {"dedup_exact": 0.5}, "rep_times": {"dedup_exact": [0.5, 0.5, 0.6]}}
-        ),
-    )
-    bench.main()
-    err = capsys.readouterr()
-    out_lines = [l for l in err.out.strip().splitlines() if l.startswith("{")]
-    # stdout's FINAL line is the slim contract line (round 14: the driver
-    # keeps only the last ~2000 chars of stdout, so the line that ends
-    # stdout must fit the capture window whole). Its `queries` dict carries
-    # SLIM_QUERIES ∩ timings — the union of every name a driver round ever
-    # parsed from this line (r01–r04) plus the headline set, so nothing a
-    # parsed driver artifact ever held disappears from the parsed stream;
-    # dedup_exact is in that union, rosetta_enriched in the headline set.
-    d = _json.loads(out_lines[-1])
-    assert d["queries"] == {"rosetta_enriched": 1.5, "dedup_exact": 0.5}
-    assert d["value"] == 1.5  # headline sum counts only headline names
-    assert d["extended_total"] == 2.0
-    assert d["n_queries"] == 2
-    assert d["full"] == "BENCH_LOCAL.json"
-    assert len(_json.dumps(d)) < 2000  # must fit the driver capture window
-    assert "running inline" in err.err
-    # the FULL artifact (every query + per-rep times) lands in BENCH_LOCAL
-    full = _json.loads((tmp_path / "BENCH_LOCAL.json").read_text())
-    assert full["queries"] == {"rosetta_enriched": 1.5, "dedup_exact": 0.5}
-    assert full["query_reps"] == {
-        "rosetta_enriched": [1.6, 1.5, 1.4],
-        "dedup_exact": [0.5, 0.5, 0.6],
-    }
-    assert full["extended_total"] == 2.0

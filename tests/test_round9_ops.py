@@ -156,16 +156,6 @@ def test_scalar_quant_eval_shape_and_bounds(spark, sf_smoke):
     assert (err <= step / 2 + 1e-12).all()
 
 
-def test_artifact_budget_size_parser():
-    from kafka_streams_rosetta_demo_spark.queries.artifacts import _parse_size
-
-    assert _parse_size("256m") == 256 << 20
-    assert _parse_size("2g") == 2 << 30
-    assert _parse_size("1536K") == 1536 << 10
-    assert _parse_size("12345") == 12345
-    assert _parse_size("1gb") == 1 << 30
-
-
 @pytest.mark.slow  # full-suite lane: r15 fast lane must fit the driver's verify window
 def test_windowed_agg_state_evicts_on_watermark_measured(spark, tmp_path):
     """streaming_calls_window_agg's exact transform (1 h tumbling update-mode

@@ -314,3 +314,63 @@ def test_stored_profile_routes_salted_without_probe_scan(spark):
         got = sorted(map(tuple, routed.collect()))
         want = sorted(map(tuple, left.join(right, "k").collect()))
         assert got == want
+
+
+# ---------------------------------------------------------------------------
+# broadcast threshold: Spark's own parse, and a disabled broadcast stays off
+# ---------------------------------------------------------------------------
+
+
+def test_broadcast_threshold_parses_sign_and_units(spark):
+    """choose_join_strategy compares Catalyst's estimate with the threshold
+    Spark has already parsed (sign kept, binary units) — the cases a hand
+    parser once got wrong: ``-1`` read as 1 byte, ``10m`` as 10 bytes."""
+    from kafka_streams_rosetta_demo_spark.operators.joins import (
+        KeySkewProfile,
+        choose_join_strategy,
+        estimated_size_bytes,
+    )
+
+    dim = spark.range(10)
+    est = estimated_size_bytes(dim)
+    assert 64 < est < 10 * 1024  # "64b" must refuse it, "512k" admit it
+    left = spark.range(100).select(F.col("id").alias("k"))
+    stored = KeySkewProfile(n_rows=100, n_keys=100, hhi=100, top1_share_ppm=10_000)
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    for raw, want in [
+        ("10485760", 10 * 1024 * 1024),
+        ("-1", -1),
+        ("0", 0),
+        ("10m", 10 * 1024 * 1024),
+        ("10MB", 10 * 1024 * 1024),
+        ("1g", 1024**3),
+        ("512k", 512 * 1024),
+        ("64b", 64),
+    ]:
+        with _confs(spark, {"spark.sql.autoBroadcastJoinThreshold": raw}):
+            assert sql_conf.autoBroadcastJoinThreshold() == want, raw
+            strat, _ = choose_join_strategy(left, dim, "id", profile=stored)
+            assert (strat == "broadcast") == (0 < want and est <= want), raw
+
+
+def test_disabled_broadcast_is_honored_even_for_empty_dim(spark):
+    """`-1` means the user disabled broadcasting; a stat-less/empty dimension
+    (sizeInBytes ~ 1) must NOT get a broadcast, neither a hint nor a
+    planned broadcast join."""
+    from kafka_streams_rosetta_demo_spark.operators.joins import (
+        choose_join_strategy,
+        stream_table_left_join,
+    )
+
+    left = spark.range(100).select(
+        F.col("id").cast("string").alias("k"), F.col("id").alias("v")
+    )
+    empty_dim = spark.range(0).select(
+        F.col("id").cast("string").alias("dk"), F.col("id").alias("dv")
+    )
+    with _confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        qe = stream_table_left_join(left, empty_dim, "k", "dk")._jdf.queryExecution()
+        for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+            assert "broadcast" not in plan.lower()
+        strat, _ = choose_join_strategy(left, empty_dim, "k")
+        assert strat != "broadcast"

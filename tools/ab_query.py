@@ -4,15 +4,18 @@ one environment variable.
 Usage:
     python tools/ab_query.py <ENV_VAR> <a> <b> <rounds> <sf_dir> <query> [query ...]
 
-Per query, runs 2*rounds fresh subprocesses alternating ENV_VAR=a (leg A)
-and ENV_VAR=b (leg B); each subprocess builds its own session (bench
-construction: local[$SPARK_GRAFT_CPUS]), warms the scan path, then times the
-query through the noop sink. Interleaving A/B/A/B on the same host is the
-only trustworthy comparison on a host whose shared disk has I/O storms
-(OPTIMIZATION_r14.md method note). Each round prints one leg pair; each
-query prints its leg medians; one JSON line with every leg time, both
-medians, ``ratio`` = median B / median A and the paired per-round B/A
-ratios closes the run.
+Per query, runs 2*rounds legs alternating ENV_VAR=a (leg A) and ENV_VAR=b
+(leg B). Each leg is one ``bench.py --queries <query>`` child
+(``bench.run_child``) with ENV_VAR and ``SPARK_GRAFT_SF_DIR=<sf_dir>`` set:
+a fresh session (local[$SPARK_GRAFT_CPUS]), bench's untimed warm-up, then
+bench's rep policy through the noop sink — ``$SPARK_GRAFT_BENCH_REPS``
+reps (default 3), per-rep times on stderr, the median as the leg's time.
+A leg that times out is reaped with its JVM. Interleaving A/B/A/B on the
+same host is the only trustworthy comparison on a host whose shared disk
+has I/O storms (OPTIMIZATION_r14.md method note). Each round prints one
+leg pair; each query prints its leg medians; one JSON line with every leg
+time, both medians, ``ratio`` = median B / median A and the paired
+per-round B/A ratios closes the run.
 
 Core scaling, 8 vs 32 cores on the ten heavy queries (master local[N] AND
 shuffle partitions follow SPARK_GRAFT_CPUS, as in bench.py's scaling
@@ -37,48 +40,19 @@ from __future__ import annotations
 import json
 import os
 import statistics
-import subprocess
 import sys
 
-CHILD = r"""
-import json, sys, time
-query, sf_dir = sys.argv[1], sys.argv[2]
-from kafka_streams_rosetta_demo_spark.session import get_spark
-from kafka_streams_rosetta_demo_spark.queries import load_all
-spark = get_spark(app_name=f"ab-{query}")
-spark.sparkContext.setLogLevel("ERROR")
-# scan-path warmup (untimed), same spirit as bench.py
-from kafka_streams_rosetta_demo_spark.sources.parquet import load_table
-for t in ("events", "documents", "embeddings", "orders", "lineitem", "customer"):
-    try:
-        load_table(spark, sf_dir, t).count()
-    except Exception:
-        pass
-q = load_all()[query]
-spark.sparkContext.setJobDescription(f"ab:{query}")
-t0 = time.time()
-df = q.fn(spark, sf_dir)
-df.write.format("noop").mode("overwrite").save()
-print(json.dumps({"query": query, "sec": round(time.time() - t0, 3)}))
-"""
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 
 def run_leg(query: str, env_var: str, val: str, sf_dir: str) -> float:
-    env = dict(os.environ, **{env_var: val})
-    out = subprocess.run(
-        [sys.executable, "-c", CHILD, query, sf_dir],
-        capture_output=True,
-        text=True,
-        env=env,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    )
-    for line in reversed(out.stdout.strip().splitlines()):
-        try:
-            return json.loads(line)["sec"]
-        except Exception:
-            continue
-    sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-4000:] + "\n")
-    raise RuntimeError(f"leg failed: {query} {env_var}={val}")
+    env = dict(os.environ, **{env_var: val, "SPARK_GRAFT_SF_DIR": sf_dir})
+    record = bench.run_child([query], env=env)
+    if record is None:
+        raise RuntimeError(f"leg failed: {query} {env_var}={val}")
+    return record["timings"][query]
 
 
 def main() -> None:

@@ -15,26 +15,30 @@ distort dedup/vector pair counts). Override legs with
 ``SPARK_GRAFT_SCALE_SFS=/path/a,/path/b``.
 
 Honest-cost policy: every memoized artifact cache (shingle/prefix/pair,
-CC labels) is CLEARED before each (query, sf) cell, so each cell is the
-query's full self-contained cost — the scaling signal, uncontaminated by
-cross-query reuse (bench.py measures the warm-reuse story separately).
+CC labels) is CLEARED before each rep of each (query, sf) cell, so each
+cell is the query's full self-contained cost — the scaling signal,
+uncontaminated by cross-query reuse (bench.py measures the warm-reuse story
+separately). Each leg gets bench.py's untimed warm-up once, up front, and
+each rep is bench.py's timed noop-sink run (``bench.timed_noop_run``);
+``$SPARK_GRAFT_BENCH_REPS`` reps per cell (default 3), median reported.
 
 Usage: ``python tools/scaling_curve.py`` — writes the markdown table to
-stdout (plus per-cell progress on stderr); SCALING_CURVE.md embeds the
+stdout (plus per-cell progress on stderr); SCALING.md embeds the
 result — regenerate after plan-affecting changes.
 """
 
 from __future__ import annotations
 
+import gc
 import os
-import re
 import statistics
 import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
+import bench  # noqa: E402
+
 _DEFAULT_SFS = [
     "/root/testdata/sf0.001",
     "/root/testdata/sf0.01",
@@ -42,7 +46,6 @@ _DEFAULT_SFS = [
 ]
 _SF05 = os.path.join(_REPO, ".scale_test", "sf0.5")
 _SF10 = os.path.join(_REPO, ".scale_test", "sf1.0")
-REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
 # The 10 most expensive queries of the r5 bench (BENCH_r05) — the heavy
 # basket whose growth curves carry the 100 TB argument…
@@ -93,25 +96,10 @@ REPRESENTATIVE = [
 ]
 
 
-def sf_value(d: str) -> float:
-    m = re.search(r"sf([0-9.]+)", d)
-    return float(m.group(1)) if m else -1.0
-
-
-def clear_caches() -> None:
-    from kafka_streams_rosetta_demo_spark.queries.artifacts import clear_artifacts
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        release_streaming_result_pins,
-    )
-
-    clear_artifacts()
-    release_streaming_result_pins()
-
-
 def main() -> None:
     from kafka_streams_rosetta_demo_spark.queries import load_all
+    from kafka_streams_rosetta_demo_spark.queries.artifacts import clear_artifacts
     from kafka_streams_rosetta_demo_spark.session import get_spark
-    from kafka_streams_rosetta_demo_spark.sources.parquet import load_table
 
     env_sfs = os.environ.get("SPARK_GRAFT_SCALE_SFS")
     if env_sfs:
@@ -129,7 +117,8 @@ def main() -> None:
     if env_queries:
         basket = [n for n in env_queries.split(",") if n in registry]
     spark = get_spark(app_name="rosetta-scaling")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    for sf_dir in sfs:
+        bench.warm_up(spark, sf_dir)
 
     rows = []
     for name in basket:
@@ -137,18 +126,10 @@ def main() -> None:
         per_sf: list[float] = []
         shuffles: list[int] = []
         for sf_dir in sfs:
-            for t in ("events", "customer", "orders", "lineitem", "documents",
-                      "embeddings"):
-                try:
-                    load_table(spark, sf_dir, t).count()
-                except Exception:
-                    pass
             reps = []
-            for _ in range(REPS):
-                clear_caches()
-                t0 = time.perf_counter()
-                q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                reps.append(time.perf_counter() - t0)
+            for _ in range(bench.REPS):
+                clear_artifacts()  # every kind: the cell's full own cost
+                reps.append(bench.timed_noop_run(spark, q.fn, sf_dir))
             per_sf.append(statistics.median(reps))
             try:
                 plan = (
@@ -165,11 +146,9 @@ def main() -> None:
                 shuffles.append(-1)
             # long sessions age (GC-driven ContextCleaner) — collect between
             # cells, never inside a timed region
-            import gc
-
             gc.collect()
             spark.sparkContext._jvm.System.gc()
-        data_ratio = sf_value(sfs[-1]) / sf_value(sfs[-2])
+        data_ratio = bench.sf_from_dir(sfs[-1]) / bench.sf_from_dir(sfs[-2])
         growth = per_sf[-1] / per_sf[-2] if per_sf[-2] > 0 else float("inf")
         rows.append((name, per_sf, growth, data_ratio, shuffles))
         print(
@@ -179,7 +158,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    hdr_sfs = " | ".join(f"sf{sf_value(d):g}" for d in sfs)
+    hdr_sfs = " | ".join(f"sf{bench.sf_from_dir(d):g}" for d in sfs)
     print(f"| query | {hdr_sfs} | last-leg growth (data x) | shuffles (by sf) |")
     print("|---|" + "---|" * (len(sfs) + 2))
     for name, per_sf, growth, data_ratio, shuffles in rows:
