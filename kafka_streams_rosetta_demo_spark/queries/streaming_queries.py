@@ -6,9 +6,10 @@ emission, checkpointed state — to completion with ``availableNow``, through
 :func:`~..streaming.runner.run_topology`, which owns the rest: staging the
 source (or reading the landing ``events.parquet``), ``maxFilesPerTrigger=1``
 micro-batches, the state-partition rule, the checkpoint/sink temp tree and
-the restore of every conf it sets. Append-mode queries write through the
-native parquet streaming sink; update-mode queries (``keys=``) append their
-changed rows to an executor-side parquet changelog compacted
+the restore of every conf it sets. Every query drains into the runner's
+one exactly-once sink, an executor-side parquet log with one overwritten
+``_batch_id=<id>`` directory per micro-batch: append-mode queries read the
+whole log back; update-mode queries (``keys=``) compact it
 last-write-per-key (the compacted-output-topic read). Nothing moves through
 the driver. The DuckDB oracle is the *same SQL* as the batch twin, so the
 gate proves the streaming execution path computes identical state — the
@@ -715,7 +716,7 @@ def streaming_range_join_keyless(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Emitted at pair grain (streaming aggregation after a stream-stream
     join cannot carry countDistinct; the batch twin does the rollup) in
-    append mode through the native parquet streaming sink, and
+    append mode through the runner's batch-id-keyed parquet sink, and
     hash-matched against the same naive quadratic oracle as the batch
     query — stream equals batch, again."""
     from pyspark.sql import functions as F

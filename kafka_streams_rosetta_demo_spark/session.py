@@ -65,6 +65,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Spark turns the console progress bar on for pyspark-shell launches;
+        # its carriage-return stage bars would land in front of the lines
+        # bench children and tools print on stderr
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.daemon.module", "kafka_streams_rosetta_demo_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

@@ -13,9 +13,13 @@ topology through one ``StreamsBuilder``. It owns the whole protocol:
   size (:func:`state_shuffle` documents the three rules);
 - **directories** — one temp tree holds staging, checkpoint and sink, and
   is removed at the end;
-- **sink** — update mode through :func:`run_update_query_to_df` when
-  ``keys`` is given, append mode through :func:`run_append_query_to_df`
-  otherwise; either way the result comes back pinned.
+- **sink** — one sink in both output modes,
+  :func:`idempotent_parquet_sink`: each micro-batch, after the optional
+  ``batch_fn``, overwrites its own ``_batch_id=<id>`` directory of one
+  parquet log. With ``keys`` the run is update mode
+  (:func:`run_update_query_to_df`, the log read back as the last write per
+  key); without, append mode (:func:`run_append_query_to_df`, the whole log
+  read back). Either way the result comes back pinned.
 
 Conf contract: every conf the runner sets goes through :func:`scoped_conf`,
 which restores the caller's PRIOR value on exit (or unsets the key if it was
@@ -47,9 +51,13 @@ and committed consumer offsets (``CallsAggregationApp.java:106``;
 ``N.delta`` file through the checkpoint manager, each a write-then-rename
 of a temp file — on a local path a plain POSIX rename, with no ``readlink``
 fork. Restarting a query on the same checkpoint resumes from committed
-progress and reprocesses nothing, which is exactly the at-least-once
-contract (T5) the reference runs under. Every run here is
-``trigger(availableNow=True)`` over a file source, so no broker is needed.
+progress and reprocesses nothing. Delivery is at-least-once, the contract
+(T5) the reference runs under: a batch whose sink write landed but whose
+``commits/N`` did not is rerun on restart under the same id. It recomputes
+the same rows into the same ``_batch_id=N`` directory, which the overwrite
+replaces, so the sink log holds every batch once in both output modes.
+Every run here is ``trigger(availableNow=True)`` over a file source, so no
+broker is needed.
 """
 
 from __future__ import annotations
@@ -62,7 +70,8 @@ from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 from urllib.parse import urlsplit
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
@@ -329,10 +338,8 @@ def run_topology(
     int key bound, ``"backlog"`` (the bytes the stream will read — only the
     matched files of a landing path), or None for the session default.
     With ``keys`` the run is update mode, compacted last-write-per-key on
-    ``keys`` after the optional per-batch ``batch_fn``; without, append
-    mode."""
-    if batch_fn is not None and keys is None:
-        raise ValueError("batch_fn needs keys: it runs in the update-mode sink")
+    ``keys``; without, append mode. The optional ``batch_fn`` runs on each
+    micro-batch in the sink, in either mode."""
     with checkpoint_tmpdir("topology_") as tree:
         if isinstance(source, str):
             files = [
@@ -370,62 +377,33 @@ def run_topology(
             scope = bounded_state_shuffle(spark, state)
         ckpt, sink = os.path.join(tree, "checkpoint"), os.path.join(tree, "sink")
         with scope:
-            if keys is None:
-                return run_append_query_to_df(result, ckpt, sink)
-            return run_update_query_to_df(result, keys, ckpt, sink, batch_fn=batch_fn)
+            return _run_to_log(result, keys, ckpt, sink, batch_fn)
 
 
-def run_update_query_to_parquet_changelog(
-    result: DataFrame,
-    checkpoint_dir: str,
-    out_dir: str,
-    batch_fn: Callable[[DataFrame], DataFrame] | None = None,
-) -> None:
-    """The production-shaped update-mode sink: each micro-batch appends its
-    changed aggregate rows to a parquet changelog (stamped with the batch
-    id) — entirely executor-side, nothing moves driver-ward, so it scales to
-    billions of keys. The changelog is the lakehouse analogue of the
-    compacted output topic; read it back with
-    :func:`parquet_changelog_snapshot` for last-write-wins state (update
-    mode re-emits a key whenever it changes, so last write per key is the
-    compacted-topic read a downstream ``builder.table`` would see).
-
-    ``batch_fn`` lets a per-batch transform (e.g. the broadcast enrichment
-    join — the reference's stream–table leftJoin run inside
-    ``foreachBatch``) execute on the executors before the append.
-    """
-    from pyspark.sql import functions as F
+def idempotent_parquet_sink(
+    out_dir: str, batch_fn: Callable[[DataFrame], DataFrame] | None = None
+) -> Callable[[DataFrame, int], None]:
+    """The runner's one sink: a ``foreachBatch`` writer that applies
+    ``batch_fn`` (e.g. the broadcast enrichment join — the reference's
+    stream–table leftJoin) and lands the micro-batch in its own
+    ``out_dir/_batch_id=<id>`` directory with ``mode("overwrite")``, entirely
+    executor-side. Structured Streaming calls ``foreachBatch`` with the SAME
+    batch id when a batch is redelivered (failure after the sink write but
+    before the checkpoint commit), so the retry OVERWRITES its own directory
+    instead of appending a duplicate: at-least-once delivery plus a
+    batch-id-keyed write is exactly-once output, the pattern the Structured
+    Streaming guide prescribes for non-transactional sinks. Read the log back
+    with ``spark.read.parquet(out_dir)``: partition discovery keeps the
+    ``_``-prefixed directories because their names contain ``=`` and exposes
+    ``_batch_id``, a name no output column uses. Redelivery is pinned in
+    tests/test_streaming.py (the naive append sink provably duplicates under
+    the same forced replay)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_fn(batch_df) if batch_fn is not None else batch_df
-        (
-            out.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        out = batch_df if batch_fn is None else batch_fn(batch_df)
+        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"_batch_id={batch_id}"))
 
-    writer = result.writeStream.outputMode("update").foreachBatch(sink)
-    _drain(result.sparkSession, writer, checkpoint_dir)
-
-
-def parquet_changelog_snapshot(
-    spark: SparkSession, out_dir: str, key_cols: list[str]
-) -> DataFrame:
-    """Compact a parquet changelog to its final state: last write per key,
-    where "last" is the highest micro-batch id (update mode emits a key at
-    most once per batch, so batch id is a total order per key). One window
-    over the (small, key-cardinality-bounded) changelog — the same read a
-    downstream ``builder.table`` does over a compacted topic."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    log = spark.read.parquet(out_dir)
-    w = Window.partitionBy(*key_cols).orderBy(F.col("_batch_id").desc())
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_batch_id", "_rn")
-    )
+    return sink
 
 
 def run_update_query_to_df(
@@ -435,109 +413,12 @@ def run_update_query_to_df(
     out_dir: str,
     batch_fn: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Update-mode run through the production sink shape, end to end: the
-    executor-side parquet changelog (:func:`run_update_query_to_parquet_changelog`)
-    followed by the last-write-per-key compaction
-    (:func:`parquet_changelog_snapshot`). Nothing moves through the driver —
-    no ``collect``, no ``toPandas`` — so the path holds at any key
-    cardinality.
-
-    LOCAL-MODE ADAPTER NOTE (same contract as :func:`run_append_query_to_df`):
-    the returned snapshot pins to executor memory with an eager
-    ``localCheckpoint`` so the caller may delete ``out_dir`` (the runner
-    sinks into a temporary directory). ``localCheckpoint`` blocks are
-    not fault-tolerant — on a multi-executor cluster an executor loss after
-    the source files are gone truncates lineage unrecoverably. In production
-    the read-back never happens (downstream consumers read the changelog /
-    compacted topic directly), so keep the sink directory when running
-    beyond local mode.
-    """
-    run_update_query_to_parquet_changelog(
-        result, checkpoint_dir, out_dir, batch_fn=batch_fn
-    )
-    spark = result.sparkSession
-    if not _changelog_has_files(out_dir):
-        # schema of the post-batch_fn frame, derived without running a batch:
-        # batch_fn is pure DataFrame composition, so applying it to an empty
-        # frame of the pre-sink schema yields the sink schema
-        schema = (
-            result.schema
-            if batch_fn is None
-            else batch_fn(spark.createDataFrame([], result.schema)).schema
-        )
-        return spark.createDataFrame([], schema)
-    snap = parquet_changelog_snapshot(spark, out_dir, key_cols)
-    return _pin_result(snap, spark, "streaming update-mode snapshot")
-
-
-def _changelog_has_files(out_dir: str) -> bool:
-    """Emptiness probe for the plain-append changelog sink (which has no
-    ``_spark_metadata`` commit log — writes happen through the batch writer
-    inside ``foreachBatch``, committed by the streaming checkpoint)."""
-    return os.path.isdir(out_dir) and any(
-        n.endswith(".parquet") for n in os.listdir(out_dir)
-    )
-
-
-def _file_sink_has_commits(out_dir: str) -> bool:
-    """Emptiness probe for the NATIVE parquet streaming sink: consult the
-    sink's own ``_spark_metadata`` commit log (the source of truth for what
-    the sink has committed — a directory listing would also see orphaned
-    files from failed tasks, and misses nothing the log has). Each commit
-    file is a ``v1`` header followed by one JSON ``SinkFileStatus`` per
-    written file; any ``add`` action means the sink holds data."""
-    import json
-
-    meta = os.path.join(out_dir, "_spark_metadata")
-    if not os.path.isdir(meta):
-        return False
-    for name in os.listdir(meta):
-        if name.startswith(".") or name.endswith((".tmp", ".crc")):
-            continue
-        path = os.path.join(meta, name)
-        if not os.path.isfile(path):
-            continue
-        try:
-            with open(path, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line or line.startswith("v"):
-                        continue
-                    try:
-                        rec = json.loads(line)
-                    except ValueError:
-                        continue
-                    if rec.get("action", "add") == "add":
-                        return True
-        except OSError:
-            continue
-    return False
-
-
-def idempotent_parquet_sink(out_dir: str) -> Callable[[DataFrame, int], None]:
-    """The EXACTLY-ONCE OUTPUT upgrade over the at-least-once contract (T5):
-    a ``foreachBatch`` writer that lands each micro-batch in its own
-    ``batch_id=<id>`` directory with ``mode("overwrite")``. Structured
-    Streaming guarantees ``foreachBatch`` is called with the SAME batch_id
-    when a batch is redelivered (failure after the sink write but before
-    the checkpoint commit), so the retry OVERWRITES its own partition
-    instead of appending a duplicate — at-least-once delivery + an
-    idempotent, batchId-keyed write = exactly-once output, the pattern the
-    Structured Streaming programming guide prescribes for
-    non-transactional sinks. The write is the ordinary executor-side batch
-    parquet writer; nothing moves through the driver. Read the sink back
-    as one dataset with ``spark.read.parquet(out_dir)`` (partition
-    discovery exposes ``batch_id``). Redelivery pinned in
-    tests/test_streaming.py::test_idempotent_sink_survives_batch_redelivery
-    (the naive append sink provably duplicates under the same forced
-    replay)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    return sink
+    """Update-mode run: drain into the sink log, then read it back as the
+    last write per key. Update mode emits a key at most once per batch, so
+    the batch id totally orders a key's writes; the compaction is the read a
+    downstream ``builder.table`` does over a compacted topic, one window over
+    the key-cardinality-bounded log."""
+    return _run_to_log(result, key_cols, checkpoint_dir, out_dir, batch_fn)
 
 
 def run_append_query_to_df(
@@ -545,35 +426,60 @@ def run_append_query_to_df(
     checkpoint_dir: str,
     out_dir: str,
 ) -> DataFrame:
-    """Append-mode run through the PRODUCTION sink shape: the native
-    parquet streaming sink writes each micro-batch's finalized rows
-    entirely executor-side (no foreachBatch, no driver collect, no Python
-    row round-trip — the lakehouse analogue of a Kafka producer). Under
-    append mode a (key, window) row is emitted at most once across the
+    """Append-mode run: drain into the sink log, then read all of it back.
+    Under append mode a (key, window) row is emitted at most once across the
     checkpoint's lifetime — the suppress/final-emission contract — so there
-    is no compaction to do. The result reads back and pins to executor
-    memory with an eager ``localCheckpoint`` so the caller may delete
-    ``out_dir`` immediately. At scale the read-back never happens —
-    downstream consumers read the sink directly; here it turns the finished
-    stream into the query's return value.
+    is no compaction to do."""
+    return _run_to_log(result, None, checkpoint_dir, out_dir)
 
-    LOCAL-MODE ADAPTER NOTE: ``localCheckpoint`` blocks live in executor
-    memory and are NOT fault-tolerant — on a multi-executor cluster, losing
-    an executor after the caller deletes ``out_dir`` truncates lineage
-    unrecoverably. Fine for the local gate (one JVM, no executor loss
-    mode); beyond local mode, keep the sink directory and read it lazily,
-    or ``persist``+materialize to a durable store before deleting. The
-    emptiness probe consults the sink's ``_spark_metadata`` commit log —
-    the sink's source of truth — not a directory listing."""
+
+def _run_to_log(
+    result: DataFrame,
+    key_cols: list[str] | None,
+    checkpoint_dir: str,
+    out_dir: str,
+    batch_fn: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Drain ``result`` through :func:`idempotent_parquet_sink` — update mode
+    with ``key_cols``, append mode without — and return the log, pinned:
+    compacted last-write-per-key on ``key_cols``, or whole. Nothing moves
+    through the driver — no ``collect``, no ``toPandas`` — so the path holds
+    at any cardinality.
+
+    LOCAL-MODE ADAPTER NOTE: the pin is an eager ``localCheckpoint`` (or its
+    DISK_ONLY degradation) so the caller may delete ``out_dir`` (the runner
+    sinks into a temporary directory). ``localCheckpoint`` blocks are not
+    fault-tolerant — on a multi-executor cluster an executor loss after the
+    sink is gone truncates lineage unrecoverably. In production the
+    read-back never happens (downstream consumers read the log directly), so
+    keep the sink directory when running beyond local mode."""
     spark = result.sparkSession
-    writer = (
-        result.writeStream.outputMode("append").format("parquet").option("path", out_dir)
-    )
-    _drain(spark, writer, checkpoint_dir)
-    if not _file_sink_has_commits(out_dir):
-        return spark.createDataFrame([], result.schema)
-    return _pin_result(
-        spark.read.schema(result.schema).parquet(out_dir),
-        spark,
-        "streaming append-mode sink read-back",
-    )
+    mode = "append" if key_cols is None else "update"
+    written: list[T.StructType] = []
+
+    def shape(batch: DataFrame) -> DataFrame:
+        out = batch if batch_fn is None else batch_fn(batch)
+        if not written:  # every batch has the same schema
+            written.append(out.schema)
+        return out
+
+    sink = idempotent_parquet_sink(out_dir, shape)
+    _drain(spark, result.writeStream.outputMode(mode).foreachBatch(sink), checkpoint_dir)
+    # The log's schema, named so the read starts no footer-inference job. If
+    # no batch ran in this drain (an empty stream, or a restart with nothing
+    # new), derive it: batch_fn is pure DataFrame composition, so applying it
+    # to an empty frame of the pre-sink schema yields the sink schema.
+    schema = written[0] if written else result.schema
+    if not written and batch_fn is not None:
+        schema = batch_fn(spark.createDataFrame([], schema)).schema
+    batches = os.listdir(out_dir) if os.path.isdir(out_dir) else []
+    if not any(n.startswith("_batch_id=") for n in batches):
+        return spark.createDataFrame([], schema)
+    log = spark.read.schema(schema).parquet(out_dir)
+    if key_cols is None:
+        out = log.drop("_batch_id")
+    else:
+        w = Window.partitionBy(*key_cols).orderBy(F.col("_batch_id").desc())
+        out = log.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
+        out = out.drop("_batch_id", "_rn")
+    return _pin_result(out, spark, f"streaming {mode}-mode sink log")

@@ -31,9 +31,9 @@ from kafka_streams_rosetta_demo_spark.streaming.kafka_io import (
 )
 from kafka_streams_rosetta_demo_spark.streaming.runner import (
     file_stream,
-    parquet_changelog_snapshot,
+    idempotent_parquet_sink,
     run_append_query_to_df,
-    run_update_query_to_parquet_changelog,
+    run_update_query_to_df,
 )
 from kafka_streams_rosetta_demo_spark.streaming.transforms import (
     streaming_latest_per_key,
@@ -49,6 +49,9 @@ FS_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+# The keys of streaming_windowed_call_agg's update-mode output.
+CALL_AGG_KEYS = ["id_telef_origen", "window_start"]
 
 
 def test_events_schema_cache_invalidates_on_rewrite(spark, tmp_path):
@@ -100,13 +103,10 @@ def _stream(spark, path, **kw):
 
 
 def _changelog_state(result, keys, tmp_path, ckpt=None):
-    """Run an update-mode topology through the parquet changelog sink and
-    return its last-write-per-key snapshot (the compacted-topic read)."""
+    """Run an update-mode topology through the runner's sink log and return
+    its last-write-per-key snapshot (the compacted-topic read)."""
     out_dir = str(tmp_path / "changelog")
-    run_update_query_to_parquet_changelog(
-        result, ckpt or str(tmp_path / "ckpt"), out_dir
-    )
-    return parquet_changelog_snapshot(result.sparkSession, out_dir, keys)
+    return run_update_query_to_df(result, keys, ckpt or str(tmp_path / "ckpt"), out_dir)
 
 
 def _changelog_rows(spark, out_dir):
@@ -115,29 +115,42 @@ def _changelog_rows(spark, out_dir):
     return spark.read.parquet(out_dir).count() if os.path.isdir(out_dir) else 0
 
 
+def _sink_files(out_dir):
+    """Every file under the sink log. A rewrite changes the listing even
+    when it writes the same rows: each write names its part files with a
+    fresh UUID, and the overwrite of a ``_batch_id=<id>`` directory removes
+    the old ones."""
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, n), out_dir)
+        for d, _, names in os.walk(out_dir)
+        for n in names
+    )
+
+
 def test_multibatch_windowed_agg_converges_to_batch(spark, split_events_dir, tmp_path):
     calls = events_to_calls(_stream(spark, split_events_dir, max_files_per_trigger=1))
     agg = streaming_windowed_call_agg(calls)
-    got = _changelog_state(agg, ["id_telef_origen", "window_start"], tmp_path)
+    got = _changelog_state(agg, CALL_AGG_KEYS, tmp_path)
 
     batch_calls = events_to_calls(spark.read.parquet(split_events_dir))
     expected = unwrap_window(windowed_call_agg(batch_calls))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
 
 
+def _runner_changelog_run(result, ckpt, out_dir, batch_fn):
+    """The runner's update-mode run (FileSystem checkpoint manager)."""
+    run_update_query_to_df(result, CALL_AGG_KEYS, ckpt, out_dir, batch_fn=batch_fn)
+
+
 def _raw_changelog_run(result, ckpt, out_dir, batch_fn):
-    """The runner's changelog sink started by a bare ``writeStream…start()``,
-    so the session's checkpoint manager (Spark's default here) writes the
+    """The runner's sink started by a bare ``writeStream…start()``, so the
+    session's checkpoint manager (Spark's default here) writes the
     checkpoint."""
-
-    def sink(batch_df, batch_id):
-        batch_fn(batch_df).withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
     (
         result.writeStream.outputMode("update")
-        .foreachBatch(sink)
+        .foreachBatch(idempotent_parquet_sink(out_dir, batch_fn))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
@@ -154,43 +167,40 @@ def test_parquet_changelog_sink_restart_replays_nothing(
     spark, split_events_dir, tmp_path, first_leg, restart_leg
 ):
     """T5/T6 for the lakehouse sink: restarting the finished query on the
-    same checkpoint must append NOTHING to the changelog (offsets are
-    committed; availableNow finds no new files) — the exactly-once-per-batch
-    contract that makes the parquet changelog safe to re-run. The mixed legs
+    same checkpoint must run no batch and write NOTHING to the sink log
+    (offsets are committed; availableNow finds no new files) — the
+    exactly-once-per-batch contract that makes the log safe to re-run. A
+    batch rerun would rewrite its ``_batch_id`` directory with the same
+    rows, so the pin is the file listing, not the row count. The mixed legs
     pin checkpoint compatibility across managers: the runner (FileSystem
     manager) restarts on a checkpoint Spark's default FileContext manager
     wrote, and the default manager restarts on the runner's. Each batch
-    records the manager conf its stream ran under."""
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        run_update_query_to_parquet_changelog,
-    )
-
+    stamps its rows with the manager conf its stream ran under. Both legs
+    write through the same sink; they differ only in the checkpoint
+    manager."""
     assert spark.conf.get(MANAGER_KEY, None) is None  # raw legs run on Spark's default
-    legs = {"runner": run_update_query_to_parquet_changelog, "raw": _raw_changelog_run}
-    expected = {"runner": FS_MANAGER, "raw": None}
+    legs = {"runner": _runner_changelog_run, "raw": _raw_changelog_run}
+    expected = {"runner": FS_MANAGER, "raw": "default"}
 
     def topology():
         calls = events_to_calls(_stream(spark, split_events_dir, max_files_per_trigger=1))
         return streaming_windowed_call_agg(calls)
 
-    def run(leg):
-        seen = []
-
-        def note_manager(batch):
-            seen.append(spark.conf.get(MANAGER_KEY, None))
-            return batch
-
-        legs[leg](topology(), ckpt, out_dir, batch_fn=note_manager)
-        assert set(seen) <= {expected[leg]}
-        return seen
+    def stamp_manager(batch):
+        return batch.withColumn(
+            "manager", F.lit(spark.conf.get(MANAGER_KEY, None) or "default")
+        )
 
     out_dir = str(tmp_path / "changelog")
     ckpt = str(tmp_path / "ckpt")
-    assert run(first_leg)
-    first = spark.read.parquet(out_dir).count()
-    assert first > 0
-    run(restart_leg)  # restart
-    assert spark.read.parquet(out_dir).count() == first
+    legs[first_leg](topology(), ckpt, out_dir, batch_fn=stamp_manager)
+    log = spark.read.parquet(out_dir)
+    assert {r.manager for r in log.select("manager").distinct().collect()} == {
+        expected[first_leg]
+    }
+    files = _sink_files(out_dir)
+    legs[restart_leg](topology(), ckpt, out_dir, batch_fn=stamp_manager)  # restart
+    assert _sink_files(out_dir) == files
     assert spark.conf.get(MANAGER_KEY, None) is None
 
 
@@ -201,10 +211,6 @@ def test_idempotent_sink_survives_batch_redelivery(spark, split_events_dir, tmp_
     while the naive append sink, under the IDENTICAL forced replay,
     provably duplicates the redelivered batch (so the scenario really did
     redeliver; the exactly-once result is earned, not vacuous)."""
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        idempotent_parquet_sink,
-    )
-
     def run_with_post_write_crash(sink_fn, ckpt):
         armed = {"on": True}
 
@@ -253,6 +259,39 @@ def test_idempotent_sink_survives_batch_redelivery(spark, split_events_dir, tmp_
     )
     naive = spark.read.parquet(naive_dir).count()
     assert naive > len(expected)  # the replay really happened
+
+
+@pytest.mark.parametrize("mode", ["update", "append"])
+def test_runner_sink_survives_batch_redelivery(spark, split_events_dir, tmp_path, mode):
+    """T5 through the runner in both output modes: delete the checkpoint's
+    last ``commits/N`` (and its ``.crc``) — a crash after the sink write and
+    before the commit — and rerun on the same checkpoint. Batch N is
+    redelivered under the same id (its commit is written again), and the
+    sink log must not gain a row. No watermark, so the last batch carries
+    data rather than being a no-data watermark batch."""
+    import os
+
+    ckpt, out_dir = str(tmp_path / "ckpt"), str(tmp_path / "sink")
+
+    def run():
+        stream = _stream(spark, split_events_dir, max_files_per_trigger=1)
+        if mode == "update":
+            counts = stream.groupBy("user_id").count()
+            return run_update_query_to_df(counts, ["user_id"], ckpt, out_dir)
+        return run_append_query_to_df(stream.select("event_id", "user_id"), ckpt, out_dir)
+
+    first = sorted(map(tuple, run().collect()))
+    logged = spark.read.parquet(out_dir).count()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert last == 2  # one batch per staged file
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+
+    again = sorted(map(tuple, run().collect()))
+    assert os.path.exists(os.path.join(commits, str(last)))  # batch N ran again
+    assert spark.read.parquet(out_dir).count() == logged
+    assert again == first
 
 
 def test_multibatch_latest_per_key_converges_to_batch(spark, split_events_dir, tmp_path):
@@ -360,22 +399,22 @@ def test_watermark_drops_rows_later_than_grace(spark, tmp_path):
         agg = streaming_windowed_call_agg(
             file_stream(spark, str(src), schema), watermark="1 hour"
         )
-        run_update_query_to_parquet_changelog(agg, ckpt, out_dir)
-        return _changelog_rows(spark, out_dir)
+        state = run_update_query_to_df(agg, CALL_AGG_KEYS, ckpt, out_dir)
+        return state, _changelog_rows(spark, out_dir)
 
     # run 1: key A fills hours 0..10 → committed watermark 09:30
     _write_flat(rows([("A", h, 1) for h in range(11)]), tmp_path, src, "0")
-    first = run()
-    state = parquet_changelog_snapshot(
-        spark, out_dir, ["id_telef_origen", "window_start"]
-    )
+    state, first = run()
     assert state.count() == 11
+    settled = sorted(map(tuple, state.collect()))
 
     # run 2: a row back at hour 2 — older than the committed watermark minus
     # the 1h grace → dropped; no update is emitted for its window, so the
-    # changelog gains no rows
+    # changelog gains no rows and the compacted state is unchanged
     _write_flat(rows([("A", 2, 99)]), tmp_path, src, "1")
-    assert run() == first
+    state, again = run()
+    assert again == first
+    assert sorted(map(tuple, state.collect())) == settled
 
 
 # ---------------------------------------------------------------------------
@@ -923,13 +962,13 @@ def test_multibatch_cms_sketch_converges_to_batch(spark, split_events_dir, tmp_p
     got = {k: row.c for k, row in state.items()}
     assert got == expected
 
-    # Restart on the same checkpoint: offsets are committed, so NO updates
-    # re-emit and the changelog gains no rows (at-least-once with no
-    # duplicate processing — the same pin as
+    # Restart on the same checkpoint: offsets are committed, so NO batch
+    # reruns and the sink log is untouched (at-least-once with no duplicate
+    # processing — the same pin as
     # test_parquet_changelog_sink_restart_replays_nothing).
-    first = _changelog_rows(spark, out_dir)
-    run_update_query_to_parquet_changelog(topology(), ckpt, out_dir)
-    assert _changelog_rows(spark, out_dir) == first
+    files = _sink_files(out_dir)
+    run_update_query_to_df(topology(), ["d", "bucket"], ckpt, out_dir)
+    assert _sink_files(out_dir) == files
 
 
 def test_multibatch_integer_stateful_totals_exact(spark, split_events_dir, tmp_path):
@@ -1073,10 +1112,6 @@ def test_streaming_psi_histogram_accumulates_across_batches(
         _PSI_SPLIT,
         _PSI_WIDTH,
     )
-    from kafka_streams_rosetta_demo_spark.streaming.runner import (
-        parquet_changelog_snapshot,
-        run_update_query_to_parquet_changelog,
-    )
 
     def binned(df):
         return df.select(
@@ -1094,10 +1129,9 @@ def test_streaming_psi_histogram_accumulates_across_batches(
         F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
     )
     out_dir = str(tmp_path / "psi_changelog")
-    run_update_query_to_parquet_changelog(hist, str(tmp_path / "ckpt_psi"), out_dir)
-    got = parquet_changelog_snapshot(spark, out_dir, ["bin"]).select(
-        "bin", "base_n", "curr_n"
-    )
+    got = run_update_query_to_df(
+        hist, ["bin"], str(tmp_path / "ckpt_psi"), out_dir
+    ).select("bin", "base_n", "curr_n")
 
     expected = (
         binned(spark.read.parquet(split_events_dir))
@@ -1317,7 +1351,10 @@ def test_streaming_writers_start_only_in_the_runner():
     """Static guard: the package starts a streaming query in exactly one
     place, the runner's start helper, so every stream gets the checkpoint
     manager rule and no new start site can bypass it. ``kafka_io``'s
-    ``write_stream`` returns a writer that has not been started."""
+    ``write_stream`` returns a writer that has not been started. The runner
+    has one sink: the package has one ``foreachBatch(`` site, no streaming
+    ``.format("parquet")`` writer (Spark's native file sink), and nothing
+    under ``streaming/`` reads that sink's private ``_spark_metadata`` log."""
     import inspect
     import pathlib
     import re
@@ -1325,17 +1362,31 @@ def test_streaming_writers_start_only_in_the_runner():
     import kafka_streams_rosetta_demo_spark as pkg
     from kafka_streams_rosetta_demo_spark.streaming import runner
 
-    starts = re.compile(r"\.start\(|\.toTable\(")
-    sites = [
-        (path.name, line)
-        for path in pathlib.Path(pkg.__file__).parent.rglob("*.py")
-        for line in path.read_text().splitlines()
-        if starts.search(line)
-    ]
-    assert len(sites) == 1, sites
-    name, line = sites[0]
+    files = {p: p.read_text() for p in pathlib.Path(pkg.__file__).parent.rglob("*.py")}
+
+    def sites(pattern):
+        return [
+            (path.name, line)
+            for path, text in files.items()
+            for line in text.splitlines()
+            if re.search(pattern, line)
+        ]
+
+    starts = sites(r"\.start\(|\.toTable\(")
+    assert len(starts) == 1, starts
+    name, line = starts[0]
     assert name == "runner.py"
     assert line in inspect.getsource(runner._drain).splitlines()
+
+    batches = sites(r"foreachBatch\(")
+    assert [name for name, _ in batches] == ["runner.py"], batches
+
+    # a writer chain, whitespace removed so a call split across lines matches
+    file_sink = re.compile(r"writeStream(\.\w+\([^()]*\))*\.format\([\"']parquet")
+    assert not [p.name for p, text in files.items() if file_sink.search(re.sub(r"\s", "", text))]
+    assert not [
+        p.name for p, text in files.items() if p.parent.name == "streaming" and "_spark_metadata" in text
+    ]
 
 
 def test_only_the_session_reads_the_environment():

@@ -100,7 +100,10 @@ def test_get_spark_workers_keep_zip_directories_across_tasks(spark):
     ``pyspark.daemon`` every one of them is re-read."""
     import pyarrow as pa
 
-    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == worker_daemon.__name__
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == worker_daemon.__name__
+    # and no console progress bar in front of what bench children print
+    assert conf.get("spark.ui.showConsoleProgress") == "false"
 
     def probe(batches):
         for _ in batches:
