@@ -1,13 +1,9 @@
 """Scalar function surface (SURVEY.md §2.5, F1-F5)."""
 
-from .datetime_fmt import ROSETTA_TS_FORMAT, format_epoch_ms, format_ts, window_end_from_start
-from .nulls import customer_defaults, with_defaults
+from .datetime_fmt import ROSETTA_TS_FORMAT
+from .nulls import customer_defaults
 
 __all__ = [
     "ROSETTA_TS_FORMAT",
-    "format_epoch_ms",
-    "format_ts",
-    "window_end_from_start",
     "customer_defaults",
-    "with_defaults",
 ]

@@ -10,27 +10,6 @@ pattern language for these letters; the session is pinned to UTC
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 # SimpleDateFormat pattern, CallCustomerJoiner.java:32 — identical in Spark.
 ROSETTA_TS_FORMAT = "dd/MM/yyyy HH:mm"
 
-
-def format_ts(col: Column | str, fmt: str = ROSETTA_TS_FORMAT) -> Column:
-    """F1 on a timestamp column."""
-    return F.date_format(col, fmt)
-
-
-def format_epoch_ms(col: Column | str, fmt: str = ROSETTA_TS_FORMAT) -> Column:
-    """F1 exactly as the joiner does it: epoch millis → formatted string
-    (``new SimpleDateFormat(...).format(new Date(epoch))``)."""
-    return F.date_format(F.timestamp_millis(F.col(col) if isinstance(col, str) else col), fmt)
-
-
-def window_end_from_start(col: Column | str, fmt: str = ROSETTA_TS_FORMAT) -> Column:
-    """F2: start + 1 hour, formatted (``DateUtils.addHours(new Date(epoch), 1)``,
-    ``CallCustomerJoiner.java:37-40``). With a real window struct prefer
-    ``window.end`` — Spark carries both bounds for free (SURVEY.md A4)."""
-    ts = F.timestamp_millis(F.col(col) if isinstance(col, str) else col)
-    return F.date_format(ts + F.expr("INTERVAL 1 HOUR"), fmt)

@@ -9,9 +9,6 @@ equivalent here because matched rows pass fields through untouched
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
 # (column -> default) for the CustomerAggregate enrichment fields,
 # CallCustomerJoiner.java:24-28.
 customer_defaults: dict[str, object] = {
@@ -22,13 +19,3 @@ customer_defaults: dict[str, object] = {
     "RIESGO": "Unknown",
 }
 
-
-def default_for(col: Column | str, default: object) -> Column:
-    return F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(default))
-
-
-def with_defaults(df: DataFrame, defaults: dict[str, object]) -> DataFrame:
-    out = df
-    for name, default in defaults.items():
-        out = out.withColumn(name, default_for(name, default))
-    return out

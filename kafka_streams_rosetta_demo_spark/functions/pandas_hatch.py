@@ -5,102 +5,38 @@ The reference's only user-defined code compiles away to built-in expressions
 the ``ValueJoiner`` ``CallCustomerJoiner.java:13-41`` → P4 projection), so
 nothing *needs* Python. But the engine promises the idiomatic UDF surface
 for the logic Spark's built-ins genuinely can't express — model scoring,
-tokenizers, codec hooks — and this module is that surface, in its three
-shapes:
+tokenizers, codec hooks — in its three shapes, each run by a registered
+gate query:
 
-- **scalar** (``@pandas_udf``): vectorized column → column, Arrow batches.
-- **grouped-agg** (``@pandas_udf`` over a grouped frame): series → scalar.
-- **grouped-map** (``applyInPandas``): whole group in, whole frame out.
+- **scalar** (``@pandas_udf``): vectorized column → column, Arrow batches —
+  ``wordstats`` here (``scalar_pandas_wordstats``).
+- **grouped-agg** (``@pandas_udf`` over a grouped frame): series → scalar —
+  the ``trimmed_*`` UDFs here (``agg_pandas_trimmed``).
+- **grouped-map** (``applyInPandas``): whole group in, whole frame out —
+  the per-group OLS fit of ``agg_grouped_ols`` (``queries/pipeline_queries.py``).
 
-Rules of the hatch (why these examples look the way they do):
+Rules of the hatch (why these UDFs look the way they do):
 
 - UDFs are the slow path; everything expressible with
-  ``pyspark.sql.functions`` stays JVM-side. The examples here deliberately
-  pick logic with no built-in equivalent (a Python-dict scoring model, a
-  per-group fit).
+  ``pyspark.sql.functions`` stays JVM-side.
 - Always Arrow-batched (``pandas_udf``/``applyInPandas``), never
   row-at-a-time ``udf()`` — 10-100x throughput difference.
-- Deterministic: no wall clock, no RNG, so results are engine-reproducible
-  and cacheable.
+- Deterministic and integer-exact: no wall clock, no RNG, no float sums,
+  so results are engine-reproducible and a SQL oracle hash-matches them.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-# A stand-in for "a model the JVM can't run": a vocabulary-weight dict.
-_TOKEN_WEIGHTS = {"spark": 3.0, "stream": 2.0, "batch": 2.0, "data": 1.0}
-
-# returnType as a DataType object, not a DDL string: DDL parsing needs an
+# The UDFs are defined at module level so `pd` is a resolvable global for
+# the type-hint inference (`from __future__ import annotations` stringifies
+# hints; a function-local pandas import would make them unresolvable).
+# returnType is a DataType object, not a DDL string: DDL parsing needs an
 # active SparkSession, which must not be a precondition for importing this
 # module (the driver imports the registry before building its session).
-
-
-@pandas_udf(T.DoubleType())
-def vocab_affinity(text: pd.Series) -> pd.Series:
-    """Scalar Pandas UDF: average per-token weight under a Python-side
-    model dict. Arrow ships the string batches; pandas does the split."""
-
-    def score(t: str) -> float:
-        toks = t.split()
-        if not toks:
-            return 0.0
-        return round(sum(_TOKEN_WEIGHTS.get(w, 0.0) for w in toks) / len(toks), 6)
-
-    return text.map(score)
-
-
-@pandas_udf(T.DoubleType())
-def trimmed_mean(v: pd.Series) -> float:
-    """Grouped-aggregate Pandas UDF: 10%-trimmed mean — order statistics
-    over the whole group, which built-in aggregates can't compose."""
-    n = len(v)
-    k = int(n * 0.1)
-    s = v.sort_values()
-    kept = s.iloc[k : n - k] if n - 2 * k > 0 else s
-    return float(kept.mean())
-
-
-def zscore_per_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """Grouped-map ``applyInPandas``: per-group standardization (fit a
-    per-group statistic, then transform every row with it — the
-    fit-then-apply shape of per-entity feature engineering).
-
-    Scale: one shuffle on the group key; each group must fit in one
-    executor's memory — the standard applyInPandas contract. Output keeps
-    the input row count.
-    """
-    schema = f"{group_col} long, {value_col} double, zscore double"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        mu = pdf[value_col].mean()
-        sd = pdf[value_col].std(ddof=0)
-        z = (pdf[value_col] - mu) / sd if sd > 0 else pdf[value_col] * 0.0
-        return pd.DataFrame(
-            {
-                group_col: pdf[group_col],
-                value_col: pdf[value_col],
-                "zscore": z.round(6),
-            }
-        )
-
-    return df.select(group_col, value_col).groupBy(group_col).applyInPandas(fn, schema)
-
-
-def with_vocab_affinity(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("vocab_affinity", vocab_affinity(F.col(text_col)))
-
-
-# ---------------------------------------------------------------------------
-# Driver-green gate-query UDFs (scalar_pandas_wordstats / agg_pandas_trimmed)
-# — defined at module level so `pd` is a resolvable global for the type-hint
-# inference (`from __future__ import annotations` stringifies hints; a
-# function-local pandas import would make them unresolvable).
-# ---------------------------------------------------------------------------
 
 _WORDSTATS_T = T.StructType(
     [

@@ -6,8 +6,7 @@ platform does: human/model preference pairs ("A beats B") are the raw
 material of reward-model training, and the standard aggregate over them is
 the Bradley–Terry model (Bradley & Terry 1952; the same likelihood DPO and
 most RLHF reward models optimize). The pipeline shape mirrors the repo's
-other bounded-model-state operators (KMeans `operators/kmeans.py`, BPE
-training `operators/bpe.py`):
+other bounded-model-state operators (BPE training `operators/bpe.py`):
 
 - the CORPUS-sized work is one lag-window pass (sequence reconstruction,
   shuffled once on the grouping key) plus a map-side-combining aggregate
@@ -64,10 +63,13 @@ def fit_bradley_terry(
     "MM algorithms for generalized Bradley-Terry models", the standard
     iteration) over a ppm-quantized ordered-win matrix.
 
-    Update per item i:  θ'_i = (W_i·S) // Σ_j (N_ij·S) // (θ_i + θ_j)
-    then renormalize so Σθ = |items|·S. Every division is floor division on
-    non-negative integers, so a SQL replay with ``//`` (DuckDB) computes the
-    identical trajectory — the property the oracle gate relies on.
+    Update per item i:  θ'_i = (W_i·S) / Σ_j (N_ij·S) / (θ_i + θ_j)
+    then renormalize so Σθ = |items|·S. Every division x / d is integer
+    division rounded half up, ``(2x + d) // (2d)`` on non-negative
+    integers, so a SQL replay with ``//`` (DuckDB) computes the identical
+    trajectory — the property the oracle gate relies on. Rounding, not
+    flooring: floor division biases every term down, and over 20
+    iterations that bias compounds into the fitted strengths.
 
     Returns item -> (theta_ppm, wins_ppm_total, comparisons_ppm_total).
     """
@@ -100,11 +102,13 @@ def fit_bradley_terry(
                 n = n_sym[(i, j)]
                 s = theta[i] + theta[j]
                 if n > 0 and s > 0:
-                    denom += (n * scale) // s
-            new[i] = (w_tot[i] * scale) // denom if denom > 0 else theta[i]
+                    denom += (2 * n * scale + s) // (2 * s)
+            new[i] = (
+                (2 * w_tot[i] * scale + denom) // (2 * denom) if denom > 0 else theta[i]
+            )
         tot = sum(new.values())
         if tot > 0:
-            theta = {i: (new[i] * k * scale) // tot for i in items}
+            theta = {i: (2 * new[i] * k * scale + tot) // (2 * tot) for i in items}
         else:  # pragma: no cover - all-zero thetas need an all-zero win matrix
             theta = new
     return {

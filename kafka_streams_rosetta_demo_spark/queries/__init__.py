@@ -56,78 +56,6 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Rotation window for the external correctness gate, which samples the FIRST
-# 50 registry entries in iteration order. Rounds 1-3 only ever sampled the
-# first 50 of module-import order, so 34 queries (all streaming_*, the S2/S5
-# rosetta parity queries, session/sliding windows, as-of/range joins, and the
-# round-3 relational additions) never earned a driver-checked row. This list
-# puts exactly those first, then new round-4 queries, then the stalest
-# previously-checked rows (last seen round 1). Everything else follows in
-# registration order.
-#
-# From round 5 on the rotation is automatic: _staleness_order() reads the
-# committed CORRECTNESS_r*.json history and fronts never-checked queries,
-# then least-recently-checked — so every new query and every aging row cycles
-# back into the gate window with zero list maintenance. This static list is
-# the fallback when the history files are absent (fresh clone without round
-# artifacts).
-_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # --- never driver-checked through round 3 (34) ---
-    "streaming_calls_window_agg",
-    "streaming_ktable_latest",
-    "streaming_enriched",
-    "streaming_suppress_final",
-    "streaming_dedup_events",
-    "rosetta_ktable_latest",
-    "rosetta_deser_policy",
-    "window_session",
-    "window_sliding",
-    "window_session_dynamic",
-    "join_asof",
-    "join_range",
-    "join_skew_salted",
-    "join_null_safe",
-    "timeseries_gap_fill",
-    "funnel_stages",
-    "retention_cohorts",
-    "cdc_upsert_apply",
-    "sql_lateral_topk",
-    "sql_scalar_subquery",
-    "sql_exists_correlated",
-    "unnest_tokens",
-    "window_distribution_ranks",
-    "agg_listagg_ordered",
-    "agg_stats_moments",
-    "window_range_frame",
-    "agg_histogram_bins",
-    "scalar_regex_extract",
-    "window_first_last",
-    "agg_filtered_bool",
-    "set_except_all",
-    "set_intersect_all",
-    "unpivot_metrics",
-    "window_rolling_distinct",
-    # --- new in round 4 ---
-    "multimodal_resize",
-    "kmeans_inertia",
-    "kafka_wire_framing",
-    # --- stalest previously-checked (last driver-green: round 1) ---
-    "rosetta_select_key",
-    "rosetta_rekey_customers",
-    "rosetta_filter_not_null",
-    "rosetta_enriched",
-    "rosetta_null_defaults",
-    "rosetta_calls_window_agg",
-    "rosetta_date_format",
-    "sql_in_subquery",
-    "pivot_status_by_flag",
-    "scalar_case_when",
-    "scalar_strings",
-    "scalar_math",
-    "scalar_dates",
-)
-
-
 def _staleness_order(root=None) -> list[str] | None:
     """Order registry names by correctness-evidence staleness: queries whose
     MOST RECENT gate row failed (``err`` set, or any of
@@ -182,7 +110,8 @@ def _staleness_order(root=None) -> list[str] | None:
 def load_all() -> dict[str, Query]:
     """Import every query module (side effect: registration) and return the
     registry, ordered so the driver's first-50 correctness sample covers the
-    queries with the least (or stalest) prior evidence."""
+    queries with the least (or stalest) prior evidence — or in registration
+    order when no ``CORRECTNESS_r*.json`` history exists."""
     from . import (  # noqa: F401
         corpus_queries,
         dedup_queries,
@@ -196,16 +125,7 @@ def load_all() -> dict[str, Query]:
         tpch_queries,
     )
 
-    priority = _staleness_order() or [
-        n for n in _DRIVER_WINDOW_PRIORITY if n in REGISTRY
-    ]
-    ordered: dict[str, Query] = {}
-    for name in priority:
-        ordered[name] = REGISTRY[name]
-    for name, q in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
+    return {name: REGISTRY[name] for name in _staleness_order() or REGISTRY}
 
 
 def queries() -> dict[str, QueryFn]:

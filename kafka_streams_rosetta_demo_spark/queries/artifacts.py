@@ -141,26 +141,22 @@ def _memo(
         return _MEMO[key]
     pins: list[DataFrame] = []
     value = build(lambda df: pin_with_budget(df, spark, kind, pins))
-    _memo_insert(key, value, pins)
-    return value
-
-
-def _memo_insert(key: tuple, value, pins: list[DataFrame]) -> None:
-    """Insert into the memo, EVICTING every entry for the same
-    (application, sf_dir, table) under a different fingerprint: a
-    long-lived session rewriting its corpus N times must not accumulate N
-    dead artifact copies. Eviction deletes the stale reference — the
-    ContextCleaner reclaims localCheckpoint blocks once unreferenced — AND
-    eagerly unpersists the evicted entry's DISK_ONLY-degraded pins, which
-    would otherwise hold N disk copies until a clear_artifacts call, which
-    only bench/sweep harnesses make. Stale-key entries are unreachable by
-    construction — every lookup re-derives the fingerprinted key — so
-    releasing them here is safe."""
+    # Insert, EVICTING every entry for the same (application, sf_dir, table)
+    # under a different fingerprint: a long-lived session rewriting its
+    # corpus N times must not accumulate N dead artifact copies. Eviction
+    # deletes the stale reference — the ContextCleaner reclaims
+    # localCheckpoint blocks once unreferenced — AND eagerly unpersists the
+    # evicted entry's DISK_ONLY-degraded pins, which would otherwise hold N
+    # disk copies until a clear_artifacts call, which only bench/sweep
+    # harnesses make. Stale-key entries are unreachable by construction —
+    # every lookup re-derives the fingerprinted key — so releasing them here
+    # is safe.
     for k in [k for k in _MEMO if k[1:4] == key[1:4] and k[4] != key[4]]:
         del _MEMO[k]
         _release_pin_list(_MEMO_PINS.pop(k, []))
     _MEMO[key] = value
-    _MEMO_PINS.setdefault(key, []).extend(pins)
+    _MEMO_PINS[key] = pins
+    return value
 
 
 def clear_artifacts(*kinds: str) -> None:
@@ -489,159 +485,6 @@ def winnowing_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# Artifact persistence — write the memoized indexes as real tables, reload
-# them across sessions/jobs (VERDICT r10 task 2)
-# ---------------------------------------------------------------------------
-
-ARTIFACT_SHARDS = 8
-
-# kind -> (builder, shard key, column order). The shard key is the column
-# downstream consumers join/probe on, so the written layout colocates a key's
-# rows in one shard file (the X97 posture: the winnowing index is
-# "term-hash-sharded" — probes prune by `_shard`).
-_ARTIFACT_SPECS: dict[str, tuple] = {
-    "winnowing_index": (winnowing_index, "f", ("doc_id", "f")),
-    "jaccard_pairs_075": (jaccard_pairs_075, "doc_a", ("doc_a", "doc_b", "jaccard")),
-    "minhash_signatures": (minhash_signatures, "doc_id", ("doc_id", "minhash")),
-    "bpe_word_tokens": (bpe_word_tokens, "word", ("word", "n_toks")),
-    "bpe_word_token_lists": (bpe_word_token_lists, "word", ("word", "cnt", "toks")),
-}
-
-
-def _write_fingerprint_meta(spark: SparkSession, path: str, sf_dir: str) -> None:
-    # Underscore-prefixed children are invisible to Spark's data discovery
-    # (the _spark_metadata convention), so the sidecar rides inside the
-    # artifact directory on ANY Hadoop filesystem without polluting reads.
-    fp = corpus_fingerprint(sf_dir)
-    spark.createDataFrame([(repr(fp),)], "fp string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/_corpus_fingerprint")
-
-
-def _check_fingerprint_meta(spark: SparkSession, path: str, sf_dir: str) -> None:
-    (row,) = spark.read.parquet(f"{path}/_corpus_fingerprint").collect()
-    now = repr(corpus_fingerprint(sf_dir))
-    if row.fp != now:
-        raise ValueError(
-            f"artifact at {path!r} was built from a different snapshot of "
-            f"{sf_dir!r} (stored fingerprint != current) — rebuild and "
-            "re-save it; serving a stale index silently is the failure "
-            "mode this gate exists to stop"
-        )
-
-
-def save_artifact(spark: SparkSession, sf_dir: str, kind: str, path: str) -> None:
-    """Materialize one memoized corpus artifact (building it if cold) and
-    WRITE it as a hash-sharded parquet index at ``path`` — the step a
-    production pipeline runs once per corpus snapshot so later jobs reload
-    the index instead of rebuilding it (the winnowing probe, the PPJoin
-    pair set, the tokenizer's merge table + vocabulary map are all
-    build-once/probe-many). The corpus fingerprint is stored alongside
-    (``_corpus_fingerprint`` sidecar, invisible to data reads) and checked
-    on reload, so an index can never silently serve a different snapshot.
-
-    Layout: ``write_sharded_parquet`` on the column consumers probe/join
-    on — balanced files under key skew, exact output file count, and
-    ``_shard`` partition pruning for point probes. ``bpe_merges`` is
-    bounded model state (<= N_MERGES rows), written as one plain parquet
-    file ordered by rank."""
-    from ..sources.formats import write_sharded_parquet
-
-    if kind == "bpe_merges":
-        merges = bpe_merges(spark, sf_dir)
-        rows = [(i + 1, a, b) for i, (a, b) in enumerate(merges)]
-        spark.createDataFrame(
-            rows, "rank long, lhs string, rhs string"
-        ).coalesce(1).write.mode("overwrite").parquet(path)
-        _write_fingerprint_meta(spark, path, sf_dir)
-        return
-    builder, shard_key, cols = _ARTIFACT_SPECS[kind]
-    write_sharded_parquet(
-        builder(spark, sf_dir).select(*cols), path, shard_key, ARTIFACT_SHARDS
-    )
-    _write_fingerprint_meta(spark, path, sf_dir)
-
-
-def load_artifact(spark: SparkSession, sf_dir: str, kind: str, path: str):
-    """Reload a written artifact index into THIS session's memo, after
-    verifying its stored corpus fingerprint still matches ``sf_dir`` (a
-    mismatch raises — never silently serve an index of a rewritten
-    corpus; fingerprint-less remote corpora skip the check with the
-    one-time ``corpus_fingerprint`` warning). Every registered query that
-    consumes the artifact then rides the loaded table instead of
-    rebuilding — reload parity (loaded index -> query answers
-    hash-identical to the memo-built ones, with the builders blocked) is
-    pinned in ``tests/test_artifacts.py``. Returns the loaded artifact
-    (DataFrame, or the merge tuple for ``bpe_merges``)."""
-    if corpus_fingerprint(sf_dir):
-        _check_fingerprint_meta(spark, path, sf_dir)
-    pins: list[DataFrame] = []
-    if kind == "bpe_merges":
-        rows = spark.read.parquet(path).orderBy("rank").collect()
-        value = tuple((r.lhs, r.rhs) for r in rows)
-    else:
-        _builder, _shard_key, cols = _ARTIFACT_SPECS[kind]
-        value = pin_with_budget(
-            spark.read.parquet(path).select(*cols),
-            spark,
-            f"{kind} (reloaded from {path})",
-            pins,
-        )
-    _memo_insert(_memo_key(kind, spark, sf_dir), value, pins)
-    return value
-
-
-# Per-DOCUMENT artifacts are append-exact: each row depends only on its own
-# document (winnowing selection and MinHash signatures are per-doc
-# functions), so an ingest batch extends the written index without touching
-# existing rows. Corpus-GLOBAL artifacts are deliberately excluded — the
-# PPJoin pair set needs cross-batch candidates, and the BPE tables carry
-# corpus frequencies — those rebuild per snapshot (their builders say so).
-_APPENDABLE_KINDS = ("winnowing_index", "minhash_signatures")
-
-
-def append_artifact(
-    spark: SparkSession, sf_dir: str, kind: str, path: str, new_docs: DataFrame
-) -> None:
-    """Extend a WRITTEN per-document artifact index with an ingest batch —
-    the incremental maintenance path: fingerprint/sign ONLY ``new_docs``
-    (never rescanning the corpus), append the rows into the existing
-    hash-shard layout (same shard expression, so probes keep pruning), and
-    re-stamp the sidecar with ``sf_dir``'s CURRENT corpus fingerprint so a
-    reload against the post-ingest snapshot passes the staleness gate.
-    Call AFTER the batch lands in the corpus table; extended-index ==
-    full-rebuild parity is pinned in ``tests/test_artifacts.py``."""
-    from pyspark.sql import functions as F
-
-    from ..operators.textsim import minhash_signature, winnow_fingerprints, with_shingles
-    from ..sources.formats import shard_column
-
-    if kind not in _APPENDABLE_KINDS:
-        raise ValueError(
-            f"artifact kind {kind!r} is not per-document/append-exact "
-            f"(appendable: {_APPENDABLE_KINDS}); rebuild it per snapshot"
-        )
-    docs = new_docs.select("doc_id", "text")
-    if kind == "winnowing_index":
-        rows, shard_key = winnow_fingerprints(docs, k=3, w=4), "f"
-    else:
-        rows = minhash_signature(with_shingles(docs, k=3), n_hashes=64)
-        shard_key = "doc_id"
-    cols = _ARTIFACT_SPECS[kind][2]
-    out = rows.select(*cols).withColumn(
-        "_shard", shard_column(F.col(shard_key), ARTIFACT_SHARDS)
-    )
-    (
-        out.repartition(ARTIFACT_SHARDS, "_shard")
-        .sortWithinPartitions("_shard")
-        .write.mode("append")
-        .partitionBy("_shard")
-        .parquet(path)
-    )
-    _write_fingerprint_meta(spark, path, sf_dir)
 
 
 # The hyperplane-LSH band index over the embeddings corpus — the persisted

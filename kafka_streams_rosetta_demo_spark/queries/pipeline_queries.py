@@ -189,10 +189,8 @@ FROM ranked WHERE rank <= {_KNN_K}
 def knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate kNN — the 100 TB scale path.
 
-    32 fixed centroids (a deterministic id-sampled subset; the Lloyd
-    trainer in operators/kmeans.py refines such an init when index quality
-    matters — sampling keeps this query seed-free and
-    engine-reproducible) partition the corpus into cells via a closed-form
+    32 fixed centroids (a deterministic id-sampled subset — sampling keeps
+    this query seed-free and engine-reproducible) partition the corpus into cells via a closed-form
     argmax expression (no join, no crossJoin). Each query probes its 8
     nearest cells and ranks only those cells' members, cutting scored pairs
     ~4x here and ~(k/nprobe)-fold generally. The approximation procedure
@@ -249,14 +247,13 @@ def knn_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Inertia of the deterministic IVF init — the objective kmeans_train
-# minimizes, query-shaped. The trained centroids themselves are NOT
-# hash-comparable across engines (cluster means sum floats in partition
-# order), so training stays pytest-pinned against a numpy twin
-# (tests/test_kmeans.py); the inertia probe quantizes each row's squared
-# distance to integer micro-units BEFORE the per-cell sum, making the
-# aggregate order-free. d2 = v.v - 2 v.c + c.c with every dot the same
-# sequential-accumulation idiom _IVF_ORACLE already proved bit-parity for.
+# Inertia of the deterministic IVF init — the objective a Lloyd trainer
+# minimizes, query-shaped. Trained centroids are NOT hash-comparable across
+# engines (cluster means sum floats in partition order), so the probe scores
+# the init; it quantizes each row's squared distance to integer micro-units
+# BEFORE the per-cell sum, making the aggregate order-free. d2 = v.v -
+# 2 v.c + c.c with every dot the same sequential-accumulation idiom
+# _IVF_ORACLE already proved bit-parity for.
 _INERTIA_ORACLE = f"""
 WITH norms AS (
   SELECT vec_id, embedding,
@@ -297,9 +294,9 @@ FROM dists GROUP BY cell_id
 def kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell KMeans objective (sum of squared L2 distances to the
     assigned centroid) for the deterministic id-sampled init the IVF index
-    uses — the probe that tells an index build whether running the Lloyd
-    trainer (operators/kmeans.py) is worth it, and the quality metric a
-    training round must improve.
+    uses — the probe that tells an index build whether running a Lloyd
+    trainer is worth it, and the quality metric a training round must
+    improve.
 
     Scale: assignment is the closed-form literal-matrix argmax (no join);
     the distance needs the assigned centroid's vector, which arrives via a
@@ -3048,9 +3045,7 @@ def knn_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning; PQ compresses each 64-dim float32 vector (256 B) to
     8 one-byte codes (32x). Each of the 8 subspaces (8 dims) has a 16-entry
     codebook — a deterministic id-sampled subset (the knn_ann_ivf centroid
-    discipline: seed-free, engine-reproducible; the Lloyd trainer in
-    operators/kmeans.py refines such an init per-subspace when index
-    quality matters). Encoding picks the nearest codebook entry per
+    discipline: seed-free, engine-reproducible). Encoding picks the nearest codebook entry per
     subspace (squared L2, smaller index on ties); retrieval is ASYMMETRIC,
     the production ADC shape: the query stays full-precision and corpus
     vectors score as their reconstruction (concatenated codebook entries).
@@ -4399,7 +4394,6 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # midrank (+T/2) correction — so the rank histogram is <=1000 rows of
 # bounded model state at ANY corpus size, never a corpus-sized global sort.
 _ROC_CELL_MICRO = 500
-_ROC_CELLS = 2 * _CAL_CLAMP // _ROC_CELL_MICRO  # 1000
 
 # The <=1000-cell (cell, pos, neg) rank histogram over the shared scored
 # frame — ONE quantization definition feeding BOTH threshold-free gates

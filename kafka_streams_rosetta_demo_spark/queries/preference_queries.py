@@ -211,7 +211,8 @@ t0 AS MATERIALIZED (SELECT item, CAST({s} AS BIGINT) AS th FROM items)"""
         iters.append(f""",
 d{i} AS MATERIALIZED (
   SELECT p.i AS item,
-         CAST(sum((p.n_ppm * {s}) // (ti.th + tj.th)) AS BIGINT) AS dn
+         CAST(sum((2 * p.n_ppm * {s} + ti.th + tj.th) // (2 * (ti.th + tj.th)))
+              AS BIGINT) AS dn
   FROM np p
   JOIN t{i - 1} ti ON ti.item = p.i
   JOIN t{i - 1} tj ON tj.item = p.j
@@ -220,16 +221,17 @@ d{i} AS MATERIALIZED (
 ),
 r{i} AS MATERIALIZED (
   SELECT t.item,
-         CASE WHEN d.dn > 0 THEN (w.wp * {s}) // d.dn ELSE t.th END AS th
+         CASE WHEN d.dn > 0 THEN (2 * w.wp * {s} + d.dn) // (2 * d.dn) ELSE t.th END
+           AS th
   FROM t{i - 1} t
   LEFT JOIN d{i} d ON d.item = t.item
   JOIN wt w ON w.item = t.item
 ),
 t{i} AS MATERIALIZED (
   SELECT item,
-         CAST((CAST(th AS HUGEINT) * (SELECT k FROM kk) * {s})
-              // (SELECT sum(th) FROM r{i}) AS BIGINT) AS th
-  FROM r{i}
+         CAST((2 * CAST(th AS HUGEINT) * (SELECT k FROM kk) * {s} + tt.tot)
+              // (2 * tt.tot) AS BIGINT) AS th
+  FROM r{i}, (SELECT CAST(sum(th) AS HUGEINT) AS tot FROM r{i}) tt
 )""")
     tail = f"""
 SELECT i.item AS event_type,
@@ -262,7 +264,7 @@ def preference_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     RLHF reward training and DPO optimize, fitted with 20 integer MM
     iterations (Hunter 2004) over the ppm-quantized win matrix.
 
-    Scale (the KMeans/BPE bounded-model-state pattern): the corpus-sized
+    Scale (the BPE bounded-model-state pattern): the corpus-sized
     work is ONE lag-window shuffle + ONE map-side-combining aggregate that
     collapses 100 TB of events to at most |types|² ≤ 64² rows; those rows
     collect to the driver, are ppm-quantized in arbitrary-precision Python

@@ -24,6 +24,15 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Logged at ERROR only. AQE is on session-wide because the foreachBatch sink's
+# batch jobs use it; every stateful stream start then logs, from each of
+# these, a WARN that it turns AQE off for the stream — expected here, and
+# otherwise interleaved with every bench child's per-query lines.
+_QUIET_STREAM_LOGGERS = (
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+    "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
+)
+
 
 def ensure_conf(spark: SparkSession, key: str, value: str) -> None:
     """Set a runtime conf only when it differs — per-call mutation of shared
@@ -76,4 +85,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    for name in _QUIET_STREAM_LOGGERS:
+        log4j.core.config.Configurator.setLevel(name, log4j.Level.ERROR)
     return spark

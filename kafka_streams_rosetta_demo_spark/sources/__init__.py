@@ -5,12 +5,10 @@ edge (S1/S3/S5) lives in :mod:`..streaming.kafka_io` and is import-gated
 because no broker exists in the test environment.
 """
 
-from .parquet import TABLES, load_table, load_tables, rosetta_calls, rosetta_customers
+from .parquet import load_table, rosetta_calls, rosetta_customers
 
 __all__ = [
-    "TABLES",
     "load_table",
-    "load_tables",
     "rosetta_calls",
     "rosetta_customers",
 ]

@@ -1,26 +1,20 @@
-"""Batch source/sink format surface: JSON, CSV, ORC, Avro, and sharded parquet.
+"""Batch source/sink format surface: JSON, CSV, ORC, Avro and parquet.
 
 The reference's only I/O is Kafka topics with Avro values (SURVEY §2.1
 S1/S3; ``CallsAggregationApp.java:51,85``) — the streaming layer mirrors
 that in ``streaming/kafka_io.py``. This module is the *batch* half of the
-source/sink story a data-pipeline engine needs at 100 TB:
+source/sink story: ``write_table`` and ``read_table`` over one format name.
 
 - **Schema-on-read, never infer.** ``read_table`` requires an explicit
   ``StructType``. Schema inference reads the data twice and silently drifts
   with content; at 100 TB both are unacceptable. This is the batch analog
   of the fixed Avro writer schema the reference registers in Schema
   Registry.
-- **Sharded writes.** ``write_sharded_parquet`` lays files out by a
-  deterministic content-independent hash shard (same md5 expression as the
-  ``doc_shard_assign`` query), so output file count — the thing that
-  decides downstream scan parallelism — is an explicit knob, balanced
-  regardless of key skew, and reproducible across engines and reruns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _FORMATS = ("json", "csv", "parquet", "orc", "avro")
@@ -72,176 +66,3 @@ def read_table(spark: SparkSession, path: str, schema: StructType, fmt: str = "j
         reader = reader.option("mode", "PERMISSIVE")
     return reader.format(_fmt(fmt)).load(path)
 
-
-def shard_column(key: F.Column, n_shards: int) -> F.Column:
-    """Deterministic shard id: md5-prefix hash of the (stringified) key,
-    mod ``n_shards``. Content-independent → balanced under key skew;
-    engine-portable (DuckDB reproduces it bit-for-bit — see
-    ``doc_shard_assign``)."""
-    from ..operators.textsim import md5_long
-
-    return F.pmod(md5_long(key.cast("string")), F.lit(n_shards))
-
-
-def write_sharded_parquet(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    n_shards: int,
-    sort_within: list[str] | None = None,
-) -> None:
-    """Write parquet laid out as ``n_shards`` hash-shard directories
-    (``_shard=K/``), one file per shard.
-
-    ``repartition(n, shard)`` colocates each shard wholly in one task, and
-    ``partitionBy`` splits tasks into one file per shard directory — so the
-    output file count (the knob that decides downstream scan parallelism)
-    is exact, and a reader filtering on ``_shard`` gets partition pruning.
-    ``sort_within`` clusters rows inside each file so min/max page
-    statistics make later range predicates prunable. All rows with the
-    same key land in the same shard — a reader that joins or aggregates
-    on the key can exploit the layout.
-    """
-    shard = shard_column(F.col(key_col), n_shards)
-    out = df.withColumn("_shard", shard).repartition(n_shards, "_shard")
-    out = out.sortWithinPartitions("_shard", *(sort_within or []))
-    out.write.mode("overwrite").partitionBy("_shard").parquet(path)
-
-
-def zorder_key(norm_cols: list, bits: int = 16) -> F.Column:
-    """Interleave the low ``bits`` bits of already-normalized non-negative
-    integer columns into one Morton (Z-order) key: bit ``i`` of column
-    ``j`` lands at position ``i * k + j``. Pure JVM shift/mask expressions
-    — zero shuffle; the caller supplies columns scaled to ``[0, 2^bits)``
-    (see :func:`write_zordered_parquet`). ``k * bits`` must fit a long."""
-    k = len(norm_cols)
-    if k * bits > 62:
-        raise ValueError(f"{k} cols x {bits} bits exceeds a long key")
-    key = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(norm_cols):
-            bit = F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1))
-            key = key.bitwiseOR(F.shiftleft(bit, i * k + j))
-    return key
-
-
-def write_zordered_parquet(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write parquet clustered on the Z-order (Morton) curve of ``cols`` —
-    the multi-dimensional locality layout: rows close in ANY of the keyed
-    dimensions land in the same files/row groups, so parquet min/max
-    statistics prune box predicates on *every* keyed column, where a plain
-    sort only serves its leading column. This is the lakehouse OPTIMIZE
-    ZORDER operation expressed as one declarative pass.
-
-    Mechanics: one tiny stats aggregate (per-column min/max — bounded
-    model state, the only driver round-trip) min-max-normalizes each
-    column to ``[0, 2^bits)``; the interleaved key is a per-row JVM
-    expression; ``repartitionByRange`` on the key gives ``n_files``
-    contiguous curve segments (one range shuffle — the inherent cost of
-    any clustering rewrite) and ``sortWithinPartitions`` orders rows
-    inside each file so row-group stats are tight. Pruning is pinned
-    against actual parquet footer statistics in ``tests/test_formats.py``.
-    """
-    stats = df.agg(
-        *[F.min(c).alias(f"mn_{c}") for c in cols],
-        *[F.max(c).alias(f"mx_{c}") for c in cols],
-    ).first()
-    top = (1 << bits) - 1
-    norm = []
-    for c in cols:
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        span = (mx - mn) or 1
-        norm.append(
-            F.least(
-                F.lit(top),
-                F.floor((F.col(c) - F.lit(mn)) / F.lit(span) * top).cast("long"),
-            )
-        )
-    keyed = df.withColumn("_z", zorder_key(norm, bits))
-    (
-        keyed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    sort_within: list[str] | None = None,
-) -> None:
-    """Write parquet hive-partitioned by *semantic* columns (dates, sources,
-    languages) — the scan-avoidance layout for a 100 TB corpus.
-
-    Unlike ``write_sharded_parquet`` (whose hash shard balances load but is
-    content-independent), a semantic partition column lets the engine skip
-    entire directories:
-
-    - a literal predicate on the partition column becomes a **static
-      partition filter** (``PartitionFilters`` in the scan — zero files of
-      the excluded partitions are even listed), and
-    - a *join* against a filtered dimension triggers **dynamic partition
-      pruning**: Catalyst reuses the dimension's broadcast to compute the
-      surviving partition keys at runtime and prunes the fact scan before
-      it reads (``dynamicpruningexpression`` in the plan). At 100 TB this
-      is the difference between scanning a day and scanning a decade.
-
-    Both behaviors are pinned in ``tests/test_formats.py``. The
-    ``repartition`` on the partition columns gives one writer task per
-    partition (no small-file explosion: files-per-partition == 1, not
-    ``n_tasks``); ``sort_within`` clusters rows inside each file so parquet
-    min/max page statistics make residual range predicates prunable too.
-    """
-    out = df.repartition(*[F.col(c) for c in partition_cols])
-    out = out.sortWithinPartitions(*partition_cols, *(sort_within or []))
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction — the lakehouse maintenance pass every
-    streaming/incremental sink needs (micro-batches and per-task writers
-    leave thousands of KB-sized files; scan parallelism then degrades into
-    open/seek overhead and NameNode/listing pressure).
-
-    Sizes the output by the INPUT'S actual bytes: one listing pass sums
-    file sizes (driver-side metadata, not data), the rewrite round-robins
-    into ``ceil(total/target)`` files of ~``target_file_bytes`` each.
-    Round-robin (``repartition(n)``) rather than ``coalesce``: coalesce
-    glues existing partitions without a shuffle, which preserves skew —
-    a compaction that inherits one fat file defeats its purpose. The
-    rewrite is a plain scan → exchange → write; at 100 TB it runs
-    per-partition-directory (compact yesterday's partition, not the
-    table). Returns the output file count.
-    """
-    import math
-
-    from py4j.java_gateway import java_import
-
-    jvm = spark.sparkContext._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    hpath = jvm.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    total = sum(
-        f.getLen()
-        for f in fs.listStatus(hpath)
-        if f.getPath().getName().endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(path).repartition(n_files).write.mode("overwrite").parquet(
-        out_path
-    )
-    return n_files

@@ -20,20 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, sf_dir)
@@ -113,10 +99,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def events_to_calls(events: DataFrame) -> DataFrame:

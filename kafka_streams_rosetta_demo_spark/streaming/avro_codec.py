@@ -51,8 +51,6 @@ from datetime import datetime, timezone
 import numpy as np
 import pyarrow as pa
 
-_PRIMITIVES = {"null", "boolean", "int", "long", "float", "double", "bytes", "string"}
-
 MAGIC = b"Obj\x01"
 
 _INT32_MIN, _INT32_MAX = -(2**31), 2**31 - 1

@@ -22,49 +22,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def running_totals(
-    stream: DataFrame, key_col: str = "user_id", value_col: str = "value"
-) -> DataFrame:
-    """Per-key running (event count, value total), emitted on every update.
-
-    Scale: state is two scalars per key, partitioned by the group key —
-    the same bounded-keyed-state shape as the KTable operator. No watermark
-    timeout here (state lives forever, like a compacted topic); pass a
-    TTL via GroupStateTimeout for expiring keys.
-    """
-    out_schema = f"{key_col} long, n_events long, total_value double"
-    state_schema = "n long, total double"
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {key_col: [key[0]], "n_events": [n], "total_value": [round(total, 6)]}
-        )
-
-    return (
-        stream.select(key_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
 def running_totals_cents(
     stream: DataFrame, key_col: str = "user_id", value_col: str = "value"
 ) -> DataFrame:
-    """Per-key running (event count, integer-cent total) — the same state
-    machine as :func:`running_totals` but with all-integer state, so the
-    final state is bit-identical to a batch aggregate regardless of
-    arrival order or partitioning (float accumulation is neither). This is
-    the variant the registered gate query runs: an oracle can assert exact
-    equality, not closeness."""
+    """Per-key running (event count, integer-cent total), emitted on every
+    update. All-integer state, so the final state is bit-identical to a
+    batch aggregate regardless of arrival order or partitioning (float
+    accumulation is neither): an oracle can assert exact equality, not
+    closeness."""
     out_schema = f"{key_col} long, n_events long, total_cents long"
     state_schema = "n long, total long"
 

@@ -5,9 +5,9 @@ memo for every corpus-derived artifact, one DISK_ONLY pin dict, one
 Pinned here: a warm lookup returns the identical object; a corpus rewritten
 in place misses the memo and releases the stale entry's DISK_ONLY pins at
 insert; a clear releases pins, and clearing one kind leaves the others
-warm; the budget pin degrades to disk under a tiny storage budget;
-save/load/append parity with the builders blocked; the non-local
-fingerprint warns once; and no other package module keeps its own memo.
+warm; the budget pin degrades to disk under a tiny storage budget; the
+non-local fingerprint warns once; no other package module keeps its own
+memo; and no package code outlives every production caller.
 """
 
 from __future__ import annotations
@@ -29,10 +29,6 @@ def _write_docs(spark, path: str, rows: list[tuple[int, str]]) -> None:
         [(i, t, "src") for i, t in rows], "doc_id long, text string, source string"
     )
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "documents.parquet"))
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
 
 
 _SHINGLE_KINDS = (
@@ -312,172 +308,6 @@ class TestArtifactCacheHygiene:
 
 
 # ---------------------------------------------------------------------------
-# persist/reload parity (VERDICT r10 task 2): written index -> cleared memos
-# -> reload -> consumer queries hash-identical, with the builders BLOCKED so
-# a silent rebuild cannot fake the parity.
-# ---------------------------------------------------------------------------
-
-
-class TestArtifactPersistReload:
-    def test_winnowing_index_reload_parity(self, spark, sf_smoke, tmp_path, monkeypatch):
-        """dedup_winnowing_screen must answer identically whether the
-        fingerprint index came from this session's build or from a written
-        parquet index reloaded cold — with the builder raising, so the
-        reload path is provably the one that served."""
-        from kafka_streams_rosetta_demo_spark.operators import textsim
-        from kafka_streams_rosetta_demo_spark.queries.dedup_queries import (
-            dedup_winnowing_screen,
-        )
-
-        artifacts.clear_artifacts("winnowing_index")
-        baseline = _rows(dedup_winnowing_screen(spark, sf_smoke))
-
-        path = str(tmp_path / "winnow_idx")
-        artifacts.save_artifact(spark, sf_smoke, "winnowing_index", path)
-        artifacts.clear_artifacts("winnowing_index")  # simulate a fresh session
-
-        def boom(*a, **k):
-            raise AssertionError("builder ran — reload did not serve")
-
-        monkeypatch.setattr(textsim, "winnow_fingerprints", boom)
-        loaded = artifacts.load_artifact(spark, sf_smoke, "winnowing_index", path)
-        assert loaded.columns == ["doc_id", "f"]
-        assert _rows(dedup_winnowing_screen(spark, sf_smoke)) == baseline
-        monkeypatch.undo()
-        artifacts.clear_artifacts("winnowing_index")
-
-    def test_bpe_reload_parity(self, spark, sf_smoke, tmp_path, monkeypatch):
-        """The tokenizer's two artifacts (merge table + vocabulary map)
-        round-trip through disk and serve text_bpe_fertility identically,
-        with training and the vocabulary encode both blocked."""
-        from kafka_streams_rosetta_demo_spark.operators import bpe as bpe_mod
-        from kafka_streams_rosetta_demo_spark.queries.corpus_queries import (
-            text_bpe_fertility,
-        )
-
-        artifacts.clear_artifacts(*_BPE_KINDS)
-        baseline = _rows(text_bpe_fertility(spark, sf_smoke))
-        saved_merges = artifacts.bpe_merges(spark, sf_smoke)
-
-        mpath = str(tmp_path / "bpe_merges")
-        wpath = str(tmp_path / "bpe_word_tokens")
-        artifacts.save_artifact(spark, sf_smoke, "bpe_merges", mpath)
-        artifacts.save_artifact(spark, sf_smoke, "bpe_word_tokens", wpath)
-        artifacts.clear_artifacts(*_BPE_KINDS)
-
-        def boom(*a, **k):
-            raise AssertionError("builder ran — reload did not serve")
-
-        monkeypatch.setattr(bpe_mod, "train_bpe", boom)
-        monkeypatch.setattr(bpe_mod, "word_token_counts", boom)
-        monkeypatch.setattr(bpe_mod, "corpus_word_counts", boom)
-        merges = artifacts.load_artifact(spark, sf_smoke, "bpe_merges", mpath)
-        assert merges == saved_merges  # rank order survives the round trip
-        artifacts.load_artifact(spark, sf_smoke, "bpe_word_tokens", wpath)
-        assert _rows(text_bpe_fertility(spark, sf_smoke)) == baseline
-        monkeypatch.undo()
-        artifacts.clear_artifacts(*_BPE_KINDS)
-
-    def test_pairs_and_signatures_reload_parity(self, spark, sf_smoke, tmp_path, monkeypatch):
-        """The remaining two registered artifact kinds — the PPJoin pair
-        set and the MinHash signature table — also round-trip: their
-        consumer queries answer identically off the reloaded indexes with
-        the pair/signature builders blocked (shingling stays allowed —
-        it is a separate artifact these two consume)."""
-        from kafka_streams_rosetta_demo_spark.operators import textsim
-        from kafka_streams_rosetta_demo_spark.queries.dedup_queries import (
-            dedup_minhash_lsh,
-            dedup_ngram_jaccard,
-        )
-
-        artifacts.clear_artifacts(*_SHINGLE_KINDS)
-        pairs_baseline = _rows(dedup_ngram_jaccard(spark, sf_smoke))
-        lsh_baseline = _rows(dedup_minhash_lsh(spark, sf_smoke))
-
-        ppath = str(tmp_path / "pairs075")
-        spath = str(tmp_path / "minhash_sigs")
-        artifacts.save_artifact(spark, sf_smoke, "jaccard_pairs_075", ppath)
-        artifacts.save_artifact(spark, sf_smoke, "minhash_signatures", spath)
-        artifacts.clear_artifacts(*_SHINGLE_KINDS)
-
-        def boom(*a, **k):
-            raise AssertionError("builder ran — reload did not serve")
-
-        monkeypatch.setattr(textsim, "prefix_filter_pairs", boom)
-        monkeypatch.setattr(textsim, "minhash_signature", boom)
-        artifacts.load_artifact(spark, sf_smoke, "jaccard_pairs_075", ppath)
-        artifacts.load_artifact(spark, sf_smoke, "minhash_signatures", spath)
-        assert _rows(dedup_ngram_jaccard(spark, sf_smoke)) == pairs_baseline
-        assert _rows(dedup_minhash_lsh(spark, sf_smoke)) == lsh_baseline
-        monkeypatch.undo()
-        artifacts.clear_artifacts(*_SHINGLE_KINDS)
-
-    def test_stale_fingerprint_rejected_on_load(self, spark, tmp_path):
-        """An index saved from one corpus snapshot must refuse to load
-        against a rewritten snapshot of the same path — the silent-stale
-        failure the sidecar gate exists to stop."""
-        import shutil
-        import time
-
-        sf = str(tmp_path / "corpus")
-        docs = spark.createDataFrame(
-            [(i, f"alpha beta gamma {i}", "s") for i in range(40)],
-            "doc_id long, text string, source string",
-        )
-        docs.write.parquet(f"{sf}/documents.parquet")
-        path = str(tmp_path / "idx")
-        artifacts.save_artifact(spark, sf, "winnowing_index", path)
-
-        time.sleep(0.05)
-        shutil.rmtree(f"{sf}/documents.parquet")
-        docs.limit(10).write.parquet(f"{sf}/documents.parquet")
-
-        with pytest.raises(ValueError, match="different snapshot"):
-            artifacts.load_artifact(spark, sf, "winnowing_index", path)
-        artifacts.clear_artifacts("winnowing_index")
-
-    def test_append_extends_index_to_full_rebuild_parity(self, spark, tmp_path):
-        """The incremental-maintenance path: index saved over 80% of a
-        corpus, the remaining 20% ingested and APPENDED (only the batch is
-        fingerprinted — no corpus rescan), reload against the post-ingest
-        snapshot == the full-rebuild index row-for-row, for both
-        per-document kinds."""
-        from pyspark.sql import functions as F
-
-        sf = str(tmp_path / "corpus")
-        all_docs = spark.createDataFrame(
-            [(i, f"gamma delta epsilon zeta {i % 7} {i}", "s") for i in range(50)],
-            "doc_id long, text string, source string",
-        )
-        base = all_docs.where(F.col("doc_id") % 5 != 0)
-        batch = all_docs.where(F.col("doc_id") % 5 == 0)
-
-        for kind in ("winnowing_index", "minhash_signatures"):
-            path = str(tmp_path / f"idx_{kind}")
-            base.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-            artifacts.clear_artifacts("winnowing_index", *_SHINGLE_KINDS)
-            artifacts.save_artifact(spark, sf, kind, path)
-
-            # the ingest lands in the corpus table, then extends the index
-            batch.write.mode("append").parquet(f"{sf}/documents.parquet")
-            artifacts.append_artifact(spark, sf, kind, path, batch)
-
-            artifacts.clear_artifacts("winnowing_index", *_SHINGLE_KINDS)
-            loaded = _rows(artifacts.load_artifact(spark, sf, kind, path))
-
-            artifacts.clear_artifacts("winnowing_index", *_SHINGLE_KINDS)
-            builder, _shard_key, cols = artifacts._ARTIFACT_SPECS[kind]
-            assert loaded == _rows(builder(spark, sf).select(*cols)), kind
-        artifacts.clear_artifacts("winnowing_index", *_SHINGLE_KINDS)
-
-        # corpus-global kinds refuse the append path
-        with pytest.raises(ValueError, match="not per-document"):
-            artifacts.append_artifact(
-                spark, sf, "jaccard_pairs_075", str(tmp_path / "nope"), batch
-            )
-
-
-# ---------------------------------------------------------------------------
 # one memo: no other package module keeps its own
 # ---------------------------------------------------------------------------
 
@@ -522,3 +352,192 @@ def test_only_the_artifact_module_memoizes():
                     ):
                         sites.append((rel, name.id))
     assert not sites, sites
+
+
+# ---------------------------------------------------------------------------
+# reachability: no package code outlives every production caller
+# ---------------------------------------------------------------------------
+
+# Top-level package defs that no production root reaches but that stay, as
+# (module under the package, name), grouped by the test that compares the
+# production path against them.
+_REFERENCE_ONLY = {
+    # higher-order-function twins of the Arrow vector kernels
+    # (tests/test_veckernels.py)
+    ("operators.vectors", "hyperplane_band_keys_hof"),
+    ("operators.vectors", "ivf_assign_hof"),
+    ("queries.pipeline_queries", "_pq_recon_frame_hof"),
+    # pure-Python twins of the multimodal decode kernels
+    # (tests/test_multimodal.py, tests/test_properties.py)
+    ("operators.multimodal", "expected_resize"),
+    ("operators.multimodal", "expected_resample"),
+    ("operators.multimodal", "expected_features"),
+    ("operators.multimodal", "expected_frames"),
+    # PPJoin references (tests/test_dedup.py): the prefix-length formula, and
+    # the cross-set join dedup_incremental_screen's pair slice must equal
+    ("operators.textsim", "prefix_length"),
+    ("operators.textsim", "prefix_filter_pairs_cross"),
+    # the record-at-a-time Avro codec, pinned byte-for-byte against the
+    # JVM's AvroFileFormat (tests/test_avro_codec.py)
+    ("streaming.avro_codec", "encode_record"),
+    ("streaming.avro_codec", "decode_record"),
+    ("streaming.avro_codec", "read_ocf"),
+    ("streaming.avro_codec", "write_ocf"),
+    # the runner entry point that takes the caller's checkpoint: restart and
+    # redelivery tests stop and resume a topology on a checkpoint they own
+    ("streaming.runner", "run_append_query_to_df"),
+    # the JVM-side table I/O whose Avro container files read_ocf is checked
+    # against (tests/test_formats.py)
+    ("sources.formats", "read_table"),
+    ("sources.formats", "write_table"),
+}
+
+
+def _unreached_package_defs(repo) -> list[str]:
+    """Top-level package ``def``/``class`` names that no production root
+    reaches, by a static walk of the AST (no import, no Spark).
+
+    Roots: every ``@register``ed query, the package's module-level
+    statements, ``bench.py``, ``__spark_entry__.py``, ``tools/*.py``, the
+    non-test ``perfbench/*.py`` and ``_REFERENCE_ONLY``. A reached def
+    reaches every top-level def its body names: a ``Name`` resolves in its
+    own module or through an import alias (re-exports followed), an
+    ``Attribute`` on a package module resolves there, any other
+    ``Attribute`` reaches every top-level def of that name, and a
+    ``("package.module", "name")`` string pair is ``bench.BENCH_ONLY``'s
+    dynamic import. Import statements, docstrings and comments are not
+    uses, so an ``__init__`` re-export keeps nothing alive."""
+    import ast
+
+    pkg = "kafka_streams_rosetta_demo_spark"
+    trees, is_init = {}, {}
+    for path in sorted((repo / pkg).rglob("*.py")):
+        parts = path.relative_to(repo).with_suffix("").parts
+        mod = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        trees[mod] = ast.parse(path.read_text())
+        is_init[mod] = parts[-1] == "__init__"
+    roots = [repo / "bench.py", repo / "__spark_entry__.py"]
+    roots += sorted((repo / "tools").glob("*.py"))
+    roots += sorted(p for p in (repo / "perfbench").glob("*.py") if not p.name.startswith("test_"))
+    root_trees = {p.relative_to(repo).as_posix(): ast.parse(p.read_text()) for p in roots}
+
+    defs: dict[tuple, list] = {}
+    for mod, tree in trees.items():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault((mod, node.name), []).append(node)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            defs.setdefault((mod, n.id), []).append(node)
+    by_name: dict[str, set] = {}
+    for key in defs:
+        by_name.setdefault(key[1], set()).add(key)
+
+    # alias -> import targets, collected over the whole module (function-local
+    # imports included): ("mod", dotted) or ("name", dotted module, name)
+    aliases: dict[str, dict[str, set]] = {}
+    for mod, tree in [*trees.items(), *root_trees.items()]:
+        table = aliases.setdefault(mod, {})
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    name = a.name if a.asname else a.name.split(".")[0]
+                    table.setdefault(a.asname or name, set()).add(("mod", name))
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    here = mod.split(".")[: None if is_init.get(mod) else -1]
+                    here = here[: len(here) - node.level + 1]
+                    base = ".".join(here + ([node.module] if node.module else []))
+                for a in node.names:
+                    table.setdefault(a.asname or a.name, set()).add(("name", base, a.name))
+
+    def resolve(mod, name, seen=frozenset()):
+        """What ``name`` in ``mod`` denotes: {("mod", m)} or {("def", key)}."""
+        if f"{mod}.{name}" in trees:
+            return {("mod", f"{mod}.{name}")}
+        if (mod, name) in defs:
+            return {("def", (mod, name))}
+        out = set()
+        for t in aliases.get(mod, {}).get(name, ()):
+            if t[0] == "mod":
+                out.add(t)
+            elif (t[1], t[2]) not in seen:
+                out |= resolve(t[1], t[2], seen | {(mod, name)})
+        return out
+
+    def modules_of(mod, expr) -> set:
+        if isinstance(expr, ast.Name):
+            return {m for kind, m in resolve(mod, expr.id) if kind == "mod"}
+        if isinstance(expr, ast.Attribute):
+            return {
+                f"{m}.{expr.attr}"
+                for m in modules_of(mod, expr.value)
+                if f"{m}.{expr.attr}" in trees
+            }
+        return set()
+
+    def uses(mod, tree) -> set:
+        out = set()
+        for sub in ast.walk(tree):
+            if isinstance(sub, ast.Name):
+                out |= {k for kind, k in resolve(mod, sub.id) if kind == "def"}
+            elif isinstance(sub, ast.Attribute):
+                bases = modules_of(mod, sub.value)
+                if not bases:
+                    out |= by_name.get(sub.attr, set())
+                for m in bases:
+                    out |= {k for kind, k in resolve(m, sub.attr) if kind == "def"}
+            elif isinstance(sub, ast.Tuple) and len(sub.elts) == 2:
+                m, name = (getattr(e, "value", None) for e in sub.elts)
+                if m in trees and isinstance(name, str):
+                    out |= {k for kind, k in resolve(m, name) if kind == "def"}
+        return out
+
+    todo = [(f"{pkg}.{m}", n) for m, n in _REFERENCE_ONLY]
+    assert set(todo) <= defs.keys(), set(todo) - defs.keys()
+    for mod, tree in root_trees.items():
+        todo += uses(mod, tree)
+    for mod, tree in trees.items():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if any(
+                    isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                    for d in node.decorator_list
+                ):
+                    todo.append((mod, node.name))
+            elif not isinstance(
+                node, (ast.ClassDef, ast.Assign, ast.AnnAssign, ast.Import, ast.ImportFrom, ast.Expr)
+            ) or (isinstance(node, ast.Expr) and not isinstance(node.value, ast.Constant)):
+                todo += uses(mod, node)
+    reached = set()
+    while todo:
+        key = todo.pop()
+        if key not in reached:
+            reached.add(key)
+            for node in defs[key]:
+                todo += uses(key[0], node)
+    return sorted(
+        f"{mod}.{name}"
+        for (mod, name), nodes in defs.items()
+        if (mod, name) not in reached
+        and isinstance(nodes[0], (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    )
+
+
+def test_every_package_def_has_a_production_caller():
+    """Static guard: every top-level package function and class is reached
+    from a registered query, the bench, the driver entry, a tool or
+    perfbench — or is a reference implementation on ``_REFERENCE_ONLY``.
+    Code only tests call is deleted, not kept: state is rebuilt from
+    lineage on demand, so a path no production run takes is untested
+    surface, not a feature."""
+    import pathlib
+
+    import kafka_streams_rosetta_demo_spark as pkg
+
+    unreached = _unreached_package_defs(pathlib.Path(pkg.__file__).parents[1])
+    assert not unreached, unreached

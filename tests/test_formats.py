@@ -1,6 +1,6 @@
-"""Batch source/sink format surface: JSON/CSV round-trips with explicit
-schemas, permissive corrupt-line policy, and the sharded parquet writer's
-layout guarantees (file count, colocation, determinism)."""
+"""Batch source/sink format surface: Avro/ORC/JSON/CSV round-trips with
+explicit schemas, the permissive corrupt-line policy, and parquet schema
+evolution under mergeSchema."""
 
 from __future__ import annotations
 
@@ -8,12 +8,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from kafka_streams_rosetta_demo_spark.sources.formats import (
-    read_table,
-    shard_column,
-    write_sharded_parquet,
-    write_table,
-)
+from kafka_streams_rosetta_demo_spark.sources.formats import read_table, write_table
 from kafka_streams_rosetta_demo_spark.sources.parquet import load_table
 
 
@@ -114,199 +109,6 @@ def test_json_corrupt_line_yields_null_row_not_failure(spark, tmp_path):
     dropped = [r for r in rows if r.k is None and r.v is None]
     assert sorted(good) == [("a", 1), ("b", 2)]
     assert len(dropped) == 1  # observable drop count, S5-style
-
-
-def test_sharded_write_layout_and_round_trip(spark, sf_smoke, tmp_path):
-    docs = load_table(spark, sf_smoke, "documents")
-    n_shards = 8
-    path = str(tmp_path / "docs_sharded")
-    write_sharded_parquet(docs, path, key_col="doc_id", n_shards=n_shards,
-                          sort_within=["doc_id"])
-
-    # one directory per shard, exactly one parquet file in each
-    shard_dirs = sorted(glob.glob(f"{path}/_shard=*"))
-    assert len(shard_dirs) == n_shards
-    for d in shard_dirs:
-        assert len(glob.glob(f"{d}/*.parquet")) == 1
-
-    back = spark.read.parquet(path)
-    # rows survive intact and every row sits in the shard its key hashes to
-    cols = docs.columns
-    assert _sorted_rows(back, cols) == _sorted_rows(docs, cols)
-    misplaced = back.where(
-        F.col("_shard") != shard_column(F.col("doc_id"), n_shards)
-    ).count()
-    assert misplaced == 0
-
-
-def test_shard_assignment_is_deterministic_and_balanced(spark, sf_smoke):
-    docs = load_table(spark, sf_smoke, "documents")
-    n_shards = 8
-    counts = (
-        docs.groupBy(shard_column(F.col("doc_id"), n_shards).alias("s"))
-        .count()
-        .collect()
-    )
-    assert len(counts) == n_shards
-    total = sum(r["count"] for r in counts)
-    # md5 is uniform: no shard should exceed 2x the fair share even at sf0.001
-    assert max(r["count"] for r in counts) <= 2 * total / n_shards
-
-
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_partitioned_write_static_partition_pruning(spark, sf_smoke, tmp_path):
-    # A literal predicate on the partition column must become a partition
-    # filter (directory-level skip), not a row filter after a full scan.
-    from kafka_streams_rosetta_demo_spark.sources.formats import (
-        write_partitioned_parquet,
-    )
-
-    orders = load_table(spark, sf_smoke, "orders").withColumn(
-        "o_month", F.date_format("o_orderdate", "yyyy-MM")
-    )
-    path = str(tmp_path / "orders_by_month")
-    write_partitioned_parquet(orders, path, ["o_month"], sort_within=["o_orderkey"])
-
-    # layout: one directory per month, exactly one file in each (the
-    # repartition-by-partition-col contract — no small-file explosion)
-    month_dirs = sorted(glob.glob(f"{path}/o_month=*"))
-    assert month_dirs
-    assert all(len(glob.glob(f"{d}/*.parquet")) == 1 for d in month_dirs)
-
-    fact = spark.read.parquet(path)
-    target = sorted(d.rsplit("=", 1)[1] for d in month_dirs)[0]
-    q = fact.where(F.col("o_month") == target)
-    plan = _executed_plan(q)
-    assert "PartitionFilters" in plan and f"o_month#" in plan.split("PartitionFilters")[1][:120]
-    expected = orders.where(F.col("o_month") == target).count()
-    assert q.count() == expected
-
-
-def test_partitioned_join_dynamic_partition_pruning(spark, sf_smoke, tmp_path):
-    # Joining the partitioned fact to a *filtered* dimension must prune the
-    # fact scan at runtime (dynamicpruningexpression reusing the dim's
-    # broadcast) — the scan-avoidance path that makes a 100 TB star join
-    # read only the qualifying partitions.
-    from kafka_streams_rosetta_demo_spark.sources.formats import (
-        write_partitioned_parquet,
-    )
-
-    orders = load_table(spark, sf_smoke, "orders").withColumn(
-        "o_month", F.date_format("o_orderdate", "yyyy-MM")
-    )
-    path = str(tmp_path / "orders_by_month_dpp")
-    write_partitioned_parquet(orders, path, ["o_month"])
-    fact = spark.read.parquet(path)
-
-    dim = (
-        fact.select("o_month").distinct()
-        .withColumn("mm", F.substring("o_month", 6, 2))
-    )
-    j = (
-        fact.join(F.broadcast(dim.where(F.col("mm") == "03")), "o_month")
-        .groupBy("o_month")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert "dynamicpruningexpression" in _executed_plan(j)
-    got = {r["o_month"]: r["n"] for r in j.collect()}
-    exp = {
-        r["o_month"]: r["n"]
-        for r in orders.where(F.substring("o_month", 6, 2) == "03")
-        .groupBy("o_month")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == exp
-
-
-def _rowgroup_prune_fraction(path, col_a, lo_a, hi_a, col_b, lo_b, hi_b):
-    """Fraction of parquet row groups whose min/max stats let a reader SKIP
-    them for the box predicate a in [lo_a, hi_a] AND b in [lo_b, hi_b] —
-    exactly the footer-stats test a scan performs."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    total = skipped = 0
-    for f in _glob.glob(f"{path}/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        names = md.schema.names
-        ia, ib = names.index(col_a), names.index(col_b)
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            sa, sb = g.column(ia).statistics, g.column(ib).statistics
-            total += 1
-            if sa.max < lo_a or sa.min > hi_a or sb.max < lo_b or sb.min > hi_b:
-                skipped += 1
-    assert total > 0
-    return skipped / total
-
-
-def test_zorder_layout_prunes_box_predicates_on_both_dims(spark, sf_smoke, tmp_path):
-    """Z-order clustering must make row-group min/max stats selective on
-    BOTH keyed columns: for a small 2-D box predicate, most row groups of
-    the z-ordered layout are skippable, while a layout sorted on an
-    unrelated column skips (nearly) none. Pinned on the actual parquet
-    footers, not plan text."""
-    from kafka_streams_rosetta_demo_spark.sources.formats import (
-        write_zordered_parquet,
-    )
-
-    ev = load_table(spark, sf_smoke, "events").select("event_id", "user_id", "value")
-    zpath = str(tmp_path / "z")
-    # granularity comes from file count (each file = one curve segment /
-    # one row group at this scale); 32 files ~ a 32-cell space partition
-    write_zordered_parquet(ev, zpath, ["user_id", "value"], n_files=32)
-    upath = str(tmp_path / "u")
-    ev.repartition(32).sortWithinPartitions("event_id").write.mode(
-        "overwrite"
-    ).parquet(upath)
-
-    stats = ev.agg(
-        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
-    ).first()
-    umin, umax, vmin, vmax = stats
-    # a ~1/16-area box in the middle of the domain
-    lo_u = umin + (umax - umin) * 0.4
-    hi_u = umin + (umax - umin) * 0.65
-    lo_v = vmin + (vmax - vmin) * 0.4
-    hi_v = vmin + (vmax - vmin) * 0.65
-    z_skip = _rowgroup_prune_fraction(zpath, "user_id", lo_u, hi_u, "value", lo_v, hi_v)
-    u_skip = _rowgroup_prune_fraction(upath, "user_id", lo_u, hi_u, "value", lo_v, hi_v)
-    assert z_skip > u_skip, (z_skip, u_skip)
-    assert z_skip >= 0.5, f"z-order skipped only {z_skip:.0%} of row groups"
-
-
-def test_compact_parquet_collapses_small_files(spark, sf_smoke, tmp_path):
-    """A 64-file micro-batch-style layout must compact to the byte-sized
-    target file count with identical content. Target is set to half the
-    input bytes so the expected count (2) is size-derived, not hardcoded
-    behavior."""
-    from kafka_streams_rosetta_demo_spark.sources.formats import compact_parquet
-    from kafka_streams_rosetta_demo_spark.sources.parquet import load_table
-
-    src = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
-    docs = load_table(spark, sf_smoke, "documents")
-    docs.repartition(64).write.parquet(src)
-    import os
-
-    n_small = sum(f.endswith(".parquet") for f in os.listdir(src))
-    assert n_small == 64
-    total = sum(
-        os.path.getsize(os.path.join(src, f))
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    )
-    n = compact_parquet(spark, src, out, target_file_bytes=total // 2 + 1)
-    n_out = sum(f.endswith(".parquet") for f in os.listdir(out))
-    assert n == n_out == 2
-    a = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    b = sorted(r.doc_id for r in docs.collect())
-    assert a == b
 
 
 def test_parquet_merge_schema_evolution(spark, tmp_path):

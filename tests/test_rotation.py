@@ -34,9 +34,14 @@ def test_staleness_order_fronts_unchecked_then_oldest(tmp_path):
     assert set(order[len(never) + 3 :]) == set(checked_r2)
 
 
-def test_staleness_order_none_without_history(tmp_path):
+def test_staleness_order_none_without_history(tmp_path, monkeypatch):
     load_all()
     assert _staleness_order(root=tmp_path) is None
+    # without history the registry keeps registration order
+    import kafka_streams_rosetta_demo_spark.queries as registry
+
+    monkeypatch.setattr(registry, "_staleness_order", lambda: None)
+    assert list(load_all()) == list(REGISTRY)
 
 
 def test_load_all_fronts_least_evidenced_queries():

@@ -547,35 +547,8 @@ def test_reader_writer_options():
 
 
 # ---------------------------------------------------------------------------
-# Custom stateful operator (applyInPandasWithState) + topic DDL (S4)
+# Topic DDL (S4)
 # ---------------------------------------------------------------------------
-
-
-def test_stateful_running_totals_converges_to_batch(spark, split_events_dir, tmp_path):
-    """The applyInPandasWithState accumulator, fed 3 micro-batches, must end
-    at the same per-key totals a batch aggregation computes."""
-    import pytest
-
-    from kafka_streams_rosetta_demo_spark.streaming.stateful import running_totals
-
-    stream = _stream(spark, split_events_dir, max_files_per_trigger=1)
-    totals = running_totals(stream, key_col="user_id", value_col="value")
-    state = {
-        r.user_id: r for r in _changelog_state(totals, ["user_id"], tmp_path).collect()
-    }
-
-    expected = {
-        r.user_id: (r.n, float(r.total))
-        for r in spark.read.parquet(split_events_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    assert state.keys() == expected.keys()
-    for k, row in state.items():
-        n, total = expected[k]
-        assert row.n_events == n
-        assert row.total_value == pytest.approx(total, rel=1e-9)
 
 
 def test_topic_ddl_parses_reference_style_properties():

@@ -104,6 +104,13 @@ def test_get_spark_workers_keep_zip_directories_across_tasks(spark):
     assert conf.get("spark.python.daemon.module") == worker_daemon.__name__
     # and no console progress bar in front of what bench children print
     assert conf.get("spark.ui.showConsoleProgress") == "false"
+    # nor a pair of "disabling AQE" WARNs per stateful stream start, while
+    # AQE stays on for the foreachBatch sink's batch jobs
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    for cls in ("ResolveWriteToStream", "MicroBatchExecution"):
+        name = f"org.apache.spark.sql.execution.streaming.runtime.{cls}"
+        assert log4j.LogManager.getLogger(name).getLevel().toString() == "ERROR"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
     def probe(batches):
         for _ in batches:

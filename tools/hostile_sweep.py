@@ -12,11 +12,6 @@ Two modes:
   proves the registry's per-query UTC pin shields every date/window
   rendering from host-timezone misconfiguration.
 
-Streaming queries deliberately re-pin ``shuffle.partitions`` to the engine
-default when they run (state-store partitioning contract), so sorted
-execution order means batch names after ``streaming_*`` run at 32 — same
-methodology as the round-6 records.
-
 Usage: ``python tools/hostile_sweep.py aqe_off|tz|plain [sf_dir]``
 (``plain`` = default session — the cross-SF parity sweep runner)
 """
@@ -87,7 +82,7 @@ def main() -> int:
         # from a bare SparkSession.builder. The other modes are
         # deliberately unfriendly; this one is merely UNTUNED, and it is
         # the most likely real-world misconfiguration (the registry's
-        # per-query UTC pin and the streaming queries' partition re-pin
+        # per-query UTC pin and the runner's scoped state-partition pin
         # are what make it safe).
         pass
     else:
