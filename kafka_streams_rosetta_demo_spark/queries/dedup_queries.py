@@ -1025,7 +1025,7 @@ def dedup_winnowing_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return batch_docs.join(dups, "doc_id", "left").select(
         "doc_id",
         F.coalesce("n", F.lit(0)).cast("long").alias("n_corpus_matches"),
-        (F.coalesce("n", F.lit(0)) == 0).alias("keep"),
+        (F.coalesce("n", F.lit(0)) < _WIN_SCREEN_MIN_SHARED).alias("keep"),
     )
 
 

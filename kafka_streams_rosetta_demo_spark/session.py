@@ -14,6 +14,16 @@ UTC session time so event-time semantics are stable across machines.
 Python workers start through :mod:`.worker_daemon`, so an Arrow/pandas-UDF
 task no longer re-reads ``pyspark.zip`` on every task set-up (100-200 ms
 each on CPython < 3.13); a plain ``SparkSession.builder`` session still does.
+
+Local file writes fork nothing either. Without ``libhadoop`` (pip-installed
+PySpark ships none), Hadoop's local FileSystem sets every mode it creates by
+forking ``chmod``: 19 per streaming micro-batch (sink directories, part files,
+checkpoint entries and each one's ``.crc``), ~148 per 7-trigger drain.
+``get_spark`` puts ``jvm/nio-local-fs.jar`` on the driver and executor class
+paths and makes its ``rosetta.fs.NioLocalFileSystem`` the ``file:``
+FileSystem: the same checksummed local FS, with modes set through Java NIO
+and Hive's no-overwrite ``rename`` guard kept. A plain ``SparkSession.builder``
+session, or one attached to a JVM launched without the jar, still forks.
 """
 
 from __future__ import annotations
@@ -23,6 +33,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar")
+LOCAL_FS_CLASS = "rosetta.fs.NioLocalFileSystem"
 
 # Logged at ERROR only. AQE is on session-wide because the foreachBatch sink's
 # batch jobs use it; every stateful stream start then logs, from each of
@@ -80,8 +93,12 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.daemon.module", "kafka_streams_rosetta_demo_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    for key in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+        conf[key] = os.pathsep.join(filter(None, (conf.get(key), _LOCAL_FS_JAR)))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -50,8 +50,12 @@ and committed consumer offsets (``CallsAggregationApp.java:106``;
 ``sources/0/N``, ``offsets/N`` and ``commits/N`` entries and a state
 ``N.delta`` file through the checkpoint manager, each a write-then-rename
 of a temp file — on a local path a plain POSIX rename, with no ``readlink``
-fork. Restarting a query on the same checkpoint resumes from committed
-progress and reprocesses nothing. Delivery is at-least-once, the contract
+fork. In a ``get_spark`` session no ``chmod`` fork either: the session's
+``file:`` FileSystem sets the modes of these entries, their ``.crc`` files
+and the sink's part files in process (``session.py``), where Hadoop's own
+forks 19 ``chmod`` per data trigger without ``libhadoop``. Restarting a
+query on the same checkpoint resumes from committed progress and
+reprocesses nothing. Delivery is at-least-once, the contract
 (T5) the reference runs under: a batch whose sink write landed but whose
 ``commits/N`` did not is rerun on restart under the same id. It recomputes
 the same rows into the same ``_batch_id=N`` directory, which the overwrite

@@ -1302,6 +1302,76 @@ def test_checkpoint_manager_follows_the_checkpoint_scheme(path, local):
             assert spark.conf.writes == 0
 
 
+# Run by test_stream_drains_fork_no_chmod_or_readlink in a fresh process: one
+# update-mode drain with a batch_fn, one append-mode drain, over two staged
+# frames (one micro-batch per landed part file); prints how many batches
+# batch_fn saw.
+_FORK_PROBE = """
+from pyspark.sql import functions as F
+from kafka_streams_rosetta_demo_spark.session import get_spark
+from kafka_streams_rosetta_demo_spark.streaming.runner import run_topology
+
+spark = get_spark(app_name="fork-probe", master="local[2]", shuffle_partitions=2)
+frames = [spark.range(i * 10, i * 10 + 10).select((F.col("id") % 3).alias("k"), "id") for i in range(2)]
+batches = []
+
+def tally(batch):
+    batches.append(1)
+    return batch.withColumn("twice", F.col("n") * 2)
+
+upd = run_topology(
+    spark, frames, lambda s: s.groupBy("k").agg(F.count("id").alias("n")), keys=["k"], batch_fn=tally
+)
+assert sorted((r.k, r.n, r.twice) for r in upd.collect()) == [(0, 7, 14), (1, 7, 14), (2, 6, 12)]
+assert run_topology(spark, frames).count() == 20
+print(len(batches))
+"""
+
+
+def test_stream_drains_fork_no_chmod_or_readlink(tmp_path):
+    """A ``get_spark`` session writes its streaming checkpoints, sink and
+    staging without forking: no ``chmod`` (the session's ``file:``
+    FileSystem sets modes through NIO; Hadoop's own forks ~19 per micro-batch
+    without libhadoop) and no ``readlink`` (the runner's FileSystem-API
+    checkpoint manager). Counted by logging shims first on the ``PATH`` of
+    the process that launches the JVM."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    shims = tmp_path / "bin"
+    shims.mkdir()
+    logs = {}
+    for tool in ("chmod", "readlink"):
+        logs[tool] = tmp_path / f"{tool}.log"
+        shim = shims / tool
+        shim.write_text(f'#!/bin/sh\necho "$*" >> {logs[tool]}\nexec {shutil.which(tool)} "$@"\n')
+        shim.chmod(0o755)
+    env = dict(os.environ, PATH=f"{shims}{os.pathsep}{os.environ['PATH']}")
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp_path))
+    # the shims are what a forked chmod resolves to
+    probe = tmp_path / "probe"
+    probe.touch()
+    subprocess.run(["chmod", "600", str(probe)], env=env, check=True)
+    assert logs["chmod"].read_text().count("\n") == 1
+    logs["chmod"].unlink()
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _FORK_PROBE],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert int(proc.stdout.split()[-1]) >= 2  # batch_fn ran on each micro-batch
+    forks = {t: log.read_text().splitlines() if log.exists() else [] for t, log in logs.items()}
+    assert forks == {"chmod": [], "readlink": []}, {t: len(v) for t, v in forks.items()}
+
+
 def test_streaming_queries_go_through_run_topology():
     """Static guard: the stage → stream → checkpoint → conf → cleanup
     protocol lives in the runner only, so it cannot grow back one query at
