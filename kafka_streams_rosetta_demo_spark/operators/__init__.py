@@ -17,7 +17,8 @@ North-star extensions (100 TB LLM-data-pipeline ops):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from .rekey import rekey, select_key
 from .windowed_agg import unwrap_window, windowed_call_agg
@@ -38,8 +39,25 @@ def rebalance(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
+def with_totals(df: DataFrame, **totals: Column) -> DataFrame:
+    """``df`` with one column per named total — an aggregate expression over
+    all of ``df``'s rows — repeated on every row. For bounded frames only
+    (|sources|, bins, buckets): ONE global aggregate carries the rows
+    (``collect_list``) and the totals through a single partition and
+    explodes the rows back. That is the data movement of an unpartitioned
+    ``Window`` total, without its WindowExec "No Partition Defined"
+    warning, and unlike a totals frame cross-joined back it plans ``df``
+    once."""
+    names = list(totals)
+    return df.agg(
+        F.collect_list(F.struct(*df.columns)).alias("_rows"),
+        *[e.alias(n) for n, e in totals.items()],
+    ).select(F.explode("_rows").alias("_r"), *names).select("_r.*", *names)
+
+
 __all__ = [
     "rebalance",
+    "with_totals",
     "rekey",
     "select_key",
     "windowed_call_agg",

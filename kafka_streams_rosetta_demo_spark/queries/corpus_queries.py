@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import rebalance
+from ..operators import rebalance, with_totals
 from ..operators.graph import connected_components, keep_best_survivors
 from ..operators.textsim import (
     jaccard_verify,
@@ -1319,16 +1319,13 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded IEEE in both engines).
 
     Scale: one map-side-partial count per source (the only shuffle), then
-    a window over the ~|sources| rows — the output is bounded by the
-    source vocabulary, not the corpus. The weights feed
+    one global totals aggregate over the ~|sources| rows — the output is
+    bounded by the source vocabulary, not the corpus. The weights feed
     ``sample_mixture_weighted``-style epoch plans downstream."""
     docs = load_table(spark, sf_dir, "documents").select("source")
     per = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     sq = F.floor(F.sqrt(F.col("n_docs").cast("double")) * 1000).cast("long")
-    w = Window.partitionBy()
-    withs = per.withColumn("sq", sq).withColumn(
-        "tn", F.sum("n_docs").over(w)
-    ).withColumn("tsq", F.sum("sq").over(w))
+    withs = with_totals(per.withColumn("sq", sq), tn=F.sum("n_docs"), tsq=F.sum("sq"))
     return withs.select(
         "source",
         "n_docs",
@@ -1482,10 +1479,7 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         .fillna(0, subset=["tc"])
         .select("bkt", (F.col("rc") + 1).alias("rc1"), (F.col("tc") + 1).alias("tc1"))
     )
-    win = Window.partitionBy()  # bucket-table frame — bounded at B rows
-    w = w.withColumn("rt", F.sum("rc1").over(win)).withColumn(
-        "tt", F.sum("tc1").over(win)
-    )
+    w = with_totals(w, rt=F.sum("rc1"), tt=F.sum("tc1"))  # B-row frame
     # ln-quantization boundary risk, accepted (canonical note — the PSI /
     # Zipf / perplexity queries carry the same pattern): unlike sqrt, ln is
     # not IEEE-754 correctly-rounded, so Spark's Math.log and DuckDB's libm
@@ -1604,10 +1598,10 @@ def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB scale this plans for (see the inline derivation below).
 
     Scale: ONE map-side-combining aggregate over the corpus (count +
-    token-sum per source — the only shuffle, |sources| keys), then a
-    window over the bounded source vocabulary. The plan table is
-    |sources| rows regardless of corpus size — this is a metadata query
-    at 100 TB, its cost is the one scan."""
+    token-sum per source — the only shuffle, |sources| keys), then
+    one global totals aggregate over the bounded source vocabulary. The
+    plan table is |sources| rows regardless of corpus size — this is a
+    metadata query at 100 TB, its cost is the one scan."""
     docs = load_table(spark, sf_dir, "documents").select(
         "source", F.size(F.split("text", " ")).alias("toks")
     )
@@ -1623,11 +1617,8 @@ def _budget_plan_math(per: DataFrame) -> DataFrame:
     engine twin of ``_BUDGET_PLAN_TAIL``, shared by the whitespace and BPE
     planners."""
     sq = F.floor(F.sqrt(F.col("n_tokens").cast("double")) * 1000).cast("long")
-    w = Window.partitionBy()
     withs = (
-        per.withColumn("sq", sq)
-        .withColumn("tt", F.sum("n_tokens").over(w))
-        .withColumn("tsq", F.sum("sq").over(w))
+        with_totals(per.withColumn("sq", sq), tt=F.sum("n_tokens"), tsq=F.sum("sq"))
         # Overflow-safe int64 plan math (round-10 ADVICE): the naive
         # sq*(tt*4) product overflows BIGINT silently around a ~5e10-token
         # corpus — far below the 100 TB (~2.5e13 tokens) this query claims
@@ -1675,7 +1666,11 @@ def _budget_plan_math(per: DataFrame) -> DataFrame:
 # counts under the corpus-trained BPE merge table (round 10)
 # ---------------------------------------------------------------------------
 
-from ..operators.bpe import bpe_oracle_with, bpe_oracle_word_tokens  # noqa: E402
+from ..operators.bpe import (  # noqa: E402
+    bpe_oracle_with,
+    bpe_oracle_word_tokens,
+    explode_words,
+)
 
 _BPE_DOC_WORDS = """
 dw AS (
@@ -1933,28 +1928,39 @@ def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate exceeds int64 for sources to ~9.2e15 tokens — the naive
     ``sum*1e6`` products this round replaced wrapped silently past ~9 TB
     of text per source (round-10 ADVICE)."""
-    from ..operators.bpe import corpus_words
     from .artifacts import bpe_word_tokens
 
-    d = corpus_words(spark, sf_dir, "source")
-    wt = bpe_word_tokens(spark, sf_dir)
-    agg = (
+    docs = load_table(spark, sf_dir, "documents")
+    totals = fertility_totals(docs, bpe_word_tokens(spark, sf_dir), "n_bpe_tokens")
+    return fertility_report(totals, "n_bpe_tokens")
+
+
+def fertility_totals(docs: DataFrame, wt: DataFrame, n_tokens: str) -> DataFrame:
+    """Per-source word, token and char totals of ``docs``' words under the
+    tokenizer's ``(word, n_toks)`` map ``wt``, the token total named
+    ``n_tokens`` — the aggregate stage of both fertility queries (BPE and
+    unigram) and of their streaming twins."""
+    d = explode_words(docs, "source")
+    return (
         d.join(F.broadcast(wt), d.w == wt.word)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_toks").cast("long").alias("n_bpe_tokens"),
+            F.sum("n_toks").cast("long").alias(n_tokens),
             F.sum(F.length("w")).cast("long").alias("n_chars"),
         )
     )
-    return agg.select(
+
+
+def fertility_report(totals: DataFrame, n_tokens: str) -> DataFrame:
+    """Tokens per word and chars per token, in exact ppm, over a
+    :func:`fertility_totals` result."""
+    return totals.select(
         "source",
         "n_words",
-        "n_bpe_tokens",
-        F.expr(_ppm_ratio_sql("n_bpe_tokens", "n_words", "DIV")).alias(
-            "fertility_ppm"
-        ),
-        F.expr(_ppm_ratio_sql("n_chars", "n_bpe_tokens", "DIV")).alias(
+        n_tokens,
+        F.expr(_ppm_ratio_sql(n_tokens, "n_words", "DIV")).alias("fertility_ppm"),
+        F.expr(_ppm_ratio_sql("n_chars", n_tokens, "DIV")).alias(
             "chars_per_token_ppm"
         ),
     )
@@ -2525,7 +2531,7 @@ def corpus_domain_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE map-side-combining aggregate over |domains| keys (distinct-source
     via the standard two-phase expand); the dup side joins the PAIR-sized
     distinct-id frame (never the corpus) on the doc_id key; the corpus
-    total is a SinglePartition window over |domains| rows — bounded model
+    total is one global aggregate over |domains| rows — bounded model
     state, the corpus_token_budget_plan discipline."""
     from .artifacts import jaccard_pairs_075
 
@@ -2557,8 +2563,7 @@ def corpus_domain_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dup_docs"),
         )
     )
-    w_all = Window.partitionBy()  # |domains| rows — bounded
-    t = prof.withColumn("total_docs", F.sum("n_docs").over(w_all).cast("long"))
+    t = with_totals(prof, total_docs=F.sum("n_docs").cast("long"))
     cap = f"least(n_docs, total_docs * {DOMAIN_CAP_PERMILLE} DIV 1000)"
     return t.select(
         "domain",
@@ -2691,30 +2696,12 @@ def text_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT word), so the registered plan is the vocabulary broadcast
     join + ONE map-side-combining per-source aggregate — byte-identical
     shape to ``text_bpe_fertility``, overflow-safe ppm splits included."""
-    from ..operators.bpe import corpus_words
     from .artifacts import unigram_word_tokens
 
-    d = corpus_words(spark, sf_dir, "source")
+    docs = load_table(spark, sf_dir, "documents")
     wt = unigram_word_tokens(spark, sf_dir)
-    agg = (
-        d.join(F.broadcast(wt), d.w == wt.word)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_toks").cast("long").alias("n_unigram_tokens"),
-            F.sum(F.length("w")).cast("long").alias("n_chars"),
-        )
-    )
-    return agg.select(
-        "source",
-        "n_words",
-        "n_unigram_tokens",
-        F.expr(_ppm_ratio_sql("n_unigram_tokens", "n_words", "DIV")).alias(
-            "fertility_ppm"
-        ),
-        F.expr(_ppm_ratio_sql("n_chars", "n_unigram_tokens", "DIV")).alias(
-            "chars_per_token_ppm"
-        ),
+    return fertility_report(
+        fertility_totals(docs, wt, "n_unigram_tokens"), "n_unigram_tokens"
     )
 
 

@@ -1008,21 +1008,34 @@ def dedup_winnowing_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .artifacts import winnowing_index
 
     fps = winnowing_index(spark, sf_dir)
-    batch_fp = fps.where(F.col("doc_id") % 5 == 0)
-    corpus_fp = fps.where(F.col("doc_id") % 5 != 0).select(
-        F.col("doc_id").alias("corpus_id"), "f"
-    )
-    dups = (
-        batch_fp.join(corpus_fp, "f")
-        .groupBy("doc_id")
-        .agg(F.count_distinct("corpus_id").alias("n"))
-    )
     batch_docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
         .where(F.col("doc_id") % 5 == 0)
     )
-    return batch_docs.join(dups, "doc_id", "left").select(
+    return winnow_screen_verdicts(
+        batch_docs, fps.where(F.col("doc_id") % 5 == 0), fps
+    )
+
+
+def winnow_screen_verdicts(
+    docs: DataFrame, fps: DataFrame, index: DataFrame
+) -> DataFrame:
+    """The screen's verdict per arriving doc — one stage for
+    ``dedup_winnowing_screen`` and its streaming twin's micro-batches.
+    ``docs`` holds the arriving ``doc_id``s, ``fps`` their ``(doc_id, f)``
+    fingerprints, ``index`` the corpus ``winnowing_index`` (its non-batch
+    docs are the probe side). A doc is kept when it shares a fingerprint
+    with fewer than ``_WIN_SCREEN_MIN_SHARED`` distinct corpus docs."""
+    corpus_fp = index.where(F.col("doc_id") % 5 != 0).select(
+        F.col("doc_id").alias("corpus_id"), "f"
+    )
+    dups = (
+        fps.join(corpus_fp, "f")
+        .groupBy("doc_id")
+        .agg(F.count_distinct("corpus_id").alias("n"))
+    )
+    return docs.join(dups, "doc_id", "left").select(
         "doc_id",
         F.coalesce("n", F.lit(0)).cast("long").alias("n_corpus_matches"),
         (F.coalesce("n", F.lit(0)) < _WIN_SCREEN_MIN_SHARED).alias("keep"),

@@ -100,11 +100,14 @@ def wins_from_events(events: DataFrame) -> DataFrame:
     lose = F.when(F.col("value") > F.col("p_value"), F.col("p_type")).otherwise(
         F.col("event_type")
     )
-    return (
-        cmp.select(win.alias("winner"), lose.alias("loser"))
-        .groupBy("winner", "loser")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return win_counts(cmp.select(win.alias("winner"), lose.alias("loser")))
+
+
+def win_counts(comparisons: DataFrame) -> DataFrame:
+    """``(winner, loser) -> n`` over one row per comparison — the aggregate
+    of the batch deriver and of the streaming emitter's sink
+    (``streaming_preference_winrate``)."""
+    return comparisons.groupBy("winner", "loser").agg(F.count(F.lit(1)).alias("n"))
 
 
 def winrate_matrix(wins: DataFrame) -> DataFrame:

@@ -16,9 +16,10 @@ shuffle lands, why the plan survives 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import with_totals
 from ..sources.parquet import load_table
 from . import register
 
@@ -2880,8 +2881,16 @@ def timeseries_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "value", "ts", "event_id",
         F.expr("unix_micros(ts) div 21600000000").alias("bucket"),
     )
+    return ohlc_bars(e, "event_type", "bucket")
+
+
+def ohlc_bars(ev: DataFrame, *keys: str | Column) -> DataFrame:
+    """The OHLC aggregate of ``ev`` grouped by ``keys`` — one stage for
+    ``timeseries_downsample_ohlc`` (keyed by bucket id) and its streaming
+    twin (keyed by the watermarked 6-hour ``window``). Open/close come from
+    ``min_by``/``max_by`` over the (ts, event_id) total order."""
     order_key = F.struct("ts", "event_id")
-    return e.groupBy("event_type", "bucket").agg(
+    return ev.groupBy(*keys).agg(
         F.min_by("value", order_key).alias("open_v"),
         F.max("value").alias("high_v"),
         F.min("value").alias("low_v"),
@@ -3220,19 +3229,36 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE scan with conditional aggregation (base/current counted in
     the same partial aggregate — no second pass, no self-join), one
-    10-group shuffle, then window math over the 10-row bin frame. The
-    literal bin fan-out is a broadcast-range join on a 10-row frame."""
-    ev = _t(spark, sf_dir, "events").select(
-        F.least(
-            F.floor(F.col("value") / _PSI_WIDTH).cast("long"),
-            F.lit(_PSI_BINS - 1).cast("long"),
-        ).alias("bin"),
-        (F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp")).alias("is_base"),
+    10-group shuffle, then the totals of the 10-row bin frame (one global
+    aggregate). The literal bin fan-out is a broadcast-range join on a
+    10-row frame."""
+    return psi_report(spark, psi_histogram(_t(spark, sf_dir, "events")))
+
+
+def psi_histogram(ev: DataFrame) -> DataFrame:
+    """Per fixed bin, the base-window and current-window event counts of
+    ``ev`` (bins present in ``ev`` only) — the aggregate stage of
+    ``profile_drift_psi`` and its streaming twin's state."""
+    return (
+        ev.select(
+            F.least(
+                F.floor(F.col("value") / _PSI_WIDTH).cast("long"),
+                F.lit(_PSI_BINS - 1).cast("long"),
+            ).alias("bin"),
+            (F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp")).alias("is_base"),
+        )
+        .groupBy("bin")
+        .agg(
+            F.count(F.when(F.col("is_base"), 1)).alias("base_n"),
+            F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
+        )
     )
-    counts = ev.groupBy("bin").agg(
-        F.count(F.when(F.col("is_base"), 1)).alias("base_n"),
-        F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
-    )
+
+
+def psi_report(spark: SparkSession, counts: DataFrame) -> DataFrame:
+    """The PSI math over a :func:`psi_histogram` result: fan out to all
+    ``_PSI_BINS`` bins, +1-smoothed ppm shares, milli-quantized log ratio
+    per bin, and the integer PSI total on every row."""
     bins = spark.range(_PSI_BINS).select(F.col("id").alias("bin"))
     full = (
         bins.join(counts, "bin", "left")
@@ -3240,11 +3266,9 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("bin", F.col("base_n").cast("long").alias("base_n"),
                 F.col("curr_n").cast("long").alias("curr_n"))
     )
-    w = Window.partitionBy()  # 10-row bin frame — bounded
-    full = full.withColumn("tb", F.sum(F.col("base_n") + 1).over(w)).withColumn(
-        "tc", F.sum(F.col("curr_n") + 1).over(w)
-    )
-    full = full.select(
+    full = with_totals(
+        full, tb=F.sum(F.col("base_n") + 1), tc=F.sum(F.col("curr_n") + 1)
+    ).select(
         "bin",
         "base_n",
         "curr_n",
@@ -3260,9 +3284,7 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
     ).alias("contrib_nano")
     out = full.select("bin", "base_n", "curr_n", "p_ppm", "q_ppm", contrib)
-    return out.withColumn(
-        "psi_nano_total", F.sum("contrib_nano").over(Window.partitionBy())
-    )
+    return with_totals(out, psi_nano_total=F.sum("contrib_nano"))
 
 
 # ---------------------------------------------------------------------------

@@ -213,6 +213,16 @@ def rosetta_null_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# The KTable's key, order and value columns — one spec for the batch table
+# and its streaming twin (streaming_ktable_latest).
+KTABLE_LATEST = dict(
+    key="user_id",
+    ts_col="ts",
+    seq_col="event_id",
+    value_cols=["ts", "event_id", "event_type", "value"],
+)
+
+
 @register(
     "rosetta_ktable_latest",
     oracle="""
@@ -241,14 +251,7 @@ def rosetta_ktable_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.state import latest_per_key
 
-    ev = load_table(spark, sf_dir, "events")
-    return latest_per_key(
-        ev,
-        key="user_id",
-        ts_col="ts",
-        seq_col="event_id",
-        value_cols=["ts", "event_id", "event_type", "value"],
-    )
+    return latest_per_key(load_table(spark, sf_dir, "events"), **KTABLE_LATEST)
 
 
 # ---------------------------------------------------------------------------
@@ -339,6 +342,14 @@ def kafka_wire_framing(spark: SparkSession, sf_dir: str) -> DataFrame:
     to_json/from_json — no Python), then one partial-agg shuffle on
     event_type.
     """
+    return wire_framing_counters(load_table(spark, sf_dir, "events"))
+
+
+def wire_framing_counters(ev: DataFrame) -> DataFrame:
+    """``kafka_wire_framing``'s per-event-type drop counters over an events
+    frame — one stage for the batch query and its streaming twin
+    (``streaming_wire_roundtrip``): JSON values framed and unframed through
+    the Confluent wire format, every 41st magic byte mangled in flight."""
     from ..streaming.kafka_io import KafkaTopicSpec
 
     spec = KafkaTopicSpec(
@@ -353,7 +364,6 @@ def kafka_wire_framing(spark: SparkSession, sf_dir: str) -> DataFrame:
         wire_format="confluent",
         schema_id=7,
     )
-    ev = load_table(spark, sf_dir, "events")
     framed = spec.encode_value(F.struct("event_id", "value"))
     on_wire = F.when(
         F.col("event_id") % 41 == 0,
@@ -405,6 +415,14 @@ def kafka_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``to_avro`` expressions instead and the topology is unchanged. One
     partial-agg shuffle on event_type.
     """
+    return avro_roundtrip_counters(load_table(spark, sf_dir, "events"))
+
+
+def avro_roundtrip_counters(ev: DataFrame) -> DataFrame:
+    """``kafka_avro_roundtrip``'s per-event-type drop counters over an
+    events frame — one stage for the batch query and its streaming twin
+    (``streaming_avro_roundtrip``): Avro values framed and unframed through
+    the Confluent wire format, every 43rd body truncated in flight."""
     from ..streaming.kafka_io import KafkaTopicSpec
 
     spec = KafkaTopicSpec(
@@ -420,7 +438,6 @@ def kafka_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         wire_format="confluent",
         schema_id=11,
     )
-    ev = load_table(spark, sf_dir, "events")
     framed = spec.encode_value(F.struct("event_id", "value"))
     # Body is always >= 9 bytes (varint long + 8-byte double), so keeping
     # only 3 body bytes guarantees a truncation the decoder must reject.
@@ -493,7 +510,13 @@ def window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles once on user_id and merges windows in state — no self-join, no
     sort beyond the per-key window merge.
     """
-    ev = load_table(spark, sf_dir, "events")
+    return session_totals(load_table(spark, sf_dir, "events"))
+
+
+def session_totals(ev: DataFrame) -> DataFrame:
+    """Per-user 30-minute-gap sessions with their event count and rounded
+    value sum — one stage for ``window_session`` and its streaming twin
+    (``streaming_session_windows``, which watermarks ``ev`` first)."""
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(

@@ -11,10 +11,22 @@ one exactly-once sink, an executor-side parquet log with one overwritten
 ``_batch_id=<id>`` directory per micro-batch: append-mode queries read the
 whole log back; update-mode queries (``keys=``) compact it
 last-write-per-key (the compacted-output-topic read). Nothing moves through
-the driver. The DuckDB oracle is the *same SQL* as the batch twin, so the
-gate proves the streaming execution path computes identical state — the
-strongest brokerless check available for SURVEY §2.1/§2.6 (S1 file form,
-S2, J1, T1–T4).
+the driver.
+
+Twin contract. A stream with a batch twin is defined once, by the twin:
+
+- its oracle is the twin's oracle object (``REGISTRY["<twin>"].oracle``,
+  the very string the twin registered), so the gate proves the streaming
+  execution path computes the twin's table — the strongest brokerless
+  check available for SURVEY §2.1/§2.6 (S1 file form, S2, J1, T1–T4);
+- its body is the twin's stages around :func:`run_topology`: where the
+  batch query is ``post(stage(table))``, the stream is
+  ``post(run_topology(..., stage))``, the stage passed as ``build`` (run on
+  the stream) or as ``batch_fn`` (run on each micro-batch).
+
+Only what a batch plan cannot express is written here: watermarks, the
+windowed groupings that replace batch bucket ids, the ±band stream-stream
+join, and how the input is staged into micro-batches.
 
 The events-table topologies read ``events.parquet`` as one micro-batch
 (``streaming_dedup_events`` lands the events and their redelivery as one
@@ -28,37 +40,44 @@ replayed deliberately.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ..operators.joins import enrich_calls_with_customers
 from ..sources.parquet import events_to_calls, normalize_event_ts, rosetta_customers
 from ..streaming.runner import run_topology
 from ..streaming.transforms import streaming_latest_per_key, streaming_windowed_call_agg
-# Streaming twins share their batch twin's oracle SQL verbatim — one source
-# of truth, so the gate proves the streaming path computes the identical
-# state. Importing the batch modules registers the twins read from REGISTRY.
+# Importing the batch modules registers the twins read from REGISTRY.
 from . import REGISTRY, corpus_queries, preference_queries, register  # noqa: F401
-from .dedup_queries import _WINNOW_SCREEN_ORACLE
-from .relational_queries import _PSI_ORACLE
-from .rosetta_queries import CALL_AGG_CTE, CUSTOMERS_CTE
+from .dedup_queries import winnow_screen_verdicts
+from .relational_queries import _PSI_BINS, ohlc_bars, psi_histogram, psi_report
+from .rosetta_queries import (
+    CALL_AGG_CTE,
+    KTABLE_LATEST,
+    avro_roundtrip_counters,
+    session_totals,
+    wire_framing_counters,
+)
 
 # The events-table topologies stream the landing directory's events file.
 _EVENTS = "events.parquet"
 
+# The final watermark of the events stream under its 24-hour delay: an
+# append-mode topology has emitted exactly the windows that closed by it.
+_FINAL_WM_CTE = """wm AS (
+  SELECT max(date_trunc('microseconds', ts)) - INTERVAL 24 HOURS AS cutoff
+  FROM events
+)"""
+
 
 @register(
     "streaming_calls_window_agg",
-    oracle=f"""
-WITH {CALL_AGG_CTE.strip()}
-SELECT * FROM call_agg
-""",
+    oracle=REGISTRY["rosetta_calls_window_agg"].oracle,
 )
 def streaming_calls_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline 1 as a *streaming* query (``CallsAggregationApp`` whole):
     file-source CALLS stream → 24h watermark → 1h tumbling update-mode
     aggregate → checkpointed foreachBatch changelog merge. Final state must
-    hash-match the same oracle as the batch twin (rosetta_calls_window_agg)
-    — one plan, two execution modes, one answer."""
+    hash-match the batch twin's oracle (rosetta_calls_window_agg) — one
+    plan, two execution modes, one answer."""
     # data-grain key space (phone × window): backlog-sized state
     return run_topology(
         spark,
@@ -70,69 +89,30 @@ def streaming_calls_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_ktable_latest",
-    oracle="""
-SELECT user_id,
-       date_trunc('microseconds', ts) AS last_ts,
-       event_id   AS last_event_id,
-       event_type AS last_event_type,
-       value      AS last_value
-FROM events
-QUALIFY row_number() OVER (
-    PARTITION BY user_id
-    ORDER BY date_trunc('microseconds', ts) DESC, event_id DESC
-) = 1
-""",
-)
+@register("streaming_ktable_latest", oracle=REGISTRY["rosetta_ktable_latest"].oracle)
 def streaming_ktable_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 as a streaming query: ``builder.table(topic)`` — latest-per-key
     state maintained by the same max_by aggregate as the batch twin, in
-    update mode with checkpointed state. Final state must equal the batch
-    answer (same oracle as rosetta_ktable_latest)."""
+    update mode with checkpointed state, over the twin's key/order/value
+    spec (``KTABLE_LATEST``). Final state must equal the batch answer
+    (rosetta_ktable_latest's oracle)."""
     return run_topology(
         spark,
         sf_dir,
-        lambda ev: streaming_latest_per_key(
-            normalize_event_ts(ev),
-            key="user_id",
-            ts_col="ts",
-            seq_col="event_id",
-            value_cols=["ts", "event_id", "event_type", "value"],
-        ),
+        lambda ev: streaming_latest_per_key(normalize_event_ts(ev), **KTABLE_LATEST),
         glob=_EVENTS,
         keys=["user_id"],
         state="backlog",
     )
 
 
-@register(
-    "streaming_enriched",
-    oracle=f"""
-WITH {CALL_AGG_CTE.strip()},
-{CUSTOMERS_CTE.strip()}
-SELECT a.id_telef_origen,
-       strftime(a.window_start, '%d/%m/%Y %H:%M') AS window_start_ts,
-       strftime(a.window_end, '%d/%m/%Y %H:%M') AS window_end_ts,
-       a.calls_count,
-       a.max_duracion_origen,
-       a.total_duracion_origen,
-       a.avg_duracion_origen,
-       CASE WHEN c.TELEFONO IS NULL THEN 'Unknown' ELSE c.DOC_CLIENTE END AS doc_cliente,
-       CASE WHEN c.TELEFONO IS NULL THEN 0 ELSE c.CLIENTE_ORANGE END AS cliente_orange,
-       CASE WHEN c.TELEFONO IS NULL THEN 0 ELSE c.DAYS_EXCLIENTE END AS days_excliente,
-       CASE WHEN c.TELEFONO IS NULL THEN 'Unknown' ELSE c.OPERADOR_ACTUAL END AS operador_actual,
-       CASE WHEN c.TELEFONO IS NULL THEN 'Unknown' ELSE c.RIESGO END AS riesgo
-FROM call_agg a
-LEFT JOIN customers c ON a.id_telef_origen = c.TELEFONO
-""",
-)
+@register("streaming_enriched", oracle=REGISTRY["rosetta_enriched"].oracle)
 def streaming_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The two reference topologies fused, streaming end to end: windowed
     update-mode aggregate → per-micro-batch broadcast-lookup left join
     against the customer dimension (J1 in its temporal-lookup form) →
-    changelog merge. Final state must hash-match the batch flagship
-    (rosetta_enriched)."""
+    changelog merge. Final state must hash-match the batch flagship's
+    oracle (rosetta_enriched)."""
     customers = rosetta_customers(spark, sf_dir)
     return run_topology(
         spark,
@@ -149,10 +129,7 @@ def streaming_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_suppress_final",
     oracle=f"""
 WITH {CALL_AGG_CTE.strip()},
-wm AS (
-  SELECT max(date_trunc('microseconds', ts)) - INTERVAL 24 HOURS AS cutoff
-  FROM events
-)
+{_FINAL_WM_CTE}
 SELECT a.id_telef_origen, a.window_start, a.calls_count,
        a.max_duracion_origen, a.total_duracion_origen, a.avg_duracion_origen
 FROM call_agg a, wm
@@ -188,22 +165,7 @@ def streaming_suppress_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_topology(spark, sf_dir, final, glob=_EVENTS, state="backlog")
 
 
-@register(
-    "streaming_interval_join",
-    oracle="""
-WITH e AS (
-  SELECT event_id, user_id, date_trunc('microseconds', ts) AS ts FROM events
-)
-SELECT a.user_id,
-       a.event_id AS event_a,
-       b.event_id AS event_b,
-       abs(epoch_us(a.ts) - epoch_us(b.ts)) AS diff_us
-FROM e a JOIN e b
-  ON a.user_id = b.user_id
- AND a.event_id < b.event_id
- AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 300000000
-""",
-)
+@register("streaming_interval_join", oracle=REGISTRY["join_range"].oracle)
 def streaming_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KS windowed stream-stream join (``JoinWindows``) as a registered
     query (X28 query-shaped): the events stream self-joined within a
@@ -211,8 +173,9 @@ def streaming_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame
     condition bounding join state (a row evicts once the other side's
     watermark passes ``ts + tolerance``). Inner matches emit in append mode
     as they are found; the emitted pair set must equal the batch
-    ``join_range`` answer (same oracle SQL), which is exactly the
-    stream-equals-batch contract for interval joins.
+    ``join_range`` answer (its oracle), which is exactly the
+    stream-equals-batch contract for interval joins. The ±band join stays
+    here: ``join_range`` is a batch self-join with no watermark.
     """
     from pyspark.sql import functions as F
 
@@ -237,36 +200,9 @@ def streaming_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "streaming_session_windows",
-    oracle="""
-WITH e AS (
-  SELECT user_id, date_trunc('microseconds', ts) AS ts, value FROM events
-),
-d AS (
-  SELECT user_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS brk
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-),
-s AS (
-  SELECT user_id, ts, value,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                        ROWS UNBOUNDED PRECEDING) AS sid
-  FROM d
-),
-sess AS (
-  SELECT user_id,
-         min(ts)                      AS session_start,
-         max(ts) + INTERVAL 30 MINUTE AS session_end,
-         count(*)                     AS n_events,
-         round(sum(value), 2)         AS total_value
-  FROM s GROUP BY user_id, sid
-),
-wm AS (
-  SELECT max(date_trunc('microseconds', ts)) - INTERVAL 24 HOURS AS cutoff
-  FROM events
-)
+    oracle=f"""
+WITH sess AS ({REGISTRY["window_session"].oracle}),
+{_FINAL_WM_CTE}
 SELECT sess.user_id, sess.session_start, sess.session_end,
        sess.n_events, sess.total_value
 FROM sess, wm WHERE sess.session_end <= wm.cutoff
@@ -280,49 +216,27 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode emits each merged session exactly once, final, when the watermark
     passes its end — no event at or above the watermark can extend a
     session that ended before it, which is precisely the gap-window
-    finality rule. The oracle is the batch gap-islands sessionization
-    (same SQL as window_session) restricted to sessions closed by the
-    final watermark ``max(ts) - 24h`` — so the gate pins both the session
-    math and the finality cutoff.
+    finality rule. The oracle is window_session's gap-islands oracle nested
+    as a CTE, restricted to sessions closed by the final watermark
+    ``max(ts) - 24h`` — so the gate pins both the session math and the
+    finality cutoff. The body is window_session's ``session_totals`` stage
+    over the watermarked stream.
 
     State story: one shuffle on user_id; per-key state holds only OPEN
     sessions (watermark evicts closed ones at emission), the bounded-state
     contract KS session stores share."""
-    from pyspark.sql import functions as F
-
-    def sessions(raw: DataFrame) -> DataFrame:
-        ev = normalize_event_ts(raw).withWatermark("ts", "24 hours")
-        return (
-            ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
-            .select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-                "total_value",
-            )
-        )
-
-    return run_topology(spark, sf_dir, sessions, glob=_EVENTS, state="backlog")
+    return run_topology(
+        spark,
+        sf_dir,
+        lambda ev: session_totals(
+            normalize_event_ts(ev).withWatermark("ts", "24 hours")
+        ),
+        glob=_EVENTS,
+        state="backlog",
+    )
 
 
-@register(
-    "streaming_wire_roundtrip",
-    oracle="""
-SELECT event_type,
-       count(*) AS n_records,
-       count(CASE WHEN event_id % 41 <> 0 THEN 1 END)            AS n_decoded,
-       count(CASE WHEN event_id % 41 = 0 THEN 1 END)             AS n_dropped,
-       CAST(sum(CASE WHEN event_id % 41 <> 0 THEN event_id END) AS BIGINT)
-         AS sum_event_id
-FROM events
-GROUP BY event_type
-""",
-)
+@register("streaming_wire_roundtrip", oracle=REGISTRY["kafka_wire_framing"].oracle)
 def streaming_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3+S5 as a streaming topology: every record serializes through the
     Confluent-framed value serde (0x00 magic + int32 schema id + body) and
@@ -331,71 +245,25 @@ def streaming_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Schema-Registry topics. The magic byte of every 41st record is mangled
     in flight, so the header check (not the body parse) rejects it, and the
     per-event-type drop counters accumulate in checkpointed update-mode
-    state. Final state must match the batch oracle (same SQL as
-    kafka_wire_framing's aggregate).
+    state. The per-micro-batch stage is kafka_wire_framing's
+    ``wire_framing_counters``, and final state must match its oracle.
 
     State story: the aggregate keys on event_type — bounded, tiny — and the
     serde is pure per-row JVM expressions, so the streaming plan adds no
     state beyond the counter rows."""
-    from pyspark.sql import functions as F
-
-    from ..streaming.kafka_io import KafkaTopicSpec
-
-    spec = KafkaTopicSpec(
-        topic="EVENTS_WIRE",
-        value_schema=T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("value", T.DoubleType()),
-            ]
-        ),
-        serde="json",  # deterministic: avro availability must not change results
-        wire_format="confluent",
-        schema_id=7,
-    )
-    framed = spec.encode_value(F.struct("event_id", "value"))
-    on_wire = F.when(
-        F.col("event_id") % 41 == 0,
-        F.concat(F.lit(b"\xff"), F.substring(framed, 2, 2147483647)),
-    ).otherwise(framed)
-    decoded = spec.decode_value(on_wire)
-
-    def counters(ev: DataFrame) -> DataFrame:
-        return (
-            normalize_event_ts(ev)
-            .select("event_type", decoded.alias("v"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_records"),
-                F.count("v.event_id").alias("n_decoded"),
-                (F.count(F.lit(1)) - F.count("v.event_id")).alias("n_dropped"),
-                F.sum("v.event_id").alias("sum_event_id"),
-            )
-        )
-
     # State keys on event_type — a small enumeration by construction
     # (the docstring's "the only state is the event_type counter rows").
     return run_topology(
-        spark, sf_dir, counters, glob=_EVENTS, keys=["event_type"], state=4096
+        spark,
+        sf_dir,
+        lambda ev: wire_framing_counters(normalize_event_ts(ev)),
+        glob=_EVENTS,
+        keys=["event_type"],
+        state=4096,
     )
 
 
-@register(
-    "streaming_avro_roundtrip",
-    oracle="""
-SELECT event_type,
-       count(*) AS n_records,
-       count(CASE WHEN event_id % 43 <> 0 THEN 1 END)            AS n_decoded,
-       count(CASE WHEN event_id % 43 = 0 THEN 1 END)             AS n_dropped,
-       CAST(sum(CASE WHEN event_id % 43 <> 0 THEN event_id END) AS BIGINT)
-         AS sum_event_id,
-       CAST(sum(CASE WHEN event_id % 43 <> 0
-                     THEN CAST(floor(value * 1000) AS BIGINT) END) AS BIGINT)
-         AS sum_value_milli
-FROM events
-GROUP BY event_type
-""",
-)
+@register("streaming_avro_roundtrip", oracle=REGISTRY["kafka_avro_roundtrip"].oracle)
 def streaming_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``kafka_avro_roundtrip``'s topology inside a running checkpointed
     stream: every record serializes to genuine Confluent-framed AVRO bytes
@@ -407,52 +275,20 @@ def streaming_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-event-type counters accumulate in checkpointed update-mode state
     that must match the batch oracle. The closest brokerless equivalent of
     producing Avro to and consuming Avro from the reference's topics
-    (``SpecificAvroSerde``, ``CallsAggregationApp.java:33,40-41``).
+    (``SpecificAvroSerde``, ``CallsAggregationApp.java:33,40-41``). The
+    per-micro-batch stage is the twin's ``avro_roundtrip_counters``.
 
     State story: identical to ``streaming_wire_roundtrip`` — serde is
     per-row (JVM framing + columnar codec), the only state is the
     event_type counter rows."""
-    from pyspark.sql import functions as F
-
-    from ..streaming.kafka_io import KafkaTopicSpec
-
-    spec = KafkaTopicSpec(
-        topic="EVENTS_AVRO",
-        value_schema=T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("value", T.DoubleType()),
-            ]
-        ),
-        serde="avro_py",
-        wire_format="confluent",
-        schema_id=11,
-    )
-    framed = spec.encode_value(F.struct("event_id", "value"))
-    on_wire = F.when(
-        F.col("event_id") % 43 == 0, F.substring(framed, 1, 8)
-    ).otherwise(framed)
-    decoded = spec.decode_value(on_wire)
-
-    def counters(ev: DataFrame) -> DataFrame:
-        return (
-            normalize_event_ts(ev)
-            .select("event_type", decoded.alias("v"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_records"),
-                F.count("v.event_id").alias("n_decoded"),
-                (F.count(F.lit(1)) - F.count("v.event_id")).alias("n_dropped"),
-                F.sum("v.event_id").alias("sum_event_id"),
-                F.sum(F.floor(F.col("v.value") * 1000).cast("long")).alias(
-                    "sum_value_milli"
-                ),
-            )
-        )
-
     # Same bounded state as streaming_wire_roundtrip: event_type counter rows.
     return run_topology(
-        spark, sf_dir, counters, glob=_EVENTS, keys=["event_type"], state=4096
+        spark,
+        sf_dir,
+        lambda ev: avro_roundtrip_counters(normalize_event_ts(ev)),
+        glob=_EVENTS,
+        keys=["event_type"],
+        state=4096,
     )
 
 
@@ -768,21 +604,7 @@ def streaming_range_join_keyless(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_downsample_ohlc",
-    oracle="""
-WITH e AS (
-  SELECT event_type, value, date_trunc('microseconds', ts) AS ts, event_id,
-         epoch_us(date_trunc('microseconds', ts)) // 21600000000 AS bucket
-  FROM events)
-SELECT DISTINCT event_type, bucket,
-       first_value(value) OVER w AS open_v,
-       max(value) OVER w AS high_v,
-       min(value) OVER w AS low_v,
-       last_value(value) OVER w AS close_v,
-       CAST(count(*) OVER w AS BIGINT) AS n
-FROM e
-WINDOW w AS (PARTITION BY event_type, bucket ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-""",
+    oracle=REGISTRY["timeseries_downsample_ohlc"].oracle,
 )
 def streaming_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``timeseries_downsample_ohlc`` (X117): live OHLC
@@ -791,8 +613,7 @@ def streaming_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — each bar's open/close live in the state store as a single
     (order-key, value) candidate per (series, window), merged
     associatively per micro-batch, so arrival order cannot flip endpoints
-    (same deterministic (ts, event_id) total order as the batch twin, and
-    the same oracle).
+    (the batch twin's ``ohlc_bars`` aggregate and its oracle).
 
     The 6-hour tumbling ``window()`` is epoch-aligned, so
     ``unix_micros(window.start) div 21600000000`` reproduces the batch
@@ -802,17 +623,9 @@ def streaming_downsample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     production sink; nothing through the driver)."""
     from pyspark.sql import functions as F
 
-    order_key = F.struct("ts", "event_id")
-
     def bars(raw: DataFrame) -> DataFrame:
         ev = normalize_event_ts(raw).withWatermark("ts", "24 hours")
-        agg = ev.groupBy("event_type", F.window("ts", "6 hours").alias("w")).agg(
-            F.min_by("value", order_key).alias("open_v"),
-            F.max("value").alias("high_v"),
-            F.min("value").alias("low_v"),
-            F.max_by("value", order_key).alias("close_v"),
-            F.count(F.lit(1)).alias("n"),
-        )
+        agg = ohlc_bars(ev, "event_type", F.window("ts", "6 hours").alias("w"))
         return agg.select(
             "event_type",
             F.expr("unix_micros(w.start) div 21600000000").alias("bucket"),
@@ -892,10 +705,7 @@ def streaming_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_drift_psi",
-    oracle=_PSI_ORACLE,  # the batch monitor's SQL verbatim
-)
+@register("streaming_drift_psi", oracle=REGISTRY["profile_drift_psi"].oracle)
 def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PSI drift monitor run CONTINUOUSLY: the event stream maintains
     its fixed-bin value histogram as streaming state (update mode, one
@@ -905,78 +715,24 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as the batch monitor does. This is how a 100 TB ingest
     watches itself drift between two deployment windows without ever
     rescanning history: the histogram is the only state, and it is 10
-    longs per side. Final numbers must hash-match the batch monitor's
-    oracle over the same events."""
-    from pyspark.sql import functions as F
-
-    from .relational_queries import _PSI_BINS, _PSI_SPLIT, _PSI_WIDTH
-
-    def hist(ev: DataFrame) -> DataFrame:
-        return (
-            normalize_event_ts(ev)
-            .select(
-                F.least(
-                    F.floor(F.col("value") / _PSI_WIDTH).cast("long"),
-                    F.lit(_PSI_BINS - 1).cast("long"),
-                ).alias("bin"),
-                (F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp")).alias("is_base"),
-            )
-            .groupBy("bin")
-            .agg(
-                F.count(F.when(F.col("is_base"), 1)).alias("base_n"),
-                F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
-            )
-        )
-
+    longs per side. The histogram and the PSI math are the batch monitor's
+    ``psi_histogram`` and ``psi_report`` stages, and the final numbers must
+    hash-match its oracle over the same events."""
     # The 10-bin histogram IS the key space (bounded like the CMS cells).
     counts = run_topology(
-        spark, sf_dir, hist, glob=_EVENTS, keys=["bin"], state=_PSI_BINS
+        spark,
+        sf_dir,
+        lambda ev: psi_histogram(normalize_event_ts(ev)),
+        glob=_EVENTS,
+        keys=["bin"],
+        state=_PSI_BINS,
     )
-    # post-math over the compacted 10-row histogram — identical to the
-    # batch monitor from here down (bin fan-out, smoothing, ppm, PSI)
-    from pyspark.sql import Window
-
-    bins = spark.range(_PSI_BINS).select(F.col("id").alias("bin"))
-    full = (
-        bins.join(counts, "bin", "left")
-        .fillna(0, subset=["base_n", "curr_n"])
-        .select(
-            "bin",
-            F.col("base_n").cast("long").alias("base_n"),
-            F.col("curr_n").cast("long").alias("curr_n"),
-        )
-    )
-    w = Window.partitionBy()
-    full = full.withColumn("tb", F.sum(F.col("base_n") + 1).over(w)).withColumn(
-        "tc", F.sum(F.col("curr_n") + 1).over(w)
-    )
-    full = full.select(
-        "bin",
-        "base_n",
-        "curr_n",
-        F.expr("(base_n + 1) * 1000000L DIV tb").alias("p_ppm"),
-        F.expr("(curr_n + 1) * 1000000L DIV tc").alias("q_ppm"),
-    )
-    # ln-quantization boundary risk accepted — canonical note at
-    # corpus_queries.sample_importance_dsir.
-    contrib = (
-        (F.col("p_ppm") - F.col("q_ppm"))
-        * F.floor(
-            F.log(F.col("p_ppm").cast("double") / F.col("q_ppm")) * 1000
-            + F.lit(0.5)
-        ).cast("long")
-    ).alias("contrib_nano")
-    out = full.select("bin", "base_n", "curr_n", "p_ppm", "q_ppm", contrib)
-    return out.withColumn(
-        "psi_nano_total", F.sum("contrib_nano").over(Window.partitionBy())
-    )
-
-
+    return psi_report(spark, counts)
 
 
 @register(
     "streaming_winnowing_screen",
-    oracle=_WINNOW_SCREEN_ORACLE,  # the batch screen's SQL verbatim
+    oracle=REGISTRY["dedup_winnowing_screen"].oracle,
 )
 def streaming_winnowing_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The X143 per-ingest dedup screen run AS the ingest: the new-doc
@@ -989,52 +745,40 @@ def streaming_winnowing_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     STATIC corpus fingerprint index (the memoized family artifact — at
     100 TB a bucketed table the ingest job reads, not rebuilds), and
     appends its keep/drop verdicts to the executor-side changelog. Final
-    compacted output must hash-match the batch screen's oracle verbatim —
-    the strongest proof the continuous path computes the identical gate.
+    compacted output must hash-match the batch screen's oracle — the
+    strongest proof the continuous path computes the identical gate.
 
     Plan per micro-batch: per-row JVM fingerprinting of the arriving docs
     → equi-join on fingerprint value against the corpus index (batch
     posting lists vs corpus posting lists — candidate-bounded, never
-    all-pairs) → distinct-corpus-doc count per arriving doc (the >= 1
-    shared-fingerprint gate, inheriting winnowing's recall theorem — see
-    ``dedup_winnowing_screen``) → left join back onto the arriving docs
-    (coverage guard: short docs carry through). Each doc appears in
-    exactly one micro-batch, so per-batch aggregation is globally correct
-    and the changelog holds one row per doc."""
+    all-pairs) → distinct-corpus-doc count per arriving doc (the
+    ``_WIN_SCREEN_MIN_SHARED`` gate, inheriting winnowing's recall theorem
+    — see ``dedup_winnowing_screen``) → left join back onto the arriving
+    docs (coverage guard: short docs carry through). Everything after the
+    fingerprinting is the batch screen's ``winnow_screen_verdicts`` stage.
+    Each doc appears in exactly one micro-batch, so per-batch aggregation
+    is globally correct and the changelog holds one row per doc."""
     from pyspark.sql import functions as F
 
     from ..operators.textsim import winnow_fingerprints
     from ..sources.parquet import load_table
     from .artifacts import winnowing_index
 
-    corpus_fp = (
-        winnowing_index(spark, sf_dir)
-        .where(F.col("doc_id") % 5 != 0)
-        .select(F.col("doc_id").alias("corpus_id"), "f")
-    )
-
-    def screen_batch(batch_df: DataFrame) -> DataFrame:
-        fps = winnow_fingerprints(batch_df)
-        dups = (
-            fps.join(corpus_fp, "f")
-            .groupBy("doc_id")
-            .agg(F.count_distinct("corpus_id").alias("n"))
-        )
-        return batch_df.select("doc_id").join(dups, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce("n", F.lit(0)).cast("long").alias("n_corpus_matches"),
-            (F.coalesce("n", F.lit(0)) == 0).alias("keep"),
-        )
-
+    index = winnowing_index(spark, sf_dir)
     arriving = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 5 == 0)
         .select("doc_id", "text")
         .repartition(3)  # three files -> three genuine micro-batches
     )
-    return run_topology(spark, arriving, keys=["doc_id"], batch_fn=screen_batch)
-
-
+    return run_topology(
+        spark,
+        arriving,
+        keys=["doc_id"],
+        batch_fn=lambda b: winnow_screen_verdicts(
+            b.select("doc_id"), winnow_fingerprints(b), index
+        ),
+    )
 
 
 @register(
@@ -1056,50 +800,25 @@ def streaming_bpe_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     State bound: the aggregate is keyed by ``source``, so state is
     |sources| rows of four longs BY CONSTRUCTION — the PSI/CMS bounded-
     key-space shape; no watermark and no eviction are needed (nothing
-    grows with the corpus). Final compacted totals feed the same
-    overflow-safe ppm post-math as the batch query (shared
-    ``_ppm_ratio_sql``), and the result must hash-match
-    ``text_bpe_fertility``'s oracle verbatim — the proof the continuous
-    path computes the identical table."""
-    from pyspark.sql import functions as F
-
-    from ..operators.bpe import explode_words
+    grows with the corpus). The micro-batch stage and the post-math are
+    the batch query's ``fertility_totals`` and ``fertility_report``, and
+    the result must hash-match ``text_bpe_fertility``'s oracle — the proof
+    the continuous path computes the identical table."""
     from ..sources.parquet import load_table
     from .artifacts import bpe_word_tokens
-    from .corpus_queries import _ppm_ratio_sql
+    from .corpus_queries import fertility_report, fertility_totals
 
     wt = bpe_word_tokens(spark, sf_dir)
-
-    def rates(stream: DataFrame) -> DataFrame:
-        words = explode_words(stream, "source")
-        return (
-            words.join(F.broadcast(wt), words.w == wt.word)
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_words"),
-                F.sum("n_toks").cast("long").alias("n_bpe_tokens"),
-                F.sum(F.length("w")).cast("long").alias("n_chars"),
-            )
-        )
-
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     # |sources|-row bounded state (the docstring's bound)
     totals = run_topology(
-        spark, docs.repartition(3), rates, keys=["source"], state=4096
+        spark,
+        docs.repartition(3),
+        lambda stream: fertility_totals(stream, wt, "n_bpe_tokens"),
+        keys=["source"],
+        state=4096,
     )
-    return totals.select(
-        "source",
-        "n_words",
-        "n_bpe_tokens",
-        F.expr(_ppm_ratio_sql("n_bpe_tokens", "n_words", "DIV")).alias(
-            "fertility_ppm"
-        ),
-        F.expr(_ppm_ratio_sql("n_chars", "n_bpe_tokens", "DIV")).alias(
-            "chars_per_token_ppm"
-        ),
-    )
-
-
+    return fertility_report(totals, "n_bpe_tokens")
 
 
 @register(
@@ -1116,17 +835,16 @@ def streaming_preference_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode — a comparison is a fact, never revised. Emitted pairs land
     through the production append sink (executor-side parquet, no driver
     round-trip), and the win-rate matrix folds over the sink with the SAME
-    ``winrate_matrix`` post-math as the batch query; the result must
-    hash-match ``preference_winrate_matrix``'s oracle verbatim.
+    ``win_counts`` aggregate and ``winrate_matrix`` post-math as the batch
+    query; the result must hash-match ``preference_winrate_matrix``'s
+    oracle verbatim.
 
     State bound: one 4-field row per active user key — bounded keyed state
     like the KTable; cross-batch pair carry (the boundary event living in
     the state store between micro-batches) is pinned in
     ``tests/test_round11b_ops.py`` with a 3-file time-split replay."""
-    from pyspark.sql import functions as F
-
     from ..streaming.stateful import preference_pair_emitter
-    from .preference_queries import winrate_matrix
+    from .preference_queries import win_counts, winrate_matrix
 
     # Session-default state (r14 wave 5: backlog sizing measured 1.57x
     # WORSE): the per-row Python emitter needs the stateful stage's
@@ -1137,12 +855,7 @@ def streaming_preference_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda ev: preference_pair_emitter(normalize_event_ts(ev)),
         glob=_EVENTS,
     )
-    wins = emitted.groupBy("winner", "loser").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return winrate_matrix(wins)
-
-
+    return winrate_matrix(win_counts(emitted))
 
 
 _ANN_SCREEN_ORACLE = """
@@ -1509,49 +1222,25 @@ def streaming_unigram_token_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     State bound: keyed by ``source`` — |sources| rows of four longs BY
     CONSTRUCTION (the streaming_bpe_token_rate shape verbatim); no
-    watermark, no eviction, nothing grows with the corpus. Final compacted
-    totals feed the same overflow-safe ppm post-math as the batch query
-    and must hash-match ``text_unigram_fertility``'s oracle verbatim —
+    watermark, no eviction, nothing grows with the corpus. The stages are
+    ``fertility_totals``/``fertility_report``, shared with the batch query,
+    and the result must hash-match ``text_unigram_fertility``'s oracle —
     the proof the continuous path computes the identical table."""
-    from pyspark.sql import functions as F
-
-    from ..operators.bpe import explode_words
     from ..sources.parquet import load_table
     from .artifacts import unigram_word_tokens
-    from .corpus_queries import _ppm_ratio_sql
+    from .corpus_queries import fertility_report, fertility_totals
 
     wt = unigram_word_tokens(spark, sf_dir)
-
-    def rates(stream: DataFrame) -> DataFrame:
-        words = explode_words(stream, "source")
-        return (
-            words.join(F.broadcast(wt), words.w == wt.word)
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_words"),
-                F.sum("n_toks").cast("long").alias("n_unigram_tokens"),
-                F.sum(F.length("w")).cast("long").alias("n_chars"),
-            )
-        )
-
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     # |sources|-row bounded state
     totals = run_topology(
-        spark, docs.repartition(3), rates, keys=["source"], state=4096
+        spark,
+        docs.repartition(3),
+        lambda stream: fertility_totals(stream, wt, "n_unigram_tokens"),
+        keys=["source"],
+        state=4096,
     )
-    return totals.select(
-        "source",
-        "n_words",
-        "n_unigram_tokens",
-        F.expr(_ppm_ratio_sql("n_unigram_tokens", "n_words", "DIV")).alias(
-            "fertility_ppm"
-        ),
-        F.expr(_ppm_ratio_sql("n_chars", "n_unigram_tokens", "DIV")).alias(
-            "chars_per_token_ppm"
-        ),
-    )
-
-
+    return fertility_report(totals, "n_unigram_tokens")
 
 
 @register(
@@ -1585,8 +1274,6 @@ def streaming_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["doc_id"],
         batch_fn=blocklist_scrub_frame,
     )
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -1632,14 +1319,14 @@ def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     State bound: keyed by ``source`` — |sources| rows of two longs BY
     CONSTRUCTION (the streaming_bpe_token_rate shape); no watermark, no
-    eviction. The post-compaction share math is a SinglePartition window
-    over |sources| rows (bounded model state, the corpus_domain_profile
+    eviction. The post-compaction share math divides by the total over
+    the |sources| rows (bounded model state, the corpus_domain_profile
     discipline). The oracle replays the full learned-weight trajectory
     plus the share computation, so the monitor's thresholds are
     oracle-checked, not advisory."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from ..operators import with_totals
     from ..operators.doremi import MAX_DOREMI_DOMAINS, doremi_fit
     from ..sources.parquet import load_table
     from .pipeline_queries import _doremi_domain_rows
@@ -1663,9 +1350,9 @@ def streaming_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         state=MAX_DOREMI_DOMAINS,
     )
 
-    w_all = Window.partitionBy()  # |sources| rows — bounded
-    t = totals.join(F.broadcast(targets), "source").withColumn(
-        "total", F.sum("n_toks").over(w_all).cast("long")
+    t = with_totals(
+        totals.join(F.broadcast(targets), "source"),
+        total=F.sum("n_toks").cast("long"),
     )
     obs = F.expr(_dm_ppm("n_toks", "total", "DIV"))
     return t.select(
@@ -1770,14 +1457,12 @@ def streaming_decontaminate_screen(spark: SparkSession, sf_dir: str) -> DataFram
 # streaming_mixture_sampler — the learned mix APPLIED at ingest
 # ---------------------------------------------------------------------------
 
-from .pipeline_queries import (  # noqa: E402
-    _SMD_ORACLE as _SMS_ORACLE,
-    smd_apply,
-    smd_rates_df,
+from .pipeline_queries import smd_apply, smd_rates_df  # noqa: E402
+
+
+@register(
+    "streaming_mixture_sampler", oracle=REGISTRY["sample_mixture_doremi"].oracle
 )
-
-
-@register("streaming_mixture_sampler", oracle=_SMS_ORACLE)
 def streaming_mixture_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The last DoReMi gap closed (r13 verdict task 3): the mixing family
     now derives its weights (corpus_mixture_doremi), turns them into keep
@@ -1893,14 +1578,16 @@ def streaming_url_dedup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from .pipeline_queries import (  # noqa: E402
-    _CCE_ORACLE,
     confusion_cells,
     confusion_flags,
     confusion_report,
 )
 
 
-@register("streaming_classifier_monitor", oracle=_CCE_ORACLE)
+@register(
+    "streaming_classifier_monitor",
+    oracle=REGISTRY["classifier_confusion_eval"].oracle,
+)
 def streaming_classifier_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The model-eval family's streaming twin — the last operator family
     without an ingest-side member: a deployed quality filter must be
@@ -1937,10 +1624,10 @@ def streaming_classifier_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming_gopher_screen — the named rule gate run AT INGEST
 # ---------------------------------------------------------------------------
 
-from .corpus_queries import _GOPHER_ORACLE, gopher_rules_frame  # noqa: E402
+from .corpus_queries import gopher_rules_frame  # noqa: E402
 
 
-@register("streaming_gopher_screen", oracle=_GOPHER_ORACLE)
+@register("streaming_gopher_screen", oracle=REGISTRY["text_gopher_quality"].oracle)
 def streaming_gopher_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher rule gate run AT INGEST — the text-cleaning family's
     SIXTH per-ingest screen (boilerplate, winnowing, ANN, blocklist,
@@ -1975,14 +1662,12 @@ def streaming_gopher_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming_robots_screen — robots compliance verdicts AT INGEST
 # ---------------------------------------------------------------------------
 
-from .corpus_queries import (  # noqa: E402
-    _ROBOTS_ORACLE,
-    robots_rollup,
-    robots_verdicts,
+from .corpus_queries import robots_rollup, robots_verdicts  # noqa: E402
+
+
+@register(
+    "streaming_robots_screen", oracle=REGISTRY["crawl_robots_compliance"].oracle
 )
-
-
-@register("streaming_robots_screen", oracle=_ROBOTS_ORACLE)
 def streaming_robots_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The robots.txt compliance audit run AT INGEST — the crawl family's
     continuous policy gate (a compliant crawler must refuse a disallowed
@@ -2017,14 +1702,10 @@ def streaming_robots_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming_roc_monitor — continuous ranking power, <=1000-cell state
 # ---------------------------------------------------------------------------
 
-from .pipeline_queries import (  # noqa: E402
-    _clf_cells_frame,
-    _roc_oracle,
-    _roc_report,
-)
+from .pipeline_queries import _clf_cells_frame, _roc_report  # noqa: E402
 
 
-@register("streaming_roc_monitor", oracle=_roc_oracle())
+@register("streaming_roc_monitor", oracle=REGISTRY["classifier_roc_auc"].oracle)
 def streaming_roc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ROC/AUC gate maintained AS STREAMING STATE — the
     threshold-free companion to ``streaming_classifier_monitor`` (that

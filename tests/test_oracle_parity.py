@@ -142,6 +142,20 @@ def test_query_matches_oracle(spark, sf_correctness, name):
     compare(df, q.oracle, sf_correctness)
 
 
+def test_equal_oracles_are_one_object():
+    # A stream and its batch twin share one oracle: the stream registers
+    # with the twin's string object, never a second copy of the SQL.
+    first: dict[str, str] = {}
+    copies = []
+    for name, q in sorted(QUERIES.items()):
+        if q.oracle is None:
+            continue
+        owner = first.setdefault(q.oracle, name)
+        if QUERIES[owner].oracle is not q.oracle:
+            copies.append((owner, name))
+    assert not copies, f"oracle SQL copied instead of shared: {copies}"
+
+
 def test_fast_parity_names_exist():
     # a renamed/deleted query must not silently shrink the fast lane
     missing = FAST_PARITY - set(QUERIES)

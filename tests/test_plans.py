@@ -356,7 +356,7 @@ SHUFFLE_BUDGET = {
     # round-9 additions
     "text_ngram_novelty": 2,  # gram-key window min + doc_id rollup (rebalance is round-robin, not counted); no join — the first-occurrence fact never leaves the gram exchange
     "corpus_dedup_rate_curve": 3,  # dup-id distinct + doc_id join + 10-key rollup; pairs come from the checkpointed artifact (its build shuffles are charged to the family builder)
-    "corpus_token_budget_plan": 1,  # one per-source aggregate; the totals window is SinglePartition over |sources| rows
+    "corpus_token_budget_plan": 1,  # one per-source aggregate; the totals reduce is SinglePartition over |sources| rows
     # round-10 additions (the BPE family: the vocabulary map is a pinned
     # artifact, so Arrow never appears in these registered plans and the
     # corpus side joins it by broadcast — no join shuffle anywhere)
@@ -393,7 +393,7 @@ SHUFFLE_BUDGET = {
     "corpus_domain_snapshot_diff": 1,  # snapshot membership/change flags fuse map-side (both snapshots are views of one scan); the |domains|-key rollup is the only exchange
     "sample_mixture_doremi": 0,  # registered plan: documents scan + broadcast |sources|-row rate table + hash filter; the LM aggregate behind the rates is charged at collect (the doremi/BT shape)
     "text_decontaminate": 3,  # overlap frame's doc_id aggregate + the doc-grain join-back + the |sources| rollup; the bench n-gram set broadcasts (the check's shape + one rollup)
-    "corpus_domain_profile": 4,  # two-phase distinct-source expand (2) + pair-id distinct (1) + the domain rollup; pair graph is the checkpointed family artifact (its build charged to the builder); total window is SinglePartition over |domains| rows
+    "corpus_domain_profile": 4,  # two-phase distinct-source expand (2) + pair-id distinct (1) + the domain rollup; pair graph is the checkpointed family artifact (its build charged to the builder); total reduce is SinglePartition over |domains| rows
     "text_boilerplate_scrub": 5,  # two exact-distinct aggs (2 exchanges each: (keys, doc_id) partial + rollup) + the per-doc rollup; at test SF the freq/src joins broadcast (at scale the paras side adds one co-partitioned (source, ph) exchange)
     # round-14 additions
     "dedup_url_canonical": 2,  # canonicalization fuses into the scan; ONE 16-byte digest exchange (map-side partials collapse the size-2 dup classes) + the |domains| rollup — the dedup_exact shape at URL grain

@@ -220,18 +220,26 @@ def test_winnowing_screen_catches_planted_cross_set_overlap(spark):
     assert a.intersect(c).count() == 0
 
 
-def test_streaming_winnowing_screen_equals_batch_twin(spark, sf_smoke):
+@pytest.mark.parametrize("gate", [1, 2])
+def test_streaming_winnowing_screen_equals_batch_twin(
+    spark, sf_smoke, monkeypatch, gate
+):
     """The continuous ingest screen must compute the identical gate as the
     batch screen — same verdict per doc, full batch coverage (the oracle
     gate pins this against DuckDB; this pin is the Spark-side twin equality
     plus the multi-micro-batch claim: three staged files means the per-batch
-    aggregation really ran incrementally, not as one batch)."""
+    aggregation really ran incrementally, not as one batch). Run at the
+    shipped gate and at a raised one: both twins must read
+    ``_WIN_SCREEN_MIN_SHARED``, so moving it cannot split them."""
+    from kafka_streams_rosetta_demo_spark.queries import dedup_queries
     from kafka_streams_rosetta_demo_spark.queries.dedup_queries import (
         dedup_winnowing_screen,
     )
     from kafka_streams_rosetta_demo_spark.queries.streaming_queries import (
         streaming_winnowing_screen,
     )
+
+    monkeypatch.setattr(dedup_queries, "_WIN_SCREEN_MIN_SHARED", gate)
 
     batch = dedup_winnowing_screen(spark, sf_smoke)
     stream = streaming_winnowing_screen(spark, sf_smoke)

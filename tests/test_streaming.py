@@ -1078,42 +1078,18 @@ def test_streaming_psi_histogram_accumulates_across_batches(
     equals the batch conditional aggregation over the same events, and
     the state key space never exceeds the bin count — the
     bounded-by-construction claim, checked, not asserted."""
-    from pyspark.sql import functions as F
-
     from kafka_streams_rosetta_demo_spark.queries.relational_queries import (
         _PSI_BINS,
-        _PSI_SPLIT,
-        _PSI_WIDTH,
+        psi_histogram,
     )
 
-    def binned(df):
-        return df.select(
-            F.least(
-                F.floor(F.col("value") / _PSI_WIDTH).cast("long"),
-                F.lit(_PSI_BINS - 1).cast("long"),
-            ).alias("bin"),
-            (F.col("ts") < F.lit(_PSI_SPLIT).cast("timestamp")).alias("is_base"),
-        )
-
-    hist = binned(_stream(spark, split_events_dir, max_files_per_trigger=1)).groupBy(
-        "bin"
-    ).agg(
-        F.count(F.when(F.col("is_base"), 1)).alias("base_n"),
-        F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
-    )
+    hist = psi_histogram(_stream(spark, split_events_dir, max_files_per_trigger=1))
     out_dir = str(tmp_path / "psi_changelog")
     got = run_update_query_to_df(
         hist, ["bin"], str(tmp_path / "ckpt_psi"), out_dir
     ).select("bin", "base_n", "curr_n")
 
-    expected = (
-        binned(spark.read.parquet(split_events_dir))
-        .groupBy("bin")
-        .agg(
-            F.count(F.when(F.col("is_base"), 1)).alias("base_n"),
-            F.count(F.when(~F.col("is_base"), 1)).alias("curr_n"),
-        )
-    )
+    expected = psi_histogram(spark.read.parquet(split_events_dir))
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, expected.collect())
     )
